@@ -247,8 +247,7 @@ def main() -> None:
     # of every headline query BEFORE the timed section. This moves every
     # one-time build cost out of the measured reps — the k-means IVF/PQ
     # index builds and staged layouts land on disk behind their layout
-    # markers, PageRank's persisted edge/node/outdeg relations
-    # materialize, JVM/codegen warms per query instead of only for the
+    # markers, JVM/codegen warms per query instead of only for the
     # flagship. r6's BENCH_DETAIL showed per-query spreads (9.2 s on
     # q_sim_topk_ivf, 7.1 s on q_graph_pagerank) LARGER than the
     # queries' own medians because rep 1 paid the build and reps 2-3

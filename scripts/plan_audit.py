@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Registry-wide physical-plan audit: the scale-killer sweep (r14).
 
-Builds the physical plan of EVERY registered query (no execution — the
-sweep compiles all 419 plans in ~3 min at sf0.001) and enforces the
+Builds the physical plan of EVERY registered query (the sweep compiles
+all 419 plans in ~3 min at sf0.001; no query's final stage runs, but a
+query that calls ``materialize.share`` runs the shuffle stages of its
+shared relations while its DataFrame is built) and enforces the
 shape invariants that decide whether a plan survives a 100 TB
 scale-up:
 

@@ -13,19 +13,11 @@ harness tables.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-
-
-def normalize_name(col: Column) -> Column:
-    """Drug-name normalization (README.md:7 'standardise medications'):
-    lowercase, trim, collapse whitespace, strip non-alphanumerics."""
-    c = F.lower(F.trim(col))
-    c = F.regexp_replace(c, r"\s+", " ")
-    return F.regexp_replace(c, r"[^a-z0-9 ]", "")
 
 
 @query(

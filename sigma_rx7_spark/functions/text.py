@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..compat import QDEC, o_davg
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 # Tiny English stopword list for the language-ID heuristic.
@@ -705,10 +706,10 @@ def q_text_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         F.explode(tokens(F.lower(F.col("text")))).alias("token"))
-    # persist: the vocab counts feed the corpus total AND the top-K
+    # share: the vocab counts feed the corpus total AND the top-K
     # selection — without it the explode+aggregate runs twice.
-    counts = tok.groupBy("token").agg(
-        F.count(F.lit(1)).alias("cnt")).persist()
+    counts = share(tok.groupBy("token").agg(
+        F.count(F.lit(1)).alias("cnt")))
     total = counts.agg(F.sum("cnt").alias("n_total"))
     top = counts.orderBy(F.col("cnt").desc(), "token").limit(VOCAB_TOP_K)
     w = Window.orderBy(F.col("cnt").desc(), "token")
@@ -815,10 +816,10 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "i -> struct(l[i - 1] AS prev, l[i] AS cur))")).alias("u"))
         .select("doc_id", "u.prev", "u.cur")
     )
-    # persist: the bigram model feeds the context sums AND the score
+    # share: the bigram model feeds the context sums AND the score
     # join (two consumers of the corpus-wide aggregation).
-    big = bg.groupBy("prev", "cur").agg(
-        F.count(F.lit(1)).alias("c_big")).persist()
+    big = share(bg.groupBy("prev", "cur").agg(
+        F.count(F.lit(1)).alias("c_big")))
     ctx = big.groupBy("prev").agg(
         F.sum("c_big").cast("bigint").alias("c_ctx"))
     tf = bg.groupBy("doc_id", "prev", "cur").agg(
@@ -956,11 +957,11 @@ def q_text_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     relations, and the corpus size is one broadcast scalar. ``ln``
     decimal-quantized (compat hazard 2)."""
     d = load(spark, sf_dir, "documents")
-    # dt feeds the df counts AND both pair-join sides — persist the
+    # dt feeds the df counts AND both pair-join sides — share the
     # distinct (doc, token) relation so the explode+distinct runs once.
-    dt = d.select(
+    dt = share(d.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("token")
-    ).distinct().persist()
+    ).distinct())
     dfreq = dt.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     a = dt.select("doc_id", F.col("token").alias("token_a"))
@@ -1031,11 +1032,11 @@ def q_text_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: everything of q_text_bigram_logprob's (bigram model =
     two hash aggs, V broadcast), plus one tiny threshold aggregate
     broadcast back and a per-source report; the score relation is
-    persisted because the threshold and the report both consume it.
+    shared because the threshold and the report both consume it.
     Documents with <2 tokens have no bigram score and fall out of the
     scored population on both engines alike."""
-    scores = q_text_bigram_logprob(spark, sf_dir) \
-        .select("doc_id", "n_bigrams", "total_logprob").persist()
+    scores = share(q_text_bigram_logprob(spark, sf_dir)
+                   .select("doc_id", "n_bigrams", "total_logprob"))
     # Threshold + per-source means are token-weighted and computed from
     # the SUFFICIENT STATISTICS (exact-decimal total, bigram count) —
     # re-quantizing the avg QUOTIENT diverges: total/n lands exactly on

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 N_MERGES = 4
@@ -90,38 +91,29 @@ def bpe_train(spark: SparkSession, sf_dir: str,
     """Learn ``n_merges`` BPE merges; returns one row per round.
 
     Each round's vocab (and its 1-row winning pair) is materialized
-    with ``localCheckpoint`` (r15 opt, guide §3.3 "very
+    with ``share`` (r15 opt, guide §3.3 "very
     wide plans: materialise an intermediate to truncate the plan"):
     without it, round k's relation re-derives the whole merge chain
     from the corpus-sized word count — the final 4-round plan carried
     THIRTY duplicated corpus scans, contradicting this module's "one
-    corpus-sized pass" contract. Checkpointing pins exactly one corpus
+    corpus-sized pass" contract. Sharing pins exactly one corpus
     scan plus one vocab-scale materialization per round (what a real
-    trainer's staging-table write does). localCheckpoint rather than
-    persist(): a checkpoint is new lineage per call, so repeat bench
-    reps recompute honestly instead of serving Spark's
-    logical-plan-keyed cache. Wall-time at sf0.1 is flat (interleaved
-    A/B: both ~1.7-2.0 s min — the duplicated scans are cheap at bench
-    scale); the change is the 100 TB plan shape, committed in
-    plans/r15/q_text_bpe_merges_{before,after}.txt. LAZY since r16:
-    eager=True scheduled ~2 jobs per round before the main pass;
-    eager=False keeps the identical per-round LogicalRDD truncation
-    (the chain materializes bottom-up inside the consuming job) —
-    interleaved A/B 1.10 -> 1.03 warm min, rows identical."""
-    vocab = _word_freq(spark, sf_dir).select(
+    trainer's staging-table write does); the plan shape is committed
+    in plans/r15/q_text_bpe_merges_{before,after}.txt."""
+    vocab = share(_word_freq(spark, sf_dir).select(
         "word", "freq",
         F.regexp_replace("word", "(.)", f"{_L}$1{_R}").alias("seq"),
-    ).localCheckpoint(eager=False)
+    ))
     out = None
     for k in range(1, n_merges + 1):
-        top = _top_pair(_pair_counts(vocab)).localCheckpoint(eager=False)
+        top = share(_top_pair(_pair_counts(vocab)))
         row = top.select(
             F.lit(k).alias("merge_round"),
             F.col("l").alias("left_sym"), F.col("r").alias("right_sym"),
             F.col("cnt").cast("bigint").alias("pair_count"))
         out = row if out is None else out.unionAll(row)
         if k < n_merges:
-            vocab = _apply_merge(vocab, top).localCheckpoint(eager=False)
+            vocab = share(_apply_merge(vocab, top))
     return out
 
 
@@ -179,17 +171,17 @@ def _trained_seq_vocab(spark: SparkSession, sf_dir: str,
                        n_merges: int = N_MERGES) -> DataFrame:
     """(word, freq, seq) after ``n_merges`` trained rounds — the
     apply-side twin of ``bpe_train``, with the same per-round
-    ``localCheckpoint`` discipline (r15): without it the unrolled
+    ``share`` discipline (r15): without it the unrolled
     merge chain re-derived the corpus-sized word count once per round
     reference (17 corpus scans in the tokenize/token-budget plans).
     One corpus scan, then vocab-scale rounds."""
-    vocab = _word_freq(spark, sf_dir).select(
+    vocab = share(_word_freq(spark, sf_dir).select(
         "word", "freq",
         F.regexp_replace("word", "(.)", f"{_L}$1{_R}").alias("seq"),
-    ).localCheckpoint(eager=False)
+    ))
     for _ in range(n_merges):
-        top = _top_pair(_pair_counts(vocab)).localCheckpoint(eager=False)
-        vocab = _apply_merge(vocab, top).localCheckpoint(eager=False)
+        top = share(_top_pair(_pair_counts(vocab)))
+        vocab = share(_apply_merge(vocab, top))
     return vocab
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..compat import QDEC, q
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 # Exploded (vec_id, label, pos, x) view of the embeddings table, shared
@@ -199,7 +200,7 @@ def q_cluster_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label means, reassign every vector to its nearest centroid
     (E-step), recompute centroids over the new assignment (M-step).
     The iterative algorithm is this plan in a loop (with
-    ``localCheckpoint`` truncating lineage each round, exactly as the
+    ``share`` truncating lineage each round, exactly as the
     connected-components loop in ``incremental.py`` does); one
     oracle-gated iteration proves both steps bit-exact, which is the
     part a recursive oracle can't check cheaply. Per iteration: the
@@ -581,10 +582,10 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     division are IEEE-correctly-rounded (identical across engines);
     only sums are decimal-quantized (compat.py hazard 1)."""
     # The covariance relation feeds both union branches and every
-    # unrolled round; persist it (dim^2 bounded rows) so the corpus
+    # unrolled round; share it (dim^2 bounded rows) so the corpus
     # parquet is scanned ONCE — without it the round unrolling
     # re-expands the scan subtree 2^rounds times (measured: 36 scans).
-    cov = q_embed_cov(spark, sf_dir).select("i", "j", "cov").persist()
+    cov = share(q_embed_cov(spark, sf_dir).select("i", "j", "cov"))
     full = cov.union(
         cov.where(F.col("i") < F.col("j"))
         .select(F.col("j").alias("i"), F.col("i").alias("j"), "cov"))
@@ -593,14 +594,14 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.lit(0.125).alias("vk")))
     norm = None
     for _ in range(PCA_ROUNDS):
-        w = (
+        w = share(
             full.join(F.broadcast(v), F.col("j") == F.col("pos"))
             .groupBy("i")
             .agg(F.sum(F.col("cov").cast(_PCA_Q.lower())
                        * F.col("vk").cast(_PCA_Q.lower()))
                  .cast("double").cast(_PCA_Q.lower()).cast("double")
                  .alias("w"))
-        ).persist()  # consumed by both the norm agg and the divide
+        )  # consumed by both the norm agg and the divide
 
         norm = w.agg(
             F.sqrt(F.sum(F.col("w").cast(_PCA_Q.lower())
@@ -1008,12 +1009,12 @@ def q_sim_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("nn"))
     pn = (proj.join(norms, "vec_id").where(F.col("nn") > 0)
           .select("vec_id", "j", (F.col("y") / F.col("nn")).alias("yn")))
-    # localCheckpoint (r15, guide §1.2 step 1): the normalized
+    # Share (r15, guide §1.2 step 1): the normalized
     # projection feeds both cosine sides (qp, cp); without a
     # materialization point each side re-ran the posexplode x 16
     # projection aggregate and its norm join — the expensive stage of
     # the audit, twice. (vec_id, j, yn) is N x RP_OUT_DIM doubles.
-    pn = pn.localCheckpoint(eager=True)
+    pn = share(pn)
     qp = (pn.where(F.col("vec_id") < RP_QUERIES)
           .select(F.col("vec_id").alias("q_id"), "j",
                   F.col("yn").alias("qy")))

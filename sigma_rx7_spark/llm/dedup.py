@@ -26,39 +26,10 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..io import load
+from ..materialize import share
 from ..registry import query
 from .similarity import (dot, dot_idx, normalized,
                          np_pairwise_dots, np_unit_rows)
-
-# Scoped persist registry (r16, ADVICE r15): every relation this module
-# persists is registered so a library consumer running dedup queries
-# over many distinct corpora can release them; mirrors graph.py's
-# _GRAPH_CACHES pattern. CacheManager dedupes by logical plan, so
-# repeat calls on ONE corpus still reuse a single entry (the r5
-# unpersist lesson stands: do NOT release between repeat probes).
-_DEDUP_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register for release_dedup_caches()."""
-    _DEDUP_CACHES.append(df)
-    return df.persist()
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every relation THIS MODULE persisted; return the
-    count. unpersist() on an evicted entry is a no-op — double release
-    is safe."""
-    n = 0
-    while _DEDUP_CACHES:
-        df = _DEDUP_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped: nothing left to release
-    return n
-
 
 MINHASH_K = 32          # signature length
 LSH_BANDS = 8           # bands of 4 rows each -> catches jaccard >~ 0.5
@@ -169,10 +140,9 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only: hash-family randomness is engine-specific by nature."""
     d = load(spark, sf_dir, "documents")
     # The signature relation feeds three consumers (banding + both sides
-    # of the verification join); persist so the shingle explode + 32-way
-    # min aggregation runs once. At warehouse scale this is a staging
-    # table write instead of an in-memory persist.
-    sig = _persist_tracked(minhash_signatures(d))
+    # of the verification join); share it so the shingle explode +
+    # 32-way min aggregation runs once.
+    sig = share(minhash_signatures(d))
     cand = lsh_candidate_pairs(sig)
     a_sig = sig.select(F.col("doc_id").alias("a_doc_id"),
                        F.col("sig").alias("a_sig"))
@@ -304,7 +274,7 @@ def md5_lsh_candidates(sig: DataFrame, bands: int = MD5_LSH_BANDS,
         )
         for j in range(bands)
     ])
-    # persist: the band self-join consumes this relation on both sides
+    # share: the band self-join consumes this relation on both sides
     # and Catalyst does not exchange-reuse aliased branches — without it
     # the minhash signature aggregation (shingle explode + md5 digests +
     # 64 min-aggs, the expensive stage) runs twice. (doc_id, band_idx,
@@ -313,7 +283,7 @@ def md5_lsh_candidates(sig: DataFrame, bands: int = MD5_LSH_BANDS,
     banded = sig.select(
         "doc_id", F.explode(band_structs).alias("b")
     ).select("doc_id", "b.band_idx", "b.band_hash")
-    banded = _persist_tracked(banded)
+    banded = share(banded)
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(
@@ -377,7 +347,7 @@ def lsh_verified_pairs(docs: DataFrame) -> DataFrame:
     a_doc_id < b_doc_id. Engine-deterministic end to end."""
     sig = md5_minhash_signatures(docs)
     cand = md5_lsh_candidates(sig)
-    # persist: the verify join consumes the word-set relation on BOTH
+    # share: the verify join consumes the word-set relation on BOTH
     # sides (wa, wb) and Catalyst does not exchange-reuse aliased
     # branches — without it the corpus is tokenized twice more per
     # call. Same measured pathology and fix as the banded relation in
@@ -385,7 +355,7 @@ def lsh_verified_pairs(docs: DataFrame) -> DataFrame:
     # word-set artifact a production verify stage materializes anyway.
     words = docs.select(
         "doc_id", F.array_distinct(tokens(F.col("text"))).alias("w"))
-    words = _persist_tracked(words)
+    words = share(words)
     wa = words.select(F.col("doc_id").alias("a_doc_id"),
                       F.col("w").alias("wa"))
     wb = words.select(F.col("doc_id").alias("b_doc_id"),
@@ -688,7 +658,8 @@ def q_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB's list_inner_product mirror. Hash-gated, not rows-only,
     exactly as before; the Arrow↔fold bit-equality is property-tested.
     Ragged inputs (mixed embedding widths — zip_with truncation
-    semantics the dense matrix cannot mirror) fall back to the fold."""
+    semantics the dense matrix cannot mirror) and NULL rows or elements
+    (which the dense matrix would turn into NaN) fall back to the fold."""
     import numpy as np
 
     e = load(spark, sf_dir, "embeddings")
@@ -697,12 +668,13 @@ def q_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = tbl.num_rows
     if n == 0:
         return spark.createDataFrame([], _COSINE_OUT_SCHEMA)
-    emb = tbl.column("embedding").combine_chunks()
-    lens = {len(v) for v in emb.to_pylist()}
-    if len(lens) != 1:
+    raw = tbl.column("embedding").combine_chunks().to_pylist()
+    lens = {len(v) if v is not None else -1 for v in raw}
+    if (len(lens) != 1 or -1 in lens
+            or any(x is None for v in raw for x in v)):
         return _allpairs_cosine_jvm(e)
     ids = tbl.column("vec_id").to_numpy()
-    V = np.asarray(emb.to_pylist(), dtype=np.float64)
+    V = np.asarray(raw, dtype=np.float64)
     NB = np_unit_rows(V)
     bc = spark.sparkContext.broadcast((ids, NB))
     dim = V.shape[1]
@@ -869,13 +841,10 @@ def srp_candidate_pairs(sig: DataFrame, id_col: str = "vec_id",
         )
         for j in range(bands)
     ])
-    # persist: both sides of the self-join consume this relation, and
+    # share: both sides of the self-join consume this relation, and
     # Catalyst does NOT exchange-reuse across the aliased branches here
     # (measured: signatures — 32 fold dots over 64-wide literal
     # hyperplane arrays, the expensive projection — were computed twice).
-    # The banded relation is (id, band_idx, 4-char key) × bands rows —
-    # tiny at any corpus size relative to the vectors themselves; same
-    # posture as the minhash/simhash signature persists above.
     # repartition BEFORE the self-join: the embeddings table arrives as
     # one file -> one partition, and with dedup=False nothing downstream
     # would redistribute, so the pair explosion and every verify dot
@@ -886,7 +855,7 @@ def srp_candidate_pairs(sig: DataFrame, id_col: str = "vec_id",
         F.col(id_col), F.explode(band_structs).alias("bd")
     ).select(id_col, "bd.band_idx", "bd.band_key") \
         .repartition(id_col)
-    banded = _persist_tracked(banded)
+    banded = share(banded)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(
@@ -1009,9 +978,9 @@ def q_dedup_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # IVF build collects; drives the planned geometry.
     n = e.count()
     r, bands = srp_planned_geometry(n)
-    # nv is deliberately NOT persisted despite three consumers (the
+    # nv is deliberately NOT shared despite three consumers (the
     # signature pass and both verify-join sides): normalization is a
-    # cheap per-row fold, and caching it pins the single-input-file
+    # cheap per-row fold, and materializing it pins the single-input-file
     # partitioning onto the verify joins (measured 3.3 -> 4.2 s) where
     # the re-derived branches parallelize after their exchanges.
     nv = e.select("vec_id", normalized("embedding").alias("nv"))
@@ -1215,10 +1184,9 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dups; the verify stage touches candidates only and compares
     64-char strings — no text ever leaves the signature pass."""
     # The signature relation feeds three consumers (quarter explode and
-    # both sides of the verify join); persist so the 64-aggregate pass
-    # runs once — measured 10.4 s -> ~4 s at sf0.1. At warehouse scale
-    # this is a staging-table write, same as the MinHash signatures.
-    sig = _persist_tracked(q_dedup_simhash_md5(spark, sf_dir))
+    # both sides of the verify join); share it so the 64-aggregate pass
+    # runs once.
+    sig = share(q_dedup_simhash_md5(spark, sf_dir))
     quarters = None
     for j in range(4):
         q_j = sig.select(
@@ -1262,18 +1230,18 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     Scale design: this is the standard DataFrame-iterative CC (the
     two-phase large-star/small-star algorithm reduces to exactly this
     min-propagate loop on duplicate-cluster graphs, whose diameter is
-    small). Each round is one shuffle keyed by node; ``localCheckpoint``
+    small). Each round is one shuffle keyed by node; ``share``
     truncates the growing lineage so round N's plan doesn't replay rounds
-    1..N-1 (on a cluster, use ``checkpoint`` to reliable storage). The
-    loop is driver-side CONTROL only — the data never leaves executors;
+    1..N-1. The loop is driver-side CONTROL only — the data never
+    leaves executors;
     convergence is detected with a LIMIT 1 existence probe, not a
     collect."""
     # Materialize the (possibly expensive) edge relation ONCE — without
     # this, every loop iteration would replay the upstream pair
     # computation (measured 18→6 s at sf0.1 for the Jaccard pair source).
-    sym = edges.select("src", "dst").union(
+    sym = share(edges.select("src", "dst").union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     labels = nodes.select("node", F.col("node").alias("label"))
     # Convergence probe: min-labels only ever decrease, so the exact
     # decimal label sum is strictly decreasing until fixpoint — one
@@ -1283,15 +1251,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     for _ in range(max_iter):
         prop = sym.join(labels, sym["dst"] == labels["node"]).select(
             F.col("src").alias("node"), "label")
-        # Lazy checkpoint: the convergence-probe aggregate below computes
-        # every partition anyway, materializing the checkpoint as a side
-        # effect — one job per round instead of two (measured 4.1→3.1 s
-        # for the sf0.1 loop). Safe because the probe is a full-relation
-        # agg, never a partial-partition action like limit().
-        new_labels = (
+        # The convergence-probe aggregate below computes every
+        # partition, so it materializes the shared labels as a side
+        # effect: one job per round.
+        new_labels = share(
             labels.union(prop).groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
         )
         new_sum = new_labels.agg(
             F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
@@ -1634,9 +1599,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("df"))
             .where((F.col("df") >= 2) & (F.col("df") <= RARE_SHINGLE_DF))
             .select("shingle"))
-    # blocked feeds both sides of the candidate self-join — persist
+    # blocked feeds both sides of the candidate self-join — share it
     # (rare-filtered shingle relation, df<=10 survivors only).
-    blocked = _persist_tracked(sh.join(rare, "shingle"))
+    blocked = share(sh.join(rare, "shingle"))
     cand = (
         blocked.select(F.col("doc_id").alias("a_doc_id"), "shingle")
         .join(blocked.select(F.col("doc_id").alias("b_doc_id"), "shingle"),
@@ -1645,11 +1610,11 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_doc_id", "b_doc_id")
         .distinct()
     )
-    # persist: the verify join consumes the shingle-set relation on
+    # share: the verify join consumes the shingle-set relation on
     # BOTH sides and aliased branches do not exchange-reuse — without
     # it the corpus is re-shingled twice more per call (the
     # lsh_verified_pairs words pathology, r15).
-    shsets = _persist_tracked(d.select("doc_id", _shingles().alias("w")))
+    shsets = share(d.select("doc_id", _shingles().alias("w")))
     wa = shsets.select(F.col("doc_id").alias("a_doc_id"),
                        F.col("w").alias("wa"))
     wb = shsets.select(F.col("doc_id").alias("b_doc_id"),
@@ -1770,11 +1735,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = load(spark, sf_dir, "embeddings")
     nv = e.select("vec_id", normalized("embedding").alias("nv"))
-    # persist: both sides of the cell-blocked pair join consume this
+    # share: both sides of the cell-blocked pair join consume this
     # relation, and without it the exploded-assignment aggregation (the
     # expensive stage) runs twice — same measured pathology and same fix
     # as the SRP band relation above.
-    withcell = _persist_tracked(nv.join(assigned, "vec_id"))
+    withcell = share(nv.join(assigned, "vec_id"))
     a = withcell.select(F.col("vec_id").alias("a_vec_id"),
                         F.col("nv").alias("a_nv"), "cell")
     b = withcell.select(F.col("vec_id").alias("b_vec_id"),
@@ -1908,7 +1873,7 @@ def q_text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     by corpus size). Output is the |sources|² upper triangle — bounded
     metadata. Jaccard is one double division of exact counts."""
     d = load(spark, sf_dir, "documents")
-    ss = _persist_tracked(  # feeds the sizes aggregate and both join sides
+    ss = share(  # feeds the sizes aggregate and both join sides
         d.select("source", F.explode(_shingles()).alias("shingle"))
         .select("source", F.md5("shingle").alias("dig"))
         .distinct()
@@ -2074,10 +2039,9 @@ def q_dedup_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings 55k rows -> 119k candidates vs 1.13M all-shared-shingle
     pairs (~10x structural pruning; the residue is the corpus's
     template vocabulary surviving into prefixes at t=0.8), 256 final
-    pairs, 6.0 s warm. Persisting the shingle relation was measured
-    and DECLINED (6.2 s — ReusedExchange already dedupes the explode
-    across the five consuming branches; the cost is the verify join +
-    per-doc rank, which persist cannot remove)."""
+    pairs, 6.0 s warm. The shingle relation is not shared:
+    ReusedExchange already dedupes the explode across the five
+    consuming branches."""
     d = load(spark, sf_dir, "documents")
     sh = d.select(
         "doc_id", F.explode(_shingles()).alias("shingle")).distinct()
@@ -2318,13 +2282,13 @@ def q_dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: candidates track true duplicates (banded, never n²); the
     audit joins signatures and word sets only for candidate rows."""
     d = load(spark, sf_dir, "documents")
-    # persist both audit inputs (r15): the signature relation feeds
+    # share both audit inputs (r15): the signature relation feeds
     # the banding AND both compare sides (sa, sb), the word-set
     # relation both exact sides (wa, wb) — aliased branches do not
-    # exchange-reuse, so without the caches the shingle explode +
+    # exchange-reuse, so without sharing the shingle explode +
     # 16-way min aggregation and the tokenize each ran twice more per
     # call (the lsh_verified_pairs words pathology).
-    sig = _persist_tracked(md5_minhash_signatures(d))
+    sig = share(md5_minhash_signatures(d))
     cand = md5_lsh_candidates(sig)
     sa = sig.select(F.col("doc_id").alias("a_doc_id"),
                     *[F.col(f"m{i}").alias(f"a{i}")
@@ -2332,7 +2296,7 @@ def q_dedup_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sb = sig.select(F.col("doc_id").alias("b_doc_id"),
                     *[F.col(f"m{i}").alias(f"b{i}")
                       for i in range(MD5_MINHASH_K)])
-    words = _persist_tracked(
+    words = share(
         d.select("doc_id",
                  F.array_distinct(tokens(F.col("text"))).alias("w")))
     wa = words.select(F.col("doc_id").alias("a_doc_id"),

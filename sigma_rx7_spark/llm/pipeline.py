@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..io import load
+from ..materialize import share
 from ..registry import query
 from .sampling import TRAIN_NIBBLES, VAL_NIBBLES, hash_split
 
@@ -541,19 +542,15 @@ def quality_features(d: DataFrame) -> DataFrame:
          .cast("double") / ntok / F.lit(10.0)).alias("x2"),
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
     )
-    # Materialize the NUMERIC feature relation once (r15, guide §1.2
+    # Share the NUMERIC feature relation (r15, guide §1.2
     # step 1): every GD-family consumer makes >= 3 passes over feats
     # (QF_ROUNDS fit rounds + scoring), and without a materialization
     # point each pass re-tokenized the whole corpus — stopword filter +
     # regexp per document per pass. One tokenizing scan now feeds every
     # round/score pass reading (doc_id, source, n_chars, x1, x2, y) —
     # the staged feature table a real trainer materializes before GD.
-    # localCheckpoint, not persist: fresh lineage per call keeps bench
-    # reps recomputing honestly (lazy eager=False was A/B'd: no better
-    # at sf0.1 and it pushes the materialization into whichever
-    # consumer job happens to run first). Values bit-identical (same
-    # columns).
-    return feats.localCheckpoint(eager=True)
+    # Values bit-identical (same columns).
+    return share(feats)
 
 
 def fit_quality_weights(feats: DataFrame) -> DataFrame:
@@ -615,15 +612,12 @@ def q_pipeline_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # QUANTILE of the fitted distribution, not an absolute 0.5 (the
     # class prior shifts the whole distribution under imbalance). The
     # mean of the 6-dp-quantized scores is engine-exact; scored is
-    # persisted because the threshold aggregate and the final report
-    # both consume it (dropping the persist was A/B'd in r15: the final
-    # plan embeds scored twice — once under thr, once in the report —
-    # so without the cache the weight broadcast and sigmoid projection
-    # run twice; 1.40 vs 0.92 s warm min at sf0.1).
-    scored = (
+    # shared because the threshold aggregate and the final report
+    # both consume it (the final plan embeds scored twice — once under
+    # thr, once in the report).
+    scored = share(
         feats.crossJoin(F.broadcast(w))  # 1-row weight relation
         .select("source", "n_chars", p.alias("p"))
-        .persist()
     )
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
@@ -763,8 +757,8 @@ def q_ml_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = fit_quality_weights(feats)
     p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
                    + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)) \
-        .select("y", p.alias("p")).persist()
+    scored = share(feats.crossJoin(F.broadcast(w))
+                   .select("y", p.alias("p")))
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("thr"))
@@ -1043,7 +1037,7 @@ def q_corpus_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import hash_split
 
     d = load(spark, sf_dir, "documents")
-    pairs = lsh_verified_pairs(d).persist()
+    pairs = share(lsh_verified_pairs(d))
     n_docs = d.count()
     n_dup = pairs.count()
     n_qfail = d.where(
@@ -1740,8 +1734,8 @@ def q_ml_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = fit_quality_weights(feats)
     p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
                    + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)) \
-        .select("y", p.alias("p")).persist()
+    scored = share(feats.crossJoin(F.broadcast(w))
+                   .select("y", p.alias("p")))
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("thr"))

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load, read_staged
+from ..materialize import share
 from ..registry import query
 from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
 from .clustering import EMB_DIM, PQ_SUBS
@@ -272,7 +273,7 @@ def train_ivf_centroids(corpus: DataFrame, seeds: DataFrame,
     through decimal quantization (``compat.q``) so the trained centroids
     are bit-identical across partitionings and re-runs — which is what
     lets the staged and inline IVF queries assert result equality.
-    Centroids stay driver-small; ``localCheckpoint`` materializes each
+    Centroids stay driver-small; ``share`` materializes each
     round so round N's plan doesn't replay rounds 1..N-1.
     """
     from ..compat import q as _q
@@ -293,9 +294,8 @@ def train_ivf_centroids(corpus: DataFrame, seeds: DataFrame,
             .select("cell_id",
                     F.transform("s", lambda s: s["m"]).alias("mv"))
         )
-        cent = mean_vec.select(
-            "cell_id", normalized(F.col("mv")).alias("cent_vec")
-        ).localCheckpoint(eager=True)
+        cent = share(mean_vec.select(
+            "cell_id", normalized(F.col("mv")).alias("cent_vec")))
     return cent
 
 
@@ -609,11 +609,10 @@ def probe_ivf_index(spark: SparkSession, path: str, queries: DataFrame,
     )
     # One evaluation for both consumers (the plan-time cell_ids collect
     # AND the scoring join): the probe relation is n_queries × nprobe
-    # rows. Without the checkpoint the crossjoin+window ran twice per
+    # rows. Without sharing, the crossjoin+window ran twice per
     # probe — once for the collect, once inside the serve plan (guide
-    # §1.2 "don't compute things twice"). Fresh lineage per call, so
-    # repeated probes recompute honestly (r15).
-    probe_cells = probe_cells.localCheckpoint(eager=True)
+    # §1.2 "don't compute things twice").
+    probe_cells = share(probe_cells)
     cell_ids = sorted({r["cell_id"] for r in
                        probe_cells.select("cell_id").distinct().collect()})
     cells = (read_staged(spark, f"{path}/cells",
@@ -710,8 +709,8 @@ def q_sim_index_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn") <= NPROBE)
         .select("q_id", "q_vec", "cell_id")
     )
-    # Same single-evaluation checkpoint as probe_ivf_index (r15).
-    probe_cells = probe_cells.localCheckpoint(eager=True)
+    # Same single evaluation as probe_ivf_index (r15).
+    probe_cells = share(probe_cells)
     cell_ids = sorted({r["cell_id"] for r in
                        probe_cells.select("cell_id").distinct().collect()})
     schema = "c_id bigint, c_vec array<double>, cell_id int"

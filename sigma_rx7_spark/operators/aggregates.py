@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..compat import davg, dsum, o_davg, o_dsum
 from ..io import load, load_parallel
+from ..materialize import share
 from ..registry import query
 
 
@@ -966,10 +967,10 @@ def q_agg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     count join back as broadcast scalars. Integer counts + one double
     division = engine-exact with no quantization."""
     ev = load(spark, sf_dir, "events")
-    # ut feeds both pair-join sides and the per-type totals — persist
+    # ut feeds both pair-join sides and the per-type totals — share
     # the deduplicated relation (users x itemset, tiny) so the distinct
     # aggregation runs once.
-    ut = ev.select("user_id", "event_type").distinct().persist()
+    ut = share(ev.select("user_id", "event_type").distinct())
     n_users = ev.agg(
         F.count_distinct("user_id").cast("bigint").alias("n_users"))
     per_type = ut.groupBy("event_type").agg(
@@ -1170,11 +1171,10 @@ def q_window_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     date joins as a broadcast scalar to drop partial windows past the
     data's edge. Integer counts — engine-exact."""
     ev = load(spark, sf_dir, "events")
-    # persist: the distinct user-day relation feeds the bound scalar AND
+    # share: the distinct user-day relation feeds the bound scalar AND
     # the fan-out (two consumers of one distinct aggregation).
-    ud = ev.select(
-        "user_id", F.col("ts").cast("date").alias("day")).distinct() \
-        .persist()
+    ud = share(ev.select(
+        "user_id", F.col("ts").cast("date").alias("day")).distinct())
     bounds = ud.agg(F.max("day").alias("max_day"))
     fan = ud.select(
         "user_id",
@@ -1659,20 +1659,20 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     |pairs| × k rows. Hash arithmetic is exact (uint32/2³²); estimates
     are bare IEEE divisions/products — no quantization needed."""
     ev = load(spark, sf_dir, "events")
-    h = (
+    h = share(
         ev.select("event_type", "user_id").distinct()
         .withColumn(
             "hv",
             F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8),
                    16, 10).cast("bigint").cast("double") / F.lit(2.0 ** 32))
-    ).persist()
+    )
     types = h.select("event_type").distinct()
     pairs = (
         types.select(F.col("event_type").alias("type_a"))
         .join(types.select(F.col("event_type").alias("type_b")),
               F.col("type_a") < F.col("type_b"))
     )
-    pu = (
+    pu = share(
         F.broadcast(pairs).join(
             h,
             (F.col("event_type") == F.col("type_a"))
@@ -1685,7 +1685,7 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("event_type") == F.col("type_b"), 1)
                   .otherwise(0)).alias("in_b"),
         )
-    ).persist()  # feeds the sketch window AND the exact counts
+    )  # feeds the sketch window AND the exact counts
     w = Window.partitionBy("type_a", "type_b").orderBy("hv", "user_id")
     sk = (
         pu.withColumn("rn", F.row_number().over(w))
@@ -1758,14 +1758,13 @@ def q_agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.min("l_extendedprice").alias("v_lo"),
         F.max("l_extendedprice").alias("v_hi"))
-    # localCheckpoint the two tiny relations (r15, guide §1.2 step 1):
+    # Share the two tiny relations (r15, guide §1.2 step 1):
     # stats (<= |groups| rows) feeds both binned references and the
     # rank targets, and target (<= |groups| rows) re-embedded the whole
     # binned subtree at the final join — 5 fact scans in one plan for a
-    # 3-pass algorithm. Materialized, the plan takes exactly the three
-    # passes the recipe needs (stats, histogram, bin-pick). Fresh
-    # lineage per call keeps bench reps recomputing honestly.
-    stats = stats.localCheckpoint(eager=True)
+    # 3-pass algorithm. Shared, the plan takes exactly the three
+    # passes the recipe needs (stats, histogram, bin-pick).
+    stats = share(stats)
     span = F.col("v_hi") - F.col("v_lo")
     bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
         F.floor((F.col("l_extendedprice") - F.col("v_lo"))
@@ -1788,7 +1787,7 @@ def q_agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("rk") - (F.col("cum") - F.col("cnt")))
                 .alias("offset"), "n")
     )
-    target = target.localCheckpoint(eager=True)
+    target = share(target)
     wbin = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     return (
         binned.join(F.broadcast(target), ["l_returnflag", "bin"])
@@ -1936,7 +1935,7 @@ def q_agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same materialization discipline as A27 above: stats and located
     # are group-cardinality-bounded but each re-embedded a fact-scan
     # subtree per consumer (5 scans in-plan for the 3-pass recipe).
-    stats = stats.localCheckpoint(eager=True)
+    stats = share(stats)
     span = F.col("v_hi") - F.col("v_lo")
     bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
         F.floor((F.col("l_extendedprice") - F.col("v_lo"))
@@ -1965,7 +1964,7 @@ def q_agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("rk") - (F.col("cum") - F.col("cnt")))
                 .alias("offset"))
     )
-    located = located.localCheckpoint(eager=True)
+    located = share(located)
     wbin = Window.partitionBy("l_returnflag", "p") \
         .orderBy("l_extendedprice")
     hits = (
@@ -2649,23 +2648,20 @@ def q_agg_hbos(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .otherwise(F.least(raw.cast("bigint"),
                                    F.lit(HBOS_BINS - 1)))).alias(f"bin_{f}")
 
-    # localCheckpoint stats (1 row, lazy — it materializes inside the
-    # cells job below, avoiding a third blocking job) and the joint
-    # bin-cell grid (<= HBOS_BINS^3 rows, eager) — r15, guide §1.2
-    # step 1: the binned relation fed the probe pass AND the three
-    # marginal histograms, each re-deriving the fact scan + stats
-    # aggregate (8 scans in one plan). One fact pass now builds the
-    # joint cells; the marginals are integer sums of cell counts
+    # Share stats (1 row) and the joint bin-cell grid (<= HBOS_BINS^3
+    # rows) — r15, guide §1.2 step 1: the binned relation fed the probe
+    # pass AND the three marginal histograms, each re-deriving the fact
+    # scan + stats aggregate (8 scans in one plan). One fact pass now
+    # builds the joint cells; the marginals are integer sums of cell counts
     # (bit-identical to the direct counts); the probe pass is the only
     # other fact touch.
-    stats = stats.localCheckpoint(eager=False)
+    stats = share(stats)
     binned = li.crossJoin(F.broadcast(stats)).select(
         "l_orderkey", "l_linenumber", "n",
         *[bin_col(f) for f in _HBOS_FEATS])
 
-    cells = (binned.groupBy(*[f"bin_{f}" for f in _HBOS_FEATS])
-             .agg(F.count(F.lit(1)).alias("cc"))
-             .localCheckpoint(eager=True))
+    cells = share(binned.groupBy(*[f"bin_{f}" for f in _HBOS_FEATS])
+                  .agg(F.count(F.lit(1)).alias("cc")))
     out = binned
     for f in _HBOS_FEATS:
         hist = (cells.groupBy(f"bin_{f}")
@@ -3706,12 +3702,12 @@ def q_agg_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
 
     build_keys = o.select("o_custkey").distinct()
-    # localCheckpoint (r15, guide §1.2 step 1): the distinct build-key
+    # Share (r15, guide §1.2 step 1): the distinct build-key
     # relation feeds BOTH the filter build and the exact-membership
     # truth join; without a materialization point each consumer re-ran
     # the orders scan + distinct (2 fact scans -> 1). It is broadcast
     # downstream, so it is bounded by assumption already.
-    build_keys = build_keys.localCheckpoint(eager=True)
+    build_keys = share(build_keys)
     built = (
         build_keys.select(
             F.explode(F.array(*bloom_pos(F.col("o_custkey"))))
@@ -4290,19 +4286,11 @@ def q_agg_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g", "x", "cx",
         (2 * F.coalesce(F.sum("cx").over(wx), F.lit(0))
          + F.col("cx") + 1).alias("rx2"))
-    # r15: materialize the tiny x-rank relation once (groups × ≤~50
-    # distinct quantities). Its TWO consumers (the x-marginal fold and
-    # the ycell broadcast) otherwise each re-derive the full lineitem
+    # r15: share the tiny x-rank relation (groups × ≤~50 distinct
+    # quantities). Its TWO consumers (the x-marginal fold and the
+    # ycell broadcast) otherwise each re-derive the full lineitem
     # scan + (g, x) aggregate behind it — 4 fact scans instead of 2.
-    # localCheckpoint, not persist: fresh lineage per call keeps bench
-    # reps honest (the BPE-merge discipline). Measured 1.75 -> 1.53 s
-    # warm min at sf0.1, value-identical; repairing the remaining two
-    # scans' input parallelism was also A/B'd here and LOSES
-    # (1.42 -> 1.64: the repair shuffle exceeds the fused-agg win on
-    # both the (g,x) and (g,y) passes).
-    # LAZY (r16): same truncation, no pre-scheduled job (interleaved
-    # A/B 1.98 -> 1.85 warm min, rows identical).
-    xr = xr.localCheckpoint(eager=False)
+    xr = share(xr)
     # The x-marginal moments need ONLY the tiny x-rank relation:
     # Σ_rows rx = Σ_cells cx·rx2/2, Σ_rows rx² = Σ_cells cx·rx2²/4.
     # decimal(20,0) products keep every fold exact past int64 range.
@@ -4671,13 +4659,13 @@ def q_agg_theil(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey", F.col("c_nationkey").alias("nation"))
         .agg(F.sum(F.col("o_totalprice").cast("decimal(20,6)"))
              .cast("double").alias("x")))
-    # localCheckpoint (r15, guide §1.2 step 1): the per-customer spend
+    # Share (r15, guide §1.2 step 1): the per-customer spend
     # relation feeds four consumers (tot, the T terms, the per-nation
     # aggregate, n_customers via tot); without a materialization point
     # each re-derived the orders|x|customer join + aggregate — 5 fact
     # scans in one plan for a one-join algorithm. Customer-cardinality
     # — the staging relation a real report would materialize anyway.
-    spend = spend.localCheckpoint(eager=True)
+    spend = share(spend)
     tot = spend.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("x").cast("decimal(27,6)")).cast("double").alias("sx"))
@@ -4904,13 +4892,12 @@ def q_agg_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import capped_order_lines
 
     li = capped_order_lines(load(spark, sf_dir, "lineitem"))
-    # localCheckpoint (r15, guide §1.2 step 1): the capped-basket
+    # Share (r15, guide §1.2 step 1): the capped-basket
     # relation feeds four consumers (order count, item supports, both
     # self-join sides); without a materialization point each re-ran
     # the distinct + per-order ranking window over the fact scan — the
-    # most expensive stage of the query, four times. Fresh lineage per
-    # call keeps bench reps recomputing honestly.
-    li = li.localCheckpoint(eager=True)
+    # most expensive stage of the query, four times.
+    li = share(li)
     n_orders = li.agg(F.countDistinct("o").alias("n"))
     item = li.groupBy("p").agg(F.count(F.lit(1)).alias("supp_i"))
     a = li.select("o", F.col("p").alias("ante"))
@@ -5025,7 +5012,7 @@ def q_agg_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("l_quantity").alias("x"),
                         F.col("l_discount").alias("y"))
              .agg(F.count(F.lit(1)).alias("c")))
-    cells = cells.persist()
+    cells = share(cells)
     a, b = cells.alias("a"), cells.alias("b")
     ax, ay, bx, by = (F.col("a.x"), F.col("a.y"),
                       F.col("b.x"), F.col("b.y"))
@@ -5247,7 +5234,7 @@ def q_ab_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "conv"))
     arms = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n_g"), F.sum("conv").alias("r_g"))
-    arms = arms.persist()
+    arms = share(arms)
     tot = arms.agg(
         F.sum("n_g").alias("n"), F.sum("r_g").alias("r"),
         F.sum(F.col("arm") * F.col("r_g")).alias("wr"),
@@ -5323,30 +5310,19 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
         F.col("l_extendedprice").alias("x"))
-    # localCheckpoint the two tiny relations (r15, guide §1.2 step 1 /
+    # Share the two tiny relations (r15, guide §1.2 step 1 /
     # §3.3 "materialise an intermediate to truncate the plan"): stats
     # (<= |groups| rows) and spans (<= |groups|*bins rows) each feed
     # multiple consumers; without a materialization point every
     # broadcast(stats)/spans reference re-derived the whole fact-scan
     # subtree (14 parquet hits in one plan) and the duplicated tree
     # made query construction itself cost more than execution.
-    # localCheckpoint, not persist: fresh lineage per call keeps bench
-    # reps recomputing honestly. Values are bit-identical — the same
-    # aggregates, just computed once.
-    #
-    # LAZY, not eager (r16 — the VERDICT item 5 adjudication REPRODUCED
-    # this query's driver regression: alternating cold-process mins
-    # 1.40-1.45 HEAD vs 1.09-1.18 r14): eager=True paid two extra
-    # scheduled jobs before the main one. eager=False keeps the
-    # single-derivation truncation (both variants return a LogicalRDD;
-    # consumers share ONE RDD materialized inside the first consuming
-    # job) without the job-scheduling cost. Same-session A/B over 3
-    # rounds: eager/eager 1.49-1.82, lazy/lazy 1.20-1.39, no-checkpoint
-    # (r14 shape) 1.42-1.67 — lazy wins every round, rows identical.
+    # Values are bit-identical — the same aggregates, just computed
+    # once.
     stats = li.groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("x").alias("lo"), F.max("x").alias("hi"))
-    stats = stats.localCheckpoint(eager=False)
+    stats = share(stats)
     span = F.col("hi") - F.col("lo")
     bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
         F.floor((F.col("x") - F.col("lo")) * TRIM_BINS / span),
@@ -5363,7 +5339,7 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "g", "bin", "cnt", "s", "n",
         F.coalesce(F.sum("cnt").over(wcum), F.lit(0)).alias("off"),
         F.expr(f"n div {TRIM_DEN}").alias("k"))
-    spans = spans.localCheckpoint(eager=False)
+    spans = share(spans)
     lo_keep, hi_keep = F.col("k") + 1, F.col("n") - F.col("k")
     start, end = F.col("off") + 1, F.col("off") + F.col("cnt")
     interior = spans.where((start >= lo_keep) & (end <= hi_keep)) \
@@ -5679,19 +5655,14 @@ def q_ab_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = li.groupBy(F.col("l_returnflag").alias("g"),
                        F.col("l_quantity").alias("v")) \
         .agg(F.count(F.lit(1)).alias("cnt"))
-    # localCheckpoint the cell relation (r15, guide §1.2 step 1): it is
+    # Share the cell relation (r15, guide §1.2 step 1): it is
     # bounded by |groups| x |distinct quantities| (~150 rows) but feeds
     # a three-level diamond (vals -> ranked/ties, cells |x| ranked ->
     # groups -> nrel/tot) whose expansion re-derived the fact scan +
     # aggregate 5 times in one plan. One fact pass computes the cells;
     # every statistic below is integer arithmetic over the tiny
-    # relation. localCheckpoint, not persist: fresh lineage per call
-    # keeps bench reps recomputing honestly.
-    # LAZY (r16): eager paid a scheduled job before the main pass;
-    # eager=False keeps the same LogicalRDD single-derivation
-    # truncation with the materialization inside the consuming job
-    # (interleaved A/B 0.84 -> 0.76 warm min, rows identical).
-    cells = cells.localCheckpoint(eager=False)
+    # relation.
+    cells = share(cells)
     vals = cells.groupBy("v").agg(F.sum("cnt").alias("cv"))
     wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
     ranked = vals.select(
@@ -5918,7 +5889,7 @@ def q_ab_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     percust = (n.join(c, c.c_nationkey == n.n_nationkey, "left")
                .groupBy("n_nationkey", "n_regionkey")
                .agg(F.count("c_custkey").alias("nc")))
-    percust = percust.persist()
+    percust = share(percust)
     wmed = Window.orderBy("nc", "n_nationkey")
     wall = Window.partitionBy(F.lit(1))
     med = (percust
@@ -6204,9 +6175,9 @@ def q_agg_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~hi & ret, 1).otherwise(0)).alias("r_low"))
     # the pooled-diff reference branch re-executes this relation's plan
     # (plan audit: the '(pooled)' filter was pushed into a SECOND fact
-    # scan); the 25-row cell relation is persisted so the fact table is
+    # scan); the 25-row cell relation is shared so the fact table is
     # scanned exactly once per call.
-    cells = cells.persist()
+    cells = share(cells)
     pooled = cells.agg(
         F.sum("n_high").alias("n_high"), F.sum("r_high").alias("r_high"),
         F.sum("n_low").alias("n_low"), F.sum("r_low").alias("r_low")) \
@@ -6362,9 +6333,9 @@ def q_agg_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stats, located and the 3-row VaR relation each fed multiple
     # consumers and re-embedded fact-scan subtrees (6 scans in one
     # plan for a 4-pass algorithm: stats, histogram, rank-in-bin pick,
-    # tail aggregate). Checkpointed, the plan takes exactly those four
+    # tail aggregate). Shared, the plan takes exactly those four
     # passes.
-    stats = stats.localCheckpoint(eager=True)
+    stats = share(stats)
     span = F.col("v_hi") - F.col("v_lo")
     bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
         F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
@@ -6392,13 +6363,13 @@ def q_agg_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("segment", "bin", "n",
                        (F.col("rk") - (F.col("cum") - F.col("cnt")))
                        .alias("offset")))
-    located = located.localCheckpoint(eager=True)
+    located = share(located)
     wbin = Window.partitionBy("segment").orderBy("v")
     var_rel = (binned.join(F.broadcast(located), ["segment", "bin"])
                .withColumn("rk_in_bin", F.row_number().over(wbin))
                .where(F.col("rk_in_bin") == F.col("offset"))
                .select("segment", "n", F.col("v").alias("var_p")))
-    var_rel = var_rel.localCheckpoint(eager=True)
+    var_rel = share(var_rel)
     return (li.join(F.broadcast(var_rel), "segment")
             .where(F.col("v") >= F.col("var_p"))
             .groupBy("segment")

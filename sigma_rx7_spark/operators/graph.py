@@ -23,52 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 PR_DAMPING_PCT = 85   # damping as an integer percentage (fixed-point)
 PR_ITERS = 3
 PR_SCALE = 10 ** 12   # rank mass unit: 1.0 == 10^12
-
-# Round-invariant relations this module persisted, registered so a
-# library consumer can release exactly them (r6 judge item 5). The
-# harness path deliberately keeps the entries alive across calls —
-# Spark's CacheManager keys entries by logical plan, so repeat calls
-# over the same input reuse one entry and a blanket per-call unpersist
-# was measured SLOWER (3.3 s → 5.7 s warm, commit 61e3413). But a
-# consumer iterating over many DISTINCT graphs accretes one entry set
-# per graph; release_graph_caches() frees those without the collateral
-# eviction of spark.catalog.clearCache(), which would also drop caches
-# this module never created (the LSH band relations, staged-index
-# reads, a user's own persists).
-_GRAPH_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register for release_graph_caches()."""
-    _GRAPH_CACHES.append(df)
-    return df.persist()
-
-
-def release_graph_caches() -> int:
-    """Unpersist every relation THIS MODULE persisted; return the count.
-
-    Scoped release: only DataFrames registered by _persist_tracked are
-    touched (property-tested in tests/test_properties.py — an unrelated
-    persisted relation survives a release). unpersist() on an already-
-    evicted entry is a Spark no-op, so double release is safe. Call
-    between graphs when feeding many distinct edge lists through
-    pagerank_fixedpoint / q_graph_triangles; do NOT call between
-    repeat probes of the same graph (that re-pays the build)."""
-    n = 0
-    while _GRAPH_CACHES:
-        df = _GRAPH_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped: nothing left to release
-    return n
-
 
 # Per-order fan-out cap for the co-purchase edge build. TPC-H orders
 # carry <= 7 lines, so on harness data the cap is inert (results
@@ -145,27 +105,13 @@ def pagerank_fixedpoint(edges: DataFrame, damping_pct: int = PR_DAMPING_PCT,
     textbook-PageRank oracle on such graphs).
 
     Scale: each round shuffles (node, bigint) — never the edge payload;
-    the edge relation is round-invariant (cache/checkpoint once at
-    cluster scale, as the CC loop does); round count is fixed, so the
-    job graph is static."""
-    # The edge relation feeds every round (plus nodes/outdeg): persist
-    # once — the "cache/checkpoint once" discipline the docstring
-    # promises, without which the distinct self-join derivation re-runs
-    # per consumer per round (measured: the whole derivation executed
-    # 7x for 3 iterations). Deliberately NOT unpersisted per call:
-    # Spark's CacheManager keys cache entries by logical plan, so a
-    # repeat call over the same input persists the SAME entry (no
-    # per-call growth — only distinct inputs add entries) and reuses
-    # the materialized edges across probes like the staged ANN index.
-    # An explicit per-call unpersist was tried and REVERTED: it evicted
-    # exactly that cross-call reuse (measured 3.3 s → 5.7 s warm).
-    # Consumers with many DISTINCT graphs: release_graph_caches().
-    edges = _persist_tracked(edges)
-    # nodes feeds the rank seed; persist it too, or its consumers re-run
-    # the union+distinct shuffle over the edge relation. The count()
-    # that produces the scalar plan constant doubles as the
-    # materializing action.
-    nodes = _persist_tracked(
+    the edge relation is round-invariant (shared once, as the CC loop
+    does); round count is fixed, so the job graph is static."""
+    # edges feeds every round plus nodes/outdeg; without sharing, the
+    # distinct self-join derivation re-runs per consumer per round.
+    edges = share(edges)
+    # nodes feeds the rank seed and the scalar node count.
+    nodes = share(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct())
@@ -176,10 +122,10 @@ def pagerank_fixedpoint(edges: DataFrame, damping_pct: int = PR_DAMPING_PCT,
         # edge relation is routine at scale: a day with no co-purchases).
         return nodes.select(
             "node", F.lit(0).cast("bigint").alias("rank_fp"))
-    # Round-invariant PRE-JOIN of edges with out-degrees, persisted once
-    # (r10 profiling, verdict item 3): the old shape re-joined
+    # Round-invariant PRE-JOIN of edges with out-degrees, shared by
+    # every round (r10 profiling, verdict item 3): the old shape re-joined
     # edges⋈outdeg inside every round — three identical joins for three
-    # rounds. Folding it into one persisted (src, dst, deg) relation
+    # rounds. Folding it into one shared (src, dst, deg) relation
     # plus dropping the per-round left join against `nodes` (safe under
     # the documented symmetric-graph precondition: every node appears
     # as a dst, so the inner-join agg already covers all nodes — a
@@ -187,7 +133,7 @@ def pagerank_fixedpoint(edges: DataFrame, damping_pct: int = PR_DAMPING_PCT,
     # join) cut the warm sf0.1 median 3.8 s → ~2.2 s with bit-exact
     # parity against the unchanged unrolled oracle.
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ed = _persist_tracked(
+    ed = share(
         edges.join(outdeg, "src").select("src", "dst", "deg"))
     teleport = ((100 - damping_pct) * PR_SCALE) // (100 * n_nodes)
     ranks = nodes.select(
@@ -323,9 +269,9 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     row hash-matches with no tolerance."""
     li = capped_order_lines(load(spark, sf_dir, "lineitem"))
     # und feeds deg, orientation, and the edge count; oriented feeds
-    # the wedge join twice plus the closure semi-join. Persist both —
-    # each is bounded by the (deduplicated) edge count, and without the
-    # cache the distinct self-join derivation re-runs once per consumer
+    # the wedge join twice plus the closure semi-join. Share both —
+    # each is bounded by the (deduplicated) edge count, and without
+    # sharing the distinct self-join derivation re-runs once per consumer
     # (same pathology as the LSH band relations).
     und = (
         li.alias("x").join(li.alias("y"),
@@ -334,7 +280,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("x.p").alias("u"), F.col("y.p").alias("v"))
         .distinct()
     )
-    und = _persist_tracked(und)
+    und = share(und)
     deg = (
         und.select(F.col("u").alias("node"))
         .union(und.select(F.col("v").alias("node")))
@@ -353,7 +299,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("b"),
         )
     )
-    oriented = _persist_tracked(oriented)
+    oriented = share(oriented)
     # Wedge and closure counts WITHOUT enumerating wedges (r15, guide
     # §1.2 step 1 — the q_graph_clustering array-census recipe):
     # |wedges| = Σ_m indeg(m)·outdeg(m) over the oriented graph (every
@@ -365,7 +311,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full edge set. Orientation still caps outdeg at O(√m), so the
     # collected int arrays are bounded. Exact integer identities —
     # counts bit-identical.
-    outn = _persist_tracked(
+    outn = share(
         oriented.groupBy("a").agg(F.collect_list("b").alias("nb"),
                                   F.count(F.lit(1)).alias("dout")))
     inn = oriented.groupBy("b").agg(F.count(F.lit(1)).alias("din"))
@@ -617,10 +563,9 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = capped_order_lines(load(spark, sf_dir, "lineitem"))
     a = li.select("o", F.col("p").alias("u"))
     b = li.select("o", F.col("p").alias("v"))
-    edges = (
+    edges = share(
         a.join(b, "o").where(F.col("u") < F.col("v"))
-        .select("u", "v").distinct()
-        .localCheckpoint(eager=False))
+        .select("u", "v").distinct())
     prev_nodes = None
     nodes = None
     for _ in range(KCORE_ROUNDS):
@@ -629,12 +574,11 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(edges.select(F.col("v").alias("node")))
             .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
         prev_nodes = nodes
-        nodes = deg.where(F.col("deg") >= KCORE_K).select("node") \
-            .localCheckpoint(eager=False)
-        edges = (
+        nodes = share(deg.where(F.col("deg") >= KCORE_K).select("node"))
+        edges = share(
             edges.join(nodes.withColumnRenamed("node", "u"), "u")
             .join(nodes.withColumnRenamed("node", "v"), "v")
-            .select("u", "v").localCheckpoint(eager=False))
+            .select("u", "v"))
     n_core = nodes.count()
     n_prev = prev_nodes.count() if prev_nodes is not None else -1
     n_edges = edges.count()
@@ -736,12 +680,12 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors only. Intersection counts and degrees are exact
     integers; Jaccard is one 6-dp-quantized division; (jaccard DESC,
     a, b) is a total order so the emitted N rows are deterministic."""
-    edges = _persist_tracked(
+    edges = share(
         copurchase_edges(load(spark, sf_dir, "lineitem")))
     wadj = Window.partitionBy("src").orderBy("dst")
     adj = (edges.withColumn("rn", F.row_number().over(wadj))
            .where(F.col("rn") <= LINKPRED_MAX_NEIGHBORS).drop("rn"))
-    adj = _persist_tracked(adj)
+    adj = share(adj)
     deg = adj.groupBy("dst").agg(F.count(F.lit(1)).alias("d"))
     e1 = adj.select(F.col("src").alias("c"), F.col("dst").alias("a"))
     e2 = adj.select(F.col("src").alias("c"), F.col("dst").alias("b"))
@@ -867,10 +811,10 @@ def q_graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales. The coefficient stays exact-integer wedge counts into one
     quantized division. Nodes with deg < 2 (no wedge possible) report
     NULL."""
-    edges = _persist_tracked(
+    edges = share(
         copurchase_edges(load(spark, sf_dir, "lineitem")))
     wadj = Window.partitionBy("src").orderBy("dst")
-    adj = _persist_tracked(
+    adj = share(
         edges.withColumn("rn", F.row_number().over(wadj))
         .where(F.col("rn") <= CC_MAX_NEIGHBORS).drop("rn"))
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -952,7 +896,7 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal(19,0) products (int128, no overflow at any Σdeg² a capped
     graph can produce); one quantized IEEE expression. The fact table
     is touched once by the shared capped edge build."""
-    edges = _persist_tracked(
+    edges = share(
         copurchase_edges(load(spark, sf_dir, "lineitem")))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     ed = (edges
@@ -1043,7 +987,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a 25-row relation with per-community terms 9-dp-quantized
     before the order-insensitive sum. Exact integer counts
     everywhere; two final quantized expressions."""
-    edges = _persist_tracked(
+    edges = share(
         copurchase_edges(load(spark, sf_dir, "lineitem")))
     und = edges.where(F.col("src") < F.col("dst"))
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -1062,7 +1006,7 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-read the labeled relation (4 edge-scale passes). All integer
     # sums of integer cell counts: bit-identical by construction.
     cells = labeled.groupBy("ba", "bb").agg(F.count(F.lit(1)).alias("n"))
-    cells = _persist_tracked(cells)
+    cells = share(cells)
     # coalesce keeps the aggregates NON-NULLABLE like the counts they
     # replace (the driver gates on result schema); values are identical
     # on the always-non-empty inputs.
@@ -1118,7 +1062,7 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS,
     Scale: each round shuffles (node, label, count) — label votes
     aggregate map-side first (groupBy count), then one row_number
     window per node picks the winner; the edge relation itself is
-    round-invariant and persisted once. All-integer labels: no
+    round-invariant and shared once. All-integer labels: no
     floating tie anywhere.
 
     Two plan specializations (r12 profiling: the general form cost
@@ -1139,15 +1083,15 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS,
     specializations change the plan, never the semantics (the oracle
     keeps the general unrolled form; hashes re-proven at all three
     scales). Measured: 10.9 s → 1.6 s warm at sf0.1 (with the
-    per-round label persist that stops the two-consumer lineage
+    per-round label share that stops the two-consumer lineage
     re-execution)."""
-    edges = _persist_tracked(edges)
+    edges = share(edges)
     # src covers every node: the co-purchase edge list carries both
     # directions (general callers must symmetrize first).
     labels = (edges.select(F.col("src").alias("node")).distinct()
               .select("node", F.col("node").alias("lbl")))
     if iters > 0:
-        labels = _persist_tracked(
+        labels = share(
             edges.select(F.col("dst").alias("node"),
                          F.col("src").alias("lbl"))
             .unionAll(labels)
@@ -1185,12 +1129,12 @@ def label_propagation(edges: DataFrame, iters: int = LP_ITERS,
                   .select("node", F.col("s.lbl").alias("lbl")))
         if k < iters - 2:
             # each later round consumes `labels` TWICE (the broadcast
-            # copy and the self-vote union branch): without a persist
+            # copy and the self-vote union branch): without sharing
             # the prior round's lineage re-executes 2x per consumer —
             # exponential in round count (measured: round 3 alone
             # added 3.5 s). The relation is node-grain-tiny; the last
             # round's output is the query result and needs no pin.
-            labels = _persist_tracked(labels)
+            labels = share(labels)
     return labels
 
 

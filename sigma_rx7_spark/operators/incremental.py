@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 # Events strictly before the cutoff form the base snapshot; the rest are
@@ -814,7 +815,7 @@ def q_mv_distinct_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ksmall(hashed(ev.where(F.col("ts") < cutoff)))
     delta = ksmall(hashed(ev.where(F.col("ts") >= cutoff)))
     merged = base.unionByName(delta).distinct()
-    full_rel = hashed(ev).persist()
+    full_rel = share(hashed(ev))
     est_m = estimate(merged, "est_merged")
     est_f = estimate(full_rel, "est_monolithic")
     ex = full_rel.groupBy("event_type").agg(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..compat import dsum, o_dsum
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 
@@ -402,11 +403,11 @@ def q_join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").groupBy(
         F.col("c_custkey").alias("k2")).agg(
         F.count(F.lit(1)).alias("c_cust"))
-    j = (o.join(c, o.k == c.k2, "full")
-         .select(F.coalesce("k", "k2").alias("k"),
-                 F.coalesce("c_orders", F.lit(0)).alias("c_orders"),
-                 F.coalesce("c_cust", F.lit(0)).alias("c_cust"))
-         .persist())  # totals and top-k both consume it
+    # totals and top-k both consume j
+    j = share(o.join(c, o.k == c.k2, "full")
+              .select(F.coalesce("k", "k2").alias("k"),
+                      F.coalesce("c_orders", F.lit(0)).alias("c_orders"),
+                      F.coalesce("c_cust", F.lit(0)).alias("c_cust")))
     totals = j.agg(
         F.sum(F.col("c_orders") * F.col("c_cust")).cast("bigint")
         .alias("total_join_rows"),

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 
@@ -137,31 +138,25 @@ def q_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (VERDICT r15 item 2): the r15 fold stopped at the LOGICAL
     # sharing of per_key — Catalyst re-planned the shared subtree per
     # Union branch, so the executed plan still scanned orders 3x and
-    # lineitem 2x. Materialize the sharing the way every other r15/r16
-    # fold does: per_key persists (lazily — the profile checkpoint job
-    # below materializes it, the RI join reads the cache, and it is
-    # released before the query returns, so no CacheManager entry
-    # outlives construction), the 1-row profile aggregates
-    # localCheckpoint eagerly (tiny artifacts, fresh lineage per call —
-    # bench reps recompute honestly). Executed plan: ONE orders pass
-    # (the profile checkpoint job) + ONE lineitem pass (the orphan
-    # checkpoint job). All integer sums — bit-identical results.
-    per_key = per_key.persist()
-    profile = per_key.agg(
+    # lineitem 2x. Sharing per_key and the two 1-row profiles makes
+    # the executed work ONE orders pass + ONE lineitem pass. All
+    # integer sums — bit-identical results.
+    per_key = share(per_key)
+    profile = share(per_key.agg(
         F.sum("c").alias("n_rows"),
         F.sum("v_null").alias("null_cust"),
         F.sum("v_price").alias("nonpos_price"),
         F.sum("v_date").alias("date_range"),
         F.sum(F.when(F.col("c") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-    ).localCheckpoint(eager=True)
+    ))
     o_profile = profile.select("n_rows", "null_cust", "nonpos_price",
                                "date_range")
     dup = profile.select("n_dup_keys", "n_rows")
     # ONE lineitem pass for ALL lineitem checks: the per-row domain
     # profile rides the orphan join's aggregate (the join key relation —
-    # read from the per_key cache — broadcasts; the extra measure
+    # read from the shared per_key — broadcasts; the extra measure
     # columns never shuffle), so lineitem is scanned once.
-    orphan_profile = (
+    orphan_profile = share(
         li.select("l_orderkey", "l_quantity", "l_extendedprice",
                   "l_discount")
         .join(per_key.select("o_orderkey"),
@@ -176,10 +171,7 @@ def q_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             _violations("discount_range", (F.col("l_discount") < 0)
                         | (F.col("l_discount") > 1)),
         )
-    ).localCheckpoint(eager=True)
-    # Both consumers below read materialized artifacts; the
-    # order-cardinality cache is no longer needed.
-    per_key.unpersist()
+    )
     l_profile = orphan_profile.select(
         "n_rows", "qty_range", "neg_price", "discount_range")
     orphan = orphan_profile.select("n_orphans", "n_rows")
@@ -269,10 +261,6 @@ def q_quality_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PSI_BUCKETS = 10
 _PSI_CUTOFF = "2024-01-16 00:00:00"  # = incremental.MERGE_CUTOFF
-
-
-def _psi_cut_cols():
-    return [f"c{k}" for k in range(1, PSI_BUCKETS)]
 
 
 @query(
@@ -367,11 +355,12 @@ def q_quality_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("bucket"))
         .groupBy("bucket").agg(F.max("value").alias("hi"))
     )
-    cuts = dec.agg(*[
+    # 1 row; consumed by BOTH assignment passes — without sharing the
+    # reference batch gets ntile-sorted twice (plan-asserted)
+    cuts = share(dec.agg(*[
         F.max(F.when(F.col("bucket") == k, F.col("hi"))).alias(f"c{k}")
         for k in range(1, PSI_BUCKETS)
-    ]).persist()  # 1 row; consumed by BOTH assignment passes — without
-    # this the reference batch gets ntile-sorted twice (plan-asserted)
+    ]))
     bucket_expr = sum(
         (F.col(f"c{k}") < F.col("value")).cast("int")
         for k in range(1, PSI_BUCKETS)) + F.lit(1)
@@ -2114,10 +2103,10 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("v").alias("v_lo"), F.max("v").alias("v_hi"))
     # A27/A30 materialization discipline (r15, guide §1.2 step 1):
     # stats, located and the 3-row fence relation each fed multiple
-    # consumers, re-embedding fact-scan subtrees; checkpointed, the
+    # consumers, re-embedding fact-scan subtrees; shared, the
     # plan takes exactly the algorithm's four passes (stats,
     # histogram, rank-in-bin pick, fence aggregate).
-    stats = stats.localCheckpoint(eager=True)
+    stats = share(stats)
     span = F.col("v_hi") - F.col("v_lo")
     bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
         F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
@@ -2141,7 +2130,7 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
                .select("segment", "p", "bin", "n",
                        (F.col("rk") - (F.col("cum") - F.col("cnt")))
                        .alias("offset")))
-    located = located.localCheckpoint(eager=True)
+    located = share(located)
     wbin = Window.partitionBy("segment", "p").orderBy("v")
     hits = (binned.join(F.broadcast(located), ["segment", "bin"])
             .withColumn("rk_in_bin", F.row_number().over(wbin))
@@ -2153,7 +2142,7 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     fenced = quart.select(
         "segment", "n", "q1", "q3",
         (IQR_K_NUM * (F.col("q3") - F.col("q1"))).alias("iqr3"))
-    fenced = fenced.localCheckpoint(eager=True)
+    fenced = share(fenced)
     # fence classification stays in +/-/* decimal arithmetic on BOTH
     # sides: v is low iff 2*(q1-v) > 3*(q3-q1) — the division-free form
     # of v < q1 - 1.5*IQR, so neither engine ever types a fence as a

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 
@@ -303,9 +304,9 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.date_trunc("day", "ts").alias("active_day"))
     # ONE event scan: first-day derives FROM the distinct user-day
     # relation (min over distinct days == min over raw), and that
-    # relation persists for its two consumers — without this the raw
+    # relation is shared by its two consumers — without this the raw
     # event scan ran twice.
-    active = ev.distinct().persist()
+    active = share(ev.distinct())
     first = active.groupBy("user_id").agg(
         F.min("active_day").alias("cohort_day"))
     return (
@@ -974,7 +975,7 @@ def q_cohort_retention_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("day", "ts").alias("active_day"))
-    active = ev.distinct().persist()
+    active = share(ev.distinct())
     first = active.groupBy("user_id").agg(
         F.min("active_day").alias("cohort_day"))
     sizes = first.groupBy("cohort_day").agg(
@@ -1975,7 +1976,7 @@ def q_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("day"))
              .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
              .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
-    daily = daily.persist()
+    daily = share(daily)
     base = daily.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
@@ -2061,7 +2062,7 @@ def q_ts_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
                        .alias("day"))
              .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v")))
-    daily = daily.persist()
+    daily = share(daily)
     tot = daily.agg(F.count(F.lit(1)).alias("n_all"),
                     F.sum(F.col("v").cast("decimal(20,6)"))
                     .alias("s_all"))
@@ -2256,7 +2257,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .alias("day"))
              .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
              .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
-    daily = daily.persist()
+    daily = share(daily)
     base = daily.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
@@ -2491,7 +2492,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     widx = Window.orderBy("day")
     idx = daily.select(F.col("v").cast("double").alias("v"),
                        (F.row_number().over(widx) - 1).alias("i"))
-    idx = idx.persist()
+    idx = share(idx)
     n_days = idx.count()
     scales = spark.createDataFrame(
         [(s,) for s in HURST_SCALES], "n int")
@@ -2653,8 +2654,8 @@ def q_ts_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
              .agg(F.sum(F.col("value").cast("decimal(20,6)"))
                   .cast("double").alias("v")))
     widx = Window.orderBy("day")
-    idx = daily.select("day", "v",
-                       F.row_number().over(widx).alias("t")).persist()
+    idx = share(daily.select("day", "v",
+                             F.row_number().over(widx).alias("t")))
     mu = idx.agg(
         (F.sum(F.col("v").cast("decimal(27,9)")).cast("double")
          / F.count(F.lit(1))).alias("m"),

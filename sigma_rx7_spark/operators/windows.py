@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
+from ..materialize import share
 from ..registry import query
 
 
@@ -1017,9 +1018,9 @@ def q_window_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recency_days"),
                     "frequency", "monetary"))
     # The customer-grain relation feeds the melted scorer AND the
-    # final join — persist it once or the orders scan and collapse
-    # re-run per consumer.
-    base = base.persist()
+    # final join — share it or the orders scan and collapse re-run per
+    # consumer.
+    base = share(base)
     scores = binned_ntile_scores(
         base, [("recency_days", True), ("frequency", False),
                ("monetary", False)], 5)

@@ -19,26 +19,7 @@ def formatted_plan(df: DataFrame) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def pushed_filters(df: DataFrame) -> list[str]:
-    """The PushedFilters lists of every scan in the plan."""
-    return [ln.split("PushedFilters:", 1)[1].strip()
-            for ln in formatted_plan(df).splitlines()
-            if "PushedFilters:" in ln]
-
-
 def partition_filters(df: DataFrame) -> list[str]:
     return [ln.split("PartitionFilters", 1)[1].strip(" :")
             for ln in formatted_plan(df).splitlines()
             if "PartitionFilters" in ln]
-
-
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_python_eval(df: DataFrame) -> bool:
-    """True if any Python-eval stage (Batch/ArrowEvalPython, MapInPandas,
-    FlatMapGroupsInPandas) appears — i.e. rows leave the JVM."""
-    p = formatted_plan(df)
-    return any(m in p for m in
-               ("EvalPython", "MapInPandas", "FlatMapGroupsInPandas"))

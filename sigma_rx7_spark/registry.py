@@ -96,8 +96,10 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     # and local mirrors, but the driver should re-prove them): the
     # quality-audit fold, the lazy-checkpoint adoptees, the Arrow/
     # fixed-point rewrites (exact cosine, covariance, blocked Jaccard
-    # pair stage) and their composers, and the 13 streaming queries
-    # whose trailing no-data micro-batch is now skipped; (b) the 19
+    # pair stage) and their composers, the 11 streaming queries
+    # whose trailing no-data micro-batch is now skipped, and the two
+    # queries whose persists became materialize.share (PageRank, the
+    # quality model); (b) the 19
     # REMAINING names of the r5 freshness cohort (rotation debt paid in
     # full — VERDICT r15 item 8); (c) the 4 oldest r6 names fill the
     # window.
@@ -133,8 +135,9 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_sessions",
     "q_stream_static_join",
     "q_stream_stream_join",
-    "q_stream_funnel",
-    "q_stream_attribution",
+    # materialization changed — persists now go through share()
+    "q_graph_pagerank",
+    "q_pipeline_quality_model",
     # r5-cohort completion: the remaining 19 of the 49-name debt
     "q_cohort_retention_rate",
     "q_daily_autocorr",

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..io import load
+from ..materialize import share, snapshot
 from ..registry import query
 from ..session import ensure_session_conf
 from ..operators.incremental import MERGE_CUTOFF
@@ -438,7 +439,7 @@ def streaming_merge(base: DataFrame, change_stream: DataFrame,
     This is the foreachBatch upsert-sink pattern — what Structured
     Streaming pairs with Delta/Iceberg ``MERGE INTO`` at warehouse
     scale; here the target is an in-session relation,
-    ``localCheckpoint``-materialized per batch so state lineage stays
+    ``snapshot``-materialized per batch so state lineage stays
     one-batch deep instead of replaying every batch since stream start
     (same discipline as the connected-components loop). State size is
     one row per live key plus one ``order_col`` watermark column,
@@ -458,17 +459,15 @@ def streaming_merge(base: DataFrame, change_stream: DataFrame,
     if tiebreak not in value_cols:
         raise ValueError("tiebreak column must be carried in base")
     ord_type = change_stream.schema[order_col].dataType
-    state = {"df": (base
-                    .withColumn("src", F.lit("base"))
-                    .withColumn("_ord", F.lit(None).cast(ord_type))
-                    .localCheckpoint(eager=True))}
+    state = {"df": snapshot(
+        base.withColumn("src", F.lit("base"))
+        .withColumn("_ord", F.lit(None).cast(ord_type)))}
 
     def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
         if not bdf.head(1):
             return
-        state["df"] = merge_batch_into_state(
-            state["df"], bdf, keys, order_col, tiebreak, value_cols
-        ).localCheckpoint(eager=True)
+        state["df"] = snapshot(merge_batch_into_state(
+            state["df"], bdf, keys, order_col, tiebreak, value_cols))
 
     ckpt = tempfile.mkdtemp(prefix="merge_ckpt_")
     try:
@@ -746,7 +745,7 @@ def ingest_dedup_report(state: DataFrame) -> DataFrame:
     winner of each digest is the globally smallest (doc_id, n_chars)
     struct; a source's ingested count is the number of digests it wins."""
     # state feeds the global-winner aggregate AND the per-source report
-    state = state.localCheckpoint(eager=True)
+    state = share(state)
     g = state.groupBy("dig").agg(F.min("mindoc").alias("gmin"))
     per = state.join(g, "dig").select(
         "source", "n_docs",
@@ -804,7 +803,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state carries one row per (digest, source) — 32-byte
     digests, never text; each batch contributes a pre-aggregated
     (digest, source) relation (map-side collapse before the state
-    join); ``localCheckpoint`` keeps state lineage one batch deep. At
+    join); ``snapshot`` keeps state lineage one batch deep. At
     warehouse scale this state IS the dedup index, persisted as a table
     and merged with `MERGE INTO`."""
     state = {"df": None}
@@ -818,8 +817,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dig string, source string, n_docs bigint, "
                 "mindoc struct<doc_id: bigint, n_chars: bigint>")
             state["df"] = empty
-        state["df"] = fold_digest_state(
-            state["df"], bdf).localCheckpoint(eager=True)
+        state["df"] = snapshot(fold_digest_state(state["df"], bdf))
 
     ckpt = tempfile.mkdtemp(prefix="ingest_dedup_ckpt_")
     try:
@@ -1003,7 +1001,7 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(qd("value")).cast("decimal(28,6)")
             .alias("sum_value_dec"))
-        state["df"] = mv_fold(state["df"], batch_states).localCheckpoint()
+        state["df"] = snapshot(mv_fold(state["df"], batch_states))
 
     ckpt = tempfile.mkdtemp(prefix="mvrefresh_ckpt_")
     try:
@@ -1330,10 +1328,10 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .over(Window.orderBy("value", "event_id"))
                  .alias("bucket"))
         .groupBy("bucket").agg(F.max("value").alias("hi")))
-    cuts = dec.agg(*[
+    cuts = share(dec.agg(*[
         F.max(F.when(F.col("bucket") == k, F.col("hi"))).alias(f"c{k}")
         for k in range(1, PSI_BUCKETS)
-    ]).withColumn("j", F.lit(1)).persist()
+    ]).withColumn("j", F.lit(1)))
 
     def bucket_expr():
         return sum(
@@ -1349,7 +1347,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The stream side carries the learned edges as LITERALS — the
     # broadcast-artifact semantics a deployed monitor has (k-1 scalars
     # of bounded index metadata, the z-order-bounds precedent), and it
-    # sidesteps joining a streaming relation with a persisted 1-row
+    # sidesteps joining a streaming relation with a shared 1-row
     # batch relation, which Spark 4 rejects.
     edge_row = cuts.collect()[0]
     stream_bucket = sum(

@@ -75,6 +75,8 @@ def _canon(cols, rows):
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_oracle_parity(name, spark, sf_dir):
     spec = ALL[name]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
     sdf = spec.fn(spark, sf_dir)
     s_cols = list(sdf.columns)
     # ONE Spark execution serves both the value and the dtype checks
@@ -82,6 +84,10 @@ def test_oracle_parity(name, spark, sf_dir):
     # foreachBatch streams — and all are multi-second; a second run per
     # query would double the suite).
     s_pd = sdf.toPandas()
+    # Shared relations go through materialize.share, which creates no
+    # CacheManager entry: a query must leave the cache as it found it.
+    assert cache.isEmpty() or not was_empty, (
+        f"{name}: left a CacheManager entry behind")
     s_rows = [tuple(r) for r in s_pd.itertuples(index=False, name=None)]
 
     con = _duck(sf_dir)

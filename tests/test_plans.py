@@ -359,10 +359,11 @@ def test_scd2_windows_share_one_exchange(spark, sf_dir):
 
 
 def test_quality_audit_profiles_are_conditional_aggregates(spark, sf_dir):
-    # r16 (VERDICT r15 item 2): the audit's two fact passes run in
-    # eager-checkpoint jobs at construction — ONE orders pass (per-key
-    # profile + pk-dup + RI dim build) and ONE lineitem pass (domain
-    # profile riding the orphan join). The returned plan therefore
+    # r16 (VERDICT r15 item 2): the audit's two fact passes run while
+    # the DataFrame is built, in the shuffle stages of its shared
+    # relations — ONE orders pass (per-key profile + pk-dup + RI dim
+    # build) and ONE lineitem pass (domain profile riding the orphan
+    # join). The returned plan therefore
     # consumes only the two materialized 1-row artifacts: ZERO parquet
     # scans may remain (previously: 3 orders + 2 lineitem scans with no
     # exchange reuse — the table audited 5x per run at fact scale).
@@ -399,11 +400,17 @@ def test_rolling_median_single_window_exec(spark, sf_dir):
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
 
 
-def test_semantic_dedup_broadcasts_centroids_and_blocks_by_cell(spark,
-                                                               sf_dir):
+def test_semantic_dedup_broadcasts_centroids_and_blocks_by_cell(
+        spark, sf_dir, monkeypatch):
     # Centroids (k x dim) broadcast into the assignment join; the pair
     # join is keyed on the cell id (blocked), never a cross join of the
-    # corpus against itself.
+    # corpus against itself. The assignment join runs inside the shared
+    # relation, so it is planned again with share() as the identity.
+    from sigma_rx7_spark.llm import dedup
+
+    p = plan(spark, sf_dir, "q_dedup_semantic")
+    assert "CartesianProduct" not in p, p
+    monkeypatch.setattr(dedup, "share", lambda df: df)
     p = plan(spark, sf_dir, "q_dedup_semantic")
     assert "BroadcastHashJoin" in p, p
     assert "CartesianProduct" not in p, p
@@ -512,15 +519,15 @@ def test_lateral_topk_decorrelates_to_window(spark, sf_dir):
 
 
 def test_pca_power_scans_corpus_once(spark, sf_dir):
-    # Power iteration must touch the embeddings corpus exactly once (the
-    # covariance sufficient statistic is persisted; formatted explain
-    # re-prints the cached build subtree per consumer, so the assertion
-    # is on InMemoryTableScan presence — the runtime materializes the
-    # cache once). Each unrolled round then operates on the dim^2
+    # Power iteration must touch the embeddings corpus exactly once: the
+    # covariance sufficient statistic is shared (a Scan ExistingRDD of
+    # the materialized relation), so no corpus scan is left in the
+    # plan. Each unrolled round then operates on the dim^2
     # relation with broadcast joins only — iteration cost independent of
     # corpus size, and no Python anywhere in the loop.
     p = plan(spark, sf_dir, "q_embed_pca_power")
-    assert "InMemoryTableScan" in p, p
+    assert "Scan ExistingRDD" in p, p
+    assert "Scan parquet" not in p, p
     assert "SortMergeJoin" not in p, p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
 
@@ -554,10 +561,10 @@ def test_psi_learns_edges_once_and_broadcasts_cuts(spark, sf_dir):
 
     p = plan(spark, sf_dir, "q_quality_psi")
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p, p
-    # the cut row is persisted: the ntile edge sort must not re-run per
-    # assignment pass (formatted explain re-prints cached subtrees, so
-    # assert the cache node rather than counting Window prints)
-    assert "InMemoryTableScan" in p, p
+    # the cut row is shared: both assignment passes read it as a Scan
+    # ExistingRDD, and the ntile edge sort is not in the plan at all
+    assert "Scan ExistingRDD" in p, p
+    assert not re.search(r"\(\d+\) Window", p), p
 
 
 def test_json_dlq_routes_without_python(spark, sf_dir):
@@ -693,14 +700,16 @@ def test_linkage_block_keyed_join(spark, sf_dir):
 
 
 def test_pagerank_iteration_plan_shape(spark, sf_dir):
-    """L1d: every PageRank round joins the PERSISTED edge relation
-    (InMemoryTableScan — the derivation must not re-run per round) with
-    key-equi joins only, and the iteration never global-sorts: rank
-    mass shuffles hash-partitioned by node."""
+    """L1d: every PageRank round joins the SHARED edge relation
+    (Scan ExistingRDD, and no lineitem scan left in the plan — the
+    derivation must not re-run per round) with key-equi joins only,
+    and the iteration never global-sorts: rank mass shuffles
+    hash-partitioned by node."""
     p = plan(spark, sf_dir, "q_graph_pagerank")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    assert "InMemoryTableScan" in p
+    assert "Scan ExistingRDD" in p
+    assert "Scan parquet" not in p
     assert "rangepartitioning" not in p.lower()
 
 
@@ -1205,11 +1214,7 @@ def test_linkpred_topn_is_takeordered_not_global_sort(spark, sf_dir):
     p = plan(spark, sf_dir, "q_graph_link_prediction")
     assert "TakeOrderedAndProject" in p
     # No Sort node may order by jaccard — the only jaccard ordering is
-    # inside TakeOrderedAndProject's heap. (A blanket no-Sort check is
-    # wrong here: when the persisted adjacency is already materialized
-    # by an earlier test, the cached subtree re-prints its own
-    # per-partition window sorts — src/dst sorts, not a candidate
-    # sort.)
+    # inside TakeOrderedAndProject's heap.
     for blk in p.split("\n\n"):
         if re.match(r"\(\d+\) Sort\b", blk):
             assert "jaccard" not in blk, blk

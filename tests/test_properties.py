@@ -480,40 +480,23 @@ def test_pagerank_mass_and_determinism(spark, sf_dir):
     assert all(r[1] > 0 for r in rows)
 
 
-def test_release_graph_caches_scoped(spark, sf_dir):
-    # release_graph_caches() frees exactly the relations the graph
-    # module persisted: an unrelated persisted DataFrame must survive
-    # (the property clearCache() could not give), results must be
-    # identical after a release-forced rebuild, and a second release
-    # finds nothing left.
-    from pyspark.sql import functions as F
-
+def test_user_persist_survives_shared_queries(spark, sf_dir):
+    # Queries share relations through materialize.share, which never
+    # touches the CacheManager: a DataFrame the user persisted survives
+    # the graph and dedup queries, and a repeat call (fresh lineage)
+    # returns identical rows.
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.operators.graph import (
-        _GRAPH_CACHES,
-        release_graph_caches,
-    )
 
-    release_graph_caches()  # start from a clean slate
-    unrelated = spark.range(100).select(
-        (F.col("id") * 2).alias("v")).persist()
-    assert unrelated.count() == 100  # materialize the cache entry
-
-    q = registry.load_all()["q_graph_pagerank"]
-    rows = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-    assert len(_GRAPH_CACHES) > 0
-    released = release_graph_caches()
-    assert released >= 3  # edges + nodes + outdeg at minimum
-    assert not _GRAPH_CACHES
-    # scoped: the unrelated entry was not evicted
-    assert unrelated.storageLevel.useMemory
-    # double release is a safe no-op
-    assert release_graph_caches() == 0
-    # rebuild after release is bit-identical
-    again = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-    assert rows == again
-    release_graph_caches()
-    unrelated.unpersist()
+    mine = spark.range(100).select((F.col("id") * 2).alias("v")).persist()
+    assert mine.count() == 100  # materialize the cache entry
+    specs = registry.load_all()
+    for name in ("q_graph_pagerank", "q_dedup_near"):
+        q = specs[name]
+        rows = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
+        again = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
+        assert rows == again, name
+    assert mine.storageLevel.useMemory
+    mine.unpersist()
 
 
 def test_weighted_sample_skews_toward_weight(spark):

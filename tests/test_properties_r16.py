@@ -24,11 +24,7 @@ def _bits(x: float) -> int:
     return struct.unpack("<q", struct.pack("<d", x))[0]
 
 
-def test_arrow_cosine_bit_equals_jvm_fold(spark, sf_dir):
-    # The mapInArrow scorer vs the r15 BroadcastNestedLoopJoin fold:
-    # same pairs, and every cos_sim IDENTICAL AT THE BIT LEVEL (the
-    # property the hash gate needs; == would also pass for -0.0/0.0
-    # and fail for NaN, so compare raw bit patterns).
+def _assert_cosine_matches_fold(spark, sf_dir):
     from sigma_rx7_spark.llm.dedup import _allpairs_cosine_jvm
 
     e = load(spark, sf_dir, "embeddings")
@@ -40,6 +36,34 @@ def test_arrow_cosine_bit_equals_jvm_fold(spark, sf_dir):
     assert len(new) == len(new_m)  # no duplicate pairs
     for k, v in old_m.items():
         assert _bits(new_m[k]) == _bits(v), (k, new_m[k], v)
+    return old_m
+
+
+def test_arrow_cosine_bit_equals_jvm_fold(spark, sf_dir):
+    # The mapInArrow scorer vs the r15 BroadcastNestedLoopJoin fold:
+    # same pairs, and every cos_sim IDENTICAL AT THE BIT LEVEL (the
+    # property the hash gate needs; == would also pass for -0.0/0.0
+    # and fail for NaN, so compare raw bit patterns).
+    _assert_cosine_matches_fold(spark, sf_dir)
+
+
+def test_cosine_null_embeddings_match_jvm_fold(spark, sf_dir, tmp_path):
+    # One NULL embedding row and one NULL element: the regularity gate
+    # must route both to the JVM fold (a NULL row used to raise
+    # TypeError in the gate, and a NULL element became NaN in the dense
+    # matrix), so the query still equals the fold pair for pair.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    emb = tbl.column("embedding").to_pylist()
+    emb[0] = None
+    emb[1] = [None] + emb[1][1:]
+    idx = tbl.schema.get_field_index("embedding")
+    tbl = tbl.set_column(idx, tbl.schema.field(idx),
+                         pa.array(emb, tbl.schema.field(idx).type))
+    pq.write_table(tbl, tmp_path / "embeddings.parquet")
+    assert _assert_cosine_matches_fold(spark, str(tmp_path))
 
 
 def test_np_unit_rows_matches_engine_normalized(spark, sf_dir):
@@ -162,24 +186,3 @@ def test_bitset_cluster_pairs_equal_join_pairs(spark, sf_dir):
         .select(F.col("a_doc_id").alias("src"),
                 F.col("b_doc_id").alias("dst")).collect())
     assert new == old and len(new) > 0
-
-
-def test_release_dedup_caches_is_scoped(spark, sf_dir):
-    # ADVICE r15: dedup persists route through a tracked registry with
-    # a scoped release — releasing must unpersist what the module
-    # cached and must NOT touch unrelated persisted relations.
-    from pyspark.sql import functions as F
-
-    from sigma_rx7_spark.llm import dedup as D
-
-    other = spark.range(10).select(F.col("id").alias("x")).persist()
-    other.count()
-    n_before = len(D._DEDUP_CACHES)
-    ALL["q_dedup_near"].fn(spark, sf_dir).write.mode("overwrite") \
-        .format("noop").save()
-    assert len(D._DEDUP_CACHES) > n_before
-    released = D.release_dedup_caches()
-    assert released >= len(D._DEDUP_CACHES) or released > 0
-    assert not D._DEDUP_CACHES
-    assert other.storageLevel.useMemory  # unrelated cache untouched
-    other.unpersist()
