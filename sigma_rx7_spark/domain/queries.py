@@ -22,13 +22,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..registry import query
-from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
 from . import fixtures, hl7, rules
 from .fhir import RXNORM_SYSTEM, export_medication_requests
 
-_STAGE = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__)))), ".staging", "domain")
 _STAGED_TABLES = ("meds", "orange_book", "prices", "coverage", "formulary",
                   "allergies", "conditions")
 
@@ -36,55 +34,30 @@ _STAGED_TABLES = ("meds", "orange_book", "prices", "coverage", "formulary",
 _DOMAIN_STAGED: dict[str, DataFrame] = {}
 
 
-def _domain_stamp() -> str:
-    """Stamp of the staged fixture set: hashes the whole fixtures
-    MODULE (every staged table comes from build_domain_tables and its
-    file-level constants), so any fixture change auto-invalidates the
-    staging — no hand-maintained version integer to forget (r6
-    advice)."""
-    return src_stamp(fixtures)
-
-
 def stage_domain_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """Write the deterministic fixtures to parquet and read them back, so
     the Spark pipeline and the DuckDB oracle consume identical bytes.
+    The stamp hashes the whole fixtures MODULE (every staged table comes
+    from build_domain_tables and its file-level constants).
 
-    Memoized per process: the fixtures are deterministic, so one write
-    serves every domain query — and composed queries (the alert inbox
-    unions four rule pipelines in ONE plan) REQUIRE it: a re-stage
-    between member calls overwrites files an earlier member's plan
-    still references (observed: FAILED_READ_FILE mid-materialization).
-
-    CROSS-process safety (round-5 incident: a concurrent session
-    re-staged these paths mid-read and failed 16 tests in the other
-    process): a completed staging is detected by an on-disk layout-
-    version marker plus per-table _SUCCESS files — same discipline as
-    sources/layout.py:stage_indexed_lineitem — and is NEVER
-    overwritten by a fresh process. The marker version invalidates
-    stagings left by older fixture code; only then do we rewrite.
-    """
-    if _DOMAIN_STAGED:
-        return dict(_DOMAIN_STAGED)
-    stamp = _domain_stamp()
-    if not staging_ok(_STAGE, stamp, *_STAGED_TABLES):
-        # begin_staging FIRST (r6 advice): the seven table subdirs
-        # rewrite one at a time under a single parent marker, and
-        # without the BUILDING sentinel a concurrent process on an
-        # older fixtures revision would see its own still-matching
-        # marker over a half-rewritten table set and read mid-rebuild.
-        begin_staging(_STAGE)
-        tables = fixtures.build_domain_tables(spark)
+    The read-back DataFrames are memoized per process: composed queries
+    (the alert inbox unions four rule pipelines in ONE plan) share one
+    set of scans."""
+    if not _DOMAIN_STAGED:
+        def build(path: str) -> None:
+            tables = fixtures.build_domain_tables(spark)
+            for t in _STAGED_TABLES:
+                tables[t].coalesce(1).write.mode("overwrite") \
+                    .parquet(os.path.join(path, t))
+        root = staging.stage("domain", None, build, code=(fixtures,),
+                             parts=_STAGED_TABLES)
         for t in _STAGED_TABLES:
-            path = os.path.join(_STAGE, t)
-            tables[t].coalesce(1).write.mode("overwrite").parquet(path)
-        mark_staged(_STAGE, stamp)
-    for t in _STAGED_TABLES:
-        _DOMAIN_STAGED[t] = spark.read.parquet(os.path.join(_STAGE, t))
+            _DOMAIN_STAGED[t] = spark.read.parquet(os.path.join(root, t))
     return dict(_DOMAIN_STAGED)
 
 
 def _p(table: str) -> str:
-    return f"read_parquet('{os.path.join(_STAGE, table)}/*.parquet')"
+    return f"read_parquet('{staging.path('domain')}/{table}/*.parquet')"
 
 
 # Brand→generic substitution CTEs, shared by the recommendation and the

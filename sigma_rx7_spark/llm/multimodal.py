@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import staging
 from ..registry import query
 
 MEDIA_SCHEMA = T.StructType([
@@ -175,34 +176,20 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Oracle-gated binary-column plumbing ---------------------------------
 
-_MEDIA_STAGE = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__)))), ".staging",
-    "media_fixture")
-
-
 def stage_media(spark: SparkSession) -> DataFrame:
     """Write the deterministic media fixture to parquet and read it back,
     so Spark and the DuckDB oracle consume identical payload bytes (the
-    domain-staging contract). A completed staging (source-hash stamp +
-    _SUCCESS) is reused, never overwritten — re-writing identical bytes
-    on every call was both wasted work and the cross-process
-    FAILED_READ_FILE overwrite race fixed repo-wide in round 6. The
-    stamp hashes build_media_table's source, so a fixture change
-    auto-invalidates old stagings (r6 advice)."""
-    from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-    stamp = src_stamp(build_media_table)
-    if not staging_ok(_MEDIA_STAGE, stamp):
-        begin_staging(_MEDIA_STAGE)
+    domain-staging contract)."""
+    def build(path: str) -> None:
         build_media_table(spark).coalesce(1).write.mode("overwrite") \
-            .parquet(_MEDIA_STAGE)
-        mark_staged(_MEDIA_STAGE, stamp)
-    return spark.read.parquet(_MEDIA_STAGE)
+            .parquet(path)
+    return spark.read.parquet(staging.stage(
+        "media_fixture", None, build, code=(build_media_table,)))
 
 
 _FINGERPRINT_ORACLE = f"""
 WITH m AS (
-  SELECT * FROM read_parquet('{_MEDIA_STAGE}/*.parquet')
+  SELECT * FROM read_parquet('{staging.path('media_fixture')}/*.parquet')
 ), h AS (
   SELECT media_id, kind, meta, hex(payload) AS hx,
          octet_length(payload) AS n_bytes
@@ -264,9 +251,6 @@ def q_multimodal_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- binaryFile source (S-family: raw media files -> DataFrame) ----------
 
-_MEDIA_FILES = os.path.join(os.path.dirname(_MEDIA_STAGE), "media_files")
-
-
 def stage_media_files(spark: SparkSession) -> str:
     """Materialize each fixture payload as an individual ``.bin`` file —
     the on-disk shape a media corpus actually arrives in (one object per
@@ -274,13 +258,14 @@ def stage_media_files(spark: SparkSession) -> str:
     this is fixture generation (the fixture builder is already
     driver-side Python); the INGEST direction below is the distributed
     path being certified."""
-    m = stage_media(spark).select("media_id", "payload").collect()
-    os.makedirs(_MEDIA_FILES, exist_ok=True)
-    for r in m:
-        p = os.path.join(_MEDIA_FILES, f"{r['media_id']:04d}.bin")
-        with open(p, "wb") as fh:
-            fh.write(bytes(r["payload"]))
-    return _MEDIA_FILES
+    def build(path: str) -> None:
+        for r in stage_media(spark).select("media_id", "payload").collect():
+            with open(os.path.join(path, f"{r['media_id']:04d}.bin"),
+                      "wb") as fh:
+                fh.write(bytes(r["payload"]))
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+    return staging.stage("media_files", None, build,
+                         code=(build_media_table,))
 
 
 @query(
@@ -289,7 +274,7 @@ def stage_media_files(spark: SparkSession) -> str:
     SELECT media_id,
            CAST(octet_length(payload) AS BIGINT) AS n_bytes,
            md5(hex(payload)) AS payload_md5
-    FROM read_parquet('{_MEDIA_STAGE}/*.parquet')
+    FROM read_parquet('{staging.path('media_fixture')}/*.parquet')
     """,
     tags=("L4", "S1", "multimodal", "source-binaryfile"),
 )
@@ -324,7 +309,7 @@ _REINGEST_OFFSET = 1000  # re-keyed ids of the simulated duplicate batch
 _MM_DEDUP_ORACLE = f"""
 WITH base AS (
   SELECT media_id, kind, payload
-  FROM read_parquet('{_MEDIA_STAGE}/*.parquet')
+  FROM read_parquet('{staging.path('media_fixture')}/*.parquet')
 ),
 reingested AS (
   SELECT media_id + {_REINGEST_OFFSET} AS media_id, kind, payload

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..io import load
 from ..materialize import share
 from ..registry import query
@@ -540,44 +541,21 @@ def q_join_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Materialized-rollup query answering (aggregate navigator) -----------
 
-_MV_STAGED: dict[str, str] = {}
-
-
 def stage_daily_rollup(spark: SparkSession, sf_dir: str) -> str:
     """The materialized view: per (day, event_type) pre-aggregate of the
     event stream, persisted once — exact-decimal value sums so the
     re-aggregation to coarser grains stays engine-exact (algebraic
-    states, the q_agg_state_merge contract applied to a stored MV).
-
-    Cross-process safe (the layout.py marker discipline): a completed
-    staging — version stamp + _SUCCESS on disk — is reused, never
-    overwritten by a fresh process, so a concurrent session cannot
-    yank the MV out from under this process's open plans. The memo is
-    sf_dir-keyed so alternating scale factors in one process don't
-    re-stage each other's rollups."""
-    import os
-
-    from ..sources.formats import _stage_dir
+    states, the q_agg_state_merge contract applied to a stored MV)."""
     from ..compat import q as qd
 
-    from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-    path = _stage_dir("mv_daily_events", sf_dir)
-    # Stamp = hash of this builder's own source: changing the rollup
-    # grain or measures edits this function, which auto-invalidates
-    # stagings built by the old grain (r6 advice — no version integer).
-    stamp = src_stamp(stage_daily_rollup)
-    if sf_dir not in _MV_STAGED and not staging_ok(path, stamp):
-        begin_staging(path)
-        ev = load(spark, sf_dir, "events")
-        (ev.groupBy(F.date_trunc("day", "ts").alias("day"),
-                    "event_type")
+    def build(path: str) -> None:
+        (load(spark, sf_dir, "events")
+         .groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
          .agg(F.count(F.lit(1)).alias("n_events"),
               F.sum(qd("value")).alias("sum_value_dec"))
          .write.mode("overwrite").parquet(path))
-        mark_staged(path, stamp)
-    _MV_STAGED[sf_dir] = path
-    return path
+    return staging.stage("mv_daily_events", sf_dir, build,
+                         inputs=("events",))
 
 
 @query(

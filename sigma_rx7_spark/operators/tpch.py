@@ -22,7 +22,7 @@ s_address/s_phone) are substituted by the nearest shipped column with
 the query SHAPE kept intact — each substitution is named in the query's
 docstring. The missing ``partsupp`` table is staged deterministically
 (4 suppliers per part, closed-form key/qty/cost arithmetic — no RNG)
-under ``.staging/tpch/`` and read as the same parquet bytes by both
+by ``staging.stage`` and read as the same parquet bytes by both
 engines; date-window literals are shifted into the generator's
 1995-2001 range and value literals (brands 1-25, NATION_* names) onto
 values that exist at ALL THREE harness scales (probed: nations with
@@ -31,7 +31,6 @@ suppliers at sf0.001 are {3,8,12,13,15,18,19,20,21,24}).
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,58 +38,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-_STAGING_ROOT = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__)))), ".staging")
-
-
-def _sf_key(sf_dir: str) -> str:
-    # same rule as similarity._sf_key: '/a/sf0.01' and '/a/sf0.01/' are
-    # one logical root and must share one staged artifact
-    return "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/"))
-
-
-def _data_fingerprint(sf_dir: str, table: str) -> str:
-    """Cheap source-DATA fingerprint (total bytes + newest mtime of the
-    table's parquet) folded into this module's staging stamps: a code-
-    only stamp serves STALE derived artifacts when the sf_dir is
-    regenerated in place (r14 review item — the bootstrap has rewritten
-    testdata between rounds before, and the degenerate sweep rebuilds
-    its fixture dirs every run). Size+mtime is not content-proof, but
-    every regeneration path here rewrites the files (new mtime), and a
-    fingerprint MISS only costs one rebuild of a cheap artifact."""
-    import glob as _glob
-    base = f"{sf_dir.rstrip('/')}/{table}.parquet"
-    if os.path.isfile(base):
-        paths = [base]
-    else:
-        paths = sorted(_glob.glob(os.path.join(base, "*.parquet"))) \
-            or sorted(_glob.glob(f"{sf_dir.rstrip('/')}/{table}*.parquet"))
-    if not paths:
-        # An unmatched layout must INVALIDATE the staging, not freeze
-        # it: returning a constant 'table:0:0' here would pin the stamp
-        # and re-enable the stale-artifact bug the fingerprint exists
-        # to prevent, precisely in the unanticipated-layout case (r14
-        # ADVICE). The staged builders read the same table right after
-        # this, so failing loudly here just moves an inevitable read
-        # error to the place that can name the cause.
-        raise FileNotFoundError(
-            f"no parquet files for table {table!r} under {sf_dir!r} — "
-            "cannot fingerprint source data for the staging stamp")
-    total, mt = 0, 0
-    for p in paths:
-        st = os.stat(p)
-        total += st.st_size
-        mt = max(mt, st.st_mtime_ns)
-    return f"{table}:{total}:{mt}"
-
-
-def _partsupp_path(sf_dir: str) -> str:
-    # 'ps_' prefix: _sf_key output starts with '_', and Spark's file
-    # index treats underscore-prefixed path names as hidden metadata
-    return os.path.join(_STAGING_ROOT, "tpch_partsupp",
-                        f"ps_{_sf_key(sf_dir)}")
+from .. import staging
 
 
 def _build_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,27 +66,13 @@ def _build_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ps
 
 
-_STAGED_PS: set[str] = set()
-
-
 def _stage_partsupp(spark: SparkSession, sf_dir: str) -> str:
-    """Stage partsupp once per sf (stamped + _SUCCESS-guarded, the
-    staging.py discipline) so the oracle reads the exact bytes the
-    Spark plan consumed."""
-    path = _partsupp_path(sf_dir)
-    if sf_dir not in _STAGED_PS:
-        # partsupp derives from part (keys) and supplier (count):
-        # stamp code AND source data
-        stamp = src_stamp(_build_partsupp,
-                          extra=_data_fingerprint(sf_dir, "part") + "|"
-                          + _data_fingerprint(sf_dir, "supplier"))
-        if not staging_ok(path, stamp):
-            ps = _build_partsupp(spark, sf_dir)
-            begin_staging(path)
-            ps.coalesce(1).write.mode("overwrite").parquet(path)
-            mark_staged(path, stamp)
-        _STAGED_PS.add(sf_dir)
-    return path
+    def build(path: str) -> None:
+        _build_partsupp(spark, sf_dir).coalesce(1) \
+            .write.mode("overwrite").parquet(path)
+    return staging.stage("tpch_partsupp", sf_dir, build,
+                         code=(_build_partsupp,),
+                         inputs=("part", "supplier"))
 
 
 _TPCH_TABLES = ("partsupp", "lineitem", "orders", "customer",
@@ -171,7 +105,7 @@ def _run(spark: SparkSession, sf_dir: str, sql: str,
     The SQL text — and therefore the DuckDB oracle — is unchanged."""
     from ..io import load_parallel
 
-    key = _sf_key(sf_dir)
+    key = staging.sf_key(sf_dir)
     out = sql
     for t in _TPCH_TABLES:
         if re.search(rf"\b{t}\b", out):
@@ -192,7 +126,8 @@ def _ps_oracle(sql: str):
     partsupp token bound to the staged parquet (built by the engine run
     that always precedes the oracle in the driver's compare)."""
     def ora(sf_dir: str) -> str:
-        rel = f"read_parquet('{_partsupp_path(sf_dir)}/*.parquet')"
+        rel = (f"read_parquet('{staging.path('tpch_partsupp', sf_dir)}"
+               "/*.parquet')")
         return _sub_outside_literals(r"\bpartsupp\b", rel, sql)
     return ora
 
@@ -882,11 +817,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 # H15m — Q15 with the spec's CREATE VIEW made REAL (VERDICT r13 item 6)
 
 
-def _revenue_path(sf_dir: str) -> str:
-    return os.path.join(_STAGING_ROOT, "tpch_revenue",
-                        f"rev_{_sf_key(sf_dir)}")
-
-
 def _build_q15_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Q15 revenue view, built from the SAME text constant the
     verbatim query inlines (_Q15_REVENUE) — one source of truth, so
@@ -895,24 +825,13 @@ def _build_q15_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run(spark, sf_dir, _Q15_REVENUE)
 
 
-_STAGED_REV: set[str] = set()
-
-
 def _stage_q15_revenue(spark: SparkSession, sf_dir: str) -> str:
-    path = _revenue_path(sf_dir)
-    if sf_dir not in _STAGED_REV:
-        # revenue derives from lineitem: stamp the SQL text, the
-        # builder, and the source data
-        stamp = src_stamp(_build_q15_revenue,
-                          extra=_Q15_REVENUE + "|"
-                          + _data_fingerprint(sf_dir, "lineitem"))
-        if not staging_ok(path, stamp):
-            rev = _build_q15_revenue(spark, sf_dir)
-            begin_staging(path)
-            rev.coalesce(1).write.mode("overwrite").parquet(path)
-            mark_staged(path, stamp)
-        _STAGED_REV.add(sf_dir)
-    return path
+    def build(path: str) -> None:
+        _build_q15_revenue(spark, sf_dir).coalesce(1) \
+            .write.mode("overwrite").parquet(path)
+    return staging.stage("tpch_revenue", sf_dir, build,
+                         code=(_build_q15_revenue,), inputs=("lineitem",),
+                         extra=_Q15_REVENUE)
 
 
 @query("q_tpch_q15_materialized", oracle=_Q15, tags=("H15m", "tpch", "mv"))
@@ -923,8 +842,8 @@ def q_tpch_q15_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the scalar-subquery boundary, so the verbatim q_tpch_q15
     scans lineitem twice; the spec's CREATE VIEW is exactly a
     materialization license). The revenue relation is staged once per
-    sf from the SAME _Q15_REVENUE text the inline query uses (stamped,
-    _SUCCESS-guarded, rebuilt only when the text or builder changes),
+    sf from the SAME _Q15_REVENUE text the inline query uses (rebuilt
+    only when the text, the builder or lineitem changes),
     then the serve plan reads the tiny per-supplier artifact ONCE:
     scalar max and tie filter come from a single empty-frame window
     pass (no second revenue scan), the supplier join broadcasts.

@@ -90,19 +90,22 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Round 16 window (27 changed + 19 r5 cohort completion + 4 r6 =
-    # 50). Composition: (a) every query whose execution path changed in
-    # the r16 optimization round (results bit-identical by construction
+    # Window: 27 r16-changed + 18 staging-rule + 5 restaged = 50.
+    # Composition: (a) every query whose execution path changed in the
+    # r16 optimization round (results bit-identical by construction
     # and local mirrors, but the driver should re-prove them): the
     # quality-audit fold, the lazy-checkpoint adoptees, the Arrow/
     # fixed-point rewrites (exact cosine, covariance, blocked Jaccard
     # pair stage) and their composers, the 11 streaming queries
     # whose trailing no-data micro-batch is now skipped, and the two
     # queries whose persists became materialize.share (PageRank, the
-    # quality model); (b) the 19
-    # REMAINING names of the r5 freshness cohort (rotation debt paid in
-    # full — VERDICT r15 item 8); (c) the 4 oldest r6 names fill the
-    # window.
+    # quality model); (b) the 18 queries whose oracle now reads a path
+    # computed by staging.path under a new name (TPC-H partsupp, IVF
+    # centroids, schema-merge batches) or whose staged artifact gained
+    # an input stamp or a new guard in staging.stage (media files, the
+    # Q15 revenue view, DPP fact, z-order and indexed layouts); (c) 5
+    # older names whose staging moved onto staging.stage. They replace
+    # the oldest already-proven names (the r5 cohort and r6 re-bank).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
@@ -138,28 +141,29 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     # materialization changed — persists now go through share()
     "q_graph_pagerank",
     "q_pipeline_quality_model",
-    # r5-cohort completion: the remaining 19 of the 49-name debt
-    "q_cohort_retention_rate",
-    "q_daily_autocorr",
-    "q_usage_heatmap",
-    "q_daily_runs_test",
-    "q_session_length_dist",
+    # staging rule — oracle path now from staging.path
+    "q_tpch_q02",
+    "q_tpch_q09",
+    "q_tpch_q11",
+    "q_tpch_q16",
+    "q_tpch_q20",
+    "q_source_schema_merge",
+    "q_sim_topk_ivf",
+    "q_sim_topk_ivf_staged",
+    "q_sim_index_incremental",
+    "q_sim_recall_ivf",
+    "q_sim_topk_ivfpq",
+    "q_multimodal_fingerprint",
+    "q_source_binaryfile",
+    "q_multimodal_dedup",
+    # staging rule — input-stamped or newly guarded artifact
+    "q_tpch_q15_materialized",
+    "q_join_dpp",
+    "q_scan_zorder",
+    "q_scan_indexed",
+    # restaged through staging.stage — kept from the oldest cohorts
     "q_mv_rollup_answer",
-    "q_join_lateral_topk",
-    "q_link_entities",
-    "q_link_survivorship",
-    "q_quality_freshness",
-    "q_quality_psi",
-    "q_anomaly_seasonal",
-    "q_quality_sequence",
-    "q_quality_benford",
-    "q_quality_profile",
-    "q_quality_temporal",
-    "q_quality_reconcile",
-    "q_sink_compaction",
     "q_domain_fhir_bundle",
-    # r6 re-bank: oldest 4 fill the window
-    "q_source_json_dlq",
     "q_sink_backfill",
     "q_audit_file_layout",
     "q_source_textlines",

@@ -22,24 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import staging
 from ..compat import dsum, o_dsum
 from ..io import load, read_staged
 from ..registry import query
-
-# Staging root lives inside the repo (the only writable area); per-sf
-# subdirs keep concurrent scale factors apart.
-STAGING = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.dirname(os.path.abspath(__file__)))), ".staging")
-
-
-def _stage_dir(kind: str, sf_dir: str) -> str:
-    # Key by the FULL sanitized path (same rule as llm.similarity._sf_key),
-    # not the basename: two roots with the same leaf (/a/sf0.01 vs
-    # /b/sf0.01) must stage disjoint artifacts (r9 advice).
-    tag = "".join(ch if ch.isalnum() else "_"
-                  for ch in sf_dir.rstrip("/")) or "sf"
-    return os.path.join(STAGING, f"{kind}_{tag}")
-
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType,
              header: bool = True, sep: str = ",") -> DataFrame:
@@ -89,7 +75,7 @@ def q_source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     loader, aggregate. The oracle runs on the ORIGINAL parquet, so the
     hash match proves the CSV path is lossless for keys, categoricals,
     and doubles."""
-    path = _stage_dir("csv_orders", sf_dir)
+    path = staging.path("csv_orders", sf_dir)
     (load(spark, sf_dir, "orders")
      .select(*[f.name for f in CSV_ORDERS_SCHEMA.fields])
      .write.mode("overwrite").option("header", True).csv(path))
@@ -118,7 +104,7 @@ def q_source_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed loader, aggregate. Same lossless-round-trip proof as
     q_source_csv, for the nested-ingest (FHIR, README.md:3,76) format
     family."""
-    path = _stage_dir("json_events", sf_dir)
+    path = staging.path("json_events", sf_dir)
     (load(spark, sf_dir, "events")
      .select(*[f.name for f in JSON_EVENTS_SCHEMA.fields])
      .write.mode("overwrite").json(path))
@@ -151,7 +137,7 @@ def q_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanning one event type and scanning the fleet's full history. The
     oracle aggregates the original parquet, proving the partitioned
     round-trip is lossless."""
-    path = _stage_dir("part_events", sf_dir)
+    path = staging.path("part_events", sf_dir)
     slim = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "value", "event_type")
     slim.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -187,7 +173,7 @@ def q_source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     preserves ints, categoricals, and doubles bit-for-bit. ORC reads get
     the same vectorized scan + predicate pushdown treatment as parquet
     in Spark, so the S-family scan posture carries over unchanged."""
-    path = _stage_dir("orc_lineitem", sf_dir)
+    path = staging.path("orc_lineitem", sf_dir)
     (load(spark, sf_dir, "lineitem")
      .select("l_returnflag", "l_extendedprice", "l_quantity")
      .write.mode("overwrite").orc(path))
@@ -211,27 +197,27 @@ def stage_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     N needs NO shuffle on either side — the layout IS the exchange,
     amortized across every join that reuses it. This is the 100 TB
     answer to "the fact⋈fact join shuffles both sides every night".
-    Table names carry the sf tag so concurrent scale factors never
-    collide; re-staging is idempotent (overwrite).
+    Table names carry the sf key of ``staging.path``, so two roots never
+    share a table; re-staging is idempotent (overwrite).
     """
     from ..io import write_bucketed
 
-    tag = (os.path.basename(sf_dir.rstrip("/")) or "sf").replace(".", "_")
-    li_tbl, ord_tbl = f"bkt_lineitem_{tag}", f"bkt_orders_{tag}"
+    key = staging.sf_key(sf_dir)
+    li_tbl, ord_tbl = f"bkt_lineitem_{key}", f"bkt_orders_{key}"
     if not spark.catalog.tableExists(li_tbl):
         write_bucketed(
             load(spark, sf_dir, "lineitem")
             .select("l_orderkey", "l_quantity", "l_extendedprice")
             .repartition(N_BUCKETS, "l_orderkey"),
             li_tbl, "l_orderkey", N_BUCKETS,
-            path=_stage_dir("bkt_lineitem", sf_dir))
+            path=staging.path("bkt_lineitem", sf_dir))
     if not spark.catalog.tableExists(ord_tbl):
         write_bucketed(
             load(spark, sf_dir, "orders")
             .select("o_orderkey", "o_orderpriority")
             .repartition(N_BUCKETS, "o_orderkey"),
             ord_tbl, "o_orderkey", N_BUCKETS,
-            path=_stage_dir("bkt_orders", sf_dir))
+            path=staging.path("bkt_orders", sf_dir))
     return li_tbl, ord_tbl
 
 
@@ -298,13 +284,14 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what keeps "join facts to the dimension row the user picked" from
     scanning every date/status partition of the fact table. Oracle: the
     same join over the original un-partitioned parquet."""
-    path = _stage_dir("dpp_lineitem", sf_dir)
-    marker = os.path.join(path, "_SUCCESS")
     slim = load(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_linestatus", "l_returnflag")
-    if not os.path.exists(marker):
-        (slim.write.mode("overwrite")
-         .partitionBy("l_returnflag").parquet(path))
+
+    def build(path: str) -> None:
+        slim.write.mode("overwrite").partitionBy("l_returnflag") \
+            .parquet(path)
+    path = staging.stage("dpp_lineitem", sf_dir, build,
+                         inputs=("lineitem",))
     fact = read_staged(spark, path, slim.schema)
     dim = spark.createDataFrame(list(_FLAG_DIM), "flag string, "
                                 "flag_desc string")
@@ -317,19 +304,9 @@ def q_join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fixed staging paths (oracle SQL is static text): the driver always runs
-# the Spark side of a pair first at the sf under check, so the staged
-# bytes match — same contract as llm/similarity's centroid staging.
-# Paths are sf-keyed (round 9) and the oracle is a template resolved at
-# retrieval time, so concurrent sessions at different scale factors
-# stage disjoint batch dirs. A module-level set skips redundant
-# rewrites within one process.
-_SCHEMA_STAGED: set[str] = set()
-
-
 def _schema_dirs(sf_dir: str) -> tuple[str, str]:
-    return (_stage_dir("schemav1_events", sf_dir),
-            _stage_dir("schemav2_events", sf_dir))
+    root = staging.path("schema_events", sf_dir)
+    return os.path.join(root, "v1"), os.path.join(root, "v2")
 
 
 def _schema_merge_oracle(sf_dir: str) -> str:
@@ -365,17 +342,18 @@ def q_source_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     fine per-batch, pathological over 10⁶ files; at warehouse scale the
     merged schema belongs in a table catalog (Delta/Iceberg metadata),
     which is this same operation amortized into the commit protocol."""
-    ev = load(spark, sf_dir, "events")
-    cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
-    b1, b2 = _schema_dirs(sf_dir)
-    if sf_dir not in _SCHEMA_STAGED:
+    def build(path: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        cutoff = F.lit("2024-01-16 00:00:00").cast("timestamp")
         (ev.where(F.col("ts") < cutoff)
          .select("event_id", "user_id", "value")
-         .write.mode("overwrite").parquet(b1))
+         .write.mode("overwrite").parquet(os.path.join(path, "v1")))
         (ev.where(F.col("ts") >= cutoff)
          .select("event_id", "user_id", "value", "event_type")
-         .write.mode("overwrite").parquet(b2))
-        _SCHEMA_STAGED.add(sf_dir)
+         .write.mode("overwrite").parquet(os.path.join(path, "v2")))
+    staging.stage("schema_events", sf_dir, build, inputs=("events",),
+                  parts=("v1", "v2"))
+    b1, b2 = _schema_dirs(sf_dir)
     merged = spark.read.option("mergeSchema", "true").parquet(b1, b2)
     return (
         merged.select(
@@ -421,8 +399,8 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite_data_files); range-clustering by the hot filter/join column
     while rewriting makes the files min/max-prunable on user_id for
     free — layout work piggybacking on IO that must happen anyway."""
-    path_small = _stage_dir("compact_small", sf_dir)
-    path_big = _stage_dir("compact_big", sf_dir)
+    path_small = staging.path("compact_small", sf_dir)
+    path_big = staging.path("compact_big", sf_dir)
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value", "ts")
     ev.repartition(COMPACT_SMALL_FILES).write.mode(
@@ -471,7 +449,7 @@ def q_source_json_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel scans; the fate split is a per-row CASE; one report
     aggregate. The DLQ bucket preserves rows for replay — at warehouse
     scale it is written out as its own table, not dropped."""
-    path = _stage_dir("json_dlq_events", sf_dir)
+    path = staging.path("json_dlq_events", sf_dir)
     ev = load(spark, sf_dir, "events").select(
         "event_id",
         F.to_json(F.struct(
@@ -505,22 +483,11 @@ def q_source_json_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Dynamic partition overwrite (idempotent backfill) -------------------
 
-# sf-keyed staging path (round 9) with a template oracle resolved at
-# retrieval time — concurrent sessions at different scale factors
-# stage disjoint dirs instead of clobbering one fixed path.
-_BACKFILL_STAGED: set[str] = set()
-
-
-def _backfill_dir(sf_dir: str) -> str:
-    return _stage_dir("backfill_events", sf_dir)
-
-
 def stage_backfill(spark: SparkSession, sf_dir: str) -> str:
     """Stage events partitioned by type, then dynamically overwrite ONE
-    partition (the backfill re-run). Memoized per (process, sf)."""
-    ev = load(spark, sf_dir, "events").select("event_type", "value")
-    path = _backfill_dir(sf_dir)
-    if sf_dir not in _BACKFILL_STAGED:
+    partition (the backfill re-run)."""
+    def build(path: str) -> None:
+        ev = load(spark, sf_dir, "events").select("event_type", "value")
         ev.write.mode("overwrite").partitionBy("event_type") \
             .parquet(path)
         old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
@@ -534,8 +501,8 @@ def stage_backfill(spark: SparkSession, sf_dir: str) -> str:
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                            old)
-        _BACKFILL_STAGED.add(sf_dir)
-    return path
+    return staging.stage("backfill_events", sf_dir, build,
+                         inputs=("events",))
 
 
 @query(
@@ -574,10 +541,11 @@ def q_sink_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _file_layout_oracle(sf_dir: str) -> str:
+    path = staging.path("backfill_events", sf_dir)
     return f"""
     SELECT regexp_extract(filename, '([^/]+)$', 1) AS file_name,
            CAST(COUNT(*) AS BIGINT) AS n_rows
-    FROM read_parquet('{_backfill_dir(sf_dir)}/*/*.parquet',
+    FROM read_parquet('{path}/*/*.parquet',
                       filename = true)
     GROUP BY 1
     """
@@ -610,9 +578,6 @@ def q_audit_file_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Raw text-line source (the HL7/log-file ingest shape) ----------------
 
-_TEXT_STAGED: dict[str, str] = {}
-
-
 @query(
     "q_source_textlines",
     oracle="""
@@ -636,15 +601,14 @@ def q_source_textlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     text intact past the second delimiter. This is the missing first
     rung under the typed CSV/JSON loaders: the format BEFORE there is
     a format."""
-    path = _stage_dir("textlines_docs", sf_dir)
-    if _TEXT_STAGED.get("sf") != sf_dir:
+    def build(path: str) -> None:
         (load(spark, sf_dir, "documents")
          .select(F.concat_ws("|", F.col("doc_id").cast("string"),
                              "lang", "text").alias("value"))
          .coalesce(4)
          .write.mode("overwrite").text(path))
-        _TEXT_STAGED["sf"] = sf_dir
-    raw = spark.read.text(path)
+    raw = spark.read.text(staging.stage("textlines_docs", sf_dir, build,
+                                        inputs=("documents",)))
     parts = F.split(F.col("value"), r"\|", 3)
     parsed = raw.select(
         parts.getItem(0).cast("bigint").alias("doc_id"),

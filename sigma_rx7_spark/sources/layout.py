@@ -29,10 +29,10 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import staging
 from ..compat import dsum, o_dsum
 from ..io import load, read_staged
 from ..registry import query
-from .formats import _stage_dir
 
 N_ZFILES = 32  # output files == morton range buckets (1 row group each
                # at test sf; at 100 TB scale this is files-per-job, and
@@ -126,20 +126,11 @@ def lineitem_bounds(df: DataFrame) -> tuple[int, int, int, int]:
 
 
 def stage_zorder(spark: SparkSession, sf_dir: str) -> str:
-    # Completed-staging guard (repo-wide discipline, ..staging): the
-    # stamp hashes the clustering code, so a curve/bucketing change
-    # rebuilds instead of silently serving the old layout — the bare
-    # _SUCCESS check this replaced could not tell the two apart.
-    from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-    path = _stage_dir("zorder_lineitem", sf_dir)
-    stamp = src_stamp(zorder_lineitem, stage_zorder)
-    if not staging_ok(path, stamp):
-        begin_staging(path)
-        (zorder_lineitem(load(spark, sf_dir, "lineitem"))
-         .write.mode("overwrite").parquet(path))
-        mark_staged(path, stamp)
-    return path
+    def build(path: str) -> None:
+        zorder_lineitem(load(spark, sf_dir, "lineitem")) \
+            .write.mode("overwrite").parquet(path)
+    return staging.stage("zorder_lineitem", sf_dir, build,
+                         code=(zorder_lineitem,), inputs=("lineitem",))
 
 
 # The probe predicate: WIDE on dates (2 of the corpus's ~7 years),
@@ -240,33 +231,22 @@ def stage_zorder_incremental(spark: SparkSession, sf_dir: str) -> str:
     base+delta and both prune identically."""
     import json
 
-    from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-    path = _stage_dir("zorderinc_lineitem", sf_dir)
-    base_dir = os.path.join(path, "base")
-    delta_dir = os.path.join(path, "delta")
-    bounds_file = os.path.join(path, "_bounds.json")
-    # base+delta rewrite under one parent marker: begin_staging's
-    # BUILDING sentinel covers the window where base is new but delta
-    # (and the bounds sidecar) are still the old layout's.
-    stamp = src_stamp(zorder_lineitem, lineitem_bounds,
-                      stage_zorder_incremental)
-    if not (staging_ok(path, stamp, "base", "delta")
-            and os.path.exists(bounds_file)):
-        begin_staging(path)
+    def build(path: str) -> None:
         li = load(spark, sf_dir, "lineitem")
         base = li.where(F.pmod(F.col("l_orderkey"), F.lit(10)) != 0)
         delta = li.where(F.pmod(F.col("l_orderkey"), F.lit(10)) == 0)
         bounds = lineitem_bounds(base)
         zorder_lineitem(base, N_ZFILES, bounds) \
-            .write.mode("overwrite").parquet(base_dir)
+            .write.mode("overwrite").parquet(os.path.join(path, "base"))
         # The append: delta rows clustered under the PERSISTED bounds.
         zorder_lineitem(delta, N_DELTA_FILES, bounds) \
-            .write.mode("overwrite").parquet(delta_dir)
-        with open(bounds_file, "w") as fh:
+            .write.mode("overwrite").parquet(os.path.join(path, "delta"))
+        with open(os.path.join(path, "_bounds.json"), "w") as fh:
             json.dump(bounds, fh)
-        mark_staged(path, stamp)
-    return path
+
+    return staging.stage("zorderinc_lineitem", sf_dir, build,
+                         code=(zorder_lineitem, lineitem_bounds),
+                         inputs=("lineitem",), parts=("base", "delta"))
 
 
 @query(
@@ -309,7 +289,6 @@ def q_scan_zorder_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Min/max file index (metadata-table data skipping) -------------------
 
-_IDX_STAGED: dict[str, str] = {}
 _OK_LO, _OK_HI = 1000, 2999  # orderkey probe band (valid at every sf)
 
 
@@ -322,26 +301,8 @@ def stage_indexed_lineitem(spark: SparkSession, sf_dir: str) -> str:
     manifest: scan planning reads the INDEX, not footers, so skipping
     survives object stores where listing+footer reads are the
     bottleneck at 10⁶ files."""
-    import os
-
-    path = _stage_dir("idx_lineitem", sf_dir)
-    data_dir, idx_dir = os.path.join(path, "data"), os.path.join(path, "idx")
-    # Memo keyed by sf_dir (alternating scale factors in one process must
-    # not re-stage each other's layouts) + an on-disk completion marker,
-    # so a finished staging survives process restarts — same discipline
-    # as stage_zorder. The marker carries a SOURCE-HASH stamp: any
-    # change to this builder (projection, file count, index aggregation)
-    # auto-invalidates stagings left by older code (a bare _SUCCESS
-    # would silently serve the old layout; r6 advice retired the
-    # hand-bumped integer). begin_staging's BUILDING sentinel covers
-    # the data/idx two-subdir rewrite window against concurrent
-    # readers on any code revision.
-    from ..staging import begin_staging, mark_staged, src_stamp, staging_ok
-
-    stamp = src_stamp(stage_indexed_lineitem)
-    if sf_dir not in _IDX_STAGED and not staging_ok(
-            path, stamp, "data", "idx"):
-        begin_staging(path)
+    def build(path: str) -> None:
+        data_dir = os.path.join(path, "data")
         (load(spark, sf_dir, "lineitem")
          .select("l_orderkey", "l_quantity", "l_returnflag")
          .repartitionByRange(N_ZFILES, "l_orderkey")
@@ -354,10 +315,11 @@ def stage_indexed_lineitem(spark: SparkSession, sf_dir: str) -> str:
          .agg(F.min("l_orderkey").alias("min_ok"),
               F.max("l_orderkey").alias("max_ok"),
               F.count(F.lit(1)).alias("n_rows"))
-         .coalesce(1).write.mode("overwrite").parquet(idx_dir))
-        mark_staged(path, stamp)
-    _IDX_STAGED[sf_dir] = path
-    return path
+         .coalesce(1).write.mode("overwrite")
+         .parquet(os.path.join(path, "idx")))
+
+    return staging.stage("idx_lineitem", sf_dir, build,
+                         inputs=("lineitem",), parts=("data", "idx"))
 
 
 @query(

@@ -1,40 +1,41 @@
-"""Cross-process staging discipline for deterministic index artifacts.
+"""The one staging rule for deterministic build artifacts.
 
-Several operators stage deterministic build artifacts to parquet under
-``.staging/`` (trained IVF centroids, PQ codes, domain fixtures, the MV
-rollup, the indexed-lineitem layout) so that (a) repeat probes read a
-persisted index instead of re-running the build, and (b) the DuckDB
-oracle reads the exact bytes the Spark plan consumed. Two process-safety
-rules, learned from incidents:
+Some queries build an artifact once and serve it many times: trained IVF
+centroids and indexes, PQ codes, domain and media fixtures, the MV
+rollup, z-ordered / indexed / partitioned copies of a harness table.
+Every such artifact lives at ``path(kind, sf_dir)`` and is built through
+``stage``; oracle templates call ``path`` too, so the DuckDB side reads
+the exact bytes the Spark plan consumed. Spark and DuckDB read a staged
+parquet directory like any other table, so an artifact needs only three
+things, all owned here:
 
-1. **A COMPLETED staging is never overwritten** (round-5 incident: a
-   concurrent session re-staged a path mid-read; the other process's
-   already-planned scans failed with FAILED_READ_FILE on the vanished
-   files). Completion = the ``_layout_v.txt`` marker holds the expected
-   stamp AND every staged dir carries the ``_SUCCESS`` Hadoop committer
-   file.
+- **Where it lives:** ``<repo>/.staging/<kind>_<key>``, with one key
+  rule: the full sanitized ``sf_dir`` minus any trailing slash. Two
+  roots with the same leaf name stage apart; ``/a/sf`` and ``/a/sf/``
+  share one artifact.
+- **When it is stale:** the stamp is code + declared inputs. Code is
+  ``src_stamp`` of the builder and the upstream code named in
+  ``code=``: ``inspect.getsource`` makes any change to that code a new
+  stamp, with no version integer to forget (a docstring edit costs one
+  rebuild, which is cheap; stale bytes are silent and wrong).
+  Module-level constants a builder merely reads (EMB_DIM, PQ_SUBS …)
+  go in ``extra``. Inputs are the (path, mtime, size) of every file of
+  each declared harness table under ``sf_dir``, resolved the way
+  ``io.load`` resolves it, so rewriting an input in place rebuilds the
+  artifact even inside the same process.
+- **When it is complete:** two process-safety rules, learned from
+  incidents.
 
-2. **A rebuild first invalidates the parent marker** (round-6 advice:
-   for multi-subdir stagings the subdir ``overwrite`` does not delete
-   the parent's marker, so between the first subdir rewrite and the
-   final re-mark an old-version process saw a marker matching ITS stamp
-   over half-rewritten subdirs — complete to it, mid-rebuild in fact).
-   ``begin_staging`` writes a ``BUILDING`` sentinel to the marker before
-   the first byte moves; no stamp ever equals the sentinel, so every
-   process treats the staging as incomplete until ``mark_staged``
-   restores a real stamp after the last part lands.
-
-Stamps are DERIVED, not hand-maintained (round-6 advice: one shared
-integer guarded four artifacts, and a forgotten bump on a builder change
-would silently serve stale bytes): ``src_stamp`` hashes the *builder
-functions' source* via ``inspect.getsource``, so any change to the code
-that produces an artifact — including a changed constant inside the
-function body — automatically invalidates prior stagings of exactly
-that artifact. The cost of over-invalidation (a docstring edit forces
-one rebuild) is deliberate: rebuilds are cheap and correct, stale bytes
-are silent and wrong. Module-level constants a builder merely *reads*
-(EMB_DIM, PQ_SUBS …) are not in the closure hash — pass them via
-``extra`` when the artifact depends on them.
+  1. A COMPLETED staging is never overwritten (a concurrent session
+     that re-staged a path mid-read made the other process's planned
+     scans fail with FAILED_READ_FILE). Completion = the
+     ``_layout_v.txt`` marker holds the expected stamp AND every
+     staged part carries the ``_SUCCESS`` Hadoop committer file.
+  2. A rebuild first invalidates the marker: ``begin_staging`` writes
+     a ``BUILDING`` sentinel before the first byte moves. No stamp
+     equals the sentinel, so a process on any code revision treats a
+     multi-part staging as incomplete until ``mark_staged`` restores a
+     real stamp after the last part lands.
 """
 
 from __future__ import annotations
@@ -42,8 +43,28 @@ from __future__ import annotations
 import hashlib
 import inspect
 import os
+from collections.abc import Callable, Iterable
+
+from .io import _table_files
 
 _BUILDING = "BUILDING"  # sentinel: staging in progress, never a stamp
+_ROOT = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), ".staging")
+
+
+def sf_key(sf_dir: str) -> str:
+    """The one sf key rule: the full sanitized path, trailing slash
+    dropped. Also names sf-scoped catalog tables."""
+    return "".join(ch if ch.isalnum() else "_" for ch in sf_dir.rstrip("/"))
+
+
+def path(kind: str, sf_dir: str | None = None) -> str:
+    """Where the ``kind`` artifact of ``sf_dir`` lives. The ``kind``
+    prefix keeps the leaf name from starting with ``_``, which Spark's
+    file index would treat as hidden. Fixtures with no sf pass None."""
+    if sf_dir is None:
+        return os.path.join(_ROOT, kind)
+    return os.path.join(_ROOT, f"{kind}_{sf_key(sf_dir)}")
 
 
 def src_stamp(*builders, extra: str = "") -> str:
@@ -98,3 +119,59 @@ def mark_staged(path: str, stamp: str) -> None:
     after every staged part (and its _SUCCESS) is on disk."""
     with open(os.path.join(path, "_layout_v.txt"), "w") as fh:
         fh.write(stamp)
+
+
+def _inputs_fingerprint(sf_dir: str, tables: Iterable[str]) -> str:
+    fps = []
+    for t in tables:
+        files = _table_files(sf_dir, t)
+        try:
+            stats = [os.stat(f) for f in files]
+        except FileNotFoundError:
+            stats = []
+        if not stats:
+            # An unmatched layout must fail here, naming the cause: a
+            # constant fingerprint would freeze the stamp and serve a
+            # stale artifact in exactly the layout nobody anticipated.
+            raise FileNotFoundError(
+                f"no parquet files for table {t!r} under {sf_dir!r} — "
+                "cannot fingerprint the staging's declared input")
+        fps += [f"{f}:{st.st_mtime_ns}:{st.st_size}"
+                for f, st in zip(files, stats)]
+    return "|".join(fps)
+
+
+_CODE_STAMPS: dict[tuple, str] = {}  # (code objects, extra) -> src_stamp
+_DONE: set[tuple[str, str]] = set()  # (path, stamp) verified complete
+
+
+def stage(kind: str, sf_dir: str | None, build: Callable[[str], None], *,
+          code: tuple = (), inputs: tuple[str, ...] = (),
+          parts: tuple[str, ...] = (), extra: str = "") -> str:
+    """Return ``path(kind, sf_dir)`` holding a completed staging of
+    ``build``, building it first if needed.
+
+    ``build(path)`` writes the artifact: every part named in ``parts``
+    (or ``path`` itself when there are none) must end with a
+    ``_SUCCESS``. ``code`` names the upstream code the artifact
+    depends on beyond ``build`` (a chained artifact lists the builders
+    of what it consumes); ``inputs`` names the harness tables it reads
+    from ``sf_dir``. A repeat call in one process costs one ``os.stat``
+    per input file."""
+    dest = path(kind, sf_dir)
+    fns = (build, *code)
+    ckey = (tuple(getattr(f, "__code__", f) for f in fns), extra)
+    stamp = _CODE_STAMPS.get(ckey)
+    if stamp is None:
+        stamp = _CODE_STAMPS[ckey] = src_stamp(*fns, extra=extra)
+    if inputs:
+        stamp = hashlib.sha256(
+            f"{stamp}|{_inputs_fingerprint(sf_dir, inputs)}".encode()
+        ).hexdigest()[:12]
+    if (dest, stamp) not in _DONE:
+        if not staging_ok(dest, stamp, *parts):
+            begin_staging(dest)
+            build(dest)
+            mark_staged(dest, stamp)
+        _DONE.add((dest, stamp))
+    return dest

@@ -10,8 +10,9 @@
    DIVIDE_BY_ZERO from the per-row ratio (r9 advice, medium).
 3. ``q_drift_wasserstein``: NULL values carry no ECDF mass and must
    not perturb the cross-engine value ordering (r9 advice, low).
-4. ``_stage_dir`` keys by the full sanitized sf_dir path, so two roots
-   with the same basename stage disjoint artifacts (r9 advice, low).
+
+(Item 4 of that round, full-path staging keys, is pinned by
+tests/test_layout.py::test_staging_identity.)
 """
 
 from __future__ import annotations
@@ -114,13 +115,3 @@ def test_wasserstein_null_values_ignored(spark, tmp_path):
     orow = con.execute(spec.oracle_for(sf)).fetchone()
     assert (orow[0], orow[1]) == (1, 1)
     assert orow[2] == pytest.approx(srow["wasserstein_1"])
-
-
-def test_stage_dir_keys_full_path():
-    from sigma_rx7_spark.sources.formats import _stage_dir
-
-    a = _stage_dir("csv_orders", "/a/sf0.01")
-    b = _stage_dir("csv_orders", "/b/sf0.01")
-    assert a != b
-    # Same path, trailing slash or not, still shares one staging.
-    assert _stage_dir("csv_orders", "/a/sf0.01/") == a

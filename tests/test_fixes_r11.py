@@ -1,48 +1,15 @@
 """Round-11 advice fixes (VERDICT/ADVICE r10).
 
-1. ``similarity._sf_key`` normalizes trailing slashes so one logical sf
-   root never stages two disjoint IVF/PQ indexes.
-2. ``similarity._cent_stamp`` folds a data fingerprint of the source
-   embeddings parquet into the staging stamp, so a regenerated corpus
-   (different N → different sqrt-N cell geometry) invalidates the
-   staged centroids instead of silently reusing stale cells.
-3. ``pagerank_fixedpoint(symmetric=False)`` reinstates the per-round
-   left join so dangling-IN nodes (out-edges only) keep teleport-only
-   rank on general directed graphs.
+``pagerank_fixedpoint(symmetric=False)`` reinstates the per-round left
+join so dangling-IN nodes (out-edges only) keep teleport-only rank on
+general directed graphs. (The round's staging fixes, trailing-slash sf
+keys and the stamp following the embeddings bytes, are pinned by
+tests/test_layout.py::test_staging_identity.)
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
-
-
-def test_sf_key_trailing_slash_shares_staging():
-    from sigma_rx7_spark.llm.similarity import _sf_key
-
-    assert _sf_key("/a/sf0.01/") == _sf_key("/a/sf0.01")
-    assert _sf_key("/a/sf0.01") != _sf_key("/b/sf0.01")
-
-
-def test_cent_stamp_tracks_embeddings_bytes(tmp_path):
-    from sigma_rx7_spark.llm.similarity import _cent_stamp, _emb_fingerprint
-
-    emb = tmp_path / "embeddings.parquet"
-    emb.write_bytes(b"v1-bytes")
-    s1 = _cent_stamp(str(tmp_path))
-    f1 = _emb_fingerprint(str(tmp_path))
-    # Same bytes, trailing slash: same stamp (one logical root).
-    assert _cent_stamp(str(tmp_path) + "/") == s1
-    # Regenerated file (different size): stamp must change.
-    emb.write_bytes(b"v2-bytes-longer")
-    assert _emb_fingerprint(str(tmp_path)) != f1
-    assert _cent_stamp(str(tmp_path)) != s1
-    # Directory-shaped parquet fingerprints its files too.
-    part_dir = tmp_path / "dirset" / "embeddings.parquet"
-    os.makedirs(part_dir)
-    (part_dir / "part-0.parquet").write_bytes(b"chunk")
-    assert _emb_fingerprint(str(tmp_path / "dirset")).startswith("emb:1:5:")
 
 
 def test_pagerank_general_graph_keeps_dangling_in_nodes(spark):

@@ -5,8 +5,8 @@
    suffixed drop files) batch and stream must consume the SAME file
    set (the exact file), where the old fixed 'events*.parquet' glob
    made the stream silently read the drop files too.
-2. operators/tpch._data_fingerprint raises on an unmatched layout
-   instead of freezing the staging stamp at 'table:0:0'.
+2. staging.stage raises on a declared input with an unmatched layout
+   instead of freezing the staging stamp on an empty fingerprint.
 """
 
 from __future__ import annotations
@@ -99,20 +99,38 @@ def test_stream_still_reads_drop_files_when_no_exact_file(spark, tmp_path):
 
 
 def test_data_fingerprint_raises_on_unmatched_layout(tmp_path):
-    """A fingerprint over a table with zero parquet files must raise,
-    not return a frozen 'table:0:0' stamp component."""
-    from sigma_rx7_spark.operators.tpch import _data_fingerprint
+    """A staging whose declared input has zero parquet files must raise,
+    naming the table, before anything is built."""
+    from sigma_rx7_spark import staging
+
+    def build(path):
+        raise AssertionError("built over a missing input")
 
     with pytest.raises(FileNotFoundError, match="lineitem"):
-        _data_fingerprint(str(tmp_path), "lineitem")
+        staging.stage("unmatched", str(tmp_path), build,
+                      inputs=("lineitem",))
+    (tmp_path / "lineitem.parquet").mkdir()  # dir-shaped, but empty
+    with pytest.raises(FileNotFoundError, match="lineitem"):
+        staging.stage("unmatched", str(tmp_path), build,
+                      inputs=("lineitem",))
 
 
-def test_data_fingerprint_still_reads_exact_file(sf_dir):
-    from sigma_rx7_spark.operators.tpch import _data_fingerprint
+def test_data_fingerprint_still_reads_exact_file(sf_dir, tmp_path,
+                                                 monkeypatch):
+    """The harness layout (one exact ``<table>.parquet`` file) is a
+    valid declared input: the staging builds once and is reused."""
+    from sigma_rx7_spark import staging
 
-    fp = _data_fingerprint(sf_dir, "lineitem")
-    table, total, mt = fp.split(":")
-    assert table == "lineitem" and int(total) > 0 and int(mt) > 0
+    monkeypatch.setattr(staging, "_ROOT", str(tmp_path))
+    built = []
+
+    def build(path):
+        built.append(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    p = staging.stage("exact", sf_dir, build, inputs=("lineitem",))
+    assert staging.stage("exact", sf_dir, build, inputs=("lineitem",)) == p
+    assert built == [p]
 
 
 # ---- r15 optimization: input-parallelism repair (io.load_parallel) ----

@@ -78,9 +78,8 @@ def test_mixed_sf_ivf_staging_no_clobber(spark, sf_dir):
     its own (untouched) centroids."""
     import duckdb
 
-    from sigma_rx7_spark import registry
+    from sigma_rx7_spark import registry, staging
     from sigma_rx7_spark.io import TABLES
-    from sigma_rx7_spark.llm.similarity import _oracle_cent
 
     spec = registry.load_all()["q_sim_topk_ivf"]
     other_sf = ("/root/testdata/sf0.01"
@@ -88,13 +87,13 @@ def test_mixed_sf_ivf_staging_no_clobber(spark, sf_dir):
                 else "/root/testdata/sf0.001")
 
     spec.fn(spark, sf_dir).collect()
-    mine = _oracle_cent(sf_dir)
+    mine = staging.path("ivf_centroids", sf_dir)
     before = {f: os.path.getmtime(os.path.join(mine, f))
               for f in os.listdir(mine)}
 
     # the "other session": same query, different scale factor
     spec.fn(spark, other_sf).collect()
-    theirs = _oracle_cent(other_sf)
+    theirs = staging.path("ivf_centroids", other_sf)
     assert theirs != mine and os.path.exists(
         os.path.join(theirs, "_SUCCESS"))
     after = {f: os.path.getmtime(os.path.join(mine, f))

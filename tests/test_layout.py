@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import os
+import shutil
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from sigma_rx7_spark import staging
 from sigma_rx7_spark.io import load
-from sigma_rx7_spark.sources.formats import _stage_dir
 from sigma_rx7_spark.sources.layout import (
     N_ZFILES,
     morton_key,
@@ -34,7 +38,7 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir):
     zpath = stage_zorder(spark, sf_dir)
 
     # Counter-layout: the same data sorted on shipdate only.
-    lpath = _stage_dir("linear_lineitem", sf_dir)
+    lpath = staging.path("linear_lineitem", sf_dir)
     if not os.path.exists(os.path.join(lpath, "_SUCCESS")):
         (load(spark, sf_dir, "lineitem")
          .select("l_partkey", "l_shipdate", "l_quantity",
@@ -92,7 +96,6 @@ def test_codec_choice_zstd_beats_snappy_and_roundtrips(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from sigma_rx7_spark.io import load
-    from sigma_rx7_spark.sources.formats import _stage_dir
 
     src = (load(spark, sf_dir, "lineitem")
            .select("l_orderkey", "l_partkey", "l_shipdate",
@@ -101,15 +104,15 @@ def test_codec_choice_zstd_beats_snappy_and_roundtrips(spark, sf_dir):
            .sortWithinPartitions("l_orderkey"))
     sizes = {}
     for codec in ("snappy", "zstd"):
-        path = _stage_dir(f"codec_{codec}", sf_dir)
+        path = staging.path(f"codec_{codec}", sf_dir)
         src.write.mode("overwrite") \
             .option("compression", codec).parquet(path)
         sizes[codec] = sum(
             os.path.getsize(os.path.join(path, f))
             for f in os.listdir(path) if f.endswith(".parquet"))
     assert sizes["zstd"] < sizes["snappy"] * 0.9, sizes
-    a = spark.read.parquet(_stage_dir("codec_snappy", sf_dir))
-    b = spark.read.parquet(_stage_dir("codec_zstd", sf_dir))
+    a = spark.read.parquet(staging.path("codec_snappy", sf_dir))
+    b = spark.read.parquet(staging.path("codec_zstd", sf_dir))
     assert a.count() == b.count()
     assert a.exceptAll(b).limit(1).count() == 0
 
@@ -137,10 +140,10 @@ def test_index_planned_scan_opens_fewer_files(spark, sf_dir):
 
 
 def test_index_staging_memo_is_sf_keyed(spark, sf_dir):
-    """Repeat staging for the SAME sf must be a no-op (idempotent memo
-    + on-disk _SUCCESS), and a DIFFERENT sf must stage to its own path
-    instead of overwriting — alternating scale factors in one process
-    previously thrashed the single-slot memo."""
+    """Repeat staging for the SAME sf must be a no-op (``staging.stage``
+    finds the completed staging), and a DIFFERENT sf must stage to its
+    own path instead of overwriting — alternating scale factors in one
+    process previously thrashed a single-slot memo."""
     import os
 
     from sigma_rx7_spark.sources.layout import stage_indexed_lineitem
@@ -206,6 +209,71 @@ def test_staging_marker_discipline(tmp_path):
     assert os.path.exists(os.path.join(q, "_layout_v.txt"))
 
 
+@pytest.mark.parametrize("case", ["full_path_key", "trailing_slash",
+                                  "stamp_follows_inputs",
+                                  "no_rewrite_on_repeat"])
+def test_staging_identity(case, tmp_path, monkeypatch):
+    """The staging identity rule, one property per case: an artifact
+    lives at ``staging.path(kind, sf_dir)`` keyed by the FULL sf path
+    (two roots with one leaf name never share it; a trailing slash is
+    the same root), and ``staging.stage`` rebuilds exactly when its
+    code or a file of a declared input changes — in the same process
+    too — and never otherwise. Pure filesystem: no Spark."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    assert staging.path("k") == os.path.join(repo, ".staging", "k")
+    monkeypatch.setattr(staging, "_ROOT", str(tmp_path / "staging"))
+    builds = []
+
+    def build(path):
+        builds.append(path)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    root = tmp_path / "a" / "sf0.01"
+    root.mkdir(parents=True)
+    lineitem = root / "lineitem.parquet"
+    lineitem.write_bytes(b"v1")
+
+    def run(sf_dir=str(root)):
+        return staging.stage("k", sf_dir, build, inputs=("lineitem",))
+
+    if case == "full_path_key":
+        a = staging.path("k", "/a/sf0.01")
+        assert a != staging.path("k", "/b/sf0.01")
+        # the kind prefix keeps the leaf from reading as hidden to Spark
+        assert os.path.basename(a).startswith("k_")
+        other = tmp_path / "b" / "sf0.01"
+        shutil.copytree(root, other)
+        assert run() != run(str(other))
+        assert len(builds) == 2
+    elif case == "trailing_slash":
+        assert (staging.path("k", "/a/sf0.01/")
+                == staging.path("k", "/a/sf0.01"))
+        assert run(str(root) + "/") == run()
+        assert len(builds) == 1
+    elif case == "stamp_follows_inputs":
+        run()
+        lineitem.write_bytes(b"v2-longer")
+        run()
+        assert len(builds) == 2
+        # a directory-shaped table fingerprints its part files
+        lineitem.unlink()
+        lineitem.mkdir()
+        (lineitem / "part-0.parquet").write_bytes(b"chunk")
+        run()
+        (lineitem / "part-0.parquet").write_bytes(b"chunk-2")
+        run()
+        assert len(builds) == 4
+    elif case == "no_rewrite_on_repeat":
+        marker = os.path.join(run(), "_SUCCESS")
+        mtime = os.path.getmtime(marker)
+        run()
+        # a fresh process has only the on-disk marker to go by
+        monkeypatch.setattr(staging, "_DONE", set())
+        run()
+        assert len(builds) == 1
+        assert os.path.getmtime(marker) == mtime
+
+
 def test_src_stamp_tracks_builder_source(tmp_path):
     """src_stamp derives the layout version from builder SOURCE: same
     builders → same stamp across calls/processes; different builder
@@ -228,11 +296,66 @@ def test_src_stamp_tracks_builder_source(tmp_path):
     assert len(s1) == 12 and s1 != "BUILDING"
     # modules hash too (the domain fixtures stamp hashes fixtures.py)
     assert src_stamp(similarity) == src_stamp(similarity)
-    # and the production per-artifact stamps are distinct from each
-    # other (split per artifact, not one shared constant); since r11
-    # _cent_stamp also keys on the corpus fingerprint of its sf_dir
-    cent = similarity._cent_stamp("/root/testdata/sf0.001")
-    ivf = src_stamp(similarity.build_ivf_index, similarity.ivf_assign,
-                    extra=cent)
-    assert cent != ivf
-    assert cent != similarity._cent_stamp("/root/testdata/sf0.01")
+
+
+# ---- Staged queries against rewritten and same-named sf roots ------------
+
+def _writable_copy(src: str, dst) -> str:
+    shutil.copytree(src, dst, copy_function=shutil.copyfile)
+    os.chmod(dst, 0o755)
+    return str(dst)
+
+
+def _keep_even_keys(root: str, table: str, key: str) -> None:
+    """Rewrite ``table`` in place, keeping the rows with an even key."""
+    path = os.path.join(root, f"{table}.parquet")
+    t = pq.read_table(path)
+    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t[key], 1), 0)), path)
+
+
+def _drop_stagings(root: str) -> None:
+    import glob
+
+    for p in glob.glob(staging.path("*", root)):
+        shutil.rmtree(p, ignore_errors=True)
+
+
+@pytest.mark.parametrize("name", [
+    "q_scan_zorder", "q_scan_indexed", "q_mv_rollup_answer",
+    "q_tpch_q15_materialized", "q_join_dpp", "q_sink_backfill",
+    "q_source_textlines"])
+def test_staged_query_follows_inplace_input_rewrite(name, spark, sf_dir,
+                                                    tmp_path):
+    """Rewriting a staged query's inputs in place, inside one process,
+    must rebuild the staged artifact: the second oracle check sees the
+    new rows, not the artifact built from the old ones."""
+    from tests.test_oracle_mirror import test_oracle_parity as parity
+
+    root = _writable_copy(sf_dir, tmp_path / "sf")
+    try:
+        parity(name, spark, root)
+        for table, key in (("lineitem", "l_orderkey"), ("events", "event_id"),
+                           ("part", "p_partkey"), ("documents", "doc_id")):
+            _keep_even_keys(root, table, key)
+        parity(name, spark, root)
+    finally:
+        _drop_stagings(root)
+
+
+def test_join_bucketed_same_basename_roots(spark, sf_dir, tmp_path):
+    """Two sf roots with the same leaf name stage separate bucketed
+    tables: a second root holding half of lineitem must match the
+    oracle over ITS rows, not reuse the first root's tables."""
+    from tests.test_oracle_mirror import test_oracle_parity as parity
+
+    parity("q_join_bucketed", spark, sf_dir)
+    root = _writable_copy(
+        sf_dir, tmp_path / os.path.basename(sf_dir.rstrip("/")))
+    try:
+        _keep_even_keys(root, "lineitem", "l_orderkey")
+        parity("q_join_bucketed", spark, root)
+    finally:
+        key = staging.sf_key(root)
+        for t in (f"bkt_lineitem_{key}", f"bkt_orders_{key}"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _drop_stagings(root)

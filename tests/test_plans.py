@@ -498,12 +498,13 @@ def test_compaction_collapses_file_count(spark, sf_dir):
     import os
 
     from sigma_rx7_spark.sources.formats import (
-        COMPACT_SMALL_FILES, COMPACT_TARGET_FILES, _stage_dir)
+        COMPACT_SMALL_FILES, COMPACT_TARGET_FILES)
+    from sigma_rx7_spark.staging import path as staged_path
 
     ALL["q_sink_compaction"].fn(spark, sf_dir).collect()
-    small = glob.glob(os.path.join(_stage_dir("compact_small", sf_dir),
+    small = glob.glob(os.path.join(staged_path("compact_small", sf_dir),
                                    "*.parquet"))
-    big = glob.glob(os.path.join(_stage_dir("compact_big", sf_dir),
+    big = glob.glob(os.path.join(staged_path("compact_big", sf_dir),
                                  "*.parquet"))
     assert len(small) == COMPACT_SMALL_FILES, len(small)
     assert 0 < len(big) <= COMPACT_TARGET_FILES, len(big)

@@ -220,16 +220,16 @@ def test_ivf_oracle_staging_is_sf_keyed(spark, sf_dir):
     import os
 
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.llm.similarity import _oracle_cent
+    from sigma_rx7_spark.staging import path as staged_path
 
     spec = registry.load_all()["q_sim_topk_ivf"]
     spec.fn(spark, sf_dir).collect()
-    path = _oracle_cent(sf_dir)
+    path = staged_path("ivf_centroids", sf_dir)
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
     assert path in spec.oracle_for(sf_dir)
-    other = _oracle_cent("/root/testdata/sf0.42")
+    other = staged_path("ivf_centroids", "/data/sf0.42")
     assert other != path
-    assert other in spec.oracle_for("/root/testdata/sf0.42")
+    assert other in spec.oracle_for("/data/sf0.42")
 
 
 def test_pack_assignment_invariants(spark, sf_dir):
