@@ -56,22 +56,25 @@ def main() -> None:
             out = os.path.join(args.explain_dir,
                                f"{name}{args.suffix}.txt")
             # Provenance header (VERDICT r15 item 7): stamp the commit
-            # the plan was generated from, so a regenerated dump can
-            # never masquerade as a different tree's before-plan.
+            # the plan was generated from, and whether the working tree
+            # differed from it, so a regenerated dump can never
+            # masquerade as a different tree's before-plan.
             import subprocess
             from datetime import datetime, timezone
+            repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
             try:
                 sha = subprocess.check_output(
-                    ["git", "rev-parse", "HEAD"],
-                    cwd=os.path.dirname(os.path.dirname(
-                        os.path.abspath(__file__))),
+                    ["git", "rev-parse", "HEAD"], cwd=repo,
                     text=True).strip()
+                dirty = bool(subprocess.check_output(
+                    ["git", "status", "--porcelain"], cwd=repo,
+                    text=True).strip())
             except Exception:
-                sha = "unknown"
+                sha, dirty = "unknown", "unknown"
             stamp = datetime.now(timezone.utc).isoformat(timespec="seconds")
             with open(out, "w") as fh:
                 fh.write(f"-- plan dump: query={name} commit={sha} "
-                         f"generated={stamp}\n")
+                         f"dirty={dirty} generated={stamp}\n")
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         reps = []

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..compat import QDEC, q
 from ..io import load
+from ..kernels import dense_rows, dense_width
 from ..materialize import share
 from ..registry import query
 
@@ -286,13 +287,11 @@ def _cov_finish(s: DataFrame) -> DataFrame:
     )
 
 
-# Regularity gate for the fixed-point fast path: components must be
-# finite, non-null, uniform-width, and |x| < _COV_ABS_MAX so the
-# scale-9 integer fits 2^34 bits and every split product stays exact in
-# int64 (overflow proof in _cov_partials). Anything else falls back to
-# the explode path, whose NULL/overflow semantics are authoritative.
+# Bound for the fixed-point fast path's regularity gate
+# (kernels.dense_width / dense_rows): |x| < _COV_ABS_MAX keeps the
+# scale-9 integer within 2^34 so every split product stays exact in
+# int64 (overflow proof in _cov_partials).
 _COV_ABS_MAX = 16.0
-_COV_SPLIT = 1 << 17
 _COV_CHUNK = 1 << 18  # rows per int64 Gram chunk: 2^18 * 2^34 = 2^52
 
 
@@ -336,7 +335,6 @@ def _cov_partials(batches):
     as Arrow decimal128(38,18) — the same type the explode path's
     per-pair products summed, so Spark's final decimal sums and the
     double casts are value-identical."""
-    import numpy as _np
     import pyarrow as _pa
     from decimal import Decimal as _D
 
@@ -347,8 +345,7 @@ def _cov_partials(batches):
     for batch in batches:
         if batch.num_rows == 0:
             continue
-        raw = batch.column("embedding").to_pylist()
-        V = _np.asarray(raw, dtype=_np.float64)
+        V = dense_rows(batch.column("embedding"), dim, _COV_ABS_MAX)
         if dim is None:
             dim = V.shape[1]
             si_tot = [0] * dim
@@ -356,12 +353,6 @@ def _cov_partials(batches):
             gaa = [r[:] for r in z]
             gab = [r[:] for r in z]
             gbb = [r[:] for r in z]
-        if V.shape[1] != dim or not _np.isfinite(V).all() \
-                or (_np.abs(V) >= _COV_ABS_MAX).any():
-            raise ValueError("irregular embedding batch reached the "
-                             "fixed-point path")  # the driver-side gate
-            # dispatches such inputs to the explode path; mid-stream
-            # drift is data corruption and must fail loudly
         X = _scale9_int64(V)
         for s in range(0, X.shape[0], _COV_CHUNK):
             xc = X[s:s + _COV_CHUNK]
@@ -416,19 +407,15 @@ def q_embed_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring of an embedding corpus. One row per dimension pair
     (i ≤ j) with the sample covariance from exact-decimal sums.
 
-    r16 execution (guide §4.2, VERDICT r15 item 3): the double explode
-    inflated each vector to dim·(dim+1)/2 decimal component pairs
-    (4.2 M rows × decimal multiply at sf0.1 — 6.2 s solo). The
-    ``mapInArrow`` accumulator computes the SAME sufficient statistics
-    as exact scale-9/scale-18 integers (split int64 Gram products with
-    a written overflow proof — see ``_cov_partials``), emits one
-    decimal partial row per (partition, i, j), and leaves the final
-    decimal sums, the closed form, and the 9-dp quantization IN SPARK —
-    so every output double is bit-identical to the explode path and
-    the hash gate stays (property-tested at the raw-bit level).
-    Inputs failing the regularity gate (ragged/null/non-finite/
-    |x| ≥ _COV_ABS_MAX) take the original explode path, whose NULL
-    semantics are authoritative.
+    Execution: a ``mapInArrow`` accumulator computes the explode
+    path's (``_embed_cov_jvm``) sufficient statistics as exact
+    scale-9/scale-18 integers (overflow proof in ``_cov_partials``) and
+    leaves the decimal sums, the closed form and the 9-dp quantization
+    in Spark, so every output double is bit-identical to the explode
+    path (property-tested at the raw-bit level). The gate is
+    ``kernels.dense_width`` at ``abs_max=_COV_ABS_MAX``, one aggregate
+    with nothing collected; a column that is not regular, or an empty
+    table, takes the explode path.
 
     Scale shape: per-partition partials bound the shuffle at
     dim·(dim+1)/2 rows per partition regardless of corpus size — the
@@ -436,28 +423,9 @@ def q_embed_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing done in vectorized native code instead of 2080 generated
     rows per vector. ``dominant_eigenvector`` consumes the result as
     bounded metadata (dim² rows) for the power-iteration PCA step."""
-    import numpy as np
-
     e = load(spark, sf_dir, "embeddings")
     src = e.select("embedding")
-    # Regularity gate (bounded audit-sample relation, same collect-and-
-    # inspect posture as the exact cosine scorer): one pass decides
-    # fast path vs explode fallback.
-    tbl = src.toArrow()
-    if tbl.num_rows == 0:
-        return _embed_cov_jvm(e)
-    emb = tbl.column("embedding").combine_chunks()
-    raw = emb.to_pylist()
-    lens = {len(v) if v is not None else -1 for v in raw}
-    regular = len(lens) == 1 and -1 not in lens and 0 not in lens
-    if regular:
-        flat = [x for v in raw for x in v]
-        regular = (None not in flat)
-        if regular:
-            V = np.asarray(raw, dtype=np.float64)
-            regular = bool(np.isfinite(V).all()
-                           and (np.abs(V) < _COV_ABS_MAX).all())
-    if not regular:
+    if dense_width(src, "embedding", abs_max=_COV_ABS_MAX) is None:
         return _embed_cov_jvm(e)
     parts = (src.repartition(spark.sparkContext.defaultParallelism)
              .mapInArrow(_cov_partials,

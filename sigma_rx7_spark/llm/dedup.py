@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens
 from ..io import load
+from ..kernels import collect_dense, dense_rows
 from ..materialize import share
 from ..registry import query
 from .similarity import (dot, dot_idx, normalized,
@@ -595,7 +596,7 @@ COSINE_DUP_THRESHOLD = 0.45  # harness embeddings are near-orthogonal
 
 def _allpairs_cosine_jvm(e: DataFrame) -> DataFrame:
     """The r1–r15 JVM-fold all-pairs scorer — kept as the fallback for
-    ragged embedding inputs (zip_with truncation semantics) and as the
+    embedding columns that are not regular (``kernels``) and as the
     reference the Arrow path is property-tested bit-equal against."""
     a = e.select(F.col("vec_id").alias("a_vec_id"),
                  normalized("embedding").alias("a_vec"))
@@ -608,10 +609,6 @@ def _allpairs_cosine_jvm(e: DataFrame) -> DataFrame:
                 dot("a_vec", "b_vec").alias("cos_sim"))
         .where(F.col("cos_sim") >= COSINE_DUP_THRESHOLD)
     )
-
-
-_COSINE_OUT_SCHEMA = "a_vec_id bigint, b_vec_id bigint, cos_sim double"
-
 
 
 @query(
@@ -643,40 +640,25 @@ def q_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     always runs on a sample or on LSH/IVF candidates —
     q_dedup_cosine_lsh is the production path).
 
-    r16 execution (guide §4.2): the per-pair arithmetic moves from the
-    interpreted JVM ``aggregate`` fold (BroadcastNestedLoopJoin over n²
-    pairs — 13.5 s solo at sf0.1, the registry's heaviest entry; the
-    unrolled-codegen variant was measured SLOWER in r6) to a
-    ``mapInArrow`` scorer that is BIT-EXACT to the fold: the one side
-    is collected and sc.broadcast ONCE per call (the same bounded
-    relation the crossJoin previously broadcast — rows re-read from
-    parquet every call, nothing memoizes), the probe side streams
-    through Arrow, and ``similarity.np_pairwise_dots`` accumulates each
-    pair's 64 dims SEQUENTIALLY (64 rank-1 numpy updates — deliberately
-    NOT a BLAS matmul, which reorders the sum) so every multiply/add/
-    sqrt/divide is the identical IEEE-754 op sequence as the JVM fold
-    and DuckDB's list_inner_product mirror. Hash-gated, not rows-only,
-    exactly as before; the Arrow↔fold bit-equality is property-tested.
-    Ragged inputs (mixed embedding widths — zip_with truncation
-    semantics the dense matrix cannot mirror) and NULL rows or elements
-    (which the dense matrix would turn into NaN) fall back to the fold."""
-    import numpy as np
-
+    Execution: a ``mapInArrow`` scorer, bit-exact to the JVM fold
+    (``_allpairs_cosine_jvm``, a BroadcastNestedLoopJoin over n²
+    pairs). ``kernels.collect_dense`` collects the build side once per
+    call and ``sc.broadcast`` ships it; the probe side streams through
+    Arrow. ``similarity.np_pairwise_dots`` accumulates each pair's dims
+    sequentially (rank-1 updates, not a BLAS matmul, which reorders the
+    sum), so every IEEE-754 op matches the fold and DuckDB's
+    list_inner_product mirror (property-tested at the raw-bit level).
+    A column that is not regular (``kernels``) takes the fold: zip_with
+    truncation, NULL propagation and Spark's NaN ordering (NaN ≥
+    threshold is true there, false in numpy) are semantics the dense
+    matrix cannot mirror."""
     e = load(spark, sf_dir, "embeddings")
     src = e.select("vec_id", "embedding")
-    tbl = src.toArrow()
-    n = tbl.num_rows
-    if n == 0:
-        return spark.createDataFrame([], _COSINE_OUT_SCHEMA)
-    raw = tbl.column("embedding").combine_chunks().to_pylist()
-    lens = {len(v) if v is not None else -1 for v in raw}
-    if (len(lens) != 1 or -1 in lens
-            or any(x is None for v in raw for x in v)):
+    build = collect_dense(src, "vec_id", "embedding")
+    if build is None:
         return _allpairs_cosine_jvm(e)
-    ids = tbl.column("vec_id").to_numpy()
-    V = np.asarray(raw, dtype=np.float64)
-    NB = np_unit_rows(V)
-    bc = spark.sparkContext.broadcast((ids, NB))
+    ids, V = build
+    bc = spark.sparkContext.broadcast((ids, np_unit_rows(V)))
     dim = V.shape[1]
 
     def score(batches):
@@ -689,12 +671,7 @@ def q_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             if m == 0:
                 continue
             aid = batch.column("vec_id").to_numpy()
-            raw = batch.column("embedding").to_pylist()
-            if any(len(v) != dim for v in raw):
-                raise ValueError("ragged embedding batch")  # fallback
-                # path handles this shape before dispatch; a mid-stream
-                # width drift is data corruption and must fail loudly
-            na = np_unit_rows(_np.asarray(raw, dtype=_np.float64))
+            na = np_unit_rows(dense_rows(batch.column("embedding"), dim))
             step = 256  # bounds acc at step x n doubles per chunk
             for s in range(0, m, step):
                 ab, ai = na[s:s + step], aid[s:s + step]
@@ -711,7 +688,8 @@ def q_dedup_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
                     names=["a_vec_id", "b_vec_id", "cos_sim"])
 
     probe = src.repartition(spark.sparkContext.defaultParallelism)
-    return probe.mapInArrow(score, _COSINE_OUT_SCHEMA)
+    return probe.mapInArrow(
+        score, "a_vec_id bigint, b_vec_id bigint, cos_sim double")
 
 
 # ---- SRP-LSH embedding near-dup (the bucketed scale path) ----------------
@@ -1285,80 +1263,62 @@ _CLUSTER_PAIRS_SQL = f"""
 """
 
 
-def _cluster_pair_batches(batches):
-    """mapInArrow worker for the blocked all-pairs Jaccard edge stage
-    (r16, guide §4.2): rows arrive block-co-located (hash-partitioned
-    by (lang, source)); per block the distinct word sets become rows of
-    a uint64 BITSET matrix over the block vocabulary, and each pair's
-    intersection size is a vectorized AND + popcount — integer counts,
-    so the pair set is EXACT by construction (a Python dict maps words
-    to vocabulary ids; no hashing, no collisions). The only float op —
-    n_common/union vs the 0.8 threshold — is replicated as the same
-    IEEE-754 double division of exact ints the JVM plan evaluates (and
-    J(∅,∅)=1, the q_dedup_ngram empty-text contract). Emits (src, dst)
-    with src < dst, exactly the old join's output."""
-    from collections import defaultdict
-
+def _cluster_pair_block(tbl):
+    """Grouped-map worker for the blocked all-pairs Jaccard edge stage:
+    one call per (lang, source) block. The distinct word sets become
+    rows of a uint64 BITSET matrix over the block vocabulary, and each
+    pair's intersection size is a vectorized AND + popcount — integer
+    counts, so the pair set is EXACT by construction (vocabulary ids
+    come from ``dictionary_encode``, an injective map; no hashing, no
+    collisions). The only float op — n_common/union vs the 0.8
+    threshold — is the same IEEE-754 double division of exact ints the
+    JVM plan evaluates (and J(∅,∅)=1, the q_dedup_ngram empty-text
+    contract). Returns (src, dst) with src < dst, exactly the join's
+    output."""
     import numpy as _np
     import pyarrow as _pa
+    import pyarrow.compute as _pc
 
-    rows = []
-    for batch in batches:
-        rows.extend(zip(batch.column("doc_id").to_pylist(),
-                        batch.column("lang").to_pylist(),
-                        batch.column("source").to_pylist(),
-                        batch.column("words").to_pylist()))
-    if not rows:
-        return
-    pop8 = _np.array([bin(i).count("1") for i in range(256)],
-                     dtype=_np.uint16)
-    blocks = defaultdict(list)
-    for doc_id, lang, src, w in rows:
-        # null lang/source never equi-join; null doc_id fails a < b;
-        # null words make size() null -> predicate null -> no edge
-        if lang is None or src is None or doc_id is None or w is None:
-            continue
-        blocks[(lang, src)].append((doc_id, w))
+    tbl = tbl.sort_by("doc_id")
+    n = tbl.num_rows
     out_src: list = []
     out_dst: list = []
-    for docs in blocks.values():
-        docs.sort(key=lambda t: t[0])
-        n = len(docs)
-        if n < 2:
-            continue
-        vocab: dict = {}
-        for _, w in docs:
-            for t in w:
-                if t not in vocab:
-                    vocab[t] = len(vocab)
-        width = max((len(vocab) + 63) // 64, 1)
-        M = _np.zeros((n, width), dtype=_np.uint64)
-        sizes = _np.zeros(n, dtype=_np.int64)
-        for r, (_, w) in enumerate(docs):
-            if not w:
-                continue
-            idx = _np.fromiter((vocab[t] for t in w), dtype=_np.int64,
-                               count=len(w))
-            sizes[r] = len(idx)
-            _np.bitwise_or.at(M[r], idx >> 6,
-                              _np.uint64(1) << (idx & 63).astype(_np.uint64))
-        ids = _np.array([d for d, _ in docs], dtype=_np.int64)
-        for a in range(n - 1):
-            sub = M[a + 1:] & M[a]
-            inter = pop8[sub.view(_np.uint8)].sum(
-                axis=1).astype(_np.int64)
-            u = sizes[a] + sizes[a + 1:] - inter
-            j = _np.where(u == 0, 1.0,
-                          inter / _np.where(u == 0, 1, u))
-            keep = (j >= CLUSTER_JACCARD) & (ids[a + 1:] > ids[a])
-            for b in _np.nonzero(keep)[0]:
-                out_src.append(int(ids[a]))
-                out_dst.append(int(ids[a + 1 + b]))
-    if out_src:
-        yield _pa.RecordBatch.from_arrays(
-            [_pa.array(out_src, _pa.int64()),
-             _pa.array(out_dst, _pa.int64())],
-            names=["src", "dst"])
+    words = tbl.column("words").combine_chunks()
+    vocab = _pc.dictionary_encode(words.flatten(), null_encoding="encode")
+    vid = vocab.indices.to_numpy().astype(_np.int64)
+    rid = _pc.list_parent_indices(words).to_numpy()
+    sizes = _pc.list_value_length(words).to_numpy().astype(_np.int64)
+    width = max((len(vocab.dictionary) + 63) // 64, 1)
+    M = _np.zeros((n, width), dtype=_np.uint64)
+    _np.bitwise_or.at(M, (rid, vid >> 6),
+                      _np.uint64(1) << (vid & 63).astype(_np.uint64))
+    ids = tbl.column("doc_id").to_numpy()
+    pop8 = _np.array([bin(i).count("1") for i in range(256)],
+                     dtype=_np.uint16)
+    for a in range(n - 1):
+        sub = M[a + 1:] & M[a]
+        inter = pop8[sub.view(_np.uint8)].sum(axis=1).astype(_np.int64)
+        u = sizes[a] + sizes[a + 1:] - inter
+        j = _np.where(u == 0, 1.0, inter / _np.where(u == 0, 1, u))
+        keep = (j >= CLUSTER_JACCARD) & (ids[a + 1:] > ids[a])
+        for b in _np.nonzero(keep)[0]:
+            out_src.append(int(ids[a]))
+            out_dst.append(int(ids[a + 1 + b]))
+    return _pa.table({"src": _pa.array(out_src, _pa.int64()),
+                      "dst": _pa.array(out_dst, _pa.int64())})
+
+
+def _cluster_pairs(words: DataFrame) -> DataFrame:
+    """Jaccard ≥ CLUSTER_JACCARD edges within (lang, source) blocks, one
+    block per worker call. A row with a NULL key or NULL words never
+    pairs in the self-join this replaces, so it is dropped first."""
+    return (
+        words.where(F.col("doc_id").isNotNull() & F.col("lang").isNotNull()
+                    & F.col("source").isNotNull()
+                    & F.col("words").isNotNull())
+        .groupBy("lang", "source")
+        .applyInArrow(_cluster_pair_block, "src bigint, dst bigint")
+    )
 
 
 @query(
@@ -1399,26 +1359,18 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs (q_dedup_near) — the component algorithm is
     pair-source-agnostic.
 
-    r16 execution (guide §4.2): the blocked self-join evaluated
-    array_intersect per pair in the JVM (7.5 s solo at sf0.1 — the
-    pair VOLUME is the demo's contract, the per-pair cost was not).
-    The edge stage now hash-partitions the distinct word-set relation
-    by block and runs ``_cluster_pair_batches`` — a bitset AND +
-    popcount per pair — whose output pair set is integer-exact (the
-    one float op, the threshold divide, is the identical IEEE division
-    of exact ints). Tokenization stays in the JVM, so the word sets
-    are byte-identical; equality with the join path is property-tested
-    pair-for-pair."""
+    Execution: the edge stage ``_cluster_pairs`` is a grouped map
+    (``groupBy("lang", "source").applyInArrow``), so a worker holds one
+    block, not a partition, and scores its pairs with a bitset AND +
+    popcount instead of a per-pair array_intersect. Tokenization stays
+    in the JVM, so the word sets are byte-identical; equality with the
+    blocked self-join is property-tested pair-for-pair."""
     d = load(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", "lang", "source",
         F.array_distinct(tokens(F.col("text"))).alias("words"))
-    edges = (
-        words.repartition("lang", "source")
-        .mapInArrow(_cluster_pair_batches, "src bigint, dst bigint")
-    )
     labels = connected_components(
-        d.select(F.col("doc_id").alias("node")), edges)
+        d.select(F.col("doc_id").alias("node")), _cluster_pairs(words))
     from pyspark.sql import Window
     return labels.select(
         F.col("node").alias("doc_id"),

@@ -91,21 +91,21 @@ _LOADED = False
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
     # Window: 27 r16-changed + 18 staging-rule + 5 restaged = 50.
-    # Composition: (a) every query whose execution path changed in the
-    # r16 optimization round (results bit-identical by construction
-    # and local mirrors, but the driver should re-prove them): the
-    # quality-audit fold, the lazy-checkpoint adoptees, the Arrow/
-    # fixed-point rewrites (exact cosine, covariance, blocked Jaccard
-    # pair stage) and their composers, the 11 streaming queries
-    # whose trailing no-data micro-batch is now skipped, and the two
-    # queries whose persists became materialize.share (PageRank, the
-    # quality model); (b) the 18 queries whose oracle now reads a path
-    # computed by staging.path under a new name (TPC-H partsupp, IVF
-    # centroids, schema-merge batches) or whose staged artifact gained
-    # an input stamp or a new guard in staging.stage (media files, the
-    # Q15 revenue view, DPP fact, z-order and indexed layouts); (c) 5
-    # older names whose staging moved onto staging.stage. They replace
-    # the oldest already-proven names (the r5 cohort and r6 re-bank).
+    # Composition: (a) every query whose execution path changed since
+    # r16 (results bit-identical by construction and local mirrors,
+    # but the external checker should re-prove them): the quality-audit
+    # fold, the lazy-checkpoint adoptees, the Arrow kernels (now on
+    # kernels.py) and their composers, the 11 streaming queries whose
+    # no-data-batch skip now holds its conf only around start(), and
+    # the two queries whose persists became materialize.share
+    # (PageRank, the quality model); (b) the 18 queries whose oracle now
+    # reads a path computed by staging.path under a new name (TPC-H
+    # partsupp, IVF centroids, schema-merge batches) or whose staged
+    # artifact gained an input stamp or a new guard in staging.stage
+    # (media files, the Q15 revenue view, DPP fact, z-order and indexed
+    # layouts); (c) 5 older names whose staging moved onto
+    # staging.stage. They replace the oldest already-proven names (the
+    # r5 cohort and r6 re-bank).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
@@ -118,13 +118,13 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_text_bpe_merges",
     "q_text_bpe_tokenize",
     "q_pipeline_token_budget",
-    # changed this round — Arrow/fixed-point exact rewrites + composers
+    # Arrow kernels — gate and decode in kernels.py; + composers
     "q_dedup_cosine",
     "q_dedup_recall_lsh",
     "q_embed_cov",
     "q_embed_pca_power",
     "q_dedup_clusters",
-    # changed this round — trailing no-data micro-batch skipped
+    # trailing no-data micro-batch skipped; overrides scoped to start()
     "q_stream_hourly_distinct",
     "q_stream_hourly_distinct_approx",
     "q_stream_hourly_counts",

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-from contextlib import contextmanager
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,28 +59,13 @@ STREAM_STATE_PARTITIONS = 8
 # keyed aggregate computes, and the oracle gate proves it).
 
 
-@contextmanager
-def stream_state_partitions(spark: SparkSession,
-                            n: int = STREAM_STATE_PARTITIONS):
-    """Temporarily size spark.sql.shuffle.partitions for a stateful
-    stream start; restores the session value on exit (batch plans in the
-    same session keep their own sizing)."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 # Session-conf seam for the file source's per-micro-batch rate limit.
 # Unset (the default and the harness posture) the source drains in one
 # availableNow batch; a deployment — or the two-chunk replay tests —
 # sets it so availableNow chops the backlog into bounded micro-batches
 # (at 100 TB you ALWAYS bound micro-batch size: an unbounded first
 # batch after downtime is an OOM, and replaying through bounded batches
-# is exactly the crash-recovery path). Like stream_state_partitions,
+# is exactly the crash-recovery path). Like STREAM_STATE_PARTITIONS,
 # this is a deployment knob, not a semantic one: the windowed results
 # must be chop-invariant, which tests/test_streaming_replay.py proves
 # against each job's own batch oracle.
@@ -127,9 +112,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", ts)
 
 
+_START_LOCK = threading.Lock()
+
+
 def run_to_memory(stream_df: DataFrame, name: str,
                   output_mode: str = "complete",
-                  final_no_data_batch: bool = True) -> DataFrame:
+                  final_no_data_batch: bool = True,
+                  state_partitions: int | None = None) -> DataFrame:
     """Execute a streaming DataFrame with availableNow into a memory sink
     and return the materialized result (T1 sink side, batch-verifiable).
 
@@ -143,29 +132,38 @@ def run_to_memory(stream_df: DataFrame, name: str,
     input exists, and complete mode never gates emission on the
     watermark (eviction only bounds state size). Callers whose sink
     content is provably watermark-independent pass False and skip it
-    via a scoped ``noDataMicroBatches`` conf (restored after the run,
-    so append-mode queries in the same session — where the trailing
-    batch IS what emits final windows / outer-join rows — keep it).
-    Measured: q_stream_hourly_distinct 1.67 → 1.00 s warm min, rows
-    identical; chop-invariance replay tests prove multi-batch equality.
+    (``noDataMicroBatches`` off). Measured: q_stream_hourly_distinct
+    1.67 → 1.00 s warm min, rows identical; chop-invariance replay
+    tests prove multi-batch equality. ``state_partitions`` sizes the
+    state stores (see STREAM_STATE_PARTITIONS).
+
+    A query captures the session conf when ``start()`` builds it, so
+    both overrides hold only around ``start()``, under one lock: no
+    other query in the session sees them.
     """
     spark = stream_df.sparkSession
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key, "true")
+    overrides = {}
     if not final_no_data_batch:
-        spark.conf.set(key, "false")
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if not final_no_data_batch:
-            spark.conf.set(key, old)
+        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if state_partitions is not None:
+        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
+    writer = (stream_df.writeStream.format("memory")
+              .queryName(name)
+              .outputMode(output_mode)
+              .trigger(availableNow=True))
+    with _START_LOCK:
+        old = {k: spark.conf.get(k, None) for k in overrides}
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        try:
+            q = writer.start()
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    q.awaitTermination()
     return spark.table(name)
 
 
@@ -1612,23 +1610,22 @@ def q_stream_hourly_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     still caught (same recipe as q_stream_ingest_dedup below).
 
     The two chained state stores make this the most state-commit-bound
-    job in the file; it starts under stream_state_partitions so the
-    per-partition store commit cost is paid {STREAM_STATE_PARTITIONS}×2
-    times per micro-batch, not 64 (see the constant's sizing note)."""
-    with stream_state_partitions(spark):
-        ev = (read_events_stream(spark, sf_dir)
-              .where(F.col("event_type") == "purchase")
-              .withWatermark("ts", "1 hour"))
-        deduped = (ev.withColumn("hour_start",
-                                 F.date_trunc("hour", F.col("ts")))
-                   .dropDuplicatesWithinWatermark(
-                       ["hour_start", "user_id"]))
-        agg = (deduped.groupBy(F.window("ts", "1 hour"))
-               .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
-               .select(F.col("window.start").alias("hour_start"),
-                       "n_users"))
-        return run_to_memory(agg, "stream_hourly_distinct",
-                             final_no_data_batch=False)
+    job in the file; it starts with STREAM_STATE_PARTITIONS stores so
+    the per-partition store commit cost is paid
+    {STREAM_STATE_PARTITIONS}×2 times per micro-batch, not 64 (see the
+    constant's sizing note)."""
+    ev = (read_events_stream(spark, sf_dir)
+          .where(F.col("event_type") == "purchase")
+          .withWatermark("ts", "1 hour"))
+    deduped = (ev.withColumn("hour_start",
+                             F.date_trunc("hour", F.col("ts")))
+               .dropDuplicatesWithinWatermark(["hour_start", "user_id"]))
+    agg = (deduped.groupBy(F.window("ts", "1 hour"))
+           .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
+           .select(F.col("window.start").alias("hour_start"), "n_users"))
+    return run_to_memory(agg, "stream_hourly_distinct",
+                         final_no_data_batch=False,
+                         state_partitions=STREAM_STATE_PARTITIONS)
 
 
 # ---- T19: streaming approximate distinct per window (T18's sketch twin) ----
@@ -1673,17 +1670,16 @@ def q_stream_hourly_distinct_approx(spark: SparkSession,
     the oracle asserts TRUE. The boolean is never-NULL and exact > 0
     by construction (a window exists only if a row arrived), so the
     gate is ANSI-safe."""
-    with stream_state_partitions(spark):
-        ev = (read_events_stream(spark, sf_dir)
-              .where(F.col("event_type") == "purchase")
-              .withWatermark("ts", "1 hour"))
-        agg = (ev.groupBy(F.window("ts", "1 hour"))
-               .agg(F.approx_count_distinct("user_id", HLL_RSD)
-                    .alias("n_approx"))
-               .select(F.col("window.start").alias("hour_start"),
-                       "n_approx"))
-        streamed = run_to_memory(agg, "stream_hourly_distinct_approx",
-                                 final_no_data_batch=False)
+    ev = (read_events_stream(spark, sf_dir)
+          .where(F.col("event_type") == "purchase")
+          .withWatermark("ts", "1 hour"))
+    agg = (ev.groupBy(F.window("ts", "1 hour"))
+           .agg(F.approx_count_distinct("user_id", HLL_RSD)
+                .alias("n_approx"))
+           .select(F.col("window.start").alias("hour_start"), "n_approx"))
+    streamed = run_to_memory(agg, "stream_hourly_distinct_approx",
+                             final_no_data_batch=False,
+                             state_partitions=STREAM_STATE_PARTITIONS)
     exact = (load(spark, sf_dir, "events")
              .where(F.col("event_type") == "purchase")
              .groupBy(F.date_trunc("hour", F.col("ts"))

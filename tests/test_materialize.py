@@ -6,6 +6,10 @@
 - ``staging.py`` alone knows where a staged artifact lives and when it
   is complete; every other module builds one through ``staging.stage``
   and names one through ``staging.path``.
+- ``kernels.py`` alone collects a relation to Arrow on the driver or
+  turns Arrow values into Python objects; every Arrow kernel gates its
+  input with ``kernels.dense_width`` or ``kernels.collect_dense`` and
+  decodes it with ``kernels.dense_rows``.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ OWNED = [
         r"|\.unpersist\(")),
     ("staging.py", re.compile(
         r"begin_staging\(|mark_staged\(|staging_ok\(|[\"']\.staging\b")),
+    ("kernels.py", re.compile(r"toArrow\(|\.to_pylist\(")),
 ]
 
 

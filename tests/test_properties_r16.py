@@ -47,23 +47,108 @@ def test_arrow_cosine_bit_equals_jvm_fold(spark, sf_dir):
     _assert_cosine_matches_fold(spark, sf_dir)
 
 
-def test_cosine_null_embeddings_match_jvm_fold(spark, sf_dir, tmp_path):
-    # One NULL embedding row and one NULL element: the regularity gate
-    # must route both to the JVM fold (a NULL row used to raise
-    # TypeError in the gate, and a NULL element became NaN in the dense
-    # matrix), so the query still equals the fold pair for pair.
+# Embedding columns the Arrow kernels must not take (kernels.py's
+# regularity predicate): each case rewrites one sf embedding.
+_COSINE_CASES = ("null_row", "null_element", "nan", "pos_inf", "neg_inf",
+                 "ragged")
+_COV_CASES = _COSINE_CASES + ("abs16", "empty")
+
+
+def _rewrite_embeddings(sf_dir, out_dir, case) -> str:
+    """Write ``sf_dir``'s embeddings table to ``out_dir`` with one row's
+    embedding rewritten per ``case`` (or no rows, for ``empty``)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(f"{sf_dir}/embeddings.parquet")
-    emb = tbl.column("embedding").to_pylist()
-    emb[0] = None
-    emb[1] = [None] + emb[1][1:]
-    idx = tbl.schema.get_field_index("embedding")
-    tbl = tbl.set_column(idx, tbl.schema.field(idx),
-                         pa.array(emb, tbl.schema.field(idx).type))
-    pq.write_table(tbl, tmp_path / "embeddings.parquet")
-    assert _assert_cosine_matches_fold(spark, str(tmp_path))
+    if case == "empty":
+        tbl = tbl.slice(0, 0)
+    else:
+        emb = tbl.column("embedding").to_pylist()
+        v = emb[1]
+        emb[1] = {
+            "regular": v,
+            "null_row": None,
+            "null_element": [None] + v[1:],
+            "nan": [math.nan] + v[1:],
+            "pos_inf": [math.inf] + v[1:],
+            "neg_inf": [-math.inf] + v[1:],
+            "ragged": v[:-1],
+            "abs16": [16.0] + v[1:],
+        }[case]
+        idx = tbl.schema.get_field_index("embedding")
+        tbl = tbl.set_column(idx, tbl.schema.field(idx),
+                             pa.array(emb, tbl.schema.field(idx).type))
+    pq.write_table(tbl, f"{out_dir}/embeddings.parquet")
+    return str(out_dir)
+
+
+@pytest.mark.parametrize("case", _COSINE_CASES)
+def test_cosine_irregular_embeddings_match_jvm_fold(spark, sf_dir, tmp_path,
+                                                    case):
+    # The regularity gate must route every irregular column to the JVM
+    # fold, so the query still equals the fold pair for pair. A NULL
+    # row once raised TypeError in the gate, a NULL element became NaN
+    # in the dense matrix, and a NaN/+inf component dropped every pair
+    # it touched (numpy's NaN >= t is false, Spark's is true).
+    assert _assert_cosine_matches_fold(
+        spark, _rewrite_embeddings(sf_dir, tmp_path, case))
+
+
+@pytest.mark.parametrize("case", _COV_CASES)
+def test_cov_irregular_embeddings_match_explode_path(spark, sf_dir,
+                                                     tmp_path, case):
+    # Twin of the cosine cases for q_embed_cov's gate (plus a component
+    # at the fixed-point bound and an empty table): bit-equal to the
+    # explode path, or the same exception class when both raise.
+    from sigma_rx7_spark.llm.clustering import _embed_cov_jvm
+
+    d = _rewrite_embeddings(sf_dir, tmp_path, case)
+
+    def run(build):
+        try:
+            return {(r.i, r.j): (r.n_vecs,
+                                 None if r.cov is None else _bits(r.cov))
+                    for r in build().collect()}
+        except Exception as exc:  # noqa: BLE001 — compared by class
+            return type(exc)
+
+    new = run(lambda: ALL["q_embed_cov"].fn(spark, d))
+    old = run(lambda: _embed_cov_jvm(load(spark, d, "embeddings")))
+    assert new == old
+
+
+@pytest.mark.parametrize("case", ("regular",) + _COV_CASES)
+def test_dense_gates_agree(spark, sf_dir, tmp_path, case):
+    # One predicate, two engines: dense_width (Spark aggregate) returns
+    # None exactly when dense_rows (Arrow) raises, at either bound, and
+    # exactly when collect_dense returns None; a regular column decodes
+    # to the same doubles as np.asarray(to_pylist()).
+    import numpy as np
+
+    from sigma_rx7_spark.kernels import collect_dense, dense_rows, dense_width
+
+    d = _rewrite_embeddings(sf_dir, tmp_path, case)
+    src = load(spark, d, "embeddings").select("vec_id", "embedding")
+    col = src.toArrow().column("embedding")
+
+    def width_or_raise(abs_max):
+        try:
+            return dense_rows(col, abs_max=abs_max).shape[1]
+        except ValueError:
+            return None
+
+    for abs_max in (math.inf, 16.0):
+        assert (dense_width(src, "embedding", abs_max=abs_max)
+                == width_or_raise(abs_max)), abs_max
+    built = collect_dense(src, "vec_id", "embedding")
+    assert (built is None) == (width_or_raise(math.inf) is None)
+    assert (built is None) == (case not in ("regular", "abs16"))
+    if built is not None:
+        ids, V = built
+        assert V.shape == (len(ids), 64)
+        assert V.tobytes() == np.asarray(
+            col.to_pylist(), dtype=np.float64).tobytes()
 
 
 def test_np_unit_rows_matches_engine_normalized(spark, sf_dir):
@@ -152,22 +237,20 @@ def test_scale9_int64_matches_engine_decimal_cast(spark):
 
 
 def test_bitset_cluster_pairs_equal_join_pairs(spark, sf_dir):
-    # The mapInArrow bitset pair stage vs the r15 blocked self-join:
-    # identical (src, dst) edge sets (integer-exact contract), and the
-    # full clusters query row-identical to the join-built variant.
+    # The grouped-map bitset pair stage vs the r15 blocked self-join:
+    # identical (src, dst) edge sets (integer-exact contract).
     from pyspark.sql import functions as F
 
     from sigma_rx7_spark.functions.text import tokens
-    from sigma_rx7_spark.llm.dedup import (CLUSTER_JACCARD,
-                                           _cluster_pair_batches)
+    from sigma_rx7_spark.llm.dedup import CLUSTER_JACCARD, _cluster_pairs
 
     d = load(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", "lang", "source",
         F.array_distinct(tokens(F.col("text"))).alias("words"))
-    new = set((r.src, r.dst) for r in words.repartition("lang", "source")
-              .mapInArrow(_cluster_pair_batches, "src bigint, dst bigint")
-              .collect())
+    new = [(r.src, r.dst) for r in _cluster_pairs(words).collect()]
+    assert len(new) == len(set(new))  # no duplicate pairs
+    new = set(new)
     a = d.select(F.col("doc_id").alias("a_doc_id"), "lang", "source",
                  F.array_distinct(tokens(F.col("text"))).alias("a_words"))
     b = d.select(F.col("doc_id").alias("b_doc_id"),
