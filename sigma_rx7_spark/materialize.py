@@ -24,7 +24,8 @@ built; only the final stage waits for the query's own action.
 ``snapshot(df)`` is ``df.localCheckpoint(eager=True)``. It is only for
 state that must outlive a ``foreachBatch`` micro-batch: the batch's
 DataFrame is gone once the callback returns, so the state derived from
-it is materialized before then.
+it is materialized before then. Its only caller is
+``streaming.jobs.fold_stream``.
 """
 
 from __future__ import annotations

@@ -90,7 +90,8 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 27 r16-changed + 18 staging-rule + 5 restaged = 50.
+    # Window: 27 r16-changed + 18 staging-rule + 4 fold_stream
+    # + 1 restaged = 50.
     # Composition: (a) every query whose execution path changed since
     # r16 (results bit-identical by construction and local mirrors,
     # but the external checker should re-prove them): the quality-audit
@@ -103,9 +104,11 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     # partsupp, IVF centroids, schema-merge batches) or whose staged
     # artifact gained an input stamp or a new guard in staging.stage
     # (media files, the Q15 revenue view, DPP fact, z-order and indexed
-    # layouts); (c) 5 older names whose staging moved onto
-    # staging.stage. They replace the oldest already-proven names (the
-    # r5 cohort and r6 re-bank).
+    # layouts); (c) the 4 queries whose foreachBatch loop became
+    # streaming.jobs.fold_stream (no empty-batch skip, typed initial
+    # state); (d) 1 older name whose staging moved onto staging.stage.
+    # They replace the oldest already-proven names (the r5 cohort and
+    # r6 re-bank).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
@@ -161,12 +164,13 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_join_dpp",
     "q_scan_zorder",
     "q_scan_indexed",
+    # foreachBatch loop replaced by fold_stream
+    "q_stream_merge",
+    "q_stream_cdc_apply",
+    "q_stream_ingest_dedup",
+    "q_stream_mv_refresh",
     # restaged through staging.stage — kept from the oldest cohorts
     "q_mv_rollup_answer",
-    "q_domain_fhir_bundle",
-    "q_sink_backfill",
-    "q_audit_file_layout",
-    "q_source_textlines",
 )
 
 # The external checker verifies exactly the first 50 load_all() entries;

@@ -13,6 +13,10 @@ own DuckDB comparison).
 At scale the same code points at a Kafka/file-drop source with a real
 watermark bounding state; nothing else changes — that is the point of the
 Structured Streaming API.
+
+Every stream in the package starts here, through ``run_to_memory`` (a
+memory sink) or ``fold_stream`` (a ``foreachBatch`` left fold); both
+drain through ``_drain``, the package's only ``start()``.
 """
 
 from __future__ import annotations
@@ -20,10 +24,13 @@ from __future__ import annotations
 import shutil
 import tempfile
 import threading
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..io import load
 from ..materialize import share, snapshot
@@ -115,31 +122,58 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _START_LOCK = threading.Lock()
 
 
+def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
+    """Run one stream to completion with availableNow. This is the only
+    ``start()`` in the package.
+
+    Each run gets a fresh checkpoint directory, removed when the run
+    ends, so no query resumes another's offsets and nothing is left on
+    disk. A query captures the session conf when ``start()`` builds it,
+    so ``overrides`` hold only around ``start()``, under one lock: no
+    other query in the session sees them."""
+    spark = writer._spark
+    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
+    try:
+        writer = (writer.trigger(availableNow=True)
+                  .option("checkpointLocation", ckpt))
+        with _START_LOCK:
+            old = {k: spark.conf.get(k, None) for k in overrides}
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            try:
+                q = writer.start()
+            finally:
+                for k, v in old.items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(stream_df: DataFrame, name: str,
                   output_mode: str = "complete",
                   final_no_data_batch: bool = True,
                   state_partitions: int | None = None) -> DataFrame:
-    """Execute a streaming DataFrame with availableNow into a memory sink
-    and return the materialized result (T1 sink side, batch-verifiable).
+    """Drain a streaming DataFrame into a memory sink and return its rows
+    (T1 sink side, batch-verifiable).
 
-    ``final_no_data_batch=False`` (r16, VERDICT r15 item 4 — streaming
-    fixed cost): watermarked stateful queries run one TRAILING ZERO-ROW
-    micro-batch after the backlog drains, purely to advance the
-    watermark — measured 0.4–0.7 s of state-store open/commit and plan
-    work per query at sf0.1 (addBatch=401–675 ms for 0 input rows).
-    For a COMPLETE-mode sink that batch cannot change the table: the
-    last data batch already re-emitted the full aggregate state, no new
-    input exists, and complete mode never gates emission on the
-    watermark (eviction only bounds state size). Callers whose sink
-    content is provably watermark-independent pass False and skip it
-    (``noDataMicroBatches`` off). Measured: q_stream_hourly_distinct
-    1.67 → 1.00 s warm min, rows identical; chop-invariance replay
-    tests prove multi-batch equality. ``state_partitions`` sizes the
-    state stores (see STREAM_STATE_PARTITIONS).
+    ``final_no_data_batch=False`` skips the trailing zero-row micro-batch
+    that watermarked stateful queries run after the backlog drains, only
+    to advance the watermark (``noDataMicroBatches`` off). Pass it only
+    when the sink content cannot depend on that batch: a complete-mode
+    sink already holds the full aggregate after the last data batch, and
+    an inner join emits nothing at eviction. Measured at sf0.1:
+    q_stream_hourly_distinct 1.67 → 1.00 s warm min, rows identical.
+    ``state_partitions`` sizes the state stores (see
+    STREAM_STATE_PARTITIONS). Both hold only for this query's start.
 
-    A query captures the session conf when ``start()`` builds it, so
-    both overrides hold only around ``start()``, under one lock: no
-    other query in the session sees them.
+    The sink is named ``<name>_<uuid>`` and its temp view is dropped as
+    soon as it is read: the returned DataFrame keeps the sink's rows,
+    the session keeps no name, a user's view called ``name`` is never
+    replaced, and the same query can run on two threads at once.
     """
     spark = stream_df.sparkSession
     overrides = {}
@@ -147,24 +181,35 @@ def run_to_memory(stream_df: DataFrame, name: str,
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if state_partitions is not None:
         overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
-    writer = (stream_df.writeStream.format("memory")
-              .queryName(name)
-              .outputMode(output_mode)
-              .trigger(availableNow=True))
-    with _START_LOCK:
-        old = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
-            q = writer.start()
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-    q.awaitTermination()
-    return spark.table(name)
+    view = f"{name}_{uuid.uuid4().hex}"
+    try:
+        _drain(stream_df.writeStream.format("memory").queryName(view)
+               .outputMode(output_mode), overrides)
+        return spark.table(view)
+    finally:
+        spark.catalog.dropTempView(view)
+
+
+def fold_stream(stream_df: DataFrame, init: DataFrame,
+                fold: Callable[[DataFrame, DataFrame], DataFrame]
+                ) -> DataFrame:
+    """Drain a stream through ``foreachBatch`` as a left fold and return
+    the final state: ``state = snapshot(init)``, then
+    ``state = snapshot(fold(state, batch))`` per micro-batch.
+
+    ``snapshot`` materializes each state before its micro-batch's
+    DataFrame is gone, and keeps the state's lineage one batch deep
+    instead of replaying every batch since the stream started. Every
+    fold here is the identity on an empty batch, so empty batches are
+    folded like any other."""
+    state = snapshot(init)
+
+    def step(batch: DataFrame, _batch_id: int) -> None:
+        nonlocal state
+        state = snapshot(fold(state, batch))
+
+    _drain(stream_df.writeStream.foreachBatch(step), {})
+    return state
 
 
 @query(
@@ -428,57 +473,38 @@ def merge_batch_into_state(prev: DataFrame, bdf: DataFrame,
 def streaming_merge(base: DataFrame, change_stream: DataFrame,
                     keys: list[str], order_col: str,
                     tiebreak: str) -> DataFrame:
-    """Apply a change STREAM onto a base snapshot with MERGE semantics:
-    every micro-batch is deduped to latest-per-key and folded into the
-    running state via ``merge_batch_into_state``; ``src`` records the
-    provenance of each key's CURRENT value ('base' = untouched,
-    'insert'/'update' = written by some batch).
+    """Apply a change STREAM onto a base snapshot with MERGE semantics
+    and return the merged relation (keys + value columns + ``src``).
 
-    This is the foreachBatch upsert-sink pattern — what Structured
-    Streaming pairs with Delta/Iceberg ``MERGE INTO`` at warehouse
-    scale; here the target is an in-session relation,
-    ``snapshot``-materialized per batch so state lineage stays
-    one-batch deep instead of replaying every batch since stream start
-    (same discipline as the connected-components loop). State size is
-    one row per live key plus one ``order_col`` watermark column,
-    independent of stream history length.
+    ``fold_stream`` starts from the base (``src = 'base'``) and folds
+    each micro-batch in with ``merge_batch_into_state``: the batch is
+    deduped to latest-per-key, and a change row replaces a key's value
+    if the base wrote it or if the change is event-time greater than the
+    change that last wrote it. ``src`` records the provenance of each
+    key's current value: 'base' = untouched, 'insert' = a key the base
+    did not hold (it stays 'insert' across later updates), 'update' =
+    a base key some change overwrote. The state is one row per live key
+    plus the ``order_col`` of its last writer (``_ord``, dropped on
+    return), whatever the stream's length.
 
-    Cross-batch convergence: the state carries the (order_col, tiebreak)
-    of the change that last wrote each key, and a later batch's row wins
-    only if it is event-time GREATER — so the final values equal
-    latest-per-key over ALL changes no matter how the stream is chopped
-    into micro-batches (out-of-order batches included), not just when
-    batch boundaries respect event-time order. Base-written values lose
-    to any change (MERGE change-side precedence), and ``src`` records
-    whether the key existed in the base snapshot ('insert' keys stay
-    'insert' across later updates), both matching the one-shot MERGE.
+    Because a later batch wins only when it is event-time greater, the
+    result equals latest-per-key over ALL changes however the stream is
+    chopped into micro-batches, out-of-order batches included, and
+    equals the one-shot batch MERGE. This is the foreachBatch upsert
+    sink that Structured Streaming pairs with ``MERGE INTO`` at
+    warehouse scale; here the target is an in-session relation.
     """
     value_cols = [c for c in base.columns if c not in keys]
     if tiebreak not in value_cols:
         raise ValueError("tiebreak column must be carried in base")
     ord_type = change_stream.schema[order_col].dataType
-    state = {"df": snapshot(
-        base.withColumn("src", F.lit("base"))
-        .withColumn("_ord", F.lit(None).cast(ord_type)))}
-
-    def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
-        if not bdf.head(1):
-            return
-        state["df"] = snapshot(merge_batch_into_state(
-            state["df"], bdf, keys, order_col, tiebreak, value_cols))
-
-    ckpt = tempfile.mkdtemp(prefix="merge_ckpt_")
-    try:
-        q = (
-            change_stream.writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return state["df"].drop("_ord")
+    init = (base.withColumn("src", F.lit("base"))
+            .withColumn("_ord", F.lit(None).cast(ord_type)))
+    merged = fold_stream(
+        change_stream, init,
+        lambda state, batch: merge_batch_into_state(
+            state, batch, keys, order_col, tiebreak, value_cols))
+    return merged.drop("_ord")
 
 
 @query(
@@ -804,40 +830,12 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join); ``snapshot`` keeps state lineage one batch deep. At
     warehouse scale this state IS the dedup index, persisted as a table
     and merged with `MERGE INTO`."""
-    state = {"df": None}
-
-    def apply_batch(bdf: DataFrame, _batch_id: int) -> None:
-        if not bdf.head(1):
-            return
-        if state["df"] is None:
-            empty = bdf.sparkSession.createDataFrame(
-                [],
-                "dig string, source string, n_docs bigint, "
-                "mindoc struct<doc_id: bigint, n_chars: bigint>")
-            state["df"] = empty
-        state["df"] = snapshot(fold_digest_state(state["df"], bdf))
-
-    ckpt = tempfile.mkdtemp(prefix="ingest_dedup_ckpt_")
-    try:
-        q = (
-            read_documents_stream(spark, sf_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    if state["df"] is None:
-        # Zero batches arrived (empty source): the converged state is
-        # the typed empty relation, and the report must still produce
-        # its (empty) schema rather than crash the pipeline run.
-        state["df"] = spark.createDataFrame(
-            [],
-            "dig string, source string, n_docs bigint, "
+    empty = spark.createDataFrame(
+        [], "dig string, source string, n_docs bigint, "
             "mindoc struct<doc_id: bigint, n_chars: bigint>")
-    return ingest_dedup_report(state["df"])
+    state = fold_stream(read_documents_stream(spark, sf_dir), empty,
+                        fold_digest_state)
+    return ingest_dedup_report(state)
 
 
 @query(
@@ -989,28 +987,19 @@ def q_stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_events_stream(spark, sf_dir).select(
         F.date_trunc("day", "ts").alias("day"), "event_type", "value")
-    spark_ref = spark
-    state = {"df": spark_ref.createDataFrame(
+    empty = spark.createDataFrame(
         [], "day timestamp, event_type string, n_events bigint, "
-            "sum_value_dec decimal(28,6)")}
+            "sum_value_dec decimal(28,6)")
 
-    def fold(bdf: DataFrame, _batch_id: int) -> None:
-        batch_states = bdf.groupBy("day", "event_type").agg(
+    def fold(state: DataFrame, batch: DataFrame) -> DataFrame:
+        batch_states = batch.groupBy("day", "event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_events"),
             F.sum(qd("value")).cast("decimal(28,6)")
             .alias("sum_value_dec"))
-        state["df"] = snapshot(mv_fold(state["df"], batch_states))
+        return mv_fold(state, batch_states)
 
-    ckpt = tempfile.mkdtemp(prefix="mvrefresh_ckpt_")
-    try:
-        q = (ev.writeStream.foreachBatch(fold)
-             .trigger(availableNow=True)
-             .option("checkpointLocation", ckpt)
-             .start())
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return state["df"].select(
+    mv = fold_stream(ev, empty, fold)
+    return mv.select(
         "day", "event_type",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.col("sum_value_dec").cast("double").alias("sum_value"))

@@ -81,110 +81,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         running_user_stats(ev), "stream_stateful", output_mode="update")
 
 
-# ---- transformWithState (Spark 4 successor API) --------------------------
-
-TWS_STATE_SCHEMA = "count LONG, min_value DOUBLE, max_value DOUBLE"
-TWS_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-    T.StructField("min_value", T.DoubleType()),
-    T.StructField("max_value", T.DoubleType()),
-])
-
-
-def _tws_processor():
-    """Built lazily: importing the StatefulProcessor base is cheap, but
-    keeping the class local avoids import-order surprises on sessions
-    that never stream."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        """Per-key running (count, min, max) — the same state machine as
-        ``running_user_stats`` on the NEW API: named typed state slots
-        (``getValueState``) instead of one opaque tuple, explicit
-        lifecycle (init/close), per-key timers available for TTL. All
-        three accumulators are order-insensitive, so the final state is
-        batch-equivalent regardless of row order within a micro-batch."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", TWS_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            count, mn, mx = (self._state.get() if self._state.exists()
-                             else (0, float("inf"), float("-inf")))
-            for pdf in rows:
-                if len(pdf):
-                    count += len(pdf)
-                    mn = min(mn, float(pdf["value"].min()))
-                    mx = max(mx, float(pdf["value"].max()))
-            self._state.update((count, mn, mx))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [count],
-                 "min_value": [mn], "max_value": [mx]})
-
-        def close(self) -> None:
-            pass
-
-    return RunningStats()
-
-
-def running_user_stats_tws(events_stream: DataFrame) -> DataFrame:
-    """T6 on ``transformWithStateInPandas`` — Spark 4's arbitrary-state
-    operator (the ``applyInPandasWithState`` successor): typed named
-    state, timers, and initial-state support. State lives in the
-    key-partitioned state store exactly as before; the API is the part
-    that changed."""
-    return (
-        events_stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_tws_processor(),
-            outputStructType=TWS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
-def tws_available() -> bool:
-    """ENV CAP: transformWithState's Python driver worker speaks a
-    protobuf protocol to the JVM state server, so it hard-requires the
-    ``protobuf`` package — absent from this container and not
-    installable here (verified: the worker crashes in
-    StateMessage_pb2 with ``ImportError: google.protobuf``). The
-    implementation above is complete and correct against the public
-    API; it is NOT registered as a driver query because it cannot
-    execute in this environment. tests/test_streaming_state.py carries
-    a skip-gated batch-equivalence test that proves it wherever
-    protobuf exists — the same honest-stub posture as
-    llm/multimodal.py's codec boundary."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-def run_tws_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_stream_tws-shaped runner (batch-equivalence oracle: per-user
-    COUNT/MIN/MAX over events), callable wherever ``tws_available()``.
-
-    transformWithState also requires the RocksDB state store (the
-    HDFS-backed default lacks the multi-column-family layout its named
-    state slots map onto); other streaming queries are indifferent to
-    the provider."""
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider")
-    ev = read_events_stream(spark, sf_dir)
-    return run_to_memory(
-        running_user_stats_tws(ev), "stream_tws", output_mode="update")
-
-
 # ---- Streaming multi-touch attribution (T6 × W16) ------------------------
 
 ATTR_LOOKBACK_US = 7 * 24 * 3600 * 1_000_000  # 7 days in epoch micros

@@ -10,6 +10,9 @@
   turns Arrow values into Python objects; every Arrow kernel gates its
   input with ``kernels.dense_width`` or ``kernels.collect_dense`` and
   decodes it with ``kernels.dense_rows``.
+- ``streaming/jobs.py`` alone starts, checkpoints and awaits a stream;
+  every other module drains one through ``run_to_memory`` or
+  ``fold_stream``.
 """
 
 from __future__ import annotations
@@ -27,6 +30,9 @@ OWNED = [
     ("staging.py", re.compile(
         r"begin_staging\(|mark_staged\(|staging_ok\(|[\"']\.staging\b")),
     ("kernels.py", re.compile(r"toArrow\(|\.to_pylist\(")),
+    ("streaming/jobs.py", re.compile(
+        r"\.start\(|awaitTermination\(|foreachBatch\(|checkpointLocation"
+        r"|mkdtemp\(")),
 ]
 
 

@@ -1,51 +1,11 @@
-"""Streaming parquet sink: batch equivalence + exactly-once restart.
+"""Exactly-once restart of a checkpointed file-source stream.
 
-The checkpoint must make re-running a drained stream a no-op (no
-duplicate files/rows) — that property is what lets a 100 TB streaming
-stage crash and resume without corrupting the warehouse.
+The checkpoint must make a restarted stream process only the files that
+arrived while it was down — that property is what lets a 100 TB
+streaming stage crash and resume without reprocessing history.
 """
 
 from __future__ import annotations
-
-import shutil
-import tempfile
-
-from pyspark.sql import functions as F
-
-from sigma_rx7_spark.streaming.jobs import read_events_stream
-from sigma_rx7_spark.streaming.sinks import stream_to_parquet
-
-
-def test_stream_to_parquet_equals_batch_and_restart_is_noop(spark, sf_dir):
-    tmp = tempfile.mkdtemp(prefix="sink_", dir="/root/repo/.staging")
-    out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
-    try:
-        def enriched():
-            return (
-                read_events_stream(spark, sf_dir)
-                .where(F.col("event_type") == "click")
-                .select("event_id", "user_id", "value", "event_type")
-            )
-
-        stream_to_parquet(enriched(), out, ckpt,
-                          partition_by=("event_type",))
-        first = spark.read.parquet(out)
-        n_first = first.count()
-
-        batch = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
-            .where(F.col("event_type") == "click")
-        )
-        assert n_first == batch.count()
-        assert (sorted(r["event_id"] for r in first.select("event_id").collect())
-                == sorted(r["event_id"] for r in batch.select("event_id").collect()))
-
-        # Restart on the same checkpoint: nothing pending => no new rows.
-        stream_to_parquet(enriched(), out, ckpt,
-                          partition_by=("event_type",))
-        assert spark.read.parquet(out).count() == n_first
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def test_checkpoint_restart_processes_only_new_files(spark, sf_dir, tmp_path):

@@ -115,32 +115,6 @@ def test_stream_stream_join_state_plateaus(spark, sf_dir):
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-import pytest  # noqa: E402
-
-
-@pytest.mark.skipif(
-    not __import__("sigma_rx7_spark.streaming.stateful",
-                   fromlist=["tws_available"]).tws_available(),
-    reason="transformWithState needs protobuf (absent from this "
-           "container — documented env cap in stateful.tws_available)")
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    # Spark 4 transformWithStateInPandas: final per-user state after the
-    # availableNow run must equal the batch COUNT/MIN/MAX aggregate.
-    from pyspark.sql import functions as F
-
-    from sigma_rx7_spark.io import load
-    from sigma_rx7_spark.streaming.stateful import run_tws_stats
-
-    got = {r["user_id"]: (r["n_events"], r["min_value"], r["max_value"])
-           for r in run_tws_stats(spark, sf_dir).collect()}
-    want = {r["user_id"]: (r["n"], r["mn"], r["mx"])
-            for r in load(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.min("value").alias("mn"),
-                 F.max("value").alias("mx")).collect()}
-    assert got == want
-
-
 def test_watermark_drops_late_rows_across_batches(spark, tmp_path):
     """T2's contract observed directly: a row arriving BELOW the
     watermark established by an earlier batch is dropped from the
