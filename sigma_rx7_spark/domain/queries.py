@@ -342,12 +342,11 @@ def q_domain_hl7_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-message RXE ordering (rxe_idx mirrors a per-patient
     ROW_NUMBER over med_id)."""
     tables = stage_domain_tables(spark)
-    hl7.build_messages(tables["meds"]).createOrReplaceTempView("_hl7_msgs")
     spark.udtf.register("hl7_meds", hl7.hl7_meds_udtf())
     return spark.sql("""
         SELECT m.patient_id, m.rxe_idx, m.med_id, m.rxcui, m.drug_name
-        FROM _hl7_msgs msg, LATERAL hl7_meds(msg.message) m
-    """)
+        FROM {msgs} msg, LATERAL hl7_meds(msg.message) m
+    """, msgs=hl7.build_messages(tables["meds"]))
 
 
 _ALLERGY_ORACLE = f"""

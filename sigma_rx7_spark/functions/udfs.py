@@ -165,17 +165,16 @@ def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     slow path produces identical results (empty docs yield no rows in
     both engines)."""
     spark.udtf.register("sentence_split", sentence_split_udtf())
-    d = load(spark, sf_dir, "documents")
-    d.select("doc_id", "text").createOrReplaceTempView("_udtf_docs")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     return spark.sql("""
         SELECT s.doc_id,
                count(*) AS n_sentences,
                max(s.n_tokens) AS max_sentence_tokens,
                sum(s.n_tokens) AS total_tokens
-        FROM _udtf_docs d,
+        FROM {docs} d,
              LATERAL sentence_split(d.doc_id, d.text) s
         GROUP BY s.doc_id
-    """)
+    """, docs=docs)
 
 
 @query(
@@ -205,16 +204,15 @@ def q_udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression were written inline — zero serialization wall, proven by
     the oracle matching the inlined arithmetic bit-for-bit (score
     decimal-quantized before the sum, compat hazard 2)."""
-    from ..io import register_views
+    from .. import io
 
-    register_views(spark, sf_dir)
     spark.sql("""
         CREATE OR REPLACE TEMPORARY FUNCTION denial_risk(
             price DOUBLE, tier INT) RETURNS DOUBLE
         RETURN 1.0 / (1.0 + exp(-(-2.0 + 0.01 * (price / 1000.0)
                                   + 0.4 * tier)))
     """)
-    return spark.sql("""
+    return io.sql(spark, sf_dir, """
         SELECT
           o_orderpriority,
           COUNT(*) AS n_orders,
@@ -291,31 +289,18 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery form (which is how a Spark-first rewrite would phrase
     it); the scripting value is that multi-statement control flow
     (DECLARE/SET/IF/WHILE) now parses and plans natively instead of
-    being orchestrated from Python. The conf flips parsing on; plans
-    are ordinary Catalyst plans."""
-    from ..io import load as _load
-
-    _load(spark, sf_dir, "events").createOrReplaceTempView("_script_ev")
-    # Scope the scripting conf to this call (shared session: leaking it
-    # would change parsing for every later query — same conf-scoping
-    # discipline as stage_backfill). BEGIN…END executes eagerly inside
-    # spark.sql(), so restoring in finally is safe.
-    prior = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql("""
-        BEGIN
-          DECLARE avg_n DOUBLE DEFAULT 0.0;
-          SET avg_n = (SELECT AVG(n) FROM (
-            SELECT COUNT(*) AS n FROM _script_ev GROUP BY event_type));
-          SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
-          FROM _script_ev
-          GROUP BY event_type
-          HAVING COUNT(*) > avg_n;
-        END
-        """)
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prior)
+    being orchestrated from Python. Scripting parses by default on
+    Spark 4.1, so no session conf is touched; the events relation is
+    bound as a ``spark.sql`` DataFrame argument, not a session view.
+    Plans are ordinary Catalyst plans."""
+    return spark.sql("""
+    BEGIN
+      DECLARE avg_n DOUBLE DEFAULT 0.0;
+      SET avg_n = (SELECT AVG(n) FROM (
+        SELECT COUNT(*) AS n FROM {ev} GROUP BY event_type));
+      SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
+      FROM {ev}
+      GROUP BY event_type
+      HAVING COUNT(*) > avg_n;
+    END
+    """, ev=load(spark, sf_dir, "events"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -164,25 +165,24 @@ def _table_fingerprint(sf_dir: str, name: str) -> tuple:
     return tuple(fps)
 
 
-# Per-session memo of loaded table DataFrames (and the view-registration
-# stamp), keyed by (sf_dir, table) with the file fingerprint as guard.
-# A DataFrame is an immutable LOGICAL PLAN — reusing the object never
-# caches data or results; it only skips the spark.read.parquet footer
-# probe and schema branch that every construction repaid through py4j
-# (optimization guide §4: the Python boundary includes plan-building
-# round trips; measured r15 the re-probe cost 0.2-0.7 s of pure query
-# CONSTRUCTION on register_views-based queries). Single-session memo:
-# a different session object resets it (stopped sessions hold invalid
-# plans); a changed fingerprint (tests regenerating fixtures in place)
-# rebuilds the entry.
-_LOAD_MEMO: dict = {"spark": None, "dfs": {}, "views": None}
+# Per-session memo of loaded table DataFrames, keyed by (sf_dir, table)
+# with the file fingerprint as guard. A DataFrame is an immutable
+# LOGICAL PLAN — reusing the object never caches data or results; it
+# only skips the spark.read.parquet footer probe and schema branch that
+# every construction repaid through py4j (optimization guide §4: the
+# Python boundary includes plan-building round trips; measured r15 the
+# re-probe cost 0.2-0.7 s of pure query CONSTRUCTION on SQL-text
+# queries). It names nothing in the session: ``sql`` binds these
+# DataFrames per call. Single-session memo: a different session object
+# resets it (stopped sessions hold invalid plans); a changed
+# fingerprint (tests regenerating fixtures in place) rebuilds the entry.
+_LOAD_MEMO: dict = {"spark": None, "dfs": {}}
 
 
 def _session_memo(spark: SparkSession) -> dict:
     if _LOAD_MEMO["spark"] is not spark:
         _LOAD_MEMO["spark"] = spark
         _LOAD_MEMO["dfs"] = {}
-        _LOAD_MEMO["views"] = None
     return _LOAD_MEMO
 
 
@@ -302,23 +302,45 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every harness table as a temp view for spark.sql use.
+def sub_outside_literals(pattern: str, repl, sql: str) -> str:
+    """re.sub that never rewrites inside single-quoted SQL literals
+    (ADVICE r13: a bare re.sub over the whole text would also rewrite
+    a table token inside a predicate literal like p_name LIKE '%part%',
+    silently corrupting BOTH engine texts). Splitting on the literal
+    grammar ('' is the escaped quote) keeps literals at odd indexes;
+    substitution touches only the code segments between them."""
+    parts = re.split(r"('(?:[^']|'')*')", sql)
+    return "".join(p if i % 2 else re.sub(pattern, repl, p)
+                   for i, p in enumerate(parts))
 
-    Memoized per (session, sf_dir, file fingerprints): the view names
-    are owned by this function alone (TPC-H and scratch views use
-    sf-keyed / underscore-prefixed names), so re-registering the same
-    DataFrames was 10 pure-overhead catalog round trips per query
-    construction. A different sf_dir, a regenerated fixture, or a new
-    session re-registers."""
-    memo = _session_memo(spark)
-    stamp = (sf_dir.rstrip("/"),
-             tuple(_table_fingerprint(sf_dir, t) for t in TABLES))
-    if memo["views"] == stamp:
-        return
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    memo["views"] = stamp
+
+def sql(spark: SparkSession, sf_dir: str, text: str,
+        **frames: DataFrame) -> DataFrame:
+    """THE SQL binding rule for a text shared with the DuckDB oracle:
+    run ``text`` verbatim with every bare table token bound to a
+    DataFrame, never to a session catalog name.
+
+    Outside single-quoted literals, each token naming a harness table
+    (``TABLES``) or a key of ``frames`` becomes a ``{token}``
+    placeholder (every other ``{``/``}`` is escaped first); a ``frames``
+    key binds the DataFrame passed, a harness token binds
+    ``load(spark, sf_dir, token)``. ``spark.sql`` registers each bound
+    DataFrame under a fresh ``_pyspark_<uuid>`` view, analyzes the
+    text and drops the views before it returns, so a query leaves the
+    session's views as it found them, a user's view named ``orders``
+    is never read, and two sfs on two threads never share a name."""
+    bound: dict[str, DataFrame] = {}
+
+    def bind(m: re.Match) -> str:
+        t = m.group(0)
+        if t not in bound:
+            bound[t] = frames[t] if t in frames else load(spark, sf_dir, t)
+        return "{" + t + "}"
+
+    out = sub_outside_literals(
+        rf"\b(?:{'|'.join({*TABLES, *frames})})\b", bind,
+        text.replace("{", "{{").replace("}", "}}"))
+    return spark.sql(out, **bound) if bound else spark.sql(text)
 
 
 def _staging_fingerprint(path: str) -> tuple:

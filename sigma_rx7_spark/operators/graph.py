@@ -391,10 +391,9 @@ def q_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     work — with the hop cap it is Σ degᵏ, k ≤ {REACH_MAX_HOPS}; an
     uncapped walk on a cyclic graph would not terminate, which the
     WHERE guard makes structurally impossible."""
-    from ..io import register_views
+    from .. import io
 
-    register_views(spark, sf_dir)
-    return spark.sql(_REACH_SQL)
+    return io.sql(spark, sf_dir, _REACH_SQL)
 
 
 # ---- Weighted shortest path (bounded Bellman-Ford walk) ------------------
@@ -452,10 +451,9 @@ def q_graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same structural termination guarantee as q_graph_reachability.
     Unbounded SSSP = this plan inside the CC-style driver loop with a
     convergence probe; the bounded form is the oracle-checkable core."""
-    from ..io import register_views
+    from .. import io
 
-    register_views(spark, sf_dir)
-    return spark.sql(_SSSP_SQL)
+    return io.sql(spark, sf_dir, _SSSP_SQL)
 
 
 @query(

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..io import register_views
+from .. import io
 from ..registry import query
 
 # Exact-decimal average (compat.py convention): both engines sum
@@ -53,8 +53,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's cost rules, README.md:8-9). Catalyst decorrelates this to
     aggregate-per-brand + join — one scan of part per side, no per-row
     subquery execution."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCALAR_SQL)
+    return io.sql(spark, sf_dir, _SCALAR_SQL)
 
 
 @query("q_subquery_exists", oracle=_EXISTS_SQL, tags=("SQ", "subquery"))
@@ -62,8 +61,7 @@ def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS: customers holding at least one large urgent
     order (the "patients with ≥1 recommendation" existence check,
     README.md:69-70, in SQL form). Plans as a left-semi join."""
-    register_views(spark, sf_dir)
-    return spark.sql(_EXISTS_SQL)
+    return io.sql(spark, sf_dir, _EXISTS_SQL)
 
 
 _GROUPING_SETS_SQL = """
@@ -88,8 +86,7 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE pass via the Expand operator — rollup's general form; the
     reference's dashboard summary family, README.md:11). GROUPING()
     flags disambiguate real NULL group keys from subtotal rows."""
-    register_views(spark, sf_dir)
-    return spark.sql(_GROUPING_SETS_SQL)
+    return io.sql(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 # ONE SQL text on both engines (the q_graph_reachability discipline):
@@ -123,5 +120,4 @@ def q_join_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the selected rowset engine-exact. Customers with no orders
     disappear (LATERAL is a cross-apply inner join), matching both
     engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+    return io.sql(spark, sf_dir, _LATERAL_SQL)

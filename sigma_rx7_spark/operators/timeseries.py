@@ -245,13 +245,12 @@ def q_rollup_timegrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coarse grains come along nearly free, which is exactly why
     warehouse rollups are built this way (then persisted incrementally
     per arriving partition)."""
-    ev = load(spark, sf_dir, "events")
-    ev.select(
+    src = load(spark, sf_dir, "events").select(
         F.date_trunc("minute", "ts").alias("m"),
         F.date_trunc("hour", "ts").alias("h"),
         F.date_trunc("day", "ts").alias("d"),
         "value",
-    ).createOrReplaceTempView("_rollup_src")
+    )
     return spark.sql("""
         SELECT
           CASE WHEN grouping(m) = 0 THEN 'minute'
@@ -260,9 +259,9 @@ def q_rollup_timegrain(spark: SparkSession, sf_dir: str) -> DataFrame:
           coalesce(m, h, d) AS bucket_ts,
           count(*) AS n_events,
           CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS sum_value
-        FROM _rollup_src
+        FROM {src}
         GROUP BY GROUPING SETS ((m), (h), (d))
-    """)
+    """, src=src)
 
 
 @query(

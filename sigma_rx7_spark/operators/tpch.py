@@ -6,14 +6,15 @@ Catalyst's join reordering / CBO on the canonical multi-join shapes
 (Q2/Q5/Q8/Q9/Q21) far harder than any hand-shaped join in this repo.
 
 ONE SQL TEXT PER QUERY runs on BOTH engines (the q_graph_reachability
-one-SQL-text contract): the engine substitutes sf-keyed temp-view names
-for the bare table tokens and hands the text to ``spark.sql`` (fully
-declarative — Catalyst owns join order, build sides, and DPP); the
-oracle is the *identical* text on DuckDB's pre-registered views. Engine
-and gate can therefore never drift in query semantics — only in engine
-arithmetic, which the texts neutralize with the repo's standing
-discipline (every SUM/AVG of doubles goes through DECIMAL(20,6); every
-division is quantized to 6 dp; every LIMIT sits under a total order).
+one-SQL-text contract): ``io.sql`` binds each bare table token to a
+DataFrame argument of ``spark.sql`` (no session view is created or left
+behind) and Catalyst plans the text verbatim (fully declarative — it
+owns join order, build sides, and DPP); the oracle is the *identical*
+text on DuckDB's pre-registered views. Engine and gate can therefore
+never drift in query semantics — only in engine arithmetic, which the
+texts neutralize with the repo's standing discipline (every SUM/AVG of
+doubles goes through DECIMAL(20,6); every division is quantized to
+6 dp; every LIMIT sits under a total order).
 
 Schema adaptation (the harness ships a TPC-H *subset* schema): columns
 the generator omits (l_commitdate/l_receiptdate/l_shipmode,
@@ -36,9 +37,9 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load
+from .. import io, staging
+from ..io import load, load_parallel
 from ..registry import query
-from .. import staging
 
 
 def _build_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,50 +76,23 @@ def _stage_partsupp(spark: SparkSession, sf_dir: str) -> str:
                          inputs=("part", "supplier"))
 
 
-_TPCH_TABLES = ("partsupp", "lineitem", "orders", "customer",
-                "supplier", "part", "nation", "region")
-
-
-def _sub_outside_literals(pattern: str, repl: str, sql: str) -> str:
-    """re.sub that never rewrites inside single-quoted SQL literals
-    (ADVICE r13: a bare re.sub over the whole text would also rewrite
-    a table token inside a future predicate literal like
-    p_name LIKE '%part%', silently corrupting BOTH engine texts).
-    Splitting on the literal grammar ('' is the escaped quote) keeps
-    literals at odd indexes; substitution touches only the code
-    segments between them."""
-    parts = re.split(r"('(?:[^']|'')*')", sql)
-    return "".join(p if i % 2 else re.sub(pattern, repl, p)
-                   for i, p in enumerate(parts))
-
-
 def _run(spark: SparkSession, sf_dir: str, sql: str,
          repair: tuple[str, ...] = ()) -> DataFrame:
-    """Execute a canonical TPC-H text: bind each referenced table token
-    to an sf-keyed temp view (no cross-sf clobbering — resolution
-    happens eagerly at spark.sql time) and let Catalyst plan the text
-    verbatim. Tables named in ``repair`` bind through
-    io.load_parallel (input-parallelism repair — guide §2.5; no-op at
-    scale) — opt-in per query because the repair shuffle only wins
-    where the scan stage fuses heavy compute (Q1's nine decimal
-    partial aggregates; a join input would just gain an exchange).
-    The SQL text — and therefore the DuckDB oracle — is unchanged."""
-    from ..io import load_parallel
-
-    key = staging.sf_key(sf_dir)
-    out = sql
-    for t in _TPCH_TABLES:
-        if re.search(rf"\b{t}\b", out):
-            view = f"tpch_{t}_{key}"
-            if t == "partsupp":
-                df = spark.read.parquet(_stage_partsupp(spark, sf_dir))
-            elif t in repair:
-                df = load_parallel(spark, sf_dir, t)
-            else:
-                df = load(spark, sf_dir, t)
-            df.createOrReplaceTempView(view)
-            out = _sub_outside_literals(rf"\b{t}\b", view, out)
-    return spark.sql(out)
+    """Execute a canonical TPC-H text through ``io.sql``: Catalyst plans
+    the text verbatim with each table token bound to a DataFrame (no
+    session view, so no cross-sf or cross-thread clobbering). A text
+    that reads ``partsupp`` binds the staged parquet. Tables named in
+    ``repair`` bind through io.load_parallel (input-parallelism
+    repair — guide §2.5; no-op at scale) — opt-in per query because the
+    repair shuffle only wins where the scan stage fuses heavy compute
+    (Q1's nine decimal partial aggregates; a join input would just gain
+    an exchange). The SQL text — and therefore the DuckDB oracle — is
+    unchanged."""
+    frames = {t: load_parallel(spark, sf_dir, t) for t in repair}
+    if re.search(r"\bpartsupp\b", sql):
+        frames["partsupp"] = spark.read.parquet(
+            _stage_partsupp(spark, sf_dir))
+    return io.sql(spark, sf_dir, sql, **frames)
 
 
 def _ps_oracle(sql: str):
@@ -128,7 +102,7 @@ def _ps_oracle(sql: str):
     def ora(sf_dir: str) -> str:
         rel = (f"read_parquet('{staging.path('tpch_partsupp', sf_dir)}"
                "/*.parquet')")
-        return _sub_outside_literals(r"\bpartsupp\b", rel, sql)
+        return io.sub_outside_literals(r"\bpartsupp\b", rel, sql)
     return ora
 
 

@@ -90,37 +90,46 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 27 r16-changed + 18 staging-rule + 4 fold_stream
-    # + 1 restaged = 50.
-    # Composition: (a) every query whose execution path changed since
-    # r16 (results bit-identical by construction and local mirrors,
-    # but the external checker should re-prove them): the quality-audit
-    # fold, the lazy-checkpoint adoptees, the Arrow kernels (now on
-    # kernels.py) and their composers, the 11 streaming queries whose
-    # no-data-batch skip now holds its conf only around start(), and
-    # the two queries whose persists became materialize.share
-    # (PageRank, the quality model); (b) the 18 queries whose oracle now
-    # reads a path computed by staging.path under a new name (TPC-H
-    # partsupp, IVF centroids, schema-merge batches) or whose staged
-    # artifact gained an input stamp or a new guard in staging.stage
-    # (media files, the Q15 revenue view, DPP fact, z-order and indexed
-    # layouts); (c) the 4 queries whose foreachBatch loop became
-    # streaming.jobs.fold_stream (no empty-batch skip, typed initial
-    # state); (d) 1 older name whose staging moved onto staging.stage.
-    # They replace the oldest already-proven names (the r5 cohort and
-    # r6 re-bank).
+    # Window: 13 SQL-binding + 14 r16-changed + 18 staging-rule
+    # + 4 fold_stream + 1 restaged = 50.
+    # Composition: (a) the 12 queries whose SQL text now binds its
+    # relations as spark.sql DataFrame arguments (io.sql or a named
+    # placeholder) instead of session temp views, or whose conf flip
+    # became a write option (q_sink_backfill), plus q_tpch_q01 for the
+    # TPC-H runner (plans unchanged); (b) queries whose execution path
+    # changed since r16 (results bit-identical by construction and
+    # local mirrors, but the external checker should re-prove them):
+    # the Arrow kernels (now on kernels.py) and their composers, 7 of
+    # the streaming queries whose no-data-batch skip now holds its conf
+    # only around start(), and the two queries whose persists became
+    # materialize.share (PageRank, the quality model); (c) the 18
+    # queries whose oracle now reads a path computed by staging.path
+    # under a new name (TPC-H partsupp, IVF centroids, schema-merge
+    # batches) or whose staged artifact gained an input stamp or a new
+    # guard in staging.stage (media files, the Q15 revenue view, DPP
+    # fact, z-order and indexed layouts); (d) the 4 queries whose
+    # foreachBatch loop became streaming.jobs.fold_stream (no
+    # empty-batch skip, typed initial state); (e) 1 older name whose
+    # staging moved onto staging.stage. They replace the oldest
+    # already-proven names (the quality-audit fold, the six
+    # lazy-checkpoint adoptees and six of the no-data-batch streams).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
-    # changed this round — quality-audit fold (one pass per fact table)
-    "q_quality_audit",
-    # changed this round — lazy-checkpoint adoptees
-    "q_agg_trimmed_mean",
-    "q_ab_kruskal",
-    "q_agg_spearman",
-    "q_text_bpe_merges",
-    "q_text_bpe_tokenize",
-    "q_pipeline_token_budget",
+    # SQL binding — relations bound as spark.sql DataFrame arguments
+    "q_subquery_scalar",
+    "q_subquery_exists",
+    "q_agg_grouping_sets",
+    "q_join_lateral_topk",
+    "q_graph_reachability",
+    "q_graph_sssp",
+    "q_udf_sql",
+    "q_rollup_timegrain",
+    "q_udtf_sentences",
+    "q_sql_scripting",
+    "q_domain_hl7_udtf",
+    "q_sink_backfill",
+    "q_tpch_q01",
     # Arrow kernels — gate and decode in kernels.py; + composers
     "q_dedup_cosine",
     "q_dedup_recall_lsh",
@@ -128,12 +137,6 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_embed_pca_power",
     "q_dedup_clusters",
     # trailing no-data micro-batch skipped; overrides scoped to start()
-    "q_stream_hourly_distinct",
-    "q_stream_hourly_distinct_approx",
-    "q_stream_hourly_counts",
-    "q_stream_sliding_counts",
-    "q_stream_ohlc",
-    "q_stream_topk",
     "q_stream_dedup_watermarked",
     "q_stream_srm",
     "q_stream_psi",

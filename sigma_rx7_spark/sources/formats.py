@@ -490,17 +490,11 @@ def stage_backfill(spark: SparkSession, sf_dir: str) -> str:
         ev = load(spark, sf_dir, "events").select("event_type", "value")
         ev.write.mode("overwrite").partitionBy("event_type") \
             .parquet(path)
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           "dynamic")
-            # the backfill: rewrite ONLY the 'click' partition
-            (ev.where(F.col("event_type") == "click")
-             .write.mode("overwrite").partitionBy("event_type")
-             .parquet(path))
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                           old)
+        # the backfill: rewrite ONLY the 'click' partition; the write
+        # option scopes dynamic overwrite to this one write
+        (ev.where(F.col("event_type") == "click")
+         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy("event_type").parquet(path))
     return staging.stage("backfill_events", sf_dir, build,
                          inputs=("events",))
 

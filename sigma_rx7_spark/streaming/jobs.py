@@ -1186,7 +1186,6 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-experiment — the whole point of an SRM check; state is bounded
     by the user universe, the same bound q_stream_dedup already
     carries."""
-    from ..registry import get as _get  # noqa: F401  (parity w/ q_ab_srm)
     ev = read_events_stream(spark, sf_dir)
     users = ev.select("user_id").dropDuplicates(["user_id"]).select(
         F.pmod(F.col("user_id"), F.lit(2)).alias("arm"))

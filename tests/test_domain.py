@@ -325,9 +325,9 @@ class TestHl7Escaping:
         msgs = build_messages(meds)
         udtf_cls = hl7_meds_udtf()
         spark.udtf.register("_t_hl7", udtf_cls)
-        msgs.createOrReplaceTempView("_t_msgs")
         rows = spark.sql(
-            "SELECT t.* FROM _t_msgs, LATERAL _t_hl7(message) t").collect()
+            "SELECT t.* FROM {msgs}, LATERAL _t_hl7(message) t",
+            msgs=msgs).collect()
         assert {(r.patient_id, r.rxcui, r.drug_name) for r in rows} == {
             (8, str(9100 + i), name) for i, name in enumerate(self.NASTY)}
 

@@ -123,18 +123,19 @@ def test_iqr_fence_division_free_boundary(spark, sf_dir):
 
 
 def test_tpch_texts_never_alias_table_tokens():
-    # The engine runner rewrites bare table tokens into sf-keyed view
-    # names; a text that ALSO uses a table name as a column alias gets
-    # its output schema mangled (caught live: Q9's "AS nation").
+    # io.sql rewrites bare table tokens into bound DataFrame
+    # placeholders; a text that ALSO uses a table name as a column alias
+    # gets its output schema mangled (caught live: Q9's "AS nation").
     import re
 
+    from sigma_rx7_spark import io
     from sigma_rx7_spark.operators import tpch
 
     texts = {k: v for k, v in vars(tpch).items()
              if re.fullmatch(r"_Q\d\d", k)}
     assert len(texts) == 22
     for qname, sql in texts.items():
-        for t in tpch._TPCH_TABLES:
+        for t in (*io.TABLES, "partsupp"):
             assert not re.search(rf"\bAS\s+{t}\b", sql, re.I), (qname, t)
 
 

@@ -10,11 +10,11 @@ def test_tpch_sub_never_rewrites_inside_literals():
     # ADVICE r13: the engine/oracle table-token rewrite must leave
     # single-quoted literals untouched — a text with p_name LIKE
     # '%part%' must keep the literal while the FROM clause rebinds.
-    from sigma_rx7_spark.operators.tpch import _sub_outside_literals
+    from sigma_rx7_spark.io import sub_outside_literals
 
     sql = ("SELECT * FROM part WHERE p_name LIKE '%part%' "
            "AND p_comment <> 'it''s part of orders' AND p_size > 1")
-    out = _sub_outside_literals(r"\bpart\b", "tpch_part_01", sql)
+    out = sub_outside_literals(r"\bpart\b", "tpch_part_01", sql)
     assert "FROM tpch_part_01 WHERE" in out
     assert "LIKE '%part%'" in out                      # literal intact
     assert "'it''s part of orders'" in out             # escaped-quote literal
@@ -26,6 +26,7 @@ def test_tpch_texts_no_table_tokens_inside_literals():
     # Belt-and-braces for the scanner: the canonical texts themselves
     # keep table tokens out of literals, so a collision can only come
     # from a future edit — which the quote-aware scanner now survives.
+    from sigma_rx7_spark import io
     from sigma_rx7_spark.operators import tpch
 
     texts = {k: v for k, v in vars(tpch).items()
@@ -33,7 +34,7 @@ def test_tpch_texts_no_table_tokens_inside_literals():
     assert len(texts) == 22
     for qname, sql in texts.items():
         for lit in re.findall(r"'((?:[^']|'')*)'", sql):
-            for t in tpch._TPCH_TABLES:
+            for t in (*io.TABLES, "partsupp"):
                 assert not re.search(rf"\b{t}\b", lit), (qname, t, lit)
 
 
