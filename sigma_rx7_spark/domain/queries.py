@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import staging
+from ..io import read_staged
 from ..registry import query
 from . import fixtures, hl7, rules
 from .fhir import RXNORM_SYSTEM, export_medication_requests
@@ -31,29 +32,24 @@ _STAGED_TABLES = ("meds", "orange_book", "prices", "coverage", "formulary",
                   "allergies", "conditions")
 
 
-_DOMAIN_STAGED: dict[str, DataFrame] = {}
-
-
 def stage_domain_tables(spark: SparkSession) -> dict[str, DataFrame]:
     """Write the deterministic fixtures to parquet and read them back, so
     the Spark pipeline and the DuckDB oracle consume identical bytes.
     The stamp hashes the whole fixtures MODULE (every staged table comes
     from build_domain_tables and its file-level constants).
 
-    The read-back DataFrames are memoized per process: composed queries
-    (the alert inbox unions four rule pipelines in ONE plan) share one
-    set of scans."""
-    if not _DOMAIN_STAGED:
-        def build(path: str) -> None:
-            tables = fixtures.build_domain_tables(spark)
-            for t in _STAGED_TABLES:
-                tables[t].coalesce(1).write.mode("overwrite") \
-                    .parquet(os.path.join(path, t))
-        root = staging.stage("domain", None, build, code=(fixtures,),
-                             parts=_STAGED_TABLES)
+    The read-back goes through ``io.read_staged``, memoized per session:
+    composed queries (the alert inbox unions four rule pipelines in ONE
+    plan) share one set of scans, and a new session reads its own."""
+    def build(path: str) -> None:
+        tables = fixtures.build_domain_tables(spark)
         for t in _STAGED_TABLES:
-            _DOMAIN_STAGED[t] = spark.read.parquet(os.path.join(root, t))
-    return dict(_DOMAIN_STAGED)
+            tables[t].coalesce(1).write.mode("overwrite") \
+                .parquet(os.path.join(path, t))
+    root = staging.stage("domain", None, build, code=(fixtures,),
+                         parts=_STAGED_TABLES)
+    return {t: read_staged(spark, os.path.join(root, t))
+            for t in _STAGED_TABLES}
 
 
 def _p(table: str) -> str:

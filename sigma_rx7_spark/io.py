@@ -1,10 +1,18 @@
-"""Harness-table IO: schemas + loaders.
+"""The one read rule: schemas, loaders and the plan memo.
 
 The reference's storage layer is a single embedded DuckDB file whose fixed
 schema is created by a bootstrap script (reference README.md:7,36,55-58);
 the Spark-native equivalent is schema-checked Parquet reads (here) plus
 managed-table writes (see ``write_table``). Explicit schemas mean a corrupt
 or drifted input fails loudly at plan time instead of poisoning results.
+
+This module is the only one that reads an on-disk relation: harness
+tables (``load``), staged artifacts (``read_staged``) and stream sources
+(``read_stream``). All three resolve a table's files through
+``_table_path`` and memoize through ``memo``: a DataFrame is a lazy plan
+bound to the session that built it and to the files its relation listed,
+so an entry is reused only in that session and only while those files
+are unchanged.
 
 Scale notes (100 TB design):
 - Readers take a directory of per-table parquet; on a cluster this is a
@@ -27,6 +35,8 @@ import glob
 import os
 import re
 import shutil
+from collections.abc import Callable, Iterable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,30 +127,27 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-def events_data_path(sf_dir: str) -> str:
-    """THE resolver for the events table's physical layout — the one
-    place that knows events may be (a) the exact events.parquet file
-    (harness layout), (b) a directory of part files named
-    events.parquet (sweep-built fixtures), or (c) SUFFIXED drop files
-    (events_000.parquet …, the multi-batch arrival layout the
-    streaming source drains). The batch loader and the streaming
-    schema probe both route through here so the two can never read
-    different file sets (r14 review item). The harness layout always
-    has the exact path, so plans and bytes there are unchanged."""
-    exact = f"{sf_dir.rstrip('/')}/events.parquet"
-    if os.path.exists(exact):
-        return exact
-    return f"{sf_dir.rstrip('/')}/events*.parquet"
+def _table_path(sf_dir: str, name: str) -> str:
+    """THE path rule: the path every read of a harness table names,
+    ``<sf_dir>/<name>.parquet`` (an exact file or a directory of part
+    files). Events may also arrive as SUFFIXED drop files
+    (events_000.parquet …, the multi-batch arrival layout the streaming
+    source drains); when no exact ``events.parquet`` exists, the path
+    is their glob. The batch read, the stream source, the staging stamp
+    and the split probe all resolve through here, so they can never
+    read different file sets (r14 review item). The harness layout
+    always has the exact path, so plans and bytes there are unchanged."""
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    if name == "events" and not os.path.exists(path):
+        return f"{sf_dir.rstrip('/')}/events*.parquet"
+    return path
 
 
 def _table_files(sf_dir: str, name: str) -> list[str]:
-    """The physical file set a ``load`` of this table reads (resolved
-    through the same ``events_data_path`` rule), globs and directories
-    expanded. Pure-Python filesystem metadata — no JVM traffic."""
-    if name == "events":
-        path = events_data_path(sf_dir)
-    else:
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    """The physical file set a read of this table scans (``_table_path``
+    with globs and directories expanded). Pure-Python filesystem
+    metadata — no JVM traffic."""
+    path = _table_path(sf_dir, name)
     files = sorted(glob.glob(path)) if any(
         c in path for c in "*?[") else [path]
     out: list[str] = []
@@ -154,7 +161,8 @@ def _table_files(sf_dir: str, name: str) -> list[str]:
 
 def _table_fingerprint(sf_dir: str, name: str) -> tuple:
     """(path, mtime_ns, size) per file — a regenerated or rewritten
-    fixture changes the fingerprint and invalidates any memo entry."""
+    fixture changes the fingerprint and invalidates any memo entry. A
+    file that cannot be stat-ed reads (path, -1, -1)."""
     fps = []
     for f in _table_files(sf_dir, name):
         try:
@@ -165,17 +173,34 @@ def _table_fingerprint(sf_dir: str, name: str) -> tuple:
     return tuple(fps)
 
 
-# Per-session memo of loaded table DataFrames, keyed by (sf_dir, table)
-# with the file fingerprint as guard. A DataFrame is an immutable
-# LOGICAL PLAN — reusing the object never caches data or results; it
-# only skips the spark.read.parquet footer probe and schema branch that
-# every construction repaid through py4j (optimization guide §4: the
-# Python boundary includes plan-building round trips; measured r15 the
-# re-probe cost 0.2-0.7 s of pure query CONSTRUCTION on SQL-text
-# queries). It names nothing in the session: ``sql`` binds these
-# DataFrames per call. Single-session memo: a different session object
-# resets it (stopped sessions hold invalid plans); a changed
-# fingerprint (tests regenerating fixtures in place) rebuilds the entry.
+def _staging_fingerprint(path: str) -> tuple:
+    """Shallow change detector for a staged directory: the dir's own
+    (mtime, size) plus each immediate entry's (name, mtime). Every
+    restage in the repo goes through ``write.mode("overwrite")`` (delete
+    + recreate) or writes new entries under the path, both of which
+    touch this level. Pure filesystem metadata — no JVM traffic."""
+    fps = []
+    try:
+        st = os.stat(path)
+        fps.append((path, st.st_mtime_ns, st.st_size))
+        with os.scandir(path) as it:
+            for e in sorted(it, key=lambda x: x.name):
+                fps.append((e.name, e.stat().st_mtime_ns))
+    except OSError:
+        fps.append((path, -1, -1))
+    return tuple(fps)
+
+
+# THE plan memo. A DataFrame is an immutable LOGICAL PLAN bound to the
+# session that built it and to the files its relation listed: reusing
+# the object never caches data or results, it only skips the footer
+# probes, schema branches and expression-tree construction that every
+# build repaid through py4j (optimization guide §4: the Python boundary
+# includes plan-building round trips; measured r15 the re-probe cost
+# 0.2-0.7 s of pure query CONSTRUCTION on SQL-text queries). It names
+# nothing in the session. Single-session: a different session object
+# starts a fresh memo (stopped sessions hold invalid plans, and a plan
+# built on one session must not be served to another).
 _LOAD_MEMO: dict = {"spark": None, "dfs": {}}
 
 
@@ -183,7 +208,53 @@ def _session_memo(spark: SparkSession) -> dict:
     if _LOAD_MEMO["spark"] is not spark:
         _LOAD_MEMO["spark"] = spark
         _LOAD_MEMO["dfs"] = {}
-    return _LOAD_MEMO
+    return _LOAD_MEMO["dfs"]
+
+
+def memo(spark: SparkSession, key, build: Callable[[], Any], *,
+         sf_dir: str | None = None, tables: Iterable[str] = (),
+         paths: Iterable[str] = ()) -> Any:
+    """Return ``build()``, memoized per session under ``key``.
+
+    An entry is reused only while the files it read are unchanged: the
+    ``_table_fingerprint`` of every declared harness table under
+    ``sf_dir`` and the ``_staging_fingerprint`` of every declared
+    staged path. ``key`` must name everything else the value depends
+    on (the sf, the table, the schema)."""
+    dfs = _session_memo(spark)
+    fp = (tuple(_table_fingerprint(sf_dir, t) for t in tables),
+          tuple(_staging_fingerprint(p) for p in paths))
+    hit = dfs.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    dfs[key] = (fp, value)
+    return value
+
+
+def _normalize(name: str, df: DataFrame) -> DataFrame:
+    """The logical form of a scanned harness table. Only ``events``
+    needs one: the bootstrap has shipped events.ts under two physical
+    types, INT64 TIMESTAMP(NANOS) (reads as long under nanosAsLong) and
+    plain timestamp[us] (reads as TIMESTAMP_NTZ). Branch on what the
+    scan actually produced so both generations, batch or stream, read
+    identically."""
+    if name != "events":
+        return df
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        # int64 nanos -> microsecond TimestampType; matches the
+        # oracle's CAST(ts AS TIMESTAMP) truncation bit-for-bit.
+        # Integer division — ns values exceed 2^53, so a double
+        # division here would silently round the microsecond (caught
+        # by the oracle mirror test).
+        ts = F.timestamp_micros(F.expr("ts DIV 1000"))
+    else:
+        # NTZ -> session-local TimestampType; the session tz is
+        # pinned to UTC (session.py) so the cast is value-preserving
+        # and downstream code sees the same type as the nanos path.
+        ts = F.col("ts").cast("timestamp")
+    return df.withColumn("ts", ts).select(
+        "event_id", "ts", "user_id", "event_type", "value", "props")
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -191,37 +262,37 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_session_conf(spark)
-    memo = _session_memo(spark)
-    fp = _table_fingerprint(sf_dir, name)
-    hit = memo["dfs"].get((sf_dir, name))
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    if name == "events":
-        path = events_data_path(sf_dir)
-    else:
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events":
-        # The bootstrap has shipped events.ts under two physical types:
-        # INT64 TIMESTAMP(NANOS) (reads as long under nanosAsLong) and
-        # plain timestamp[us] (reads as TIMESTAMP_NTZ). Branch on what the
-        # scan actually produced so both generations load identically.
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            # int64 nanos -> microsecond TimestampType; matches the
-            # oracle's CAST(ts AS TIMESTAMP) truncation bit-for-bit.
-            # Integer division — ns values exceed 2^53, so a double
-            # division here would silently round the microsecond (caught
-            # by the oracle mirror test).
-            ts = F.timestamp_micros(F.expr("ts DIV 1000"))
-        else:
-            # NTZ -> session-local TimestampType; the session tz is
-            # pinned to UTC (session.py) so the cast is value-preserving
-            # and downstream code sees the same type as the nanos path.
-            ts = F.col("ts").cast("timestamp")
-        df = df.withColumn("ts", ts).select(
-            "event_id", "ts", "user_id", "event_type", "value", "props")
-    memo["dfs"][(sf_dir, name)] = (fp, df)
-    return df
+    return memo(
+        spark, ("load", sf_dir, name),
+        lambda: _normalize(name, spark.read.parquet(
+            _table_path(sf_dir, name))),
+        sf_dir=sf_dir, tables=(name,))
+
+
+def read_stream(spark: SparkSession, sf_dir: str, name: str,
+                **options: str) -> DataFrame:
+    """One harness table as an append stream (file source), with the
+    same file set and the same normalization as ``load``.
+
+    A file source needs an explicit schema, so the physical one is
+    probed with a metadata-only batch read (memoized like ``load``).
+    The source directory and its ``pathGlobFilter`` come from
+    ``_table_path``, the rule ``load`` reads: an exact file streams its
+    directory filtered to that name (suffixed drop files beside it are
+    not read, as in the batch read), a directory-shaped table streams
+    the directory itself (its part files carry part-* names no table
+    glob would match), and suffixed drop files stream through the
+    table's glob. ``options`` go to the source unchanged."""
+    ensure_session_conf(spark)
+    path = _table_path(sf_dir, name)
+    physical = memo(spark, ("schema", sf_dir, name),
+                    lambda: spark.read.parquet(path).schema,
+                    sf_dir=sf_dir, tables=(name,))
+    src = spark.readStream.schema(physical).options(**options)
+    if not os.path.isdir(path):
+        path, pattern = os.path.split(path)
+        src = src.option("pathGlobFilter", pattern)
+    return _normalize(name, src.parquet(path))
 
 
 # Footer-derived max scan parallelism per resolved file set, keyed by
@@ -245,21 +316,10 @@ def scan_split_parallelism(sf_dir: str, name: str,
     decided, so stop stat-ing/reading footers. At warehouse scale
     (10^5 files) the healthy-layout fast path touches a handful of
     footers instead of every file in the table."""
-    import glob as _glob
-
     import pyarrow.parquet as pq
 
-    if name == "events":
-        path = events_data_path(sf_dir)
-    else:
-        path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    files = sorted(_glob.glob(path)) if any(
-        c in path for c in "*?[") else [path]
     total = 0
-    for f in files:
-        if os.path.isdir(f):
-            files.extend(sorted(_glob.glob(os.path.join(f, "*.parquet"))))
-            continue
+    for f in _table_files(sf_dir, name):
         st = os.stat(f)
         key = (f, st.st_mtime_ns, st.st_size)
         if key not in _SPLIT_CACHE:
@@ -343,49 +403,25 @@ def sql(spark: SparkSession, sf_dir: str, text: str,
     return spark.sql(out, **bound) if bound else spark.sql(text)
 
 
-def _staging_fingerprint(path: str) -> tuple:
-    """Shallow change detector for a staged directory: the dir's own
-    (mtime, size) plus each immediate entry's (name, mtime). Every
-    restage in the repo goes through ``write.mode("overwrite")`` (delete
-    + recreate) or writes new entries under the path, both of which
-    touch this level. Pure filesystem metadata — no JVM traffic."""
-    fps = []
-    try:
-        st = os.stat(path)
-        fps.append((path, st.st_mtime_ns, st.st_size))
-        with os.scandir(path) as it:
-            for e in sorted(it, key=lambda x: x.name):
-                fps.append((e.name, e.stat().st_mtime_ns))
-    except OSError:
-        fps.append((path, -1, -1))
-    return tuple(fps)
+def read_staged(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    """Read a staging this process (or a prior one) wrote, memoized
+    like ``load`` and guarded by the staged directory's fingerprint (a
+    restage or a new session rebuilds the plan; partitioned stagings
+    pay their directory discovery once).
 
-
-def read_staged(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Re-read a staging this process (or a prior one) wrote, with the
-    WRITER'S schema instead of inference. Inference fails outright on an
-    empty staging (writing a zero-row DataFrame to parquet produces only
-    _SUCCESS, no schema-bearing part files) — and at 100 TB a zero-row
-    staging is routine (an empty partition day, a filtered-out tenant),
-    so every staged re-read in the repo goes through this. For
-    partitioned stagings the partition column is simply part of the
-    schema; Spark still resolves its values from directory names when
-    files exist. (Empty-input posture proven by
-    scripts/empty_input_sweep.py.)
-
-    Memoized per (session, path, schema) with a directory fingerprint
-    guard: partitioned stagings pay their directory discovery once per
-    process instead of per query construction (the DataFrame is a plan,
-    never data — a restage or a new session rebuilds it)."""
-    memo = _session_memo(spark)
-    fp = _staging_fingerprint(path)
-    key = ("staged", path, str(schema))
-    hit = memo["dfs"].get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = spark.read.schema(schema).parquet(path)
-    memo["dfs"][key] = (fp, df)
-    return df
+    Pass the WRITER'S schema wherever the staging can be empty:
+    inference fails outright on a zero-row staging (writing a zero-row
+    DataFrame to parquet produces only _SUCCESS, no schema-bearing part
+    files) — and at 100 TB a zero-row staging is routine (an empty
+    partition day, a filtered-out tenant). For partitioned stagings the
+    partition column is simply part of the schema; Spark still resolves
+    its values from directory names when files exist. (Empty-input
+    posture proven by scripts/empty_input_sweep.py.) With no schema the
+    read infers one, as sites whose result schemas the oracle hashes
+    need."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return memo(spark, ("staged", path, str(schema)),
+                lambda: reader.parquet(path), paths=(path,))
 
 
 def write_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:

@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
-from ..io import load
+from ..io import _table_files, load
 from ..kernels import collect_dense, dense_rows
 from ..materialize import share
 from ..registry import query
@@ -894,14 +894,13 @@ def _srp_oracle(bits: int = SRP_BITS, bands: int = SRP_BANDS,
 
 def _srp_planned_oracle(sf_dir: str) -> str:
     """The SRP mirror at the SAME planned geometry the engine executes:
-    corpus size from the parquet footer (no scan), (bits, bands) from
-    the shared srp_planned_geometry helper."""
-    import os
-
+    corpus size from the parquet footers of the file set ``io.load``
+    reads (no scan), (bits, bands) from the shared srp_planned_geometry
+    helper."""
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir.rstrip("/"), "embeddings.parquet")
-    n = pq.ParquetFile(path).metadata.num_rows
+    n = sum(pq.ParquetFile(f).metadata.num_rows
+            for f in _table_files(sf_dir, "embeddings"))
     r, bands = srp_planned_geometry(n)
     return _srp_oracle(bits=r * bands, bands=bands)
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import staging
+from ..io import read_staged
 from ..registry import query
 
 MEDIA_SCHEMA = T.StructType([
@@ -183,7 +184,7 @@ def stage_media(spark: SparkSession) -> DataFrame:
     def build(path: str) -> None:
         build_media_table(spark).coalesce(1).write.mode("overwrite") \
             .parquet(path)
-    return spark.read.parquet(staging.stage(
+    return read_staged(spark, staging.stage(
         "media_fixture", None, build, code=(build_media_table,)))
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import staging
-from ..io import _table_fingerprint, load, read_staged
+from ..io import load, memo, read_staged
 from ..materialize import share
 from ..registry import query
 from .clustering import EMB_DIM, PQ_SUBS
@@ -298,14 +298,6 @@ def ivf_assign(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
 # EMB_DIM shapes every staged vector artifact but is read, not written,
 # by the builders, so it salts their stamps explicitly.
 _DIM = f"dim={EMB_DIM}"
-# (queries, corpus, centroids) plan triple, per (session, sf,
-# embeddings fingerprint) — see _ivf_parts docstring (r15).
-_IVF_PARTS_MEMO: dict = {}
-# Constructed-DataFrame memo for the PQ serve path (codebook local
-# relation + staged code/assignment reads), per (session, sf): plans,
-# never data (r15).
-_PQ_DF_MEMO: dict = {}
-_PQ_CB: dict[str, list] = {}  # PQ sub-codebooks, per (process, sf)
 
 
 def _ivf_parts(spark: SparkSession,
@@ -332,16 +324,21 @@ def _ivf_parts(spark: SparkSession,
     a retrain — cross-PROCESS amortization, the way a real offline
     index behaves.
 
-    The returned (queries, corpus, centroids) triple is memoized per
-    (session, sf, embeddings fingerprint): all three are immutable
-    LOGICAL PLANS over fixed inputs, and rebuilding the normalized()
-    expression trees plus the staged-centroid read cost ~0.25 s of
-    py4j round trips per construction across the whole IVF family
-    (optimization guide §4 — r15)."""
-    memo_key = (sf_dir, _table_fingerprint(sf_dir, "embeddings"))
-    hit = _IVF_PARTS_MEMO.get(memo_key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    The returned (queries, corpus, centroids) triple goes through
+    ``io.memo``, reused per session while the embeddings files are
+    unchanged: all three are immutable LOGICAL PLANS, and rebuilding
+    the normalized() expression trees plus the staged-centroid read
+    cost ~0.25 s of py4j round trips per construction across the whole
+    IVF family (optimization guide §4 — r15)."""
+    return memo(spark, ("ivf_parts", sf_dir),
+                lambda: _build_ivf_parts(spark, sf_dir),
+                sf_dir=sf_dir, tables=("embeddings",))
+
+
+def _build_ivf_parts(spark: SparkSession,
+                     sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``_ivf_parts`` without the memo: plan the triple, training and
+    staging the centroids if no completed staging exists."""
     e = load(spark, sf_dir, "embeddings")
     queries = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), normalized("embedding").alias("q_vec"))
@@ -374,17 +371,14 @@ def _ivf_parts(spark: SparkSession,
     cent_path = staging.stage("ivf_centroids", sf_dir, build,
                               code=(train_ivf_centroids,),
                               inputs=("embeddings",), extra=_DIM)
-    # NOTE: centroids stay on schema inference (read_staged's explicit
-    # schema could flip element nullability and with it downstream
+    # NOTE: centroids stay on schema inference (an explicit schema
+    # could flip element nullability and with it downstream
     # result-schema hashes).
-    triple = (queries, corpus, spark.read.parquet(cent_path))
-    _IVF_PARTS_MEMO.clear()  # single-entry: sessions/sfs rotate in tests
-    _IVF_PARTS_MEMO[memo_key] = (spark, triple)
-    return triple
+    return queries, corpus, read_staged(spark, cent_path)
 
 
 # What every artifact built from the trained centroids names upstream.
-_CENTROID_CODE = (train_ivf_centroids, _ivf_parts)
+_CENTROID_CODE = (train_ivf_centroids, _ivf_parts, _build_ivf_parts)
 
 
 # Assignment, probe selection, and rerank mirrored over the STAGED
@@ -936,30 +930,25 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cex = exploded(corpus, "c_id", "c_vec")
     # Sub-codebooks over the NORMALIZED corpus (per-label sub-means) —
-    # k x dim rows. MEMOIZED per (process, sf) like the IVF centroids:
-    # the codebook is a deterministic index-build artifact (labels x
-    # dim rows, bounded metadata), so repeat calls pay serve cost, not
-    # train cost (bench reps / repeated probes).
-    if sf_dir not in _PQ_CB:
-        _PQ_CB[sf_dir] = (
-            cex.join(lab, "c_id")
-            .groupBy(F.col("label").alias("c_label"),
-                     ((F.col("pos") - 1) / width).cast("int")
-                     .alias("sub"), "pos")
-            .agg((F.sum(qdec("x")).cast("double") / F.count("x"))
-                 .alias("centroid"))
-        ).collect()
-    if _PQ_DF_MEMO.get("spark") is not spark:
-        _PQ_DF_MEMO.clear()
-        _PQ_DF_MEMO["spark"] = spark
-    if ("cb", sf_dir) not in _PQ_DF_MEMO:
-        # Re-marshalling the collected codebook rows through
-        # createDataFrame cost ~0.2 s of py4j per construction; the
-        # local relation is an immutable plan node — memoize it (r15).
-        _PQ_DF_MEMO[("cb", sf_dir)] = spark.createDataFrame(
-            _PQ_CB[sf_dir],
-            "c_label int, sub int, pos int, centroid double")
-    cb = _PQ_DF_MEMO[("cb", sf_dir)]
+    # k x dim rows. Staged like the IVF centroids, with the embeddings
+    # as declared input: the codebook is a deterministic index-build
+    # artifact, so repeat calls pay serve cost, not train cost (bench
+    # reps / repeated probes). Read with the writer's schema: an empty
+    # corpus stages zero rows.
+    def build_codebook(path: str) -> None:
+        (cex.join(lab, "c_id")
+         .groupBy(F.col("label").alias("c_label"),
+                  ((F.col("pos") - 1) / width).cast("int").alias("sub"),
+                  "pos")
+         .agg((F.sum(qdec("x")).cast("double") / F.count("x"))
+              .alias("centroid"))
+         .coalesce(1).write.mode("overwrite").parquet(path))
+
+    cb = read_staged(spark, staging.stage(
+        "pq_codebook", sf_dir, build_codebook,
+        code=(q_sim_topk_ivfpq,) + _CENTROID_CODE, inputs=("embeddings",),
+        extra=f"{_DIM}|subs={PQ_SUBS}"),
+        "c_label int, sub int, pos int, centroid double")
     term = (F.col("x") - F.col("centroid")) \
         * (F.col("x") - F.col("centroid"))
     # The corpus CODES are the index payload itself ({PQ_SUBS} ints per
@@ -984,9 +973,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pq_codes", sf_dir, build_codes,
         code=(q_sim_topk_ivfpq,) + _CENTROID_CODE, inputs=("embeddings",),
         extra=f"{_DIM}|subs={PQ_SUBS}")
-    if ("codes", sf_dir) not in _PQ_DF_MEMO:
-        _PQ_DF_MEMO[("codes", sf_dir)] = spark.read.parquet(codes_path)
-    codes = _PQ_DF_MEMO[("codes", sf_dir)]
+    codes = read_staged(spark, codes_path)
     qex = exploded(queries, "q_id", "q_vec")
     lut = (
         qex.join(F.broadcast(cb), "pos")
@@ -1004,9 +991,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pq_assign", sf_dir, build_assign,
         code=(ivf_assign,) + _CENTROID_CODE, inputs=("embeddings",),
         extra=_DIM)
-    if ("assign", sf_dir) not in _PQ_DF_MEMO:
-        _PQ_DF_MEMO[("assign", sf_dir)] = spark.read.parquet(assign_path)
-    assigned = _PQ_DF_MEMO[("assign", sf_dir)]
+    assigned = read_staged(spark, assign_path)
     wq = Window.partitionBy("q_id").orderBy(
         F.desc("cent_sim"), F.asc("cell_id"))
     probe = (

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import staging
-from ..io import load
+from ..io import load, read_staged
 from ..materialize import share
 from ..registry import query
 
@@ -584,7 +584,7 @@ def q_mv_rollup_answer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the monthly query touches days × types rows (thousands) instead of
     the raw stream (billions), and the MV refreshes incrementally per
     ingest batch (q_merge_agg_incremental's job)."""
-    mv = spark.read.parquet(stage_daily_rollup(spark, sf_dir))
+    mv = read_staged(spark, stage_daily_rollup(spark, sf_dir))
     return (
         mv.groupBy(F.date_trunc("month", "day").alias("month"),
                    "event_type")

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import io, staging
-from ..io import load, load_parallel
+from ..io import load, load_parallel, read_staged
 from ..registry import query
 
 
@@ -90,8 +90,8 @@ def _run(spark: SparkSession, sf_dir: str, sql: str,
     unchanged."""
     frames = {t: load_parallel(spark, sf_dir, t) for t in repair}
     if re.search(r"\bpartsupp\b", sql):
-        frames["partsupp"] = spark.read.parquet(
-            _stage_partsupp(spark, sf_dir))
+        frames["partsupp"] = read_staged(
+            spark, _stage_partsupp(spark, sf_dir))
     return io.sql(spark, sf_dir, sql, **frames)
 
 
@@ -828,8 +828,6 @@ def q_tpch_q15_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute-inline exactly (total_revenue quantized at 6 dp BEFORE
     the max compare, both paths)."""
     from pyspark.sql import Window
-
-    from ..io import read_staged
 
     path = _stage_q15_revenue(spark, sf_dir)
     rev = read_staged(

@@ -45,7 +45,7 @@ import inspect
 import os
 from collections.abc import Callable, Iterable
 
-from .io import _table_files
+from .io import _table_fingerprint
 
 _BUILDING = "BUILDING"  # sentinel: staging in progress, never a stamp
 _ROOT = os.path.join(os.path.dirname(os.path.dirname(
@@ -124,20 +124,15 @@ def mark_staged(path: str, stamp: str) -> None:
 def _inputs_fingerprint(sf_dir: str, tables: Iterable[str]) -> str:
     fps = []
     for t in tables:
-        files = _table_files(sf_dir, t)
-        try:
-            stats = [os.stat(f) for f in files]
-        except FileNotFoundError:
-            stats = []
-        if not stats:
+        fp = _table_fingerprint(sf_dir, t)
+        if not fp or any(size < 0 for _, _, size in fp):
             # An unmatched layout must fail here, naming the cause: a
             # constant fingerprint would freeze the stamp and serve a
             # stale artifact in exactly the layout nobody anticipated.
             raise FileNotFoundError(
                 f"no parquet files for table {t!r} under {sf_dir!r} — "
                 "cannot fingerprint the staging's declared input")
-        fps += [f"{f}:{st.st_mtime_ns}:{st.st_size}"
-                for f, st in zip(files, stats)]
+        fps += [f"{f}:{mtime}:{size}" for f, mtime, size in fp]
     return "|".join(fps)
 
 

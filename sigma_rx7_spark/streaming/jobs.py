@@ -29,28 +29,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
-from ..io import load
+from ..io import load, read_stream
 from ..materialize import share, snapshot
 from ..registry import query
-from ..session import ensure_session_conf
 from ..operators.incremental import MERGE_CUTOFF
-
-def _events_physical(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Physical schema of events.parquet (streaming file sources require
-    an explicit schema). The bootstrap has shipped ``ts`` as both INT64
-    TIMESTAMP(NANOS) (reads as long under nanosAsLong) and timestamp[us]
-    (reads as TIMESTAMP_NTZ); probe the footer with a metadata-only batch
-    read so the stream declares whichever is actually on disk."""
-    # one layout decision, one resolver: io.events_data_path handles
-    # the exact-file, directory-shaped, and suffixed-drop-file layouts
-    # identically for the batch loader and this probe (r14 review item
-    # — two parallel encodings of the layout rule would drift)
-    from ..io import events_data_path
-    return spark.read.parquet(events_data_path(sf_dir)).schema
-
 
 STREAM_STATE_PARTITIONS = 8
 # State-store count for the heavily-stateful jobs below. A streaming
@@ -80,43 +64,13 @@ STREAM_MAX_FILES_CONF = "sigma.stream.max_files_per_trigger"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1 streaming source: the events table as an append stream with the
-    same ts normalization as the batch loader (io.load)."""
-    import os
-
-    from ..io import events_data_path
-    ensure_session_conf(spark)
-    physical = _events_physical(spark, sf_dir)
-    # The file source needs a directory; pathGlobFilter narrows it to
-    # the events table inside the shared sf_dir. The FILE-SET RULE is
-    # derived from io.events_data_path — the same resolver the batch
-    # loader uses — so batch and stream can never consume different
-    # file sets (r14 ADVICE: a fixed 'events*.parquet' glob here would
-    # silently admit suffixed drop files that the batch loader ignores
-    # whenever the exact events.parquet also exists). Three layouts:
-    # exact file -> filter to exactly that name; directory-shaped
-    # events.parquet -> stream the directory itself (part files inside
-    # carry part-* names no events* glob would match); suffixed drop
-    # files -> the multi-batch arrival glob.
-    resolved = events_data_path(sf_dir)
-    if os.path.isdir(resolved):
-        src_dir, name_filter = resolved, None
-    elif resolved.endswith("/events.parquet"):
-        src_dir, name_filter = sf_dir.rstrip("/"), "events.parquet"
-    else:
-        src_dir, name_filter = sf_dir.rstrip("/"), "events*.parquet"
-    src = spark.readStream.schema(physical)
-    if name_filter is not None:
-        src = src.option("pathGlobFilter", name_filter)
+    """T1 streaming source: the events table as an append stream through
+    ``io.read_stream`` — the file set and ``ts`` normalization of the
+    batch ``io.load`` — rate-limited by ``STREAM_MAX_FILES_CONF`` when
+    the session sets it."""
     mft = spark.conf.get(STREAM_MAX_FILES_CONF, None)
-    if mft is not None:
-        src = src.option("maxFilesPerTrigger", mft)
-    raw = src.parquet(src_dir)
-    if isinstance(physical["ts"].dataType, T.LongType):
-        ts = F.timestamp_micros(F.expr("ts DIV 1000"))
-    else:
-        ts = F.col("ts").cast("timestamp")
-    return raw.withColumn("ts", ts)
+    opts = {} if mft is None else {"maxFilesPerTrigger": mft}
+    return read_stream(spark, sf_dir, "events", **opts)
 
 
 _START_LOCK = threading.Lock()
@@ -721,17 +675,10 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- Streaming ingest dedup (T9 x L1) ------------------------------------
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The documents table as an append stream (same file-source recipe
-    as read_events_stream; documents carry no timestamp, so no ts
-    normalization is needed)."""
-    ensure_session_conf(spark)
-    schema = spark.read.parquet(
-        f"{sf_dir.rstrip('/')}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
+    """The documents table as an append stream through ``io.read_stream``:
+    the file set ``io.load`` reads, exact file or directory of part
+    files alike."""
+    return read_stream(spark, sf_dir, "documents")
 
 
 def fold_digest_state(prev: DataFrame, batch: DataFrame) -> DataFrame:
@@ -1301,7 +1248,7 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation order. State is bounded by days×buckets."""
     from ..compat import QDEC
     from ..operators.quality import PSI_BUCKETS
-    from ..io import load
+    from ..io import load, read_stream
     from ..operators.incremental import MERGE_CUTOFF
     from pyspark.sql import Window
 
@@ -1449,7 +1396,7 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the max, so flags and maxima are engine-exact. Zero-variance
     families are excluded on both engines (no z is defined against a
     constant baseline)."""
-    from ..io import load
+    from ..io import load, read_stream
     from ..operators.incremental import MERGE_CUTOFF
 
     cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")

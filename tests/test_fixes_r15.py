@@ -1,7 +1,7 @@
 """Round-15 regression tests for the two r14 ADVICE closures.
 
 1. streaming/jobs.read_events_stream derives its file-set rule from
-   io.events_data_path — in a MIXED layout (exact events.parquet plus
+   io._table_path — in a MIXED layout (exact events.parquet plus
    suffixed drop files) batch and stream must consume the SAME file
    set (the exact file), where the old fixed 'events*.parquet' glob
    made the stream silently read the drop files too.
@@ -40,7 +40,7 @@ def _write_one_file(spark, rows, stage_dir: str, dst: str) -> None:
 
 def test_stream_and_batch_read_same_files_in_mixed_layout(spark, tmp_path):
     """Exact events.parquet + a suffixed drop file in one directory:
-    the batch loader prefers the exact file (io.events_data_path), and
+    the batch loader prefers the exact file (io._table_path), and
     the stream must follow the same resolver — 3 rows on both sides,
     not 3 batch vs 5 stream."""
     from sigma_rx7_spark.io import load

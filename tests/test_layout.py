@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -306,11 +307,17 @@ def _writable_copy(src: str, dst) -> str:
     return str(dst)
 
 
-def _keep_even_keys(root: str, table: str, key: str) -> None:
-    """Rewrite ``table`` in place, keeping the rows with an even key."""
+def _keep_rows(root: str, table: str, keep) -> None:
+    """Rewrite ``table`` in place, keeping the rows ``keep(t)`` selects."""
     path = os.path.join(root, f"{table}.parquet")
     t = pq.read_table(path)
-    pq.write_table(t.filter(pc.equal(pc.bit_wise_and(t[key], 1), 0)), path)
+    pq.write_table(t.filter(keep(t)), path)
+
+
+def _keep_even_keys(root: str, table: str, key: str) -> None:
+    """Rewrite ``table`` in place, keeping the rows with an even key."""
+    _keep_rows(root, table,
+               lambda t: pc.equal(pc.bit_wise_and(t[key], 1), 0))
 
 
 def _drop_stagings(root: str) -> None:
@@ -323,12 +330,14 @@ def _drop_stagings(root: str) -> None:
 @pytest.mark.parametrize("name", [
     "q_scan_zorder", "q_scan_indexed", "q_mv_rollup_answer",
     "q_tpch_q15_materialized", "q_join_dpp", "q_sink_backfill",
-    "q_source_textlines"])
+    "q_source_textlines", "q_sim_topk_ivfpq", "q_sim_topk_ivf_staged",
+    "q_sim_index_incremental"])
 def test_staged_query_follows_inplace_input_rewrite(name, spark, sf_dir,
                                                     tmp_path):
     """Rewriting a staged query's inputs in place, inside one process,
-    must rebuild the staged artifact: the second oracle check sees the
-    new rows, not the artifact built from the old ones."""
+    must rebuild the staged artifact and every memoized read of it: the
+    second oracle check sees the new rows, not the artifact or the file
+    listing of the old ones."""
     from tests.test_oracle_mirror import test_oracle_parity as parity
 
     root = _writable_copy(sf_dir, tmp_path / "sf")
@@ -337,9 +346,35 @@ def test_staged_query_follows_inplace_input_rewrite(name, spark, sf_dir,
         for table, key in (("lineitem", "l_orderkey"), ("events", "event_id"),
                            ("part", "p_partkey"), ("documents", "doc_id")):
             _keep_even_keys(root, table, key)
+        # Not even keys: those would drop every IVF seed
+        # (c_id % stride == 5) and leave no cell to probe.
+        _keep_rows(root, "embeddings",
+                   lambda t: pa.array(t["vec_id"].to_numpy() % 3 != 2))
         parity(name, spark, root)
     finally:
         _drop_stagings(root)
+
+
+def test_stream_reads_directory_shaped_table(spark, sf_dir, tmp_path):
+    """A table stored as a directory of part files streams the same rows
+    as the exact file: the stream source resolves the file set the way
+    the batch read does. The DuckDB oracle cannot read a directory
+    path, so the Spark result at ``sf_dir`` is the reference."""
+    from sigma_rx7_spark.registry import load_all
+
+    fn = load_all()["q_stream_ingest_dedup"].fn
+    root = _writable_copy(sf_dir, tmp_path / "sf")
+    path = os.path.join(root, "documents.parquet")
+    t = pq.read_table(path)
+    os.remove(path)
+    os.mkdir(path)
+    step = -(-t.num_rows // 3)
+    for i in range(3):
+        pq.write_table(t.slice(i * step, step),
+                       os.path.join(path, f"part-{i:05d}.parquet"))
+    want = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    assert want
+    assert sorted(tuple(r) for r in fn(spark, root).collect()) == want
 
 
 def test_join_bucketed_same_basename_roots(spark, sf_dir, tmp_path):

@@ -16,11 +16,15 @@
 - ``io.py`` alone may name a relation in the session catalog, and it
   does not: every SQL text binds its relations as ``spark.sql``
   DataFrame arguments, through ``io.sql`` when the oracle shares it.
+- ``io.py`` alone reads an on-disk relation as parquet, batch or stream;
+  every other module reads through ``load``, ``read_staged`` or
+  ``read_stream``, so one rule resolves, normalizes and memoizes it.
 - ``session.py`` (the required conf, once per session) and
   ``streaming/jobs.py`` (overrides held only around ``start()``) alone
   set session conf; every other module leaves the conf as it found it.
 
-An owner may be a tuple of modules that share the row.
+An owner may be a tuple of modules that share the row; a third element
+names a row whose owner already has one.
 """
 
 from __future__ import annotations
@@ -45,6 +49,7 @@ OWNED = [
         r"createOrReplaceTempView\(|createTempView\(|createGlobalTempView\("
         r"|registerTempTable\(")),
     (("session.py", "streaming/jobs.py"), re.compile(r"conf\.(set|unset)\(")),
+    ("io.py", re.compile(r"\.read\.parquet\(|\breadStream\b"), "io.py:read"),
 ]
 
 
@@ -52,8 +57,10 @@ def _owners(owner):
     return (owner,) if isinstance(owner, str) else owner
 
 
-@pytest.mark.parametrize("owner, pattern", OWNED,
-                         ids=["|".join(_owners(o)) for o, _ in OWNED])
+@pytest.mark.parametrize(
+    "owner, pattern",
+    [pytest.param(o, p, id=rid[0] if rid else "|".join(_owners(o)))
+     for o, p, *rid in OWNED])
 def test_pattern_only_in_owner_module(owner, pattern):
     mine = {PKG / o for o in _owners(owner)}
     hits = [f"{path.relative_to(PKG)}:{i}: {line.strip()}"

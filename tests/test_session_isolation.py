@@ -17,6 +17,9 @@ under a fresh ``_pyspark_<uuid>`` name that is dropped before the call
 returns. So a SQL query creates no temp view and sets no conf, a user's
 view named like a harness table is never read, and one text runs at
 two scales on two threads at once.
+
+A memoized plan is bound to the session that built it, so a query built
+on another session gets a plan of its own (``io.memo`` is per session).
 """
 
 from __future__ import annotations
@@ -143,3 +146,16 @@ def test_sql_escapes_braces_in_literals(spark, sf_dir):
     row = io.sql(spark, sf_dir,
                  "SELECT '{x}' AS s, COUNT(*) AS n FROM region").collect()
     assert [tuple(r) for r in row] == [("{x}", 5)]
+
+
+@pytest.mark.parametrize("query", [
+    "q_domain_recommendations", "q_domain_fhir_export", "q_sim_topk_ivfpq",
+    "q_sim_topk_ivf_staged", "q_scan_zorder", "q_tpch_q02",
+    "q_mv_rollup_answer",
+])
+def test_memoized_reads_follow_the_session(spark, sf_dir, query):
+    fn = ALL[query].fn
+    assert fn(spark, sf_dir).sparkSession is spark
+    s2 = spark.newSession()
+    assert fn(s2, sf_dir).sparkSession is s2
+    assert fn(spark, sf_dir).sparkSession is spark
