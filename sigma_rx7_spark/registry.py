@@ -90,32 +90,41 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 13 SQL-binding + 14 r16-changed + 18 staging-rule
-    # + 4 fold_stream + 1 restaged = 50.
-    # Composition: (a) the 12 queries whose SQL text now binds its
-    # relations as spark.sql DataFrame arguments (io.sql or a named
-    # placeholder) instead of session temp views, or whose conf flip
-    # became a write option (q_sink_backfill), plus q_tpch_q01 for the
-    # TPC-H runner (plans unchanged); (b) queries whose execution path
-    # changed since r16 (results bit-identical by construction and
-    # local mirrors, but the external checker should re-prove them):
-    # the Arrow kernels (now on kernels.py) and their composers, 7 of
-    # the streaming queries whose no-data-batch skip now holds its conf
-    # only around start(), and the two queries whose persists became
-    # materialize.share (PageRank, the quality model); (c) the 18
-    # queries whose oracle now reads a path computed by staging.path
-    # under a new name (TPC-H partsupp, IVF centroids, schema-merge
-    # batches) or whose staged artifact gained an input stamp or a new
-    # guard in staging.stage (media files, the Q15 revenue view, DPP
-    # fact, z-order and indexed layouts); (d) the 4 queries whose
-    # foreachBatch loop became streaming.jobs.fold_stream (no
-    # empty-batch skip, typed initial state); (e) 1 older name whose
-    # staging moved onto staging.stage. They replace the oldest
-    # already-proven names (the quality-audit fold, the six
-    # lazy-checkpoint adoptees and six of the no-data-batch streams).
+    # Window: 10 store-count + 13 SQL-binding + 7 no-data-batch
+    # + 15 staging-rule + 4 fold_stream + 1 restaged = 50.
+    # Composition: (a) the 10 stateful streams whose state-store count
+    # changed when every stream began starting with one store per task
+    # slot up to 8 (streaming.jobs._drain) and not yet in the window;
+    # (b) the 12 queries whose SQL text now binds its relations as
+    # spark.sql DataFrame arguments (io.sql or a named placeholder)
+    # instead of session temp views, or whose conf flip became a write
+    # option (q_sink_backfill), plus q_tpch_q01 for the TPC-H runner
+    # (plans unchanged); (c) 7 streams whose no-data-batch skip holds
+    # its conf only around start() and whose store count also changed;
+    # (d) the 15 queries whose oracle now reads a path computed by
+    # staging.path under a new name (TPC-H partsupp, IVF centroids,
+    # schema-merge batches) or whose staged artifact gained an input
+    # stamp or a new guard in staging.stage (media files, the Q15
+    # revenue view, DPP fact, z-order and indexed layouts); (e) the 4
+    # queries whose foreachBatch loop became streaming.jobs.fold_stream,
+    # whose fold now starts from the initial state unmaterialized;
+    # (f) 1 older name whose staging moved onto staging.stage. They
+    # replace the oldest already-proven names (the five Arrow-kernel
+    # queries, the two share() adoptees and TPC-H Q09/Q11/Q16).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
+    # state stores sized to the task slots (up to 8) by _drain
+    "q_stream_stateful",
+    "q_stream_funnel",
+    "q_stream_attribution",
+    "q_stream_transitions",
+    "q_stream_sequence",
+    "q_stream_stream_left",
+    "q_stream_dedup",
+    "q_stream_hourly_counts",
+    "q_stream_hourly_distinct",
+    "q_stream_hourly_distinct_approx",
     # SQL binding — relations bound as spark.sql DataFrame arguments
     "q_subquery_scalar",
     "q_subquery_exists",
@@ -130,13 +139,8 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_domain_hl7_udtf",
     "q_sink_backfill",
     "q_tpch_q01",
-    # Arrow kernels — gate and decode in kernels.py; + composers
-    "q_dedup_cosine",
-    "q_dedup_recall_lsh",
-    "q_embed_cov",
-    "q_embed_pca_power",
-    "q_dedup_clusters",
-    # trailing no-data micro-batch skipped; overrides scoped to start()
+    # trailing no-data micro-batch skipped; overrides scoped to start();
+    # state stores sized to the task slots (up to 8)
     "q_stream_dedup_watermarked",
     "q_stream_srm",
     "q_stream_psi",
@@ -144,14 +148,8 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_sessions",
     "q_stream_static_join",
     "q_stream_stream_join",
-    # materialization changed — persists now go through share()
-    "q_graph_pagerank",
-    "q_pipeline_quality_model",
     # staging rule — oracle path now from staging.path
     "q_tpch_q02",
-    "q_tpch_q09",
-    "q_tpch_q11",
-    "q_tpch_q16",
     "q_tpch_q20",
     "q_source_schema_merge",
     "q_sim_topk_ivf",

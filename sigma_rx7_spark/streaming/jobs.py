@@ -36,30 +36,16 @@ from ..materialize import share, snapshot
 from ..registry import query
 from ..operators.incremental import MERGE_CUTOFF
 
-STREAM_STATE_PARTITIONS = 8
-# State-store count for the heavily-stateful jobs below. A streaming
-# query's state partition count is pinned by spark.sql.shuffle.partitions
-# when the query (checkpoint) FIRST starts, and every micro-batch pays
-# per-partition state-store open/commit/checkpoint I/O for EVERY stateful
-# operator — so the right number tracks open-state cardinality, not CPU
-# count. At sf0.1 the dedup+agg pair below holds ~300k key rows: 8 stores
-# of ~40k rows each beat 64 stores of 5k (measured 7.9 s -> 1.6 s warm —
-# the fixed per-store commit cost dominated). A production deployment
-# with billions of open keys raises this with the data (it is a
-# deployment knob, not a semantic one: partitioning never changes what a
-# keyed aggregate computes, and the oracle gate proves it).
-
-
 # Session-conf seam for the file source's per-micro-batch rate limit.
 # Unset (the default and the harness posture) the source drains in one
 # availableNow batch; a deployment — or the two-chunk replay tests —
 # sets it so availableNow chops the backlog into bounded micro-batches
 # (at 100 TB you ALWAYS bound micro-batch size: an unbounded first
 # batch after downtime is an OOM, and replaying through bounded batches
-# is exactly the crash-recovery path). Like STREAM_STATE_PARTITIONS,
-# this is a deployment knob, not a semantic one: the windowed results
-# must be chop-invariant, which tests/test_streaming_replay.py proves
-# against each job's own batch oracle.
+# is exactly the crash-recovery path). This is a deployment knob, not
+# a semantic one: the windowed results must be chop-invariant, which
+# tests/test_streaming_replay.py proves against each job's own batch
+# oracle.
 STREAM_MAX_FILES_CONF = "sigma.stream.max_files_per_trigger"
 
 
@@ -75,17 +61,33 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _START_LOCK = threading.Lock()
 
+# Most state stores per stateful operator. Each costs a fixed commit per
+# micro-batch, and past 8 those costs outweigh running them side by side
+# (q_stream_hourly_distinct at sf0.1: 2×32 stores 7.9 s warm vs 1.6 s for
+# 2×8; 2.8 vs 1.2 s at local[32] on 4 cores). Raise it only once one
+# store's keys outgrow an executor.
+MAX_STATE_STORES = 8
+
 
 def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
     """Run one stream to completion with availableNow. This is the only
     ``start()`` in the package.
 
+    Every stream starts with one shuffle partition, and so one state
+    store per stateful operator, per task slot, up to
+    ``MAX_STATE_STORES``: a micro-batch commits every store without
+    adaptive coalescing, so a store past either bound only adds fixed
+    cost. The count never changes what a keyed operator computes.
+
     Each run gets a fresh checkpoint directory, removed when the run
     ends, so no query resumes another's offsets and nothing is left on
     disk. A query captures the session conf when ``start()`` builds it,
-    so ``overrides`` hold only around ``start()``, under one lock: no
-    other query in the session sees them."""
+    so the partition count and ``overrides`` hold only around
+    ``start()``, under one lock: no other query in the session sees
+    them."""
     spark = writer._spark
+    stores = min(spark.sparkContext.defaultParallelism, MAX_STATE_STORES)
+    overrides = {**overrides, "spark.sql.shuffle.partitions": str(stores)}
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
     try:
         writer = (writer.trigger(availableNow=True)
@@ -109,8 +111,7 @@ def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
 
 def run_to_memory(stream_df: DataFrame, name: str,
                   output_mode: str = "complete",
-                  final_no_data_batch: bool = True,
-                  state_partitions: int | None = None) -> DataFrame:
+                  final_no_data_batch: bool = True) -> DataFrame:
     """Drain a streaming DataFrame into a memory sink and return its rows
     (T1 sink side, batch-verifiable).
 
@@ -121,8 +122,10 @@ def run_to_memory(stream_df: DataFrame, name: str,
     sink already holds the full aggregate after the last data batch, and
     an inner join emits nothing at eviction. Measured at sf0.1:
     q_stream_hourly_distinct 1.67 → 1.00 s warm min, rows identical.
-    ``state_partitions`` sizes the state stores (see
-    STREAM_STATE_PARTITIONS). Both hold only for this query's start.
+    It holds only for this query's start. The state stores are sized
+    by ``_drain``, one per task slot up to ``MAX_STATE_STORES``, as for
+    every stream: each store commits once per micro-batch whatever it
+    holds, so its count, not its keys, sets that fixed cost.
 
     The sink is named ``<name>_<uuid>`` and its temp view is dropped as
     soon as it is read: the returned DataFrame keeps the sink's rows,
@@ -133,8 +136,6 @@ def run_to_memory(stream_df: DataFrame, name: str,
     overrides = {}
     if not final_no_data_batch:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if state_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
     view = f"{name}_{uuid.uuid4().hex}"
     try:
         _drain(stream_df.writeStream.format("memory").queryName(view)
@@ -148,15 +149,17 @@ def fold_stream(stream_df: DataFrame, init: DataFrame,
                 fold: Callable[[DataFrame, DataFrame], DataFrame]
                 ) -> DataFrame:
     """Drain a stream through ``foreachBatch`` as a left fold and return
-    the final state: ``state = snapshot(init)``, then
+    the final state: ``state = init``, then
     ``state = snapshot(fold(state, batch))`` per micro-batch.
 
-    ``snapshot`` materializes each state before its micro-batch's
-    DataFrame is gone, and keeps the state's lineage one batch deep
-    instead of replaying every batch since the stream started. Every
-    fold here is the identity on an empty batch, so empty batches are
-    folded like any other."""
-    state = snapshot(init)
+    Only state derived from a micro-batch is snapshotted: ``init`` is a
+    plan on the caller's session that outlives the stream, while a
+    batch's DataFrame is gone once its callback returns. ``snapshot``
+    materializes each state before then, and keeps the state's lineage
+    one batch deep instead of replaying every batch since the stream
+    started. Every fold here is the identity on an empty batch, so
+    empty batches are folded like any other."""
+    state = init
 
     def step(batch: DataFrame, _batch_id: int) -> None:
         nonlocal state
@@ -1545,10 +1548,10 @@ def q_stream_hourly_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     still caught (same recipe as q_stream_ingest_dedup below).
 
     The two chained state stores make this the most state-commit-bound
-    job in the file; it starts with STREAM_STATE_PARTITIONS stores so
-    the per-partition store commit cost is paid
-    {STREAM_STATE_PARTITIONS}×2 times per micro-batch, not 64 (see the
-    constant's sizing note)."""
+    job in the file. Like every stream it starts with one store per
+    task slot, up to ``MAX_STATE_STORES`` (``_drain``): both operators
+    commit every store in each micro-batch, so the store count, not the
+    key count, sets that fixed cost."""
     ev = (read_events_stream(spark, sf_dir)
           .where(F.col("event_type") == "purchase")
           .withWatermark("ts", "1 hour"))
@@ -1559,8 +1562,7 @@ def q_stream_hourly_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
            .agg(F.count(F.lit(1)).cast("bigint").alias("n_users"))
            .select(F.col("window.start").alias("hour_start"), "n_users"))
     return run_to_memory(agg, "stream_hourly_distinct",
-                         final_no_data_batch=False,
-                         state_partitions=STREAM_STATE_PARTITIONS)
+                         final_no_data_batch=False)
 
 
 # ---- T19: streaming approximate distinct per window (T18's sketch twin) ----
@@ -1613,8 +1615,7 @@ def q_stream_hourly_distinct_approx(spark: SparkSession,
                 .alias("n_approx"))
            .select(F.col("window.start").alias("hour_start"), "n_approx"))
     streamed = run_to_memory(agg, "stream_hourly_distinct_approx",
-                             final_no_data_batch=False,
-                             state_partitions=STREAM_STATE_PARTITIONS)
+                             final_no_data_batch=False)
     exact = (load(spark, sf_dir, "events")
              .where(F.col("event_type") == "purchase")
              .groupBy(F.date_trunc("hour", F.col("ts"))

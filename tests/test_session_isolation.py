@@ -1,10 +1,13 @@
 """Queries keep the session as they found it.
 
-``run_to_memory`` sizes state stores (``spark.sql.shuffle.partitions``)
-and skips the trailing no-data micro-batch
-(``spark.sql.streaming.noDataMicroBatches.enabled``) by setting session
-conf. A streaming query captures the session conf when ``start()`` builds
-it, so the overrides must be set only around ``start()``: while the query
+Every stream starts with one shuffle partition, and so one state store
+per stateful operator, per task slot (``defaultParallelism``), up to
+``MAX_STATE_STORES``: a micro-batch commits every store, so each store
+adds a fixed cost. ``streaming.jobs._drain`` sets that count, and
+``run_to_memory``'s skip of the trailing no-data micro-batch
+(``spark.sql.streaming.noDataMicroBatches.enabled``), as session conf.
+A streaming query captures the session conf when ``start()`` builds
+it, so the overrides are set only around ``start()``: while the query
 runs, every other query in the session sees the session's own values.
 
 Its memory sink gets a fresh name per run and its temp view is dropped
@@ -33,37 +36,58 @@ from pyspark.sql.streaming.query import StreamingQuery
 
 from sigma_rx7_spark import io
 from sigma_rx7_spark.registry import load_all
-from sigma_rx7_spark.streaming.jobs import STREAM_STATE_PARTITIONS
+from sigma_rx7_spark.streaming.jobs import MAX_STATE_STORES
 
 ALL = load_all()
 _KEYS = ("spark.sql.shuffle.partitions",
          "spark.sql.streaming.noDataMicroBatches.enabled")
 
 
-def test_stream_overrides_scoped_to_start(spark, sf_dir, monkeypatch):
-    # q_stream_hourly_distinct sets both confs. While it runs, the
-    # session must show its own values; its state stores must still be
-    # sized by the override it started with.
-    own = {k: spark.conf.get(k, None) for k in _KEYS}
-    assert own["spark.sql.shuffle.partitions"] != str(
-        STREAM_STATE_PARTITIONS)
-    seen, progress = [], []
-    await_termination = StreamingQuery.awaitTermination
+# Stateful streams and the fewest state-operator reports each makes.
+_STATE_OPS = {
+    # dedup + count over a watermark, no trailing no-data batch
+    "q_stream_hourly_distinct": 2,
+    # one dedup store
+    "q_stream_dedup": 1,
+    # applyInPandasWithState
+    "q_stream_stateful": 1,
+    # stream-stream left join
+    "q_stream_stream_left": 1,
+}
 
-    def spy(self, *args, **kwargs):
-        seen.append({k: spark.conf.get(k, None) for k in _KEYS})
-        out = await_termination(self, *args, **kwargs)
-        progress.extend(self.recentProgress)
-        return out
 
-    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
-    ALL["q_stream_hourly_distinct"].fn(spark, sf_dir).collect()
-    assert seen == [own]
-    assert {k: spark.conf.get(k, None) for k in _KEYS} == own
+@pytest.mark.parametrize("query", list(_STATE_OPS))
+def test_stream_overrides_scoped_to_start(spark, sf_dir, monkeypatch,
+                                          query):
+    # While the stream runs and after it, the session shows its own
+    # values; every state operator still has one store per task slot,
+    # up to the cap. The session's own partition count is set above the
+    # slot count for the run, so a leaked session value cannot pass for
+    # the rule.
+    slots = spark.sparkContext.defaultParallelism
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 1))
+    try:
+        own = {k: spark.conf.get(k, None) for k in _KEYS}
+        seen, progress = [], []
+        await_termination = StreamingQuery.awaitTermination
+
+        def spy(self, *args, **kwargs):
+            seen.append({k: spark.conf.get(k, None) for k in _KEYS})
+            out = await_termination(self, *args, **kwargs)
+            progress.extend(self.recentProgress)
+            return out
+
+        monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+        ALL[query].fn(spark, sf_dir).collect()
+        assert seen == [own]
+        assert {k: spark.conf.get(k, None) for k in _KEYS} == own
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", session_parts)
     stores = [op.numShufflePartitions
               for p in progress for op in p.stateOperators]
-    assert len(stores) >= 2  # dedup + count, at least one batch
-    assert set(stores) == {STREAM_STATE_PARTITIONS}
+    assert len(stores) >= _STATE_OPS[query]
+    assert set(stores) == {min(slots, MAX_STATE_STORES)}
 
 
 def _run_together(spark, runs):
@@ -84,7 +108,8 @@ def _run_together(spark, runs):
 
 def test_concurrent_streams_match_oracle(spark, sf_dir):
     # One query that overrides both confs beside one that overrides
-    # neither, started together in one session: both equal the oracle.
+    # only the partition count, started together in one session: both
+    # equal the oracle.
     _run_together(spark, [("q_stream_hourly_distinct", sf_dir),
                           ("q_stream_stream_left", sf_dir)])
 
