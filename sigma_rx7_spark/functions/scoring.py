@@ -133,100 +133,46 @@ def q_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Logistic TRAINING (batch gradient descent, engine-exact) ------------
 
-LR_ETA = 0.5       # learning rate
-LR_ROUNDS = 2      # unrolled fixed iterations (PageRank discipline)
-
-# Feature expressions shared by every round and by the oracle text:
-# x1 = scaled price, x2 = scaled priority tier, y = returned-order label.
-_LR_X1 = "(o_totalprice / 600000.0)"
-_LR_X2 = "(CAST(substr(o_orderpriority, 1, 1) AS INTEGER) / 5.0)"
-_LR_Y = "(CASE WHEN o_orderstatus = 'F' THEN 1.0 ELSE 0.0 END)"
+GD_ETA = 0.5       # learning rate
+GD_ROUNDS = 2      # unrolled fixed iterations (PageRank discipline)
 
 
-def _lr_oracle() -> str:
-    """Unrolled batch-GD rounds as CTEs. Per round: p = sigmoid(w·x)
-    6-dp-quantized (exp is libm-drift, compat hazard 2), gradient terms
-    quantized per row and summed exactly, weights = eta * grad / n."""
-    prev = ("0.0", "0.0", "0.0")
-    ctes = []
-    for r in range(1, LR_ROUNDS + 1):
-        w0, w1, w2 = prev
-        p = (f"CAST(CAST(1.0 / (1.0 + exp(-({w0} + {w1} * {_LR_X1}"
-             f" + {w2} * {_LR_X2}))) AS DECIMAL(18,6)) AS DOUBLE)")
-        ctes.append(f"""g{r} AS (
-      SELECT
-        COUNT(*) AS n,
-        CAST(SUM(CAST(({_LR_Y} - {p}) AS DECIMAL(18,6))) AS DOUBLE) AS s0,
-        CAST(SUM(CAST(({_LR_Y} - {p}) * {_LR_X1} AS DECIMAL(18,6)))
-             AS DOUBLE) AS s1,
-        CAST(SUM(CAST(({_LR_Y} - {p}) * {_LR_X2} AS DECIMAL(18,6)))
-             AS DOUBLE) AS s2
-      FROM orders
-    ), w{r} AS (
-      SELECT
-        CAST(CAST({w0} + {LR_ETA} * s0 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w0,
-        CAST(CAST({w1} + {LR_ETA} * s1 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w1,
-        CAST(CAST({w2} + {LR_ETA} * s2 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w2
-      FROM g{r}
-    )""")
-        prev = (f"(SELECT w0 FROM w{r})", f"(SELECT w1 FROM w{r})",
-                f"(SELECT w2 FROM w{r})")
-    w0, w1, w2 = prev
-    p = (f"CAST(CAST(1.0 / (1.0 + exp(-({w0} + {w1} * {_LR_X1}"
-         f" + {w2} * {_LR_X2}))) AS DECIMAL(18,6)) AS DOUBLE)")
-    return f"""
-    WITH {', '.join(ctes)}
-    SELECT
-      (SELECT w0 FROM w{LR_ROUNDS}) AS w0,
-      (SELECT w1 FROM w{LR_ROUNDS}) AS w1,
-      (SELECT w2 FROM w{LR_ROUNDS}) AS w2,
-      CAST(COUNT(*) AS BIGINT) AS n_rows,
-      CAST(CAST(
-        CAST(SUM(CAST(
-          ({_LR_Y} - {p}) * ({_LR_Y} - {p}) AS DECIMAL(18,6)))
-          AS DOUBLE) / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS brier
-    FROM orders
-    """
+def sigmoid_q(z: Column) -> Column:
+    """sigmoid(z), 6-dp-quantized (libm exp drift, compat hazard 2)."""
+    return (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))) \
+        .cast("decimal(18,6)").cast("double")
 
 
-@query("q_ml_logreg_train", oracle=_lr_oracle(),
-       tags=("X1", "F4", "ml", "training"))
-def q_ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOGISTIC-REGRESSION TRAINING inside the engine: the reference
-    SCORES with a fixed logistic (README.md:9,27,77); this learns the
-    weights — {LR_ROUNDS} unrolled batch-gradient-descent rounds on
-    (scaled price, scaled priority tier) → returned-order label, plus
-    the Brier score of the fitted model. The distributed-training
-    primitive in its engine-exact form: each round is ONE partial/final
-    aggregation producing a 3-number gradient (the shuffle carries 3
-    decimals, never rows), the weight update is driver-free (1-row
-    relation crossJoined into the next round — the PageRank unrolled
-    discipline applied to SGD), and determinism holds because the
-    sigmoid output is 6-dp-quantized per row before the exact-decimal
-    gradient sum (libm exp drift, compat hazard 2), so a 1000-executor
-    fit reproduces this fit bit for bit.
+def logistic_p() -> Column:
+    """The fitted score sigmoid_q(w0 + w1*x1 + w2*x2) over columns
+    ``w0..w2`` (a row of ``fit_logistic``) and ``x1, x2``."""
+    return sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
+                     + F.col("w2") * F.col("x2"))
 
-    Scale: rounds are fixed and data-independent (static job graph);
-    per round cost = one scan + one 3-column aggregate; at 100 TB the
-    scan dominates and mini-batching = adding a digest-sample filter
-    (q_split_train_test's bucketing) in front."""
-    o = load(spark, sf_dir, "orders")
-    x1 = (F.col("o_totalprice") / 600000.0)
-    x2 = (F.substring("o_orderpriority", 1, 1).cast("int") / 5.0)
-    y = F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0)
 
-    def sigmoid_q(z: Column) -> Column:
-        return (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))) \
-            .cast("decimal(18,6)").cast("double")
+def fit_logistic(df: DataFrame) -> DataFrame:
+    """1-row (w0, w1, w2): a logistic model of ``y`` on ``x1, x2`` fitted
+    by GD_ROUNDS unrolled batch-gradient-descent rounds from zero
+    weights, the one engine-exact training recipe.
 
-    def round_weights(df: DataFrame, w0, w1, w2) -> DataFrame:
+    Each round is ONE partial/final aggregation over ``df`` producing a
+    3-number gradient (the shuffle carries 3 decimals, never rows):
+    p = sigmoid_q(w·x) is 6-dp-quantized per row, every gradient term
+    (y - p), (y - p)·x1, (y - p)·x2 is quantized to DECIMAL(18,6) and
+    summed exactly, and w += GD_ETA · grad / n is re-quantized to 6 dp.
+    So the fit is independent of partitioning and summation order: a
+    1000-executor fit reproduces this one bit for bit, and
+    ``gd_oracle`` reproduces it in DuckDB. The update is driver-free:
+    the incoming weights ride through the aggregate as max-of-constant
+    and the 1-row weight relation is broadcast-crossJoined into the
+    next round. Rounds are fixed and data-independent (a static job
+    graph); each costs one pass over ``df``, so share ``df`` when it is
+    expensive to recompute."""
+    x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
+
+    def round_weights(rel: DataFrame, w0, w1, w2) -> DataFrame:
         p = sigmoid_q(w0 + w1 * x1 + w2 * x2)
-        # the incoming weights ride through the aggregate as
-        # max-of-constant so the update can reference them post-agg
-        g = df.agg(
+        g = rel.agg(
             F.count(F.lit(1)).alias("n"),
             F.max(w0).alias("_w0"),
             F.max(w1).alias("_w1"),
@@ -237,29 +183,103 @@ def q_ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(((y - p) * x2).cast("decimal(18,6)")).cast("double")
             .alias("s2"),
         )
-        return g.select(
-            (F.col("_w0") + F.lit(LR_ETA) * F.col("s0") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w0"),
-            (F.col("_w1") + F.lit(LR_ETA) * F.col("s1") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w1"),
-            (F.col("_w2") + F.lit(LR_ETA) * F.col("s2") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w2"),
-        )
+        return g.select(*[
+            (F.col(f"_w{i}") + F.lit(GD_ETA) * F.col(f"s{i}") / F.col("n"))
+            .cast("decimal(18,6)").cast("double").alias(f"w{i}")
+            for i in range(3)])
 
-    w = round_weights(o, F.lit(0.0), F.lit(0.0), F.lit(0.0))
-    for _ in range(LR_ROUNDS - 1):
+    w = round_weights(df, F.lit(0.0), F.lit(0.0), F.lit(0.0))
+    for _ in range(GD_ROUNDS - 1):
         w = round_weights(
-            o.crossJoin(F.broadcast(w)),  # 1-row weight relation
+            df.crossJoin(F.broadcast(w)),  # 1-row weight relation
             F.col("w0"), F.col("w1"), F.col("w2"))
-    p = sigmoid_q(F.col("w0") + F.col("w1") * x1 + F.col("w2") * x2)
+    return w
+
+
+def gd_oracle(src: str) -> tuple[list[str], str]:
+    """``fit_logistic`` as DuckDB SQL over the relation ``src`` (columns
+    ``x1, x2, y``): one pair of CTEs ``g<r>, w<r>`` per round, the last
+    named ``w<GD_ROUNDS>``, and the fitted score expression ``p`` over
+    ``x1, x2``."""
+    def score(w0: str, w1: str, w2: str) -> str:
+        return (f"CAST(CAST(1.0 / (1.0 + exp(-({w0} + {w1} * x1"
+                f" + {w2} * x2))) AS DECIMAL(18,6)) AS DOUBLE)")
+
+    prev = ("0.0", "0.0", "0.0")
+    ctes = []
+    for r in range(1, GD_ROUNDS + 1):
+        w0, w1, w2 = prev
+        p = score(w0, w1, w2)
+        ctes.append(f"""g{r} AS (
+      SELECT COUNT(*) AS n,
+        CAST(SUM(CAST((y - {p}) AS DECIMAL(18,6))) AS DOUBLE) AS s0,
+        CAST(SUM(CAST((y - {p}) * x1 AS DECIMAL(18,6))) AS DOUBLE) AS s1,
+        CAST(SUM(CAST((y - {p}) * x2 AS DECIMAL(18,6))) AS DOUBLE) AS s2
+      FROM {src}
+    ), w{r} AS (
+      SELECT
+        CAST(CAST({w0} + {GD_ETA} * s0 / n AS DECIMAL(18,6)) AS DOUBLE)
+          AS w0,
+        CAST(CAST({w1} + {GD_ETA} * s1 / n AS DECIMAL(18,6)) AS DOUBLE)
+          AS w1,
+        CAST(CAST({w2} + {GD_ETA} * s2 / n AS DECIMAL(18,6)) AS DOUBLE)
+          AS w2
+      FROM g{r}
+    )""")
+        prev = (f"(SELECT w0 FROM w{r})", f"(SELECT w1 FROM w{r})",
+                f"(SELECT w2 FROM w{r})")
+    return ctes, score(*prev)
+
+
+def _lr_oracle() -> str:
+    ctes, p = gd_oracle("f")
+    return f"""
+    WITH f AS (
+      SELECT o_totalprice / 600000.0 AS x1,
+             CAST(substr(o_orderpriority, 1, 1) AS INTEGER) / 5.0 AS x2,
+             CASE WHEN o_orderstatus = 'F' THEN 1.0 ELSE 0.0 END AS y
+      FROM orders
+    ), {', '.join(ctes)}
+    SELECT
+      (SELECT w0 FROM w{GD_ROUNDS}) AS w0,
+      (SELECT w1 FROM w{GD_ROUNDS}) AS w1,
+      (SELECT w2 FROM w{GD_ROUNDS}) AS w2,
+      CAST(COUNT(*) AS BIGINT) AS n_rows,
+      CAST(CAST(
+        CAST(SUM(CAST((y - {p}) * (y - {p}) AS DECIMAL(18,6)))
+          AS DOUBLE) / COUNT(*) AS DECIMAL(18,6)) AS DOUBLE) AS brier
+    FROM f
+    """
+
+
+@query("q_ml_logreg_train", oracle=_lr_oracle(),
+       tags=("X1", "F4", "ml", "training"))
+def q_ml_logreg_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOGISTIC-REGRESSION TRAINING inside the engine: the reference
+    SCORES with a fixed logistic (README.md:9,27,77); this learns the
+    weights with ``fit_logistic`` on (scaled price, scaled priority
+    tier) → returned-order label, plus the Brier score of the fitted
+    model — the distributed-training primitive in its engine-exact
+    form.
+
+    Scale: per GD round one scan + one 3-column aggregate; at 100 TB
+    the scan dominates and mini-batching = adding a digest-sample
+    filter (q_split_train_test's bucketing) in front."""
+    f = load(spark, sf_dir, "orders").select(
+        (F.col("o_totalprice") / 600000.0).alias("x1"),
+        (F.substring("o_orderpriority", 1, 1).cast("int") / 5.0)
+        .alias("x2"),
+        F.when(F.col("o_orderstatus") == "F", 1.0).otherwise(0.0)
+        .alias("y"))
+    err = F.col("y") - logistic_p()
     return (
-        o.crossJoin(F.broadcast(w))  # 1-row weight relation
+        f.crossJoin(F.broadcast(fit_logistic(f)))  # 1-row weight relation
         .agg(
             F.max("w0").alias("w0"),
             F.max("w1").alias("w1"),
             F.max("w2").alias("w2"),
             F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            (F.sum(((y - p) * (y - p)).cast("decimal(18,6)"))
+            (F.sum((err * err).cast("decimal(18,6)"))
              .cast("double") / F.count(F.lit(1)))
             .cast("decimal(18,6)").cast("double").alias("brier"),
         )

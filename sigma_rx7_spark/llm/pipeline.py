@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scoring import fit_logistic, gd_oracle, logistic_p
 from ..functions.text import tokens
 from ..io import load
 from ..materialize import share
@@ -414,8 +415,6 @@ def q_pipeline_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Model-based quality filtering (trained classifier gate) -------------
 
-QF_ETA = 0.5       # learning rate
-QF_ROUNDS = 2      # unrolled batch-GD rounds (q_ml_logreg_train discipline)
 # Positive class: English documents — the metadata label the classifier
 # learns to predict FROM TEXT FEATURES alone (the wiki-vs-crawl weak
 # supervision behind fastText-style quality/language gates; the lang
@@ -451,45 +450,16 @@ _QF_FEATURES = f"""
 
 
 def _gd_ctes_and_p() -> tuple[list, str]:
-    """The unrolled-GD CTE chain over the feature CTE plus the final
-    quantized sigmoid expression — the shared core of every oracle
-    that scores documents with the fitted quality gate (_qf_oracle,
-    _ml_eval_oracle, _lift_oracle, _calibration_oracle). One builder
-    so the oracles can never train different models."""
-    prev = ("0.0", "0.0", "0.0")
-    ctes = [_QF_FEATURES]
-    for r in range(1, QF_ROUNDS + 1):
-        w0, w1, w2 = prev
-        p = (f"CAST(CAST(1.0 / (1.0 + exp(-({w0} + {w1} * x1"
-             f" + {w2} * x2))) AS DECIMAL(18,6)) AS DOUBLE)")
-        ctes.append(f"""g{r} AS (
-      SELECT COUNT(*) AS n,
-        CAST(SUM(CAST((y - {p}) AS DECIMAL(18,6))) AS DOUBLE) AS s0,
-        CAST(SUM(CAST((y - {p}) * x1 AS DECIMAL(18,6))) AS DOUBLE) AS s1,
-        CAST(SUM(CAST((y - {p}) * x2 AS DECIMAL(18,6))) AS DOUBLE) AS s2
-      FROM f
-    ), w{r} AS (
-      SELECT
-        CAST(CAST({w0} + {QF_ETA} * s0 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w0,
-        CAST(CAST({w1} + {QF_ETA} * s1 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w1,
-        CAST(CAST({w2} + {QF_ETA} * s2 / n AS DECIMAL(18,6)) AS DOUBLE)
-          AS w2
-      FROM g{r}
-    )""")
-        prev = (f"(SELECT w0 FROM w{r})", f"(SELECT w1 FROM w{r})",
-                f"(SELECT w2 FROM w{r})")
-    w0, w1, w2 = prev
-    p = (f"CAST(CAST(1.0 / (1.0 + exp(-({w0} + {w1} * x1"
-         f" + {w2} * x2))) AS DECIMAL(18,6)) AS DOUBLE)")
-    return ctes, p
+    """The feature CTE plus ``gd_oracle`` over it, and the fitted score
+    expression — the shared core of every oracle that scores documents
+    with the quality gate, so the oracles can never train different
+    models."""
+    ctes, p = gd_oracle("f")
+    return [_QF_FEATURES, *ctes], p
 
 
 def _qf_oracle() -> str:
-    """Unrolled GD over the feature CTE, then a corpus-wide scoring pass
-    grouped by source — _lr_oracle's recipe (scoring.py) retargeted at
-    text-quality features."""
+    """The fitted gate's corpus-wide scoring pass grouped by source."""
     ctes, p = _gd_ctes_and_p()
     ctes.append(f"""scored AS (
       SELECT source, n_chars, {p} AS p FROM f
@@ -511,13 +481,6 @@ def _qf_oracle() -> str:
     FROM scored
     GROUP BY source
     """
-
-
-
-
-def _sigmoid_q(z):
-    return (F.lit(1.0) / (F.lit(1.0) + F.exp(-z))) \
-        .cast("decimal(18,6)").cast("double")
 
 
 def quality_features(d: DataFrame) -> DataFrame:
@@ -544,7 +507,7 @@ def quality_features(d: DataFrame) -> DataFrame:
     )
     # Share the NUMERIC feature relation (r15, guide §1.2
     # step 1): every GD-family consumer makes >= 3 passes over feats
-    # (QF_ROUNDS fit rounds + scoring), and without a materialization
+    # (GD_ROUNDS fit rounds + scoring), and without a materialization
     # point each pass re-tokenized the whole corpus — stopword filter +
     # regexp per document per pass. One tokenizing scan now feeds every
     # round/score pass reading (doc_id, source, n_chars, x1, x2, y) —
@@ -553,37 +516,14 @@ def quality_features(d: DataFrame) -> DataFrame:
     return share(feats)
 
 
-def fit_quality_weights(feats: DataFrame) -> DataFrame:
-    """1-row (w0,w1,w2) after QF_ROUNDS engine-exact batch-GD rounds."""
-    def round_weights(df, w0, w1, w2):
-        p = _sigmoid_q(w0 + w1 * F.col("x1") + w2 * F.col("x2"))
-        g = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max(w0).alias("_w0"),
-            F.max(w1).alias("_w1"),
-            F.max(w2).alias("_w2"),
-            F.sum((F.col("y") - p).cast("decimal(18,6)"))
-            .cast("double").alias("s0"),
-            F.sum(((F.col("y") - p) * F.col("x1")).cast("decimal(18,6)"))
-            .cast("double").alias("s1"),
-            F.sum(((F.col("y") - p) * F.col("x2")).cast("decimal(18,6)"))
-            .cast("double").alias("s2"),
-        )
-        return g.select(
-            (F.col("_w0") + F.lit(QF_ETA) * F.col("s0") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w0"),
-            (F.col("_w1") + F.lit(QF_ETA) * F.col("s1") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w1"),
-            (F.col("_w2") + F.lit(QF_ETA) * F.col("s2") / F.col("n"))
-            .cast("decimal(18,6)").cast("double").alias("w2"),
-        )
-
-    w = round_weights(feats, F.lit(0.0), F.lit(0.0), F.lit(0.0))
-    for _ in range(QF_ROUNDS - 1):
-        w = round_weights(
-            feats.crossJoin(F.broadcast(w)),  # 1-row weight relation
-            F.col("w0"), F.col("w1"), F.col("w2"))
-    return w
+def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, n_chars, y, p): every document scored by the
+    quality gate, a ``fit_logistic`` model of ``y`` on the
+    ``quality_features`` of the whole corpus."""
+    feats = quality_features(load(spark, sf_dir, "documents"))
+    return (feats.crossJoin(F.broadcast(fit_logistic(feats)))
+            .select("doc_id", "source", "n_chars", "y",
+                    logistic_p().alias("p")))
 
 
 @query("q_pipeline_quality_model", oracle=_qf_oracle(),
@@ -593,21 +533,14 @@ def q_pipeline_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     learn a logistic gate in-engine (positives = documents whose lang
     metadata says English — weak supervision; features = stopword ratio
     + scaled mean token length, which genuinely predict it), then score
-    the WHOLE corpus and report keep/drop per source — the fastText-style classifier gate of production curation
-    pipelines (wiki-vs-crawl), expressed with q_ml_logreg_train's
-    engine-exact unrolled-GD recipe so a 1000-executor fit reproduces
-    this fit bit for bit.
+    the WHOLE corpus and report keep/drop per source — the
+    fastText-style classifier gate of production curation pipelines
+    (wiki-vs-crawl), trained by ``fit_logistic`` and scored by
+    ``quality_scores``.
 
-    Scale shape: each GD round is one scan + one 3-number aggregate
-    (the shuffle carries 3 decimals); the fitted 1-row weight relation
-    broadcasts into the scoring pass, which is a pure projection + one
-    per-source aggregate. Features are cheap column expressions — no
-    Python, no tokenizer UDF; sigmoid outputs are 6-dp-quantized before
-    every aggregation (libm exp drift, compat hazard 2)."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
+    Scale shape: after the GD rounds, the scoring pass is a pure
+    projection + one per-source aggregate. Features are cheap column
+    expressions — no Python, no tokenizer UDF."""
     # Keep-above-mean-score gate: quality filters threshold on a score
     # QUANTILE of the fitted distribution, not an absolute 0.5 (the
     # class prior shifts the whole distribution under imbalance). The
@@ -615,10 +548,8 @@ def q_pipeline_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shared because the threshold aggregate and the final report
     # both consume it (the final plan embeds scored twice — once under
     # thr, once in the report).
-    scored = share(
-        feats.crossJoin(F.broadcast(w))  # 1-row weight relation
-        .select("source", "n_chars", p.alias("p"))
-    )
+    scored = share(quality_scores(spark, sf_dir)
+                   .select("source", "n_chars", "p"))
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("thr"))
@@ -743,7 +674,7 @@ def _ml_eval_oracle() -> str:
 def q_ml_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MODEL EVALUATION in-engine: confusion matrix and
     precision/recall/F1/accuracy of the trained quality gate
-    (fit_quality_weights — the exact weights q_pipeline_quality_model
+    (quality_scores — the exact weights q_pipeline_quality_model
     ships) against its weak-supervision labels AT THE SHIPPED DECISION
     POINT — the mean-score threshold the keep gate actually uses (a
     fixed 0.5 sits above the prior-shifted score distribution here and
@@ -753,12 +684,7 @@ def q_ml_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from integers (engine-exact without quantization); the threshold is
     a sufficient-statistics quotient compared against the 6-dp score
     grid identically in both engines."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = share(feats.crossJoin(F.broadcast(w))
-                   .select("y", p.alias("p")))
+    scored = share(quality_scores(spark, sf_dir).select("y", "p"))
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("thr"))
@@ -1097,12 +1023,7 @@ def q_ml_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift is two IEEE divisions from exact counts."""
     from pyspark.sql import Window
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    sc = feats.crossJoin(F.broadcast(w)).select(
-        "doc_id", "y", p.alias("p"))
+    sc = quality_scores(spark, sf_dir).select("doc_id", "y", "p")
     wd = Window.orderBy(F.col("p").desc(), "doc_id")
     deciled = sc.select("y", F.ntile(10).over(wd).alias("decile"))
     cells = deciled.groupBy("decile").agg(
@@ -1174,11 +1095,7 @@ def q_ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     division."""
     from ..compat import QDEC
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    scored = quality_scores(spark, sf_dir).select("y", "p")
     binned = scored.select(
         F.least(F.floor(F.col("p") * CAL_BINS).cast("int"),
                 F.lit(CAL_BINS - 1)).alias("bin"),
@@ -1252,11 +1169,7 @@ def q_ml_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..compat import QDEC
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    scored = quality_scores(spark, sf_dir).select("y", "p")
     per_value = scored.groupBy("p").agg(
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("y") == 0.0, 1).otherwise(0)).alias("c0"))
@@ -1339,11 +1252,7 @@ def q_ml_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..compat import QDEC
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    scored = quality_scores(spark, sf_dir).select("y", "p")
     per_value = scored.groupBy("p").agg(
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("y") == 0.0, 1).otherwise(0)).alias("c0"))
@@ -1443,11 +1352,7 @@ def q_ml_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     after their single division."""
     from ..compat import QDEC
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    scored = quality_scores(spark, sf_dir).select("y", "p")
     g = scored.agg(
         F.count(F.lit(1)).alias("n"),
         (F.sum("y").cast("double") / F.count(F.lit(1))).alias("obar"),
@@ -1538,11 +1443,7 @@ def q_ml_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over that bounded relation, and the gap numerator
     |n_neg·cumP − n_pos·cumN| stays exact bigint; the statistic is one
     IEEE division of exact integers."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    sc = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    sc = quality_scores(spark, sf_dir).select("y", "p")
     per_score = sc.groupBy("p").agg(
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).alias("c_pos"),
         F.sum(F.when(F.col("y") == 1.0, 0).otherwise(1)).alias("c_neg"))
@@ -1626,12 +1527,8 @@ def q_ml_score_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the scoring pass is one map over docs; everything after is
     a ≤{SCORE_PSI_BINS}-row relation. Each PSI term is quantized at
     9 dp before the final sum, so engine summation order is moot."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    sc = feats.crossJoin(F.broadcast(w)).select(
-        F.pmod(F.col("doc_id"), F.lit(2)).alias("half"), p.alias("p"))
+    sc = quality_scores(spark, sf_dir).select(
+        F.pmod(F.col("doc_id"), F.lit(2)).alias("half"), "p")
     binned = sc.select(
         "half",
         F.least(F.floor(F.col("p") * SCORE_PSI_BINS).cast("int"),
@@ -1730,12 +1627,7 @@ def q_ml_mcc(spark: SparkSession, sf_dir: str) -> DataFrame:
     mul; never bigint-overflowing at 100 TB counts), one quantized
     division each; MCC NULL on a degenerate margin instead of a
     divide-by-zero."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = share(feats.crossJoin(F.broadcast(w))
-                   .select("y", p.alias("p")))
+    scored = share(quality_scores(spark, sf_dir).select("y", "p"))
     thr = scored.agg(
         (F.sum(F.col("p").cast("decimal(18,6)")).cast("double")
          / F.count(F.lit(1))).alias("thr"))
@@ -1868,16 +1760,12 @@ def q_ml_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-dp-quantized BEFORE the order-insensitive decimal sum (compat
     rule 2); the prior term's two ln calls are quantized at 9 dp then
     assembled in exact IEEE; three final divisions, 6 dp."""
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
     eps = float(LOGLOSS_EPS)
-    p_raw = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                       + F.col("w2") * F.col("x2"))
-    p = F.least(F.greatest(p_raw, F.lit(eps)), F.lit(1.0 - eps))
+    p = F.least(F.greatest(F.col("p"), F.lit(eps)), F.lit(1.0 - eps))
     t = (-(F.col("y") * F.log(F.col("p"))
            + (1.0 - F.col("y")) * F.log(1.0 - F.col("p")))) \
         .cast("decimal(27,9)")
-    sc = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    sc = quality_scores(spark, sf_dir).select("y", p.alias("p"))
     agg = sc.select("y", t.alias("t")).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("y").alias("npos"),
@@ -1980,11 +1868,7 @@ def q_ml_operating_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..compat import QDEC
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
+    scored = quality_scores(spark, sf_dir).select("y", "p")
     per_value = scored.groupBy("p").agg(
         F.sum(F.when(F.col("y") == 1.0, 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("y") == 0.0, 1).otherwise(0)).alias("c0"))

@@ -1713,9 +1713,71 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---- Exact distributed median (binned two-pass, no global sort) ----------
+# ---- Exact distributed rank selection (binned, no global sort) -----------
 
-MEDIAN_BINS = 1024
+RANK_BINS = 1024
+
+
+def rank_select(rel: DataFrame, key: str, v: str,
+                ranks: dict[str, Column]) -> DataFrame:
+    """One row per ``key`` group of ``rel``: ``n`` (the group's row
+    count) plus, for each ``label: rank`` of ``ranks``, a column
+    ``label`` holding the group's ``v`` value at that 1-based ascending
+    rank. A rank is a Column over ``n``, cast to bigint.
+
+    The exact grouped quantile without a global sort, in three passes
+    over ``rel``:
+
+    1. one aggregate for per-group (n, min, max);
+    2. one aggregate for a RANK_BINS-bin equal-width histogram of ``v``;
+       a cumulative window over the BIN relation (<= groups x bins
+       rows) locates the bin holding each rank and the residual offset
+       inside it — every rank of a group shares the one histogram;
+    3. a join keeps ONLY rows in a located bin (~n/bins rows per rank),
+       ranks them per (group, label) and picks the offset row.
+
+    Nothing sorts more than one bin's worth of a group, and every
+    shuffle is histogram- or bin-sized. Ties are harmless: rank
+    permutations among equal values select the same VALUE. The stats
+    and located-bin relations (<= groups x labels rows) are shared, so
+    the plan takes exactly the three passes. ``key`` and ``v`` must not
+    collide with the working columns (n, v_lo, v_hi, bin, cnt, cum,
+    label, rk, offset, rk_in_bin)."""
+    stats = share(rel.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(v).alias("v_lo"),
+        F.max(v).alias("v_hi")))
+    span = F.col("v_hi") - F.col("v_lo")
+    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
+        F.floor((F.col(v) - F.col("v_lo")) * RANK_BINS / span),
+        F.lit(RANK_BINS - 1))).cast("int")
+    binned = rel.join(F.broadcast(stats), key) \
+        .select(key, v, bin_of.alias("bin"))
+    hist = binned.groupBy(key, "bin").agg(F.count(F.lit(1)).alias("cnt"))
+    targets = stats.select(key, "n", F.explode(F.create_map(*[
+        c for label, rk in ranks.items()
+        for c in (F.lit(label), rk.cast("bigint"))])).alias("label", "rk"))
+    wcum = Window.partitionBy(key).orderBy("bin") \
+        .rowsBetween(Window.unboundedPreceding, 0)
+    located = share(
+        hist.withColumn("cum", F.sum("cnt").over(wcum))
+        .join(F.broadcast(targets), key)
+        .where((F.col("cum") >= F.col("rk"))
+               & (F.col("cum") - F.col("cnt") < F.col("rk")))
+        .select(key, "label", "bin", "n",
+                (F.col("rk") - (F.col("cum") - F.col("cnt")))
+                .alias("offset")))
+    wbin = Window.partitionBy(key, "label").orderBy(v)
+    hits = (binned.join(F.broadcast(located), [key, "bin"])
+            .withColumn("rk_in_bin", F.row_number().over(wbin))
+            .where(F.col("rk_in_bin") == F.col("offset")))
+    if len(ranks) == 1:
+        # already one row per group: a pivot would add a shuffle stage
+        return hits.select(key, "n", F.col(v).alias(*ranks))
+    return hits.groupBy(key).agg(
+        F.max("n").alias("n"),
+        *[F.max(F.when(F.col("label") == label, F.col(v))).alias(label)
+          for label in ranks])
 
 
 @query(
@@ -1737,64 +1799,15 @@ MEDIAN_BINS = 1024
 def q_agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT grouped median without a global sort — the 100 TB quantile
     recipe (sketches like q_agg_approx_quantile trade exactness for one
-    pass; this keeps exactness and pays two):
-
-    1. one aggregate for per-group (n, min, max);
-    2. one aggregate for a {MEDIAN_BINS}-bin histogram; a window over
-       the BIN relation (<= groups x bins rows, tiny) locates the bin
-       holding the target rank and the residual offset inside it;
-    3. a second scan keeps ONLY rows in each group's target bin
-       (~n/bins rows), ranks them per group, and picks the offset row.
-
-    Nothing ever sorts more than one bin's worth of a group, and every
-    shuffle is either histogram-sized or bin-sized. The oracle global-
-    sorts in DuckDB (fine at oracle scale) for the same lower-median
-    definition: the value at rank (n+1)//2. Ties are harmless: rank
-    permutations among equal values select the same VALUE, and only the
-    value is emitted."""
+    pass; ``rank_select`` keeps exactness and pays three). The oracle
+    global-sorts in DuckDB (fine at oracle scale) for the same
+    lower-median definition: the value at rank (n+1)//2."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice")
-    stats = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_extendedprice").alias("v_lo"),
-        F.max("l_extendedprice").alias("v_hi"))
-    # Share the two tiny relations (r15, guide §1.2 step 1):
-    # stats (<= |groups| rows) feeds both binned references and the
-    # rank targets, and target (<= |groups| rows) re-embedded the whole
-    # binned subtree at the final join — 5 fact scans in one plan for a
-    # 3-pass algorithm. Shared, the plan takes exactly the three
-    # passes the recipe needs (stats, histogram, bin-pick).
-    stats = share(stats)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("l_extendedprice") - F.col("v_lo"))
-                * MEDIAN_BINS / span),
-        F.lit(MEDIAN_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "l_returnflag") \
-        .select("l_returnflag", "l_extendedprice", bin_of.alias("bin"))
-    hist = binned.groupBy("l_returnflag", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("l_returnflag").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    target = (
-        hist.join(F.broadcast(stats.select(
-            "l_returnflag", ((F.col("n") + 1) / 2).cast("bigint")
-            .alias("rk"), "n")), "l_returnflag")
-        .withColumn("cum", F.sum("cnt").over(wcum))
-        .where((F.col("cum") >= F.col("rk"))
-               & (F.col("cum") - F.col("cnt") < F.col("rk")))
-        .select("l_returnflag", "bin",
-                (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                .alias("offset"), "n")
-    )
-    target = share(target)
-    wbin = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     return (
-        binned.join(F.broadcast(target), ["l_returnflag", "bin"])
-        .withColumn("rk_in_bin", F.row_number().over(wbin))
-        .where(F.col("rk_in_bin") == F.col("offset"))
-        .select("l_returnflag",
-                F.col("l_extendedprice").alias("median_price"),
+        rank_select(li, "l_returnflag", "l_extendedprice",
+                    {"median_price": (F.col("n") + 1) / 2})
+        .select("l_returnflag", "median_price",
                 F.col("n").cast("bigint").alias("n_rows"))
     )
 
@@ -1915,70 +1928,23 @@ QUANTILE_PS = (0.5, 0.95, 0.99)
     tags=("A12", "quantile", "two-pass"),
 )
 def q_agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT grouped p50/p95/p99 in two passes, no global sort — the
-    scalable exact answer to the question A12's sketches approximate
-    (and A27's single-median recipe generalized to a quantile VECTOR
-    for one extra histogram-relation window, not one extra scan per
-    quantile): all three target ranks (rank = CEIL(p·n), the discrete
-    inverse-CDF definition — both engines evaluate the identical IEEE
+    """EXACT grouped p50/p95/p99 without a global sort — the scalable
+    exact answer to the question A12's sketches approximate, and A27's
+    single median generalized to a quantile VECTOR: ``rank_select``
+    locates all three ranks in the SAME histogram, so the vector costs
+    no extra scan per quantile. Rank = CEIL(p·n), the discrete
+    inverse-CDF definition; both engines evaluate the identical IEEE
     expression, so even a 0.95·n landing microscopically above an
-    integer agrees) locate their bins in the SAME {MEDIAN_BINS}-bin
-    histogram; the second scan keeps only rows in any group's target
-    bins and ranks once per (group, quantile). Shuffle volume: one
-    histogram, then ~3·n/bins rows."""
+    integer agrees."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice")
-    stats = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_extendedprice").alias("v_lo"),
-        F.max("l_extendedprice").alias("v_hi"))
-    # Same materialization discipline as A27 above: stats and located
-    # are group-cardinality-bounded but each re-embedded a fact-scan
-    # subtree per consumer (5 scans in-plan for the 3-pass recipe).
-    stats = share(stats)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("l_extendedprice") - F.col("v_lo"))
-                * MEDIAN_BINS / span),
-        F.lit(MEDIAN_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "l_returnflag") \
-        .select("l_returnflag", "l_extendedprice", bin_of.alias("bin"))
-    hist = binned.groupBy("l_returnflag", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    targets = (
-        stats.select(
-            "l_returnflag", "n",
-            F.explode(F.array(*[F.lit(p) for p in QUANTILE_PS]))
-            .alias("p"))
-        .select("l_returnflag", "p", "n",
-                F.ceil(F.col("p") * F.col("n")).cast("bigint").alias("rk"))
-    )
-    wcum = Window.partitionBy("l_returnflag").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (
-        hist.withColumn("cum", F.sum("cnt").over(wcum))
-        .join(F.broadcast(targets), "l_returnflag")
-        .where((F.col("cum") >= F.col("rk"))
-               & (F.col("cum") - F.col("cnt") < F.col("rk")))
-        .select("l_returnflag", "p", "bin", "n",
-                (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                .alias("offset"))
-    )
-    located = share(located)
-    wbin = Window.partitionBy("l_returnflag", "p") \
-        .orderBy("l_extendedprice")
-    hits = (
-        binned.join(F.broadcast(located), ["l_returnflag", "bin"])
-        .withColumn("rk_in_bin", F.row_number().over(wbin))
-        .where(F.col("rk_in_bin") == F.col("offset"))
-    )
+    labels = [f"p{round(p * 100)}" for p in QUANTILE_PS]
     return (
-        hits.groupBy("l_returnflag")
-        .agg(*[F.max(F.when(F.col("p") == F.lit(p),
-                            F.col("l_extendedprice")))
-               .alias(f"p{str(p)[2:]}" if p != 0.5 else "p50")
-               for p in QUANTILE_PS],
-             F.max("n").cast("bigint").alias("n_rows"))
+        rank_select(li, "l_returnflag", "l_extendedprice",
+                    {label: F.ceil(F.lit(p) * F.col("n"))
+                     for label, p in zip(labels, QUANTILE_PS)})
+        .select("l_returnflag", *labels,
+                F.col("n").cast("bigint").alias("n_rows"))
     )
 
 
@@ -6314,62 +6280,24 @@ def q_agg_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     entered; quantile alone under-states a heavy tail, which is CVaR's
     whole reason to exist as the coherent risk measure).
 
-    Exactness at scale: the percentile comes from the A27/A30 two-pass
-    binning (one {{IQR_BINS}}-bin histogram per segment, rank-in-bin
-    selection on only the target bin's rows — no global sort); the
-    rank compare rk·{CVAR_P_DEN} ≥ {CVAR_P_NUM}·n stays in integer
-    arithmetic (no float quantile index). The tail mean is a second
-    fact aggregate against the broadcast 3-row VaR relation with the
-    standing decimal-sum discipline."""
-    from .quality import IQR_BINS
-
+    Exactness at scale: the percentile comes from ``rank_select`` (no
+    global sort); the rank compare rk·{CVAR_P_DEN} ≥ {CVAR_P_NUM}·n
+    stays in integer arithmetic (no float quantile index). The tail
+    mean is a second fact aggregate against the broadcast 3-row VaR
+    relation with the standing decimal-sum discipline."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("segment"),
         F.col("l_extendedprice").alias("v"))
-    stats = li.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"))
-    # A27/A30 materialization discipline (r15, guide §1.2 step 1):
-    # stats, located and the 3-row VaR relation each fed multiple
-    # consumers and re-embedded fact-scan subtrees (6 scans in one
-    # plan for a 4-pass algorithm: stats, histogram, rank-in-bin pick,
-    # tail aggregate). Shared, the plan takes exactly those four
-    # passes.
-    stats = share(stats)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
-        F.lit(IQR_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "segment") \
-        .select("segment", "v", bin_of.alias("bin"))
     # rank = ceil(n·NUM/DEN) computed as (n·NUM + DEN − 1) div DEN —
     # PURE bigint arithmetic (ADVICE r13: F.ceil over `/` goes through
     # double division, exact for 95/100 today but fragile if the
     # quantile constants change to a ratio that rounds across an
     # integer boundary; the oracle's rk·DEN ≥ NUM·n compare is integer,
-    # so the engine side must be too)
-    targets = stats.select(
-        "segment", "n",
-        F.expr(f"CAST((n * {CVAR_P_NUM} + {CVAR_P_DEN - 1}) "
-               f"DIV {CVAR_P_DEN} AS BIGINT)").alias("rk"))
-    hist = binned.groupBy("segment", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("segment").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-               .join(F.broadcast(targets), "segment")
-               .where((F.col("cum") >= F.col("rk"))
-                      & (F.col("cum") - F.col("cnt") < F.col("rk")))
-               .select("segment", "bin", "n",
-                       (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                       .alias("offset")))
-    located = share(located)
-    wbin = Window.partitionBy("segment").orderBy("v")
-    var_rel = (binned.join(F.broadcast(located), ["segment", "bin"])
-               .withColumn("rk_in_bin", F.row_number().over(wbin))
-               .where(F.col("rk_in_bin") == F.col("offset"))
-               .select("segment", "n", F.col("v").alias("var_p")))
-    var_rel = share(var_rel)
+    # so the engine side must be too). The 3-row VaR relation feeds the
+    # tail aggregate's broadcast, so it is shared.
+    var_rel = share(rank_select(li, "segment", "v", {
+        "var_p": F.expr(f"(n * {CVAR_P_NUM} + {CVAR_P_DEN - 1}) "
+                        f"DIV {CVAR_P_DEN}")}))
     return (li.join(F.broadcast(var_rel), "segment")
             .where(F.col("v") >= F.col("var_p"))
             .groupBy("segment")

@@ -72,12 +72,12 @@ def merge_upsert(base: DataFrame, changes: DataFrame,
     return b.join(c, cond, "full_outer").select(*key_cols, *picked, src)
 
 
-@query(
-    "q_merge_upsert",
-    oracle=f"""
+# Latest change per key applied onto the latest pre-cutoff row per key:
+# the one oracle of the batch MERGE and of its streaming twin
+# (streaming.jobs.q_stream_merge).
+MERGE_ORACLE = f"""
     WITH latest AS (
       SELECT user_id, event_type, event_id, value,
-             CAST(ts AS TIMESTAMP) AS ts,
              ROW_NUMBER() OVER (
                PARTITION BY user_id, event_type
                ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
@@ -115,7 +115,12 @@ def merge_upsert(base: DataFrame, changes: DataFrame,
     FULL OUTER JOIN changes c
       ON b.user_id IS NOT DISTINCT FROM c.user_id
      AND b.event_type IS NOT DISTINCT FROM c.event_type
-    """,
+    """
+
+
+@query(
+    "q_merge_upsert",
+    oracle=MERGE_ORACLE,
     tags=("M1", "merge"),
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..materialize import share
 from ..registry import query
+from .aggregates import rank_select
 
 
 def _violations(name: str, cond):
@@ -2025,7 +2026,6 @@ def q_quality_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Tukey-fence (IQR) outlier audit (Q25) ----------------------------------
 
-IQR_BINS = 1024  # histogram width for the two-pass exact quartiles
 IQR_K_NUM = 3    # fence multiplier 1.5 as the exact rational 3/2 —
 IQR_K_DEN = 2    # the fence compare is then exact decimal arithmetic
 
@@ -2083,62 +2083,22 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.5·IQR is the boxplot-whisker convention every data-quality
     dashboard draws.
 
-    Exactness at scale: the quartiles come from the A27/A30 two-pass
-    binning — one histogram aggregate over {IQR_BINS} bins per
-    segment, rank-in-bin selection on only the target bins' rows — and
-    the fence comparison is EXACT decimal arithmetic with NO division
-    anywhere (1.5 as the rational 3/2 cross-multiplied: v is low iff
-    2·(q1−v) > 3·(q3−q1), identically in the oracle SQL, so neither
-    engine ever materializes a float fence — DuckDB types decimal
-    division as DOUBLE, which the divide-free form sidesteps). The
-    outlier count is a second fact-table aggregate against the
-    broadcast 3-row fence relation; no global sort anywhere (the
-    oracle's ROW_NUMBER statement of the same ranks is the naive
+    Exactness at scale: the quartiles come from ``rank_select`` (both
+    ranks share one histogram), and the fence comparison is EXACT
+    decimal arithmetic with NO division anywhere (1.5 as the rational
+    3/2 cross-multiplied: v is low iff 2·(q1−v) > 3·(q3−q1), identically
+    in the oracle SQL, so neither engine ever materializes a float fence
+    — DuckDB types decimal division as DOUBLE, which the divide-free
+    form sidesteps). The outlier count is a second fact-table aggregate
+    against the broadcast 3-row fence relation; no global sort anywhere
+    (the oracle's ROW_NUMBER statement of the same ranks is the naive
     form)."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("segment"),
         F.col("l_extendedprice").alias("v"))
-    stats = li.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"))
-    # A27/A30 materialization discipline (r15, guide §1.2 step 1):
-    # stats, located and the 3-row fence relation each fed multiple
-    # consumers, re-embedding fact-scan subtrees; shared, the
-    # plan takes exactly the algorithm's four passes (stats,
-    # histogram, rank-in-bin pick, fence aggregate).
-    stats = share(stats)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
-        F.lit(IQR_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "segment") \
-        .select("segment", "v", bin_of.alias("bin"))
-    targets = (stats.select(
-        "segment", "n",
-        F.explode(F.array(F.lit(0.25), F.lit(0.75))).alias("p"))
-        .select("segment", "p", "n",
-                F.ceil(F.col("p") * F.col("n")).cast("bigint")
-                .alias("rk")))
-    hist = binned.groupBy("segment", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("segment").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-               .join(F.broadcast(targets), "segment")
-               .where((F.col("cum") >= F.col("rk"))
-                      & (F.col("cum") - F.col("cnt") < F.col("rk")))
-               .select("segment", "p", "bin", "n",
-                       (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                       .alias("offset")))
-    located = share(located)
-    wbin = Window.partitionBy("segment", "p").orderBy("v")
-    hits = (binned.join(F.broadcast(located), ["segment", "bin"])
-            .withColumn("rk_in_bin", F.row_number().over(wbin))
-            .where(F.col("rk_in_bin") == F.col("offset")))
-    quart = hits.groupBy("segment").agg(
-        F.max("n").alias("n"),
-        F.max(F.when(F.col("p") == 0.25, F.col("v"))).alias("q1"),
-        F.max(F.when(F.col("p") == 0.75, F.col("v"))).alias("q3"))
+    quart = rank_select(li, "segment", "v", {
+        "q1": F.ceil(F.lit(0.25) * F.col("n")),
+        "q3": F.ceil(F.lit(0.75) * F.col("n"))})
     fenced = quart.select(
         "segment", "n", "q1", "q3",
         (IQR_K_NUM * (F.col("q3") - F.col("q1"))).alias("iqr3"))

@@ -90,30 +90,51 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 10 store-count + 13 SQL-binding + 7 no-data-batch
-    # + 15 staging-rule + 4 fold_stream + 1 restaged = 50.
-    # Composition: (a) the 10 stateful streams whose state-store count
-    # changed when every stream began starting with one store per task
-    # slot up to 8 (streaming.jobs._drain) and not yet in the window;
-    # (b) the 12 queries whose SQL text now binds its relations as
-    # spark.sql DataFrame arguments (io.sql or a named placeholder)
-    # instead of session temp views, or whose conf flip became a write
-    # option (q_sink_backfill), plus q_tpch_q01 for the TPC-H runner
-    # (plans unchanged); (c) 7 streams whose no-data-batch skip holds
-    # its conf only around start() and whose store count also changed;
-    # (d) the 15 queries whose oracle now reads a path computed by
-    # staging.path under a new name (TPC-H partsupp, IVF centroids,
-    # schema-merge batches) or whose staged artifact gained an input
-    # stamp or a new guard in staging.stage (media files, the Q15
-    # revenue view, DPP fact, z-order and indexed layouts); (e) the 4
-    # queries whose foreachBatch loop became streaming.jobs.fold_stream,
-    # whose fold now starts from the initial state unmaterialized;
-    # (f) 1 older name whose staging moved onto staging.stage. They
-    # replace the oldest already-proven names (the five Arrow-kernel
-    # queries, the two share() adoptees and TPC-H Q09/Q11/Q16).
+    # Window: 18 shared-estimator + 10 store-count + 11 SQL-binding
+    # + 7 no-data-batch + 4 fold_stream = 50.
+    # Composition: (a) the 13 queries that now fit their logistic model
+    # through functions.scoring.fit_logistic (oracles through
+    # gd_oracle), the 4 exact quantiles that now pick through
+    # operators.aggregates.rank_select, and q_merge_upsert, whose oracle
+    # became incremental.MERGE_ORACLE (shared with q_stream_merge,
+    # already in (e)); (b) the 10 stateful streams whose state-store
+    # count changed when every stream began starting with one store per
+    # task slot up to 8 (streaming.jobs._drain); (c) 11 of the queries
+    # whose SQL text now binds its relations as spark.sql DataFrame
+    # arguments (io.sql or a named placeholder) instead of session temp
+    # views, or whose conf flip became a write option (q_sink_backfill),
+    # plus q_tpch_q01 for the TPC-H runner (plans unchanged); (d) 7
+    # streams whose no-data-batch skip holds its conf only around
+    # start() and whose store count also changed; (e) the 4 queries
+    # whose foreachBatch loop became streaming.jobs.fold_stream, whose
+    # fold now starts from the initial state unmaterialized. They
+    # replace the oldest already-proven names (the 15 staging-rule
+    # queries, the restaged MV rollup answer and the two subquery
+    # SQL-binding queries).
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
+    # batch-GD fit through fit_logistic / gd_oracle
+    "q_ml_logreg_train",
+    "q_pipeline_quality_model",
+    "q_ml_eval",
+    "q_ml_lift",
+    "q_ml_calibration",
+    "q_ml_auc",
+    "q_ml_pr_curve",
+    "q_ml_brier",
+    "q_ml_ks",
+    "q_ml_score_drift",
+    "q_ml_mcc",
+    "q_ml_logloss",
+    "q_ml_operating_point",
+    # exact binned quantile through rank_select
+    "q_agg_exact_median",
+    "q_agg_exact_quantiles",
+    "q_agg_cvar",
+    "q_quality_iqr",
+    # oracle now incremental.MERGE_ORACLE
+    "q_merge_upsert",
     # state stores sized to the task slots (up to 8) by _drain
     "q_stream_stateful",
     "q_stream_funnel",
@@ -126,8 +147,6 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_hourly_distinct",
     "q_stream_hourly_distinct_approx",
     # SQL binding — relations bound as spark.sql DataFrame arguments
-    "q_subquery_scalar",
-    "q_subquery_exists",
     "q_agg_grouping_sets",
     "q_join_lateral_topk",
     "q_graph_reachability",
@@ -148,30 +167,12 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_sessions",
     "q_stream_static_join",
     "q_stream_stream_join",
-    # staging rule — oracle path now from staging.path
-    "q_tpch_q02",
-    "q_tpch_q20",
-    "q_source_schema_merge",
-    "q_sim_topk_ivf",
-    "q_sim_topk_ivf_staged",
-    "q_sim_index_incremental",
-    "q_sim_recall_ivf",
-    "q_sim_topk_ivfpq",
-    "q_multimodal_fingerprint",
-    "q_source_binaryfile",
-    "q_multimodal_dedup",
-    # staging rule — input-stamped or newly guarded artifact
-    "q_tpch_q15_materialized",
-    "q_join_dpp",
-    "q_scan_zorder",
-    "q_scan_indexed",
-    # foreachBatch loop replaced by fold_stream
+    # foreachBatch loop replaced by fold_stream (q_stream_merge's oracle
+    # is now also incremental.MERGE_ORACLE)
     "q_stream_merge",
     "q_stream_cdc_apply",
     "q_stream_ingest_dedup",
     "q_stream_mv_refresh",
-    # restaged through staging.stage — kept from the oldest cohorts
-    "q_mv_rollup_answer",
 )
 
 # The external checker verifies exactly the first 50 load_all() entries;

@@ -34,7 +34,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from ..io import load, read_stream
 from ..materialize import share, snapshot
 from ..registry import query
-from ..operators.incremental import MERGE_CUTOFF
+from ..operators.incremental import MERGE_CUTOFF, MERGE_ORACLE
 
 # Session-conf seam for the file source's per-micro-batch rate limit.
 # Unset (the default and the harness posture) the source drains in one
@@ -466,41 +466,7 @@ def streaming_merge(base: DataFrame, change_stream: DataFrame,
 
 @query(
     "q_stream_merge",
-    oracle=f"""
-    WITH latest AS (
-      SELECT user_id, event_type, event_id, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type
-               ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-      FROM events
-      WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '{MERGE_CUTOFF}'
-    ), base AS (
-      SELECT user_id, event_type, event_id, value, TRUE AS b_present
-      FROM latest WHERE rn = 1
-    ), chg_latest AS (
-      SELECT user_id, event_type, event_id, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type
-               ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-      FROM events
-      WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '{MERGE_CUTOFF}'
-    ), changes AS (
-      SELECT user_id, event_type, event_id, value, TRUE AS c_present
-      FROM chg_latest WHERE rn = 1
-    )
-    SELECT
-      COALESCE(b.user_id, c.user_id) AS user_id,
-      COALESCE(b.event_type, c.event_type) AS event_type,
-      CASE WHEN c.c_present THEN c.event_id ELSE b.event_id END AS event_id,
-      CASE WHEN c.c_present THEN c.value ELSE b.value END AS value,
-      CASE WHEN c.c_present IS NULL THEN 'base'
-           WHEN b.b_present IS NULL THEN 'insert'
-           ELSE 'update' END AS src
-    FROM base b
-    FULL OUTER JOIN changes c
-      ON b.user_id IS NOT DISTINCT FROM c.user_id
-     AND b.event_type IS NOT DISTINCT FROM c.event_type
-    """,
+    oracle=MERGE_ORACLE,
     tags=("T1", "M1", "streaming", "merge"),
 )
 def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

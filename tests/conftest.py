@@ -21,3 +21,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def quality_scored(spark, sf_dir):
+    """(y, p) of every document under the fitted quality gate."""
+    from sigma_rx7_spark.llm.pipeline import quality_scores
+
+    return [(r["y"], r["p"]) for r in
+            quality_scores(spark, sf_dir).select("y", "p").collect()]

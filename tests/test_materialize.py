@@ -25,6 +25,13 @@
   traced. The two format features under test in ``sources/`` (a
   manifest-pruned file list and a ``mergeSchema`` read) are the row's
   named exceptions.
+- ``functions/scoring.py`` alone runs a batch-gradient-descent round
+  (the Spark weight carry ``F.max(w0)``, the oracle's
+  ``exp(-({w0}``); every model trains through ``fit_logistic`` and
+  every oracle fits through ``gd_oracle``.
+- ``operators/aggregates.py`` alone picks a value by its rank inside a
+  histogram bin (``rk_in_bin``); every exact binned quantile goes
+  through ``rank_select``.
 - ``session.py`` (the required conf, once per session) and
   ``streaming/jobs.py`` (overrides held only around ``start()``) alone
   set session conf; every other module leaves the conf as it found it.
@@ -83,6 +90,8 @@ OWNED = [
         r"|registerTempTable\(")),
     (("session.py", "streaming/jobs.py"), re.compile(r"conf\.(set|unset)\(")),
     ("io.py", _parquet_reads, "io.py:read"),
+    ("functions/scoring.py", re.compile(r"exp\(-\(\{w0\}|F\.max\(w0\)")),
+    ("operators/aggregates.py", re.compile(r"rk_in_bin")),
 ]
 
 # Named exceptions by row id: (module, matched source).

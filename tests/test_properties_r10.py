@@ -388,26 +388,10 @@ def test_cohort_ltv_matches_naive_model(spark, sf_dir):
             cum / sizes[cm], abs=1e-3)
 
 
-def _scored_rows(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from sigma_rx7_spark.io import load
-    from sigma_rx7_spark.llm.pipeline import (_sigmoid_q,
-                                              fit_quality_weights,
-                                              quality_features)
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    return [(r["y"], r["p"]) for r in
-            feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
-            .collect()]
-
-
-def test_pr_curve_matches_naive_model(spark, sf_dir):
+def test_pr_curve_matches_naive_model(spark, sf_dir, quality_scored):
     from sigma_rx7_spark import registry
 
-    scored = _scored_rows(spark, sf_dir)
+    scored = quality_scored
     n_pos = sum(1 for y, _ in scored if y == 1.0)
     got = sorted(registry.get("q_ml_pr_curve").fn(spark, sf_dir)
                  .collect(), key=lambda r: -r["threshold"])
@@ -430,11 +414,11 @@ def test_pr_curve_matches_naive_model(spark, sf_dir):
     assert got[-1]["recall"] == pytest.approx(1.0)
 
 
-def test_brier_matches_naive_model(spark, sf_dir):
+def test_brier_matches_naive_model(spark, sf_dir, quality_scored):
     from sigma_rx7_spark import registry
     from sigma_rx7_spark.llm.pipeline import CAL_BINS
 
-    scored = _scored_rows(spark, sf_dir)
+    scored = quality_scored
     n = len(scored)
     obar = sum(y for y, _ in scored) / n
     brier = sum((p - y) ** 2 for y, p in scored) / n

@@ -243,21 +243,10 @@ def test_cvm_matches_naive_pooled_ecdf(spark, sf_dir):
     assert abs(row["cvm_t"] - t) < 1e-6
 
 
-def test_ml_ks_matches_naive_cdf_gap(spark, sf_dir):
+def test_ml_ks_matches_naive_cdf_gap(spark, sf_dir, quality_scored):
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.io import load
-    from sigma_rx7_spark.llm.pipeline import (_sigmoid_q,
-                                              fit_quality_weights,
-                                              quality_features)
-    from pyspark.sql import functions as F
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    scored = [(r["y"], r["p"]) for r in
-              feats.crossJoin(F.broadcast(w))
-              .select("y", p.alias("p")).collect()]
+    scored = quality_scored
     pos = sorted(pp for y, pp in scored if y == 1.0)
     neg = sorted(pp for y, pp in scored if y != 1.0)
     ks = max(abs(np.searchsorted(pos, x, side="right") / len(pos)

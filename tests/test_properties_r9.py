@@ -555,23 +555,12 @@ def test_kcore_invariants(spark, sf_dir):
         assert r["n_core_edges"] == 0 and r["min_core_degree"] is None
 
 
-def test_ml_auc_matches_naive_model(spark, sf_dir):
+def test_ml_auc_matches_naive_model(spark, sf_dir, quality_scored):
     # AUC via naive pairwise comparison (ties half credit) over the
     # same (y, p) relation the engine scores.
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.llm.pipeline import (_sigmoid_q,
-                                              fit_quality_weights,
-                                              quality_features)
-    from sigma_rx7_spark.io import load
-    from pyspark.sql import functions as F
 
-    feats = quality_features(load(spark, sf_dir, "documents"))
-    w = fit_quality_weights(feats)
-    p = _sigmoid_q(F.col("w0") + F.col("w1") * F.col("x1")
-                   + F.col("w2") * F.col("x2"))
-    pairs = [(r["y"], r["p"]) for r in
-             feats.crossJoin(F.broadcast(w)).select("y", p.alias("p"))
-             .collect()]
+    pairs = quality_scored
     pos = [s for y, s in pairs if y == 1.0]
     neg = [s for y, s in pairs if y == 0.0]
     wins = sum(1.0 if sp > sn else 0.5 if sp == sn else 0.0
