@@ -509,33 +509,8 @@ def q_domain_treatment_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_domain_drug_eras",
     oracle=f"""
-    WITH m AS (
-      SELECT patient_id, drug_class, med_id, start_date,
-             COALESCE(stop_date, start_date + INTERVAL 30 DAY) AS end_date
-      FROM {_p('meds')}
-    ), flagged AS (
-      SELECT *,
-             CASE WHEN MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) IS NULL
-                    OR start_date > MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) + INTERVAL 30 DAY
-                  THEN 1 ELSE 0 END AS is_new
-      FROM m
-    ), seq AS (
-      SELECT *,
-             SUM(is_new) OVER (
-               PARTITION BY patient_id, drug_class
-               ORDER BY start_date, med_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS era_seq
-      FROM flagged
-    )
+    WITH meds AS (SELECT * FROM {_p('meds')}),
+    {rules.ERA_ORACLE}
     SELECT patient_id, drug_class, CAST(era_seq AS INT) AS era_seq,
            MIN(start_date) AS era_start,
            CAST(MAX(end_date) AS DATE) AS era_end,
@@ -562,32 +537,8 @@ def q_domain_drug_eras(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_domain_therapy_gaps",
     oracle=f"""
-    WITH m AS (
-      SELECT patient_id, drug_class, med_id, start_date,
-             COALESCE(stop_date, start_date + INTERVAL 30 DAY) AS end_date
-      FROM {_p('meds')}
-    ), flagged AS (
-      SELECT *,
-             CASE WHEN MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) IS NULL
-                    OR start_date > MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) + INTERVAL 30 DAY
-                  THEN 1 ELSE 0 END AS is_new
-      FROM m
-    ), seq AS (
-      SELECT *, SUM(is_new) OVER (
-               PARTITION BY patient_id, drug_class
-               ORDER BY start_date, med_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS era_seq
-      FROM flagged
-    ), eras AS (
+    WITH meds AS (SELECT * FROM {_p('meds')}),
+    {rules.ERA_ORACLE}, eras AS (
       SELECT patient_id, drug_class, era_seq,
              MIN(start_date) AS era_start,
              MAX(end_date) AS era_end
@@ -641,32 +592,8 @@ def q_domain_therapy_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_domain_refill_due",
     oracle=f"""
-    WITH m AS (
-      SELECT patient_id, drug_class, med_id, start_date,
-             COALESCE(stop_date, start_date + INTERVAL 30 DAY) AS end_date
-      FROM {_p('meds')}
-    ), flagged AS (
-      SELECT *,
-             CASE WHEN MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) IS NULL
-                    OR start_date > MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) + INTERVAL 30 DAY
-                  THEN 1 ELSE 0 END AS is_new
-      FROM m
-    ), seq AS (
-      SELECT *, SUM(is_new) OVER (
-               PARTITION BY patient_id, drug_class
-               ORDER BY start_date, med_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS era_seq
-      FROM flagged
-    ), eras AS (
+    WITH meds AS (SELECT * FROM {_p('meds')}),
+    {rules.ERA_ORACLE}, eras AS (
       SELECT patient_id, drug_class,
              MIN(start_date) AS era_start,
              MAX(end_date) AS era_end,
@@ -710,7 +637,8 @@ def q_domain_refill_due(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rn_last") == 1)
     horizon = meds.select(
         F.coalesce(F.col("stop_date"),
-                   F.date_add(F.col("start_date"), 30)).alias("e")
+                   F.date_add(F.col("start_date"), rules.ERA_GAP_DAYS))
+        .alias("e")
     ).agg(F.max("e").alias("today"))
     days = F.datediff(F.col("today"), F.col("era_end"))
     return (
@@ -792,32 +720,8 @@ def q_domain_alert_inbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_domain_era_survival",
     oracle=f"""
-    WITH m AS (
-      SELECT patient_id, drug_class, med_id, start_date,
-             COALESCE(stop_date, start_date + INTERVAL 30 DAY) AS end_date
-      FROM {_p('meds')}
-    ), flagged AS (
-      SELECT *,
-             CASE WHEN MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) IS NULL
-                    OR start_date > MAX(end_date) OVER (
-                         PARTITION BY patient_id, drug_class
-                         ORDER BY start_date, med_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND 1 PRECEDING) + INTERVAL 30 DAY
-                  THEN 1 ELSE 0 END AS is_new
-      FROM m
-    ), seq AS (
-      SELECT *, SUM(is_new) OVER (
-               PARTITION BY patient_id, drug_class
-               ORDER BY start_date, med_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS era_seq
-      FROM flagged
-    ), eras AS (
+    WITH meds AS (SELECT * FROM {_p('meds')}),
+    {rules.ERA_ORACLE}, eras AS (
       SELECT patient_id, drug_class, era_seq,
              date_diff('day', MIN(start_date),
                        CAST(MAX(end_date) AS DATE)) + 1 AS era_days

@@ -416,6 +416,39 @@ def treatment_gaps(conditions: DataFrame, meds: DataFrame) -> DataFrame:
 
 ERA_GAP_DAYS = 30  # persistence window: refills <=30 days apart chain
 
+# The oracle twin of drug_eras, as DuckDB CTE bodies over a relation
+# ``meds``: ``m`` closes open prescriptions, ``flagged`` marks the
+# prescriptions that open an era, and ``seq`` numbers each
+# (patient_id, drug_class)'s eras in ``era_seq``.
+ERA_ORACLE = f"""m AS (
+      SELECT patient_id, drug_class, med_id, start_date,
+             COALESCE(stop_date, start_date + INTERVAL {ERA_GAP_DAYS} DAY)
+               AS end_date
+      FROM meds
+    ), flagged AS (
+      SELECT *,
+             CASE WHEN MAX(end_date) OVER (
+                    PARTITION BY patient_id, drug_class
+                    ORDER BY start_date, med_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING
+                             AND 1 PRECEDING) IS NULL
+                    OR start_date > MAX(end_date) OVER (
+                    PARTITION BY patient_id, drug_class
+                    ORDER BY start_date, med_id
+                    ROWS BETWEEN UNBOUNDED PRECEDING
+                             AND 1 PRECEDING) + INTERVAL {ERA_GAP_DAYS} DAY
+                  THEN 1 ELSE 0 END AS is_new
+      FROM m
+    ), seq AS (
+      SELECT *,
+             SUM(is_new) OVER (
+               PARTITION BY patient_id, drug_class
+               ORDER BY start_date, med_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS era_seq
+      FROM flagged
+    )"""
+
 
 def drug_eras(meds: DataFrame) -> DataFrame:
     """DRUG-ERA CONSTRUCTION (the OMOP drug_era build): consolidate a

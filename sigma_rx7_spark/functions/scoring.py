@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import o_davg, q
+from ..compat import q
 from ..io import load
 from ..registry import query
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import QDEC, o_davg
+from ..compat import QDEC
 from ..io import load
 from ..materialize import share
 from ..registry import query
@@ -798,8 +798,6 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar; the per-doc score joins model rows back on the
     (vocab²-bounded) bigram key. ``ln`` is decimal-quantized before the
     weighted sum (compat.py hazard 2) so the double is engine-exact."""
-    from pyspark.sql import Window  # noqa: F401  (module convention)
-
     from ..compat import QDEC
 
     d = load(spark, sf_dir, "documents")

@@ -702,8 +702,6 @@ def q_cluster_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors; squared terms quantize at 9 dp before the sum (the
     rescale-hazard convention for structured arithmetic) and the final
     sqrt is IEEE-exact."""
-    from ..compat import q as qz
-
     ex = _exploded(spark, sf_dir)
     cent = _centroids(ex)
     a = cent.select(F.col("c_label").alias("label_a"), "pos",
@@ -870,9 +868,12 @@ def _rp_proj_sql(src: str) -> str:
     """
 
 
-@query(
-    "q_sim_recall_rp",
-    oracle=f"""
+def _recall_rp_oracle(sf_dir: str) -> str:
+    # Built at retrieval time: similarity.py imports this module at its
+    # top, so its UNIT_ORACLE is not importable while this one loads.
+    from .similarity import UNIT_ORACLE
+
+    return f"""
     WITH proj AS ({_rp_proj_sql("embeddings")}),
     norms AS (
       SELECT vec_id,
@@ -899,25 +900,13 @@ def _rp_proj_sql(src: str) -> str:
         FROM cosp
       ) WHERE rn <= {RP_TOP_K}
     ),
-    n2 AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    ),
-    bfq AS (SELECT vec_id AS q_id, nv AS q_nv FROM n2
-            WHERE vec_id < {RP_QUERIES}),
-    bfc AS (SELECT vec_id AS c_id, nv AS c_nv FROM n2
-            WHERE vec_id >= {RP_QUERIES}),
+    {UNIT_ORACLE},
     bf AS (
       SELECT q_id, c_id FROM (
         SELECT q_id, c_id,
                ROW_NUMBER() OVER (PARTITION BY q_id
                  ORDER BY list_inner_product(q_nv, c_nv) DESC, c_id) AS rn
-        FROM bfq CROSS JOIN bfc
+        FROM q CROSS JOIN c
       ) WHERE rn <= {RP_TOP_K}
     )
     SELECT bf.q_id,
@@ -927,7 +916,12 @@ def _rp_proj_sql(src: str) -> str:
                 AS DOUBLE) / {RP_TOP_K} AS recall_at_k
     FROM bf LEFT JOIN rp_top r ON r.q_id = bf.q_id AND r.c_id = bf.c_id
     GROUP BY bf.q_id
-    """,
+    """
+
+
+@query(
+    "q_sim_recall_rp",
+    oracle=_recall_rp_oracle,
     tags=("L2", "audit", "johnson-lindenstrauss"),
 )
 def q_sim_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:

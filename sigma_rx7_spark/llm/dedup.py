@@ -29,7 +29,7 @@ from ..io import _table_files, load
 from ..kernels import collect_dense, dense_rows
 from ..materialize import share
 from ..registry import query
-from .similarity import (dot, dot_idx, normalized,
+from .similarity import (UNIT_ORACLE, dot, dot_idx, normalized,
                          np_pairwise_dots, np_unit_rows)
 
 MINHASH_K = 32          # signature length
@@ -299,47 +299,6 @@ def md5_lsh_candidates(sig: DataFrame, bands: int = MD5_LSH_BANDS,
     )
 
 
-def _oracle_minhash_sig(k: int = MD5_MINHASH_K,
-                        src: str = "documents") -> str:
-    digests = ",\n             ".join(
-        f"md5(shingle || '#{s}') AS d{s}" for s in range(k // 4))
-    mins = ",\n        ".join(
-        f"MIN(substr(d{i // 4}, {1 + 8 * (i % 4)}, 8)) AS m{i}"
-        for i in range(k))
-    return f"""
-    toks AS (
-      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-      FROM {src}
-    ), sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' ')))) AS shingle
-      FROM toks
-    ), dig AS (
-      SELECT doc_id,
-             {digests}
-      FROM sh
-    ), sig AS (
-      SELECT doc_id,
-        {mins}
-      FROM dig GROUP BY doc_id
-    )"""
-
-
-def _oracle_bands(bands: int = MD5_LSH_BANDS, k: int = MD5_MINHASH_K) -> str:
-    r = k // bands
-    parts = [
-        f"""SELECT doc_id, {j} AS band_idx,
-               md5({" || '|' || ".join(f"m{j * r + i}" for i in range(r))})
-                 AS band_hash FROM sig"""
-        for j in range(bands)
-    ]
-    return "bands AS (\n      " + "\n      UNION ALL\n      ".join(parts) \
-        + "\n    )"
-
-
 def lsh_verified_pairs(docs: DataFrame) -> DataFrame:
     """md5-MinHash LSH candidates verified by exact word-set Jaccard —
     the reusable production near-dedup stage (see q_dedup_lsh_verified
@@ -380,12 +339,47 @@ def lsh_verified_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_lsh_verified",
-    oracle=f"""
-    WITH {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
+def lsh_verified_oracle(src: str = "documents") -> str:
+    """DuckDB CTE bodies of the stage lsh_verified_pairs builds, over a
+    relation ``src`` with (doc_id, text): ``sig`` (the md5 MinHash
+    signature), ``bands``, ``cand`` (the pairs sharing a band bucket),
+    ``words``, ``scored`` (every candidate with n_common and its
+    word-set jaccard) and ``verified`` (the scored pairs at jaccard >=
+    LSH_VERIFY_JACCARD). Plain SQL, written apart from the Spark code."""
+    r = MD5_MINHASH_K // MD5_LSH_BANDS
+    digests = ",\n             ".join(
+        f"md5(shingle || '#{s}') AS d{s}" for s in range(MD5_MINHASH_K // 4))
+    mins = ",\n        ".join(
+        f"MIN(substr(d{i // 4}, {1 + 8 * (i % 4)}, 8)) AS m{i}"
+        for i in range(MD5_MINHASH_K))
+    bands = "\n      UNION ALL\n      ".join(
+        f"""SELECT doc_id, {j} AS band_idx,
+               md5({" || '|' || ".join(f"m{j * r + i}" for i in range(r))})
+                 AS band_hash FROM sig"""
+        for j in range(MD5_LSH_BANDS))
+    inter = "len(list_intersect(wa.w, wb.w))"
+    return f"""
+    toks AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      FROM {src}
+    ), sh AS (
+      SELECT doc_id,
+             unnest(list_distinct(list_transform(
+               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
+               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
+                                    ' ')))) AS shingle
+      FROM toks
+    ), dig AS (
+      SELECT doc_id,
+             {digests}
+      FROM sh
+    ), sig AS (
+      SELECT doc_id,
+        {mins}
+      FROM dig GROUP BY doc_id
+    ), bands AS (
+      {bands}
+    ), cand AS (
       SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
       FROM bands a
       JOIN bands b
@@ -395,21 +389,26 @@ def lsh_verified_pairs(docs: DataFrame) -> DataFrame:
       SELECT doc_id,
              list_distinct(list_filter(string_split(text, ' '),
                                        x -> x <> '')) AS w
-      FROM documents
-    )
-    SELECT a_doc_id, b_doc_id,
-           CAST(len(list_intersect(wa.w, wb.w)) AS BIGINT) AS n_common,
-           CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-             / greatest(len(wa.w) + len(wb.w)
-                        - len(list_intersect(wa.w, wb.w)), 1)
-             AS jaccard
-    FROM cand
-    JOIN words wa ON wa.doc_id = a_doc_id
-    JOIN words wb ON wb.doc_id = b_doc_id
-    WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-            / greatest(len(wa.w) + len(wb.w)
-                       - len(list_intersect(wa.w, wb.w)), 1)
-          >= {LSH_VERIFY_JACCARD}
+      FROM {src}
+    ), scored AS (
+      SELECT a_doc_id, b_doc_id,
+             CAST({inter} AS BIGINT) AS n_common,
+             CAST({inter} AS DOUBLE)
+               / greatest(len(wa.w) + len(wb.w) - {inter}, 1) AS jaccard
+      FROM cand
+      JOIN words wa ON wa.doc_id = a_doc_id
+      JOIN words wb ON wb.doc_id = b_doc_id
+    ), verified AS (
+      SELECT a_doc_id, b_doc_id, n_common, jaccard
+      FROM scored WHERE jaccard >= {LSH_VERIFY_JACCARD}
+    )"""
+
+
+@query(
+    "q_dedup_lsh_verified",
+    oracle=f"""
+    WITH {lsh_verified_oracle()}
+    SELECT a_doc_id, b_doc_id, n_common, jaccard FROM verified
     """,
     tags=("L1", "dedup"),
 )
@@ -614,15 +613,7 @@ def _allpairs_cosine_jvm(e: DataFrame) -> DataFrame:
 @query(
     "q_dedup_cosine",
     oracle=f"""
-    WITH n AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    )
+    WITH {UNIT_ORACLE}
     SELECT
       a.vec_id AS a_vec_id,
       b.vec_id AS b_vec_id,
@@ -859,15 +850,7 @@ def _srp_oracle(bits: int = SRP_BITS, bands: int = SRP_BANDS,
                        AS BIGINT) / 4294967296.0 - 0.5 ORDER BY d) AS wv
       FROM range({bits}) t1(h), range({dim}) t2(d)
       GROUP BY h
-    ), n AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    ), bits AS (
+    ), {UNIT_ORACLE}, bits AS (
       SELECT vec_id, h,
              CASE WHEN list_inner_product(nv, wv) >= 0
                   THEN 1 ELSE 0 END AS bit
@@ -1382,32 +1365,11 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_clusters_oracle() -> str:
     return f"""
-    WITH RECURSIVE {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    ), pairs AS (
-      SELECT a_doc_id AS src, b_doc_id AS dst
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-    ), edges AS (
-      SELECT src, dst FROM pairs
+    WITH RECURSIVE {lsh_verified_oracle()},
+    edges AS (
+      SELECT a_doc_id AS src, b_doc_id AS dst FROM verified
       UNION ALL
-      SELECT dst, src FROM pairs
+      SELECT b_doc_id, a_doc_id FROM verified
     ), reach AS (
       SELECT doc_id AS node, doc_id AS label FROM documents
       UNION
@@ -1624,15 +1586,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                  PARTITION BY vec_id ORDER BY dist2, c_label) AS rn
         FROM d2
       ) WHERE rn = 1
-    ), n AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    )
+    ), {UNIT_ORACLE}
     SELECT a.vec_id AS a_vec_id, b.vec_id AS b_vec_id,
            aa.cell AS cell,
            list_inner_product(a.nv, b.nv) AS cos_sim
@@ -1859,29 +1813,7 @@ def q_text_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dup_burden_oracle() -> str:
     return f"""
-    WITH {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    ), verified AS (
-      SELECT a_doc_id, b_doc_id
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-    )
+    WITH {lsh_verified_oracle()}
     SELECT least(sa.source, sb.source) AS source_x,
            greatest(sa.source, sb.source) AS source_y,
            CAST(COUNT(*) AS BIGINT) AS n_dup_pairs
@@ -2177,38 +2109,17 @@ def _minhash_error_oracle() -> str:
         f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)"
         for i in range(MD5_MINHASH_K))
     return f"""
-    WITH {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    )
+    WITH {lsh_verified_oracle()}
     SELECT c.a_doc_id, c.b_doc_id,
            CAST({agree} AS BIGINT) AS n_agree,
            CAST(({agree}) AS DOUBLE) / {MD5_MINHASH_K} AS jaccard_est,
-           CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-             / greatest(len(wa.w) + len(wb.w)
-                        - len(list_intersect(wa.w, wb.w)), 1)
-             AS jaccard_exact,
+           c.jaccard AS jaccard_exact,
            CAST(CAST(abs(
-             CAST(({agree}) AS DOUBLE) / {MD5_MINHASH_K}
-             - CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-               / greatest(len(wa.w) + len(wb.w)
-                          - len(list_intersect(wa.w, wb.w)), 1))
+             CAST(({agree}) AS DOUBLE) / {MD5_MINHASH_K} - c.jaccard)
              AS DECIMAL(18,6)) AS DOUBLE) AS abs_err
-    FROM cand c
+    FROM scored c
     JOIN sig sa ON sa.doc_id = c.a_doc_id
     JOIN sig sb ON sb.doc_id = c.b_doc_id
-    JOIN words wa ON wa.doc_id = c.a_doc_id
-    JOIN words wb ON wb.doc_id = c.b_doc_id
     """
 
 

@@ -28,16 +28,24 @@ from .sampling import TRAIN_NIBBLES, VAL_NIBBLES, hash_split
 
 MIN_TOKENS = 30  # quality gate: drop degenerate short documents
 
-
-@query(
-    "q_pipeline_corpus_curation",
-    oracle=f"""
-    WITH quality AS (
+# The documents that pass the token gate, as a DuckDB CTE.
+QUALITY_ORACLE = f"""quality AS (
       SELECT doc_id, text, lang, n_chars
       FROM documents
       WHERE len(list_filter(string_split(text, ' '), x -> x <> ''))
             >= {MIN_TOKENS}
-    ), keeper AS (
+    )"""
+
+
+def quality_filtered(docs: DataFrame) -> DataFrame:
+    """The documents that pass the token gate (>= MIN_TOKENS tokens)."""
+    return docs.where(F.size(tokens(F.col("text"))) >= MIN_TOKENS)
+
+
+@query(
+    "q_pipeline_corpus_curation",
+    oracle=f"""
+    WITH {QUALITY_ORACLE}, keeper AS (
       SELECT doc_id, lang, n_chars,
              ROW_NUMBER() OVER (
                PARTITION BY md5(text) ORDER BY doc_id) AS rn
@@ -69,7 +77,7 @@ def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_exact and q_split_train_test, proving the library stages
     fuse into a single plan instead of a job chain."""
     d = load(spark, sf_dir, "documents")
-    quality = d.where(F.size(tokens(F.col("text"))) >= MIN_TOKENS)
+    quality = quality_filtered(d)
     w = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = (
         quality.withColumn("_rn", F.row_number().over(w))
@@ -85,42 +93,14 @@ def q_pipeline_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_dedup_oracle() -> str:
-    from .dedup import (
-        LSH_VERIFY_JACCARD,
-        _oracle_bands,
-        _oracle_minhash_sig,
-    )
+    from .dedup import lsh_verified_oracle
     from .sampling import TRAIN_NIBBLES, VAL_NIBBLES
 
     return f"""
-    WITH quality AS (
-      SELECT doc_id, text, lang, n_chars
-      FROM documents
-      WHERE len(list_filter(string_split(text, ' '), x -> x <> ''))
-            >= {MIN_TOKENS}
-    ),
-    {_oracle_minhash_sig(src="quality")},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM quality
-    ), dropped AS (
-      SELECT DISTINCT b_doc_id AS doc_id
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
+    WITH {QUALITY_ORACLE},
+    {lsh_verified_oracle(src="quality")},
+    dropped AS (
+      SELECT DISTINCT b_doc_id AS doc_id FROM verified
     ), kept AS (
       SELECT q.doc_id, q.lang, q.n_chars
       FROM quality q LEFT JOIN dropped d ON q.doc_id = d.doc_id
@@ -169,7 +149,7 @@ def q_pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import hash_split
 
     d = load(spark, sf_dir, "documents")
-    quality = d.where(F.size(tokens(F.col("text"))) >= MIN_TOKENS)
+    quality = quality_filtered(d)
     dropped = (lsh_verified_pairs(quality)
                .select(F.col("b_doc_id").alias("doc_id")).distinct())
     kept = quality.join(dropped, "doc_id", "left_anti")
@@ -183,35 +163,14 @@ def q_pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_oracle() -> str:
-    from .dedup import LSH_VERIFY_JACCARD, _oracle_bands, _oracle_minhash_sig
+    from .dedup import lsh_verified_oracle
 
     return f"""
-    WITH RECURSIVE {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    ), pairs AS (
-      SELECT a_doc_id AS src, b_doc_id AS dst
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-    ), edges AS (
-      SELECT src, dst FROM pairs
+    WITH RECURSIVE {lsh_verified_oracle()},
+    edges AS (
+      SELECT a_doc_id AS src, b_doc_id AS dst FROM verified
       UNION ALL
-      SELECT dst, src FROM pairs
+      SELECT b_doc_id, a_doc_id FROM verified
     ), reach AS (
       SELECT doc_id AS node, doc_id AS label FROM documents
       UNION
@@ -709,43 +668,15 @@ def q_ml_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fates_oracle() -> str:
-    from .dedup import (
-        LSH_VERIFY_JACCARD,
-        _oracle_bands,
-        _oracle_minhash_sig,
-    )
+    from .dedup import lsh_verified_oracle
     from .sampling import TRAIN_NIBBLES, VAL_NIBBLES
 
     return f"""
-    WITH quality AS (
-      SELECT doc_id, text, lang, n_chars
-      FROM documents
-      WHERE len(list_filter(string_split(text, ' '), x -> x <> ''))
-            >= {MIN_TOKENS}
-    ),
-    {_oracle_minhash_sig(src="quality")},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM quality
-    ), displaced AS (
+    WITH {QUALITY_ORACLE},
+    {lsh_verified_oracle(src="quality")},
+    displaced AS (
       SELECT b_doc_id AS doc_id, MIN(a_doc_id) AS kept_by
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-      GROUP BY b_doc_id
+      FROM verified GROUP BY b_doc_id
     )
     SELECT d.doc_id,
            CASE
@@ -782,7 +713,7 @@ def q_pipeline_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sampling import hash_split
 
     d = load(spark, sf_dir, "documents")
-    quality = d.where(F.size(tokens(F.col("text"))) >= MIN_TOKENS)
+    quality = quality_filtered(d)
     displaced = (
         lsh_verified_pairs(quality)
         .groupBy(F.col("b_doc_id").alias("x_doc_id"))
@@ -804,11 +735,7 @@ def q_pipeline_fates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _split_leak_oracle() -> str:
-    from .dedup import (
-        LSH_VERIFY_JACCARD,
-        _oracle_bands,
-        _oracle_minhash_sig,
-    )
+    from .dedup import lsh_verified_oracle
     from .sampling import TRAIN_NIBBLES, VAL_NIBBLES
 
     split = (f"CASE WHEN substr(md5(CAST({{c}} AS VARCHAR)), 1, 1) "
@@ -816,29 +743,7 @@ def _split_leak_oracle() -> str:
              f"WHEN substr(md5(CAST({{c}} AS VARCHAR)), 1, 1) "
              f"IN {tuple(VAL_NIBBLES)!r} THEN 'val' ELSE 'test' END")
     return f"""
-    WITH {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    ), verified AS (
-      SELECT a_doc_id, b_doc_id
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-    )
+    WITH {lsh_verified_oracle()}
     SELECT least({split.format(c='a_doc_id')},
                  {split.format(c='b_doc_id')}) AS split_x,
            greatest({split.format(c='a_doc_id')},
@@ -888,11 +793,7 @@ GATE_MAX_QFAIL_RATE = 0.20   # quality-gate failure share
 
 
 def _release_gate_oracle() -> str:
-    from .dedup import (
-        LSH_VERIFY_JACCARD,
-        _oracle_bands,
-        _oracle_minhash_sig,
-    )
+    from .dedup import lsh_verified_oracle
     from .sampling import TRAIN_NIBBLES, VAL_NIBBLES
 
     split = (f"CASE WHEN substr(md5(CAST({{c}} AS VARCHAR)), 1, 1) "
@@ -900,29 +801,8 @@ def _release_gate_oracle() -> str:
              f"WHEN substr(md5(CAST({{c}} AS VARCHAR)), 1, 1) "
              f"IN {tuple(VAL_NIBBLES)!r} THEN 'val' ELSE 'test' END")
     return f"""
-    WITH {_oracle_minhash_sig()},
-    {_oracle_bands()},
-    cand AS (
-      SELECT DISTINCT a.doc_id AS a_doc_id, b.doc_id AS b_doc_id
-      FROM bands a
-      JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM documents
-    ), verified AS (
-      SELECT a_doc_id, b_doc_id
-      FROM cand
-      JOIN words wa ON wa.doc_id = a_doc_id
-      JOIN words wb ON wb.doc_id = b_doc_id
-      WHERE CAST(len(list_intersect(wa.w, wb.w)) AS DOUBLE)
-              / greatest(len(wa.w) + len(wb.w)
-                         - len(list_intersect(wa.w, wb.w)), 1)
-            >= {LSH_VERIFY_JACCARD}
-    ), counts AS (
+    WITH {lsh_verified_oracle()},
+    counts AS (
       SELECT
         (SELECT COUNT(*) FROM documents) AS n_docs,
         (SELECT COUNT(*) FROM verified) AS n_dup_pairs,

@@ -109,6 +109,25 @@ def normalized(a: Column | str) -> Column:
     return F.zip_with(c, rep, lambda x, n: x.cast("double") / n)
 
 
+# The oracle twin of ``normalized``, as DuckDB CTE bodies: ``n``
+# (vec_id, nv) unit-normalizes every embedding (a zero vector stays zero
+# under the 1e-300 floor), ``q`` (q_id, q_nv) holds the probes
+# (vec_id < N_QUERIES) and ``c`` (c_id, c_nv) the rest of the corpus.
+UNIT_ORACLE = f"""n AS (
+      SELECT vec_id,
+             list_transform(
+               CAST(embedding AS DOUBLE[]),
+               x -> x / greatest(sqrt(list_inner_product(
+                      CAST(embedding AS DOUBLE[]),
+                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
+      FROM embeddings
+    ), q AS (
+      SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
+    ), c AS (
+      SELECT vec_id AS c_id, nv AS c_nv FROM n WHERE vec_id >= {N_QUERIES}
+    )"""
+
+
 def np_unit_rows(V):
     """``normalized`` over the rows of a float64 matrix with EXACTLY
     the engine's arithmetic — the numpy mirror the Arrow-vectorized
@@ -180,19 +199,7 @@ def topk_bruteforce(queries: DataFrame, corpus: DataFrame,
 @query(
     "q_sim_topk",
     oracle=f"""
-    WITH n AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    ), q AS (
-      SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
-    ), c AS (
-      SELECT vec_id AS c_id, nv AS c_nv FROM n WHERE vec_id >= {N_QUERIES}
-    ), scored AS (
+    WITH {UNIT_ORACLE}, scored AS (
       SELECT q_id, c_id, list_inner_product(q_nv, c_nv) AS cos_sim
       FROM q CROSS JOIN c
     )
@@ -392,19 +399,7 @@ _IVF_ORACLE = f"""
 WITH cent AS (
   SELECT cell_id, cent_vec
   FROM read_parquet('__CENT_DIR__/*.parquet')
-), n AS (
-  SELECT vec_id,
-         list_transform(
-           CAST(embedding AS DOUBLE[]),
-           x -> x / greatest(sqrt(list_inner_product(
-                  CAST(embedding AS DOUBLE[]),
-                  CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
-), c AS (
-  SELECT vec_id AS c_id, nv AS c_nv FROM n WHERE vec_id >= {N_QUERIES}
-), assigned AS (
+), {UNIT_ORACLE}, assigned AS (
   SELECT c_id, c_nv, cell_id FROM (
     SELECT c.c_id, c.c_nv, ct.cell_id,
            ROW_NUMBER() OVER (
@@ -704,25 +699,13 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RECALL_ORACLE = f"""
 WITH ivf AS ({_IVF_ORACLE}
-), n2 AS (
-  SELECT vec_id,
-         list_transform(
-           CAST(embedding AS DOUBLE[]),
-           x -> x / greatest(sqrt(list_inner_product(
-                  CAST(embedding AS DOUBLE[]),
-                  CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-  FROM embeddings
-), bfq AS (
-  SELECT vec_id AS q_id, nv AS q_nv FROM n2 WHERE vec_id < {N_QUERIES}
-), bfc AS (
-  SELECT vec_id AS c_id, nv AS c_nv FROM n2 WHERE vec_id >= {N_QUERIES}
-), bf AS (
+), {UNIT_ORACLE}, bf AS (
   SELECT q_id, c_id FROM (
     SELECT q_id, c_id,
            ROW_NUMBER() OVER (
              PARTITION BY q_id
              ORDER BY list_inner_product(q_nv, c_nv) DESC, c_id) AS rn
-    FROM bfq CROSS JOIN bfc
+    FROM q CROSS JOIN c
   ) WHERE rn <= {TOP_K}
 )
 SELECT bf.q_id,
@@ -777,19 +760,7 @@ _IVFPQ_ORACLE = f"""
 WITH cent AS (
   SELECT cell_id, cent_vec
   FROM read_parquet('__CENT_DIR__/*.parquet')
-), n AS (
-  SELECT vec_id,
-         list_transform(
-           CAST(embedding AS DOUBLE[]),
-           x -> x / greatest(sqrt(list_inner_product(
-                  CAST(embedding AS DOUBLE[]),
-                  CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-  FROM embeddings
-), q AS (
-  SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
-), c AS (
-  SELECT vec_id AS c_id, nv AS c_nv FROM n WHERE vec_id >= {N_QUERIES}
-), lab AS (
+), {UNIT_ORACLE}, lab AS (
   SELECT vec_id AS c_id, label FROM embeddings
   WHERE vec_id >= {N_QUERIES}
 ), cex AS (
@@ -1100,27 +1071,15 @@ def q_embed_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_knn_classify",
     oracle=f"""
-    WITH n AS (
-      SELECT vec_id, label,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    ), q AS (
-      SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
-    ), c AS (
-      SELECT vec_id AS c_id, label, nv AS c_nv
-      FROM n WHERE vec_id >= {N_QUERIES}
-    ), topk AS (
+    WITH {UNIT_ORACLE}, topk AS (
       SELECT q_id, c_id, label FROM (
-        SELECT q_id, c_id, label,
+        SELECT q_id, c_id, e.label,
                ROW_NUMBER() OVER (
                  PARTITION BY q_id
                  ORDER BY list_inner_product(q_nv, c_nv) DESC, c_id)
                  AS rank
         FROM q CROSS JOIN c
+        JOIN embeddings e ON e.vec_id = c_id
       ) WHERE rank <= {TOP_K}
     ), votes AS (
       SELECT q_id, label, COUNT(*) AS v FROM topk GROUP BY q_id, label
@@ -1234,19 +1193,7 @@ RADIUS_TAU = 0.25  # dyadic literal: bit-identical as double in both engines
 @query(
     "q_sim_radius",
     oracle=f"""
-    WITH n AS (
-      SELECT vec_id,
-             list_transform(
-               CAST(embedding AS DOUBLE[]),
-               x -> x / greatest(sqrt(list_inner_product(
-                      CAST(embedding AS DOUBLE[]),
-                      CAST(embedding AS DOUBLE[]))), 1e-300)) AS nv
-      FROM embeddings
-    ), q AS (
-      SELECT vec_id AS q_id, nv AS q_nv FROM n WHERE vec_id < {N_QUERIES}
-    ), c AS (
-      SELECT vec_id AS c_id, nv AS c_nv FROM n WHERE vec_id >= {N_QUERIES}
-    )
+    WITH {UNIT_ORACLE}
     SELECT q_id, c_id,
            list_inner_product(q_nv, c_nv) AS cos_sim
     FROM q CROSS JOIN c

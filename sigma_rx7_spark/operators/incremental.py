@@ -351,12 +351,11 @@ def scd2_intervals(ev: DataFrame) -> DataFrame:
 # Deterministic delete marker for the CDC batch: every 7th event id is a
 # tombstone. Keyed to content (not position) so both engines derive the
 # identical op column.
-_CDC_DELETE_MOD = 7
+CDC_DELETE_MOD = 7
 
-
-@query(
-    "q_merge_cdc_apply",
-    oracle=f"""
+# The one oracle of the batch (q_merge_cdc_apply) and the streaming
+# (q_stream_cdc_apply) CDC apply: both converge to this MERGE.
+CDC_ORACLE = f"""
     WITH latest AS (
       SELECT user_id, event_type, event_id, value,
              ROW_NUMBER() OVER (
@@ -369,7 +368,7 @@ _CDC_DELETE_MOD = 7
       FROM latest WHERE rn = 1
     ), chg_latest AS (
       SELECT user_id, event_type, event_id, value,
-             CASE WHEN event_id % {_CDC_DELETE_MOD} = 0
+             CASE WHEN event_id % {CDC_DELETE_MOD} = 0
                   THEN 'D' ELSE 'U' END AS op,
              ROW_NUMBER() OVER (
                PARTITION BY user_id, event_type
@@ -397,7 +396,12 @@ _CDC_DELETE_MOD = 7
         ON b.user_id IS NOT DISTINCT FROM c.user_id
        AND b.event_type IS NOT DISTINCT FROM c.event_type
     ) WHERE op IS NULL OR op <> 'D'
-    """,
+    """
+
+
+@query(
+    "q_merge_cdc_apply",
+    oracle=CDC_ORACLE,
     tags=("M1", "cdc"),
 )
 def q_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,7 +432,7 @@ def q_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("ts") >= cutoff), keys, "ts", "event_id"
     ).drop("ts").withColumn(
         "op",
-        F.when(F.col("event_id") % _CDC_DELETE_MOD == 0, "D")
+        F.when(F.col("event_id") % CDC_DELETE_MOD == 0, "D")
         .otherwise("U"))
 
     value_cols = ["event_id", "value"]

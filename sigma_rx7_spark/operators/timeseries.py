@@ -970,8 +970,6 @@ def q_cohort_retention_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-day relation, broadcast back onto the (cohort, offset)
     cells; the rate is IEEE-from-integers. Same single
     user_id-partitioning reuse as the count form."""
-    from pyspark.sql import Window as W  # noqa: F401  (symmetry)
-
     ev = load(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("day", "ts").alias("active_day"))
     active = share(ev.distinct())
@@ -1912,16 +1910,69 @@ ACF_MAX_LAG = 7
 ACF_EVENT = "purchase"
 
 
-@query(
-    "q_ts_acf",
-    oracle=f"""
-    WITH daily AS (
+def daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, v): the daily purchase-revenue series every W4x query
+    reads, ``v`` the exact decimal sum of the day's values. Each caller
+    casts ``v`` to the numerics it needs."""
+    e = load(spark, sf_dir, "events").where(
+        F.col("event_type") == ACF_EVENT)
+    return (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
+                      .alias("day"))
+            .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v")))
+
+
+# daily_revenue as a DuckDB CTE ``daily``.
+DAILY_REVENUE_ORACLE = f"""daily AS (
       SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                AS day,
              SUM(CAST(value AS DECIMAL(20,6))) AS v
       FROM events WHERE event_type = '{ACF_EVENT}'
       GROUP BY 1
-    ),
+    )"""
+
+
+def acf_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lag, n, m, r): the autocorrelation of daily_revenue at lags
+    1..ACF_MAX_LAG over its n days, from the m day pairs ``lag`` apart.
+    ``r`` is the raw-moment ρ quantized at 6 dp, NULL when the series
+    has no variance or the lag no pair. q_ts_acf publishes it and
+    q_ts_ljung_box folds it."""
+    daily = daily_revenue(spark, sf_dir).select(
+        "day", F.col("v").cast("decimal(19,6)").alias("v"))
+    daily = share(daily)
+    base = daily.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
+        F.sum(F.col("v") * F.col("v")).cast("double").alias("s2"))
+    lags = spark.range(1, ACF_MAX_LAG + 1).select(
+        F.col("id").cast("int").alias("lag"))
+    a = daily.crossJoin(F.broadcast(lags)) \
+        .select("lag", F.col("v").alias("va"),
+                F.date_add(F.col("day"), F.col("lag")).alias("day_b"))
+    b = daily.select(F.col("day").alias("day_b"), F.col("v").alias("vb"))
+    lagged = (a.join(b, "day_b")
+              .groupBy("lag")
+              .agg(F.count(F.lit(1)).alias("m"),
+                   F.sum(F.col("va") * F.col("vb")).cast("double")
+                   .alias("sxy"),
+                   F.sum(F.col("va").cast("decimal(20,6)"))
+                   .cast("double").alias("sh"),
+                   F.sum(F.col("vb").cast("decimal(20,6)"))
+                   .cast("double").alias("st")))
+    mean = F.col("s1") / F.col("n")
+    den = F.col("s2") - F.col("n") * mean * mean
+    num = (F.col("sxy") - mean * (F.col("sh") + F.col("st"))
+           + F.col("m") * mean * mean)
+    return lagged.crossJoin(F.broadcast(base)).select(
+        "lag", "n", "m",
+        F.when((den <= 0) | (F.col("m") == 0),
+               F.lit(None).cast("double"))
+        .otherwise((num / den).cast("decimal(18,6)").cast("double"))
+        .alias("r"))
+
+
+# acf_rho as DuckDB CTEs: daily_revenue's ``daily``, then ``rho``.
+ACF_ORACLE = f"""{DAILY_REVENUE_ORACLE},
     base AS (
       SELECT COUNT(*) AS n,
              CAST(SUM(CAST(v AS DECIMAL(20,6))) AS DOUBLE) AS s1,
@@ -1939,17 +1990,27 @@ ACF_EVENT = "purchase"
       JOIN daily a ON TRUE
       JOIN daily b ON b.day = a.day + CAST(l.lag AS INT)
       GROUP BY l.lag
-    )
-    SELECT CAST(g.lag AS BIGINT) AS lag,
-           CAST(g.m AS BIGINT) AS n_pairs,
-           CASE WHEN b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n) <= 0
-                     OR g.m = 0 THEN NULL
-                ELSE CAST(CAST(
-                  (g.sxy - (b.s1 / b.n) * (g.sh + g.st)
-                   + g.m * (b.s1 / b.n) * (b.s1 / b.n))
-                  / (b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n))
-                  AS DECIMAL(18,6)) AS DOUBLE) END AS acf
-    FROM lagged g, base b
+    ),
+    rho AS (
+      SELECT g.lag, b.n, g.m,
+             CASE WHEN b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n) <= 0
+                       OR g.m = 0 THEN NULL
+                  ELSE CAST(CAST(
+                    (g.sxy - (b.s1 / b.n) * (g.sh + g.st)
+                     + g.m * (b.s1 / b.n) * (b.s1 / b.n))
+                    / (b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n))
+                    AS DECIMAL(18,6)) AS DOUBLE) END AS r
+      FROM lagged g, base b
+    )"""
+
+
+@query(
+    "q_ts_acf",
+    oracle=f"""
+    WITH {ACF_ORACLE}
+    SELECT CAST(lag AS BIGINT) AS lag, CAST(m AS BIGINT) AS n_pairs,
+           r AS acf
+    FROM rho
     """,
     tags=("W41", "timeseries", "acf"),
 )
@@ -1969,44 +2030,10 @@ def q_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     {ACF_MAX_LAG}-row lag table (broadcast both ways at any horizon —
     a window would serialize the whole series in one partition);
     decimal(19,6) squares land exactly on the int128 38-cap."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
-             .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
-    daily = share(daily)
-    base = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
-        F.sum(F.col("v") * F.col("v")).cast("double").alias("s2"))
-    lags = spark.range(1, ACF_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("lag"))
-    a = daily.crossJoin(F.broadcast(lags)) \
-        .select("lag", F.col("day"), F.col("v").alias("va"),
-                F.date_add(F.col("day"), F.col("lag")).alias("day_b"))
-    b = daily.select(F.col("day").alias("day_b"), F.col("v").alias("vb"))
-    lagged = (a.join(b, "day_b")
-              .groupBy("lag")
-              .agg(F.count(F.lit(1)).alias("m"),
-                   F.sum(F.col("va") * F.col("vb")).cast("double")
-                   .alias("sxy"),
-                   F.sum(F.col("va").cast("decimal(20,6)"))
-                   .cast("double").alias("sh"),
-                   F.sum(F.col("vb").cast("decimal(20,6)"))
-                   .cast("double").alias("st")))
-    out = lagged.crossJoin(F.broadcast(base))
-    mean = F.col("s1") / F.col("n")
-    den = F.col("s2") - F.col("n") * mean * mean
-    num = (F.col("sxy") - mean * (F.col("sh") + F.col("st"))
-           + F.col("m") * mean * mean)
-    return out.select(
+    return acf_rho(spark, sf_dir).select(
         F.col("lag").cast("bigint").alias("lag"),
         F.col("m").cast("bigint").alias("n_pairs"),
-        F.when((den <= 0) | (F.col("m") == 0),
-               F.lit(None).cast("double"))
-        .otherwise((num / den).cast("decimal(18,6)").cast("double"))
-        .alias("acf"))
+        F.col("r").alias("acf"))
 
 
 # ---- Day-of-week seasonality index (W42) ---------------------------------------
@@ -2015,13 +2042,7 @@ def q_ts_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ts_seasonality",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     tot AS (
       SELECT COUNT(*) AS n_all,
              SUM(CAST(v AS DECIMAL(20,6))) AS s_all
@@ -2056,12 +2077,7 @@ def q_ts_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: fact table → day grain (one agg), day grain → 7 rows (one
     agg) with the 1-row global total broadcast back; nothing bigger
     than the day relation ever shuffles."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v")))
-    daily = share(daily)
+    daily = share(daily_revenue(spark, sf_dir))
     tot = daily.agg(F.count(F.lit(1)).alias("n_all"),
                     F.sum(F.col("v").cast("decimal(20,6)"))
                     .alias("s_all"))
@@ -2174,59 +2190,24 @@ def q_ts_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Ljung-Box portmanteau test (W44) --------------------------------------
 
-LB_MAX_LAG = 7
 LB_CRIT_5PCT_DF7 = 14.067140  # chi-square 95th percentile, df = 7
 
 
 @query(
     "q_ts_ljung_box",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
-    base AS (
-      SELECT COUNT(*) AS n,
-             CAST(SUM(CAST(v AS DECIMAL(20,6))) AS DOUBLE) AS s1,
-             CAST(SUM(CAST(v AS DECIMAL(19,6))
-                      * CAST(v AS DECIMAL(19,6))) AS DOUBLE) AS s2
-      FROM daily
-    ),
-    lagged AS (
-      SELECT l.lag, COUNT(*) AS m,
-             CAST(SUM(CAST(a.v AS DECIMAL(19,6))
-                      * CAST(b.v AS DECIMAL(19,6))) AS DOUBLE) AS sxy,
-             CAST(SUM(CAST(a.v AS DECIMAL(20,6))) AS DOUBLE) AS sh,
-             CAST(SUM(CAST(b.v AS DECIMAL(20,6))) AS DOUBLE) AS st
-      FROM range(1, {LB_MAX_LAG} + 1) l(lag)
-      JOIN daily a ON TRUE
-      JOIN daily b ON b.day = a.day + CAST(l.lag AS INT)
-      GROUP BY l.lag
-    ),
-    rho AS (
-      SELECT g.lag, b.n,
-             CAST(CAST(
-               (g.sxy - (b.s1 / b.n) * (g.sh + g.st)
-                + g.m * (b.s1 / b.n) * (b.s1 / b.n))
-               / (b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n))
-               AS DECIMAL(18,6)) AS DOUBLE) AS r
-      FROM lagged g, base b
-      WHERE b.s2 - b.n * (b.s1 / b.n) * (b.s1 / b.n) > 0 AND g.m > 0
-    ),
+    WITH {ACF_ORACLE},
     q AS (
       SELECT MAX(n) AS n, COUNT(*) AS h,
              CAST(SUM(CAST(r * r / (n - lag) AS DECIMAL(27,9)))
                   AS DOUBLE) AS srho
-      FROM rho
+      FROM rho WHERE r IS NOT NULL
     )
     SELECT CAST(n AS BIGINT) AS n_days,
            CAST(h AS BIGINT) AS n_lags,
            CAST(CAST(n * (n + 2.0) * srho AS DECIMAL(18,6)) AS DOUBLE)
              AS lb_q,
-           CASE WHEN h < {LB_MAX_LAG} THEN NULL
+           CASE WHEN h < {ACF_MAX_LAG} THEN NULL
                 ELSE CAST(n * (n + 2.0) * srho AS DECIMAL(18,6))
                      > {LB_CRIT_5PCT_DF7} END AS reject_5pct
     FROM q
@@ -2235,7 +2216,7 @@ LB_CRIT_5PCT_DF7 = 14.067140  # chi-square 95th percentile, df = 7
 )
 def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LJUNG-BOX PORTMANTEAU TEST over the daily-revenue ACF at lags
-    1..{LB_MAX_LAG}: Q = n(n+2)·Σ ρ_k²/(n−k), against chi-square(h) —
+    1..{ACF_MAX_LAG}: Q = n(n+2)·Σ ρ_k²/(n−k), against chi-square(h) —
     the ONE-NUMBER answer to "is this series white noise?" that reading
     W41's seven per-lag bars can't give (seven uncorrected 5% looks
     inflate the family false-alarm rate exactly the way A55 corrects
@@ -2244,62 +2225,32 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     with weekly seasonality should fail it).
 
     Composition discipline: the ρ_k are W41's EXACT published values —
-    same raw-moment expansion over the same day-grain self-join, each
-    6-dp-quantized BEFORE squaring so both engines square identical
-    rationals; the Q fold is {LB_MAX_LAG} terms, 9-dp-quantized per
-    term. Scale: everything after the one fact-table collapse operates
+    both queries read them from ``acf_rho`` (``ACF_ORACLE`` in the
+    oracle), the raw-moment expansion over the day-grain self-join,
+    each 6-dp-quantized BEFORE squaring so both engines square
+    identical rationals; the fold keeps the lags with a ρ and is
+    {ACF_MAX_LAG} terms, 9-dp-quantized per term. Scale: everything after the one fact-table collapse operates
     on the calendar-bounded day relation (30 rows/month regardless of
     sf) — the statistic's cost is frozen by the calendar, not data."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
-             .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
-    daily = share(daily)
-    base = daily.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
-        F.sum(F.col("v") * F.col("v")).cast("double").alias("s2"))
-    lags = spark.range(1, LB_MAX_LAG + 1).select(
-        F.col("id").cast("int").alias("lag"))
-    a = daily.crossJoin(F.broadcast(lags)) \
-        .select("lag", F.col("v").alias("va"),
-                F.date_add(F.col("day"), F.col("lag")).alias("day_b"))
-    b = daily.select(F.col("day").alias("day_b"), F.col("v").alias("vb"))
-    lagged = (a.join(b, "day_b")
-              .groupBy("lag")
-              .agg(F.count(F.lit(1)).alias("m"),
-                   F.sum(F.col("va") * F.col("vb")).cast("double")
-                   .alias("sxy"),
-                   F.sum(F.col("va").cast("decimal(20,6)"))
-                   .cast("double").alias("sh"),
-                   F.sum(F.col("vb").cast("decimal(20,6)"))
-                   .cast("double").alias("st")))
-    mean = F.col("s1") / F.col("n")
-    den = F.col("s2") - F.col("n") * mean * mean
-    num = (F.col("sxy") - mean * (F.col("sh") + F.col("st"))
-           + F.col("m") * mean * mean)
-    rho = (lagged.crossJoin(F.broadcast(base))
-           .where((den > 0) & (F.col("m") > 0))
-           .select("lag", "n",
-                   (num / den).cast("decimal(18,6)").cast("double")
-                   .alias("r")))
-    qrel = rho.agg(
-        F.max("n").alias("n"), F.count(F.lit(1)).alias("h"),
+    # The fold reads only the lags with a ρ: every aggregate skips a
+    # NULL r. (A filter on r would join the lag and series sides on
+    # a condition, a nested-loop join where a cross join suffices.)
+    qrel = acf_rho(spark, sf_dir).agg(
+        F.max(F.when(F.col("r").isNotNull(), F.col("n"))).alias("n"),
+        F.count("r").alias("h"),
         F.sum((F.col("r") * F.col("r") / (F.col("n") - F.col("lag")))
               .cast("decimal(27,9)")).cast("double").alias("srho"))
     lbq = (F.col("n") * (F.col("n") + 2.0) * F.col("srho")) \
         .cast("decimal(18,6)")
-    # the critical value is chi-square(df = LB_MAX_LAG); when short or
+    # the critical value is chi-square(df = ACF_MAX_LAG); when short or
     # degenerate series drop lags out of rho (m = 0 / zero variance),
-    # h < LB_MAX_LAG and that constant tests the WRONG df — emit NULL
+    # h < ACF_MAX_LAG and that constant tests the WRONG df — emit NULL
     # rather than a too-conservative flag.
     return qrel.select(
         F.col("n").cast("bigint").alias("n_days"),
         F.col("h").cast("bigint").alias("n_lags"),
         lbq.cast("double").alias("lb_q"),
-        F.when(F.col("h") < LB_MAX_LAG, F.lit(None).cast("boolean"))
+        F.when(F.col("h") < ACF_MAX_LAG, F.lit(None).cast("boolean"))
         .otherwise(lbq > LB_CRIT_5PCT_DF7).alias("reject_5pct"))
 
 
@@ -2309,13 +2260,7 @@ def q_ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ts_theil_sen",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     slopes AS (
       SELECT CAST(CAST((b.v - a.v) AS DOUBLE)
                   / (b.day - a.day) AS DECIMAL(18,6)) AS s
@@ -2354,11 +2299,7 @@ def q_ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each slope is ONE division of exact decimals quantized at 6 dp
     (both engines pick identical medians because they rank identical
     rationals; date subtraction is exact integer days)."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v")))
+    daily = daily_revenue(spark, sf_dir)
     a = daily.select(F.col("day").alias("day_a"), F.col("v").alias("va"))
     b = daily.select(F.col("day").alias("day_b"), F.col("v").alias("vb"))
     slopes = (a.join(b, F.col("day_b") > F.col("day_a"))
@@ -2390,13 +2331,7 @@ HURST_SCALES = (5, 10, 15, 30)
 def _hurst_oracle() -> str:
     scales = ", ".join(str(s) for s in HURST_SCALES)
     return f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     idx AS (
       SELECT CAST(v AS DOUBLE) AS v,
              ROW_NUMBER() OVER (ORDER BY day) - 1 AS i
@@ -2483,11 +2418,7 @@ def q_ts_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline: the walk accumulates 9-dp-quantized deviations
     exactly; R/S is quantized at 6 dp per block; the two ln legs at
     9 dp; the OLS fold is A22's exact-moment recipe."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v")))
+    daily = daily_revenue(spark, sf_dir)
     widx = Window.orderBy("day")
     idx = daily.select(F.col("v").cast("double").alias("v"),
                        (F.row_number().over(widx) - 1).alias("i"))
@@ -2560,15 +2491,11 @@ EWMA_CHART_WIDTH = 3.0      # ±3σ control limits
 def _ewma_chart_oracle() -> str:
     lam = EWMA_CHART_LAMBDA_PCT / 100.0
     return f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     idx AS (
-      SELECT day, v, ROW_NUMBER() OVER (ORDER BY day) AS t FROM daily
+      SELECT day, CAST(v AS DOUBLE) AS v,
+             ROW_NUMBER() OVER (ORDER BY day) AS t
+      FROM daily
     ),
     mu AS (
       SELECT CAST(SUM(CAST(v AS DECIMAL(27,9))) AS DOUBLE) / COUNT(*)
@@ -2646,12 +2573,8 @@ def q_ts_ewma_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimals, and σ-legs quantize at 9 dp — both engines compare
     identical 6-dp grid values for the flag."""
     lam = EWMA_CHART_LAMBDA_PCT / 100.0
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)"))
-                  .cast("double").alias("v")))
+    daily = daily_revenue(spark, sf_dir).select(
+        "day", F.col("v").cast("double").alias("v"))
     widx = Window.orderBy("day")
     idx = share(daily.select("day", "v",
                              F.row_number().over(widx).alias("t")))
@@ -2701,13 +2624,7 @@ PGRAM_MAX_PERIOD = 14
 @query(
     "q_ts_periodogram",
     oracle=f"""
-    WITH daily AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     base AS (
       SELECT COUNT(*) AS n, MIN(day) AS d0,
              CAST(SUM(CAST(v AS DECIMAL(20,6))) AS DOUBLE) AS s1,
@@ -2782,12 +2699,8 @@ def q_ts_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is days × {PGRAM_MAX_PERIOD - PGRAM_MIN_PERIOD + 1} periods —
     calendar-bounded, broadcast-joined, never a shuffle of the fact
     table; the fold is a 13-row relation."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == ACF_EVENT)
-    daily = (e.groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                       .alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
-             .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
+    daily = daily_revenue(spark, sf_dir).select(
+        "day", F.col("v").cast("decimal(19,6)").alias("v"))
     base = daily.agg(
         F.count(F.lit(1)).alias("n"), F.min("day").alias("d0"),
         F.sum(F.col("v").cast("decimal(20,6)")).cast("double").alias("s1"),
@@ -2839,13 +2752,7 @@ CCF_LEAD_EVENT = "click"  # does click volume LEAD purchase revenue?
 @query(
     "q_ts_cross_corr",
     oracle=f"""
-    WITH dv AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             SUM(CAST(value AS DECIMAL(20,6))) AS v
-      FROM events WHERE event_type = '{ACF_EVENT}'
-      GROUP BY 1
-    ),
+    WITH {DAILY_REVENUE_ORACLE},
     dc AS (
       SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
                AS day,
@@ -2858,7 +2765,7 @@ CCF_LEAD_EVENT = "click"  # does click volume LEAD purchase revenue?
              CAST(SUM(CAST(v AS DECIMAL(20,6))) AS DOUBLE) AS s1v,
              CAST(SUM(CAST(v AS DECIMAL(19,6))
                       * CAST(v AS DECIMAL(19,6))) AS DOUBLE) AS s2v
-      FROM dv
+      FROM daily
     ),
     bc AS (
       SELECT COUNT(*) AS nc,
@@ -2874,7 +2781,7 @@ CCF_LEAD_EVENT = "click"  # does click volume LEAD purchase revenue?
              CAST(SUM(CAST(b.v AS DECIMAL(20,6))) AS DOUBLE) AS sv
       FROM range(-{CCF_MAX_LAG}, {CCF_MAX_LAG} + 1) l(lag)
       JOIN dc a ON TRUE
-      JOIN dv b ON b.day = a.day + CAST(l.lag AS INT)
+      JOIN daily b ON b.day = a.day + CAST(l.lag AS INT)
       GROUP BY l.lag
     ),
     lagged AS (
@@ -2938,11 +2845,8 @@ def q_ts_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     the calendar — the fact table is never shuffled past the first
     aggregate."""
     e = load(spark, sf_dir, "events")
-    dv = (e.where(F.col("event_type") == ACF_EVENT)
-          .groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
-                   .alias("day"))
-          .agg(F.sum(F.col("value").cast("decimal(20,6)")).alias("v"))
-          .select("day", F.col("v").cast("decimal(19,6)").alias("v")))
+    dv = daily_revenue(spark, sf_dir).select(
+        "day", F.col("v").cast("decimal(19,6)").alias("v"))
     dc = (e.where(F.col("event_type") == CCF_LEAD_EVENT)
           .groupBy(F.to_date(F.date_trunc("day", F.col("ts")))
                    .alias("day"))

@@ -90,42 +90,74 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 18 shared-estimator + 10 store-count + 11 SQL-binding
-    # + 7 no-data-batch + 4 fold_stream = 50.
-    # Composition: (a) the 13 queries that now fit their logistic model
-    # through functions.scoring.fit_logistic (oracles through
-    # gd_oracle), the 4 exact quantiles that now pick through
-    # operators.aggregates.rank_select, and q_merge_upsert, whose oracle
-    # became incremental.MERGE_ORACLE (shared with q_stream_merge,
-    # already in (e)); (b) the 10 stateful streams whose state-store
-    # count changed when every stream began starting with one store per
-    # task slot up to 8 (streaming.jobs._drain); (c) 11 of the queries
-    # whose SQL text now binds its relations as spark.sql DataFrame
-    # arguments (io.sql or a named placeholder) instead of session temp
-    # views, or whose conf flip became a write option (q_sink_backfill),
-    # plus q_tpch_q01 for the TPC-H runner (plans unchanged); (d) 7
-    # streams whose no-data-batch skip holds its conf only around
-    # start() and whose store count also changed; (e) the 4 queries
-    # whose foreachBatch loop became streaming.jobs.fold_stream, whose
-    # fold now starts from the initial state unmaterialized. They
-    # replace the oldest already-proven names (the 15 staging-rule
-    # queries, the restaged MV rollup answer and the two subquery
-    # SQL-binding queries).
+    # Window: 36 shared-relation + 14 shared-estimator/merge = 50.
+    # Composition: (a) the 36 queries whose oracle or Spark text now
+    # calls a shared-relation builder instead of pasting its own copy:
+    # the 9 LSH-verify oracles (dedup.lsh_verified_oracle; two of them
+    # also pipeline.QUALITY_ORACLE, whose Spark twin
+    # pipeline.quality_filtered also serves q_pipeline_corpus_curation),
+    # the 11 oracles over unit-normalized embeddings
+    # (similarity.UNIT_ORACLE, including the q_dedup_recall_lsh
+    # composite), the 5 drug-era oracles (rules.ERA_ORACLE, including
+    # the q_domain_alert_inbox composite), the 8 daily-revenue queries
+    # (timeseries.daily_revenue / DAILY_REVENUE_ORACLE; q_ts_acf and
+    # q_ts_ljung_box also acf_rho / ACF_ORACLE) and the 2 CDC applies
+    # (incremental.CDC_ORACLE, CDC_DELETE_MOD); (b) 14 of the previous
+    # window's newest names (the fit_logistic / rank_select queries and
+    # both MERGE_ORACLE users). They replace the stream store-count,
+    # SQL-binding, no-data-batch and fold_stream names, proven at
+    # sf0.01 in earlier windows.
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
+    # LSH candidates + word-set Jaccard through lsh_verified_oracle
+    "q_dedup_lsh_verified",
+    "q_dedup_clusters_lsh",
+    "q_dedup_burden_matrix",
+    "q_dedup_minhash_error",
+    "q_pipeline_near_dedup",
+    "q_pipeline_canonical",
+    "q_pipeline_fates",
+    "q_split_leakage",
+    "q_corpus_release_gate",
+    "q_pipeline_corpus_curation",
+    # unit-normalized embeddings through UNIT_ORACLE
+    "q_dedup_cosine",
+    "q_dedup_cosine_lsh",
+    "q_dedup_semantic",
+    "q_dedup_recall_lsh",
+    "q_sim_topk_ivf",
+    "q_sim_topk_ivf_staged",
+    "q_sim_index_incremental",
+    "q_sim_recall_ivf",
+    "q_sim_topk_ivfpq",
+    "q_sim_knn_classify",
+    "q_sim_recall_rp",
+    # drug eras through ERA_ORACLE
+    "q_domain_drug_eras",
+    "q_domain_therapy_gaps",
+    "q_domain_refill_due",
+    "q_domain_era_survival",
+    "q_domain_alert_inbox",
+    # daily purchase revenue through daily_revenue; ACF through acf_rho
+    "q_ts_acf",
+    "q_ts_ljung_box",
+    "q_ts_seasonality",
+    "q_ts_theil_sen",
+    "q_ts_hurst",
+    "q_ts_ewma_chart",
+    "q_ts_periodogram",
+    "q_ts_cross_corr",
+    # CDC apply through CDC_ORACLE
+    "q_merge_cdc_apply",
+    "q_stream_cdc_apply",
     # batch-GD fit through fit_logistic / gd_oracle
     "q_ml_logreg_train",
     "q_pipeline_quality_model",
     "q_ml_eval",
     "q_ml_lift",
-    "q_ml_calibration",
     "q_ml_auc",
-    "q_ml_pr_curve",
     "q_ml_brier",
-    "q_ml_ks",
-    "q_ml_score_drift",
-    "q_ml_mcc",
     "q_ml_logloss",
     "q_ml_operating_point",
     # exact binned quantile through rank_select
@@ -133,46 +165,9 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_agg_exact_quantiles",
     "q_agg_cvar",
     "q_quality_iqr",
-    # oracle now incremental.MERGE_ORACLE
+    # oracle incremental.MERGE_ORACLE
     "q_merge_upsert",
-    # state stores sized to the task slots (up to 8) by _drain
-    "q_stream_stateful",
-    "q_stream_funnel",
-    "q_stream_attribution",
-    "q_stream_transitions",
-    "q_stream_sequence",
-    "q_stream_stream_left",
-    "q_stream_dedup",
-    "q_stream_hourly_counts",
-    "q_stream_hourly_distinct",
-    "q_stream_hourly_distinct_approx",
-    # SQL binding — relations bound as spark.sql DataFrame arguments
-    "q_agg_grouping_sets",
-    "q_join_lateral_topk",
-    "q_graph_reachability",
-    "q_graph_sssp",
-    "q_udf_sql",
-    "q_rollup_timegrain",
-    "q_udtf_sentences",
-    "q_sql_scripting",
-    "q_domain_hl7_udtf",
-    "q_sink_backfill",
-    "q_tpch_q01",
-    # trailing no-data micro-batch skipped; overrides scoped to start();
-    # state stores sized to the task slots (up to 8)
-    "q_stream_dedup_watermarked",
-    "q_stream_srm",
-    "q_stream_psi",
-    "q_stream_anomaly",
-    "q_stream_sessions",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    # foreachBatch loop replaced by fold_stream (q_stream_merge's oracle
-    # is now also incremental.MERGE_ORACLE)
     "q_stream_merge",
-    "q_stream_cdc_apply",
-    "q_stream_ingest_dedup",
-    "q_stream_mv_refresh",
 )
 
 # The external checker verifies exactly the first 50 load_all() entries;

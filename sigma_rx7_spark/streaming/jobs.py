@@ -34,7 +34,8 @@ from pyspark.sql.streaming import DataStreamWriter
 from ..io import load, read_stream
 from ..materialize import share, snapshot
 from ..registry import query
-from ..operators.incremental import MERGE_CUTOFF, MERGE_ORACLE
+from ..operators.incremental import (CDC_DELETE_MOD, CDC_ORACLE,
+                                     MERGE_CUTOFF, MERGE_ORACLE)
 
 # Session-conf seam for the file source's per-micro-batch rate limit.
 # Unset (the default and the harness posture) the source drains in one
@@ -548,47 +549,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_cdc_apply",
-    oracle=f"""
-    WITH latest AS (
-      SELECT user_id, event_type, event_id, value,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type
-               ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-      FROM events
-      WHERE CAST(ts AS TIMESTAMP) < TIMESTAMP '{MERGE_CUTOFF}'
-    ), base AS (
-      SELECT user_id, event_type, event_id, value, TRUE AS b_present
-      FROM latest WHERE rn = 1
-    ), chg_latest AS (
-      SELECT user_id, event_type, event_id, value,
-             CASE WHEN event_id % 7 = 0 THEN 'D' ELSE 'U' END AS op,
-             ROW_NUMBER() OVER (
-               PARTITION BY user_id, event_type
-               ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-      FROM events
-      WHERE CAST(ts AS TIMESTAMP) >= TIMESTAMP '{MERGE_CUTOFF}'
-    ), changes AS (
-      SELECT user_id, event_type, event_id, value, op, TRUE AS c_present
-      FROM chg_latest WHERE rn = 1
-    )
-    SELECT * FROM (
-      SELECT
-        COALESCE(b.user_id, c.user_id) AS user_id,
-        COALESCE(b.event_type, c.event_type) AS event_type,
-        CASE WHEN c.c_present THEN c.event_id
-             ELSE b.event_id END AS event_id,
-        CASE WHEN c.c_present THEN c.value
-             ELSE b.value END AS value,
-        CASE WHEN c.c_present IS NULL THEN 'carry'
-             WHEN b.b_present IS NULL THEN 'insert'
-             ELSE 'update' END AS src,
-        c.op AS op
-      FROM base b
-      FULL OUTER JOIN changes c
-        ON b.user_id IS NOT DISTINCT FROM c.user_id
-       AND b.event_type IS NOT DISTINCT FROM c.event_type
-    ) WHERE op IS NULL OR op <> 'D'
-    """,
+    oracle=CDC_ORACLE,
     tags=("T9", "M5", "streaming", "cdc"),
 )
 def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -626,7 +587,8 @@ def q_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("ts") >= cutoff)
         .select(
             "user_id", "event_type", "event_id", "value", "ts",
-            F.when(F.col("event_id") % 7 == 0, "D").otherwise("U")
+            F.when(F.col("event_id") % CDC_DELETE_MOD == 0, "D")
+            .otherwise("U")
             .alias("op"))
     )
     merged = streaming_merge(base, change_stream, keys, "ts", "event_id")
@@ -1217,7 +1179,6 @@ def q_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation order. State is bounded by days×buckets."""
     from ..compat import QDEC
     from ..operators.quality import PSI_BUCKETS
-    from ..io import load, read_stream
     from ..operators.incremental import MERGE_CUTOFF
     from pyspark.sql import Window
 
@@ -1365,7 +1326,6 @@ def q_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the max, so flags and maxima are engine-exact. Zero-variance
     families are excluded on both engines (no z is defined against a
     constant baseline)."""
-    from ..io import load, read_stream
     from ..operators.incremental import MERGE_CUTOFF
 
     cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")

@@ -315,7 +315,6 @@ class TestHl7Escaping:
 
     def test_udtf_twin_unescapes_identically(self, spark):
         from sigma_rx7_spark.domain.hl7 import build_messages, hl7_meds_udtf
-        from pyspark.sql.functions import lit
 
         meds = spark.createDataFrame(
             [(200 + i, 8, name, str(9100 + i), dt.date(2023, 1, 1))

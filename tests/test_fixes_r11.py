@@ -9,8 +9,6 @@ tests/test_layout.py::test_staging_identity.)
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 
 def test_pagerank_general_graph_keeps_dangling_in_nodes(spark):
     from sigma_rx7_spark.operators.graph import (PR_SCALE,

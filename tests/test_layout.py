@@ -94,8 +94,6 @@ def test_codec_choice_zstd_beats_snappy_and_roundtrips(spark, sf_dir):
     hot tier often stays snappy/lz4."""
     import os
 
-    from pyspark.sql import functions as F
-
     from sigma_rx7_spark.io import load
 
     src = (load(spark, sf_dir, "lineitem")

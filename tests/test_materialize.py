@@ -39,6 +39,21 @@
 An owner may be a tuple of modules that share the row; a third element
 names a row whose owner already has one. A regex is matched against
 each module's whole text, so a call chain may span lines.
+
+One text per shared relation: each ``SHARED`` row is a marker of a
+relation that several queries derive, and it must occur exactly once
+under ``sigma_rx7_spark/``, in the builder's module. Every other query
+calls that builder instead of pasting its text:
+
+- ``llm/dedup.py``: the md5-LSH band join of ``lsh_verified_oracle``;
+- ``llm/pipeline.py``: the token gate of ``QUALITY_ORACLE``;
+- ``llm/similarity.py``: the unit-normalized embeddings of
+  ``UNIT_ORACLE``;
+- ``domain/rules.py``: the era-gap window of ``ERA_ORACLE``;
+- ``operators/timeseries.py``: the daily purchase revenue of
+  ``daily_revenue`` / ``DAILY_REVENUE_ORACLE`` and the ACF lag join of
+  ``acf_rho`` / ``ACF_ORACLE``, one marker per engine;
+- ``operators/incremental.py``: the CDC op column of ``CDC_ORACLE``.
 """
 
 from __future__ import annotations
@@ -134,3 +149,29 @@ def test_pattern_only_in_owner_module(owner, pattern, allowed):
                  for line, src in _matches(pattern, text)
                  if (rel, src) not in allowed]
     assert not hits, "\n".join(hits)
+
+
+# (builder, its module, a marker of the relation's text)
+SHARED = [
+    ("lsh_verified_oracle", "llm/dedup.py", "a.band_hash = b.band_hash"),
+    ("QUALITY_ORACLE", "llm/pipeline.py", ">= {MIN_TOKENS}"),
+    ("UNIT_ORACLE", "llm/similarity.py", "1e-300)) AS nv"),
+    ("ERA_ORACLE", "domain/rules.py", "AND 1 PRECEDING) + INTERVAL"),
+    ("daily_revenue", "operators/timeseries.py", "== ACF_EVENT"),
+    ("DAILY_REVENUE_ORACLE", "operators/timeseries.py",
+     "event_type = '{ACF_EVENT}'"),
+    ("acf_rho", "operators/timeseries.py", 'F.col("va") * F.col("vb")'),
+    ("ACF_ORACLE", "operators/timeseries.py", "JOIN daily a ON TRUE"),
+    ("CDC_ORACLE", "operators/incremental.py", "THEN 'D' ELSE 'U'"),
+]
+
+
+@pytest.mark.parametrize("home, marker", [r[1:] for r in SHARED],
+                         ids=[r[0] for r in SHARED])
+def test_shared_relation_has_one_text(home, marker):
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = str(path.relative_to(PKG))
+        for n, line in enumerate(path.read_text().splitlines(), 1):
+            hits += [f"{rel}:{n}"] * line.count(marker)
+    assert len(hits) == 1 and hits[0].startswith(home + ":"), hits

@@ -880,8 +880,6 @@ def test_interleave_windows_partition_by_source(spark, sf_dir):
     """L5f: the per-doc rank window partitions by source — no global
     single-partition window over the corpus (the sources-sized index
     window is the only unpartitioned one)."""
-    import re
-
     p = plan(spark, sf_dir, "q_pipeline_interleave")
     # every Window node over the doc relation must carry a partition
     # spec; the lone partition-less window is over the distinct-source

@@ -121,7 +121,7 @@ def test_ad_matches_naive_pooled_model(spark, sf_dir):
 
 def test_ljung_box_matches_naive_acf(spark, sf_dir):
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.operators.timeseries import LB_MAX_LAG
+    from sigma_rx7_spark.operators.timeseries import ACF_MAX_LAG
 
     rows = _fetch(sf_dir, """
         SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE),
@@ -137,7 +137,7 @@ def test_ljung_box_matches_naive_acf(spark, sf_dir):
     q = 0.0
     h = 0
     import datetime as dt
-    for lag in range(1, LB_MAX_LAG + 1):
+    for lag in range(1, ACF_MAX_LAG + 1):
         num = m = 0.0
         for d, x in by_day.items():
             d2 = d + dt.timedelta(days=lag)

@@ -49,7 +49,7 @@ def test_srp_planned_candidates_subquadratic():
 
 
 def test_ljung_box_reject_nullable_on_short_series(spark):
-    # A 3-day series has fewer surviving lags than LB_MAX_LAG: the
+    # A 3-day series has fewer surviving lags than ACF_MAX_LAG: the
     # df=7 critical value is wrong there, so reject_5pct must be NULL
     # while lb_q itself still reports.
     import pyspark.sql.functions as F

@@ -96,8 +96,6 @@ def test_quality_features_floor_equals_case_guard(spark):
     # to the old CASE guard on every document shape, including the
     # flat_corpus degenerates (empty text, all-space text) where the
     # guard actually fires.
-    from pyspark.sql import functions as F
-
     from sigma_rx7_spark.llm.pipeline import quality_features
 
     rows = [

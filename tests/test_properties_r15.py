@@ -23,7 +23,6 @@ def _naive_skyline(points):
 
 
 def test_skyline_sweep_matches_bruteforce_model(spark, tmp_path):
-    from pyspark.sql import functions as F  # noqa: F401
     from sigma_rx7_spark.registry import load_all
 
     rng = random.Random(1507)

@@ -156,8 +156,6 @@ def test_np_unit_rows_matches_engine_normalized(spark, sf_dir):
     # by element at the bit level — including the 1e-300 zero floor.
     import numpy as np
 
-    from pyspark.sql import functions as F
-
     from sigma_rx7_spark.llm.similarity import normalized, np_unit_rows
 
     e = load(spark, sf_dir, "embeddings").limit(200)

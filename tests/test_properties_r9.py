@@ -6,7 +6,6 @@ formula that is wrong identically on both sides — the r8 discipline).
 from __future__ import annotations
 
 import math
-import os
 
 import duckdb
 import pytest
@@ -415,8 +414,7 @@ def test_stream_srm_equals_batch_srm(spark, sf_dir):
 
 def test_profile_drift_flags_are_consistent(spark, sf_dir):
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.operators.quality import (DRIFT_MEAN_REL_TOL,
-                                                   DRIFT_NULL_RATE_TOL)
+    from sigma_rx7_spark.operators.quality import DRIFT_NULL_RATE_TOL
 
     rows = {r["metric"]: r for r in
             registry.get("q_quality_profile_drift").fn(spark, sf_dir)
