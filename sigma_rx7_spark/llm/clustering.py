@@ -36,6 +36,8 @@ from ..io import load
 from ..kernels import dense_rows, dense_width
 from ..materialize import share
 from ..registry import query
+from .similarity import (EMB_DIM, N_QUERIES, PQ_SUBS, TOP_K, UNIT_ORACLE,
+                         q_sim_topk)
 
 # Exploded (vec_id, label, pos, x) view of the embeddings table, shared
 # by both queries; pos is 1-based to match the DuckDB mirror.
@@ -221,8 +223,6 @@ def q_cluster_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---- Covariance / PCA prep ----------------------------------------------
-
-EMB_DIM = 64  # harness embedding dimensionality (asserted in tests)
 
 # Covariance sufficient-statistic CTEs (e -> comp -> s), shared verbatim
 # by the q_embed_cov oracle and the power-iteration oracle so the PCA
@@ -598,9 +598,6 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Product quantization (PQ codes) -------------------------------------
 
-PQ_SUBS = 4  # subspaces; sub-vector width = EMB_DIM / PQ_SUBS = 16
-
-
 @query(
     "q_embed_pq",
     oracle=f"""
@@ -842,15 +839,6 @@ def q_embed_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- JL-projected-space recall audit (L2j) ----------------------------------
 
-# Probe/top-k constants MUST equal similarity.py's N_QUERIES/TOP_K
-# (q_sim_topk is the exact-neighbor side of this audit). Duplicated, not
-# imported: similarity.py imports THIS module at its top, so a
-# module-level reverse import breaks under similarity-first import
-# order; tests/test_plans.py asserts the values stay in sync.
-RP_QUERIES = 5
-RP_TOP_K = 10
-
-
 def _rp_proj_sql(src: str) -> str:
     """Projection CTE body shared with the q_embed_rp oracle: (vec_id,
     j, y) from the deterministic sign matrix, exact-decimal summed."""
@@ -868,12 +856,9 @@ def _rp_proj_sql(src: str) -> str:
     """
 
 
-def _recall_rp_oracle(sf_dir: str) -> str:
-    # Built at retrieval time: similarity.py imports this module at its
-    # top, so its UNIT_ORACLE is not importable while this one loads.
-    from .similarity import UNIT_ORACLE
-
-    return f"""
+@query(
+    "q_sim_recall_rp",
+    oracle=f"""
     WITH proj AS ({_rp_proj_sql("embeddings")}),
     norms AS (
       SELECT vec_id,
@@ -882,10 +867,10 @@ def _recall_rp_oracle(sf_dir: str) -> str:
     ),
     qp AS (SELECT p.vec_id AS q_id, p.j, p.y / n.nn AS qy
            FROM proj p JOIN norms n ON p.vec_id = n.vec_id
-           WHERE p.vec_id < {RP_QUERIES} AND n.nn > 0),
+           WHERE p.vec_id < {N_QUERIES} AND n.nn > 0),
     cp AS (SELECT p.vec_id AS c_id, p.j, p.y / n.nn AS cy
            FROM proj p JOIN norms n ON p.vec_id = n.vec_id
-           WHERE p.vec_id >= {RP_QUERIES} AND n.nn > 0),
+           WHERE p.vec_id >= {N_QUERIES} AND n.nn > 0),
     cosp AS (
       SELECT q_id, c_id,
              CAST(SUM(CAST(qy * cy AS DECIMAL(20,6))) AS DOUBLE) AS cos_rp
@@ -898,7 +883,7 @@ def _recall_rp_oracle(sf_dir: str) -> str:
                ROW_NUMBER() OVER (PARTITION BY q_id
                                   ORDER BY cos_rp DESC, c_id) AS rn
         FROM cosp
-      ) WHERE rn <= {RP_TOP_K}
+      ) WHERE rn <= {TOP_K}
     ),
     {UNIT_ORACLE},
     bf AS (
@@ -907,21 +892,16 @@ def _recall_rp_oracle(sf_dir: str) -> str:
                ROW_NUMBER() OVER (PARTITION BY q_id
                  ORDER BY list_inner_product(q_nv, c_nv) DESC, c_id) AS rn
         FROM q CROSS JOIN c
-      ) WHERE rn <= {RP_TOP_K}
+      ) WHERE rn <= {TOP_K}
     )
     SELECT bf.q_id,
            CAST(SUM(CASE WHEN r.c_id IS NOT NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_hits,
            CAST(SUM(CASE WHEN r.c_id IS NOT NULL THEN 1 ELSE 0 END)
-                AS DOUBLE) / {RP_TOP_K} AS recall_at_k
+                AS DOUBLE) / {TOP_K} AS recall_at_k
     FROM bf LEFT JOIN rp_top r ON r.q_id = bf.q_id AND r.c_id = bf.c_id
     GROUP BY bf.q_id
-    """
-
-
-@query(
-    "q_sim_recall_rp",
-    oracle=_recall_rp_oracle,
+    """,
     tags=("L2", "audit", "johnson-lindenstrauss"),
 )
 def q_sim_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -977,10 +957,10 @@ def q_sim_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # projection aggregate and its norm join — the expensive stage of
     # the audit, twice. (vec_id, j, yn) is N x RP_OUT_DIM doubles.
     pn = share(pn)
-    qp = (pn.where(F.col("vec_id") < RP_QUERIES)
+    qp = (pn.where(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"), "j",
                   F.col("yn").alias("qy")))
-    cp = (pn.where(F.col("vec_id") >= RP_QUERIES)
+    cp = (pn.where(F.col("vec_id") >= N_QUERIES)
           .select(F.col("vec_id").alias("c_id"), "j",
                   F.col("yn").alias("cy")))
     cosp = (
@@ -992,17 +972,16 @@ def q_sim_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_rp").desc(), "c_id")
     rp_top = (cosp.withColumn("rn", F.row_number().over(w))
-              .where(F.col("rn") <= RP_TOP_K)
+              .where(F.col("rn") <= TOP_K)
               .select("q_id", "c_id", F.lit(1).alias("hit")))
 
-    from .similarity import q_sim_topk
     bf = q_sim_topk(spark, sf_dir).select("q_id", "c_id")
     n_hits = F.sum(F.coalesce(F.col("hit"), F.lit(0)))
     return (
         bf.join(rp_top, ["q_id", "c_id"], "left")
         .groupBy("q_id")
         .agg(n_hits.cast("bigint").alias("n_hits"),
-             (n_hits.cast("double") / RP_TOP_K).alias("recall_at_k"))
+             (n_hits.cast("double") / TOP_K).alias("recall_at_k"))
     )
 
 

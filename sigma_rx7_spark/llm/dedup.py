@@ -29,7 +29,7 @@ from ..io import _table_files, load
 from ..kernels import collect_dense, dense_rows
 from ..materialize import share
 from ..registry import query
-from .similarity import (UNIT_ORACLE, dot, dot_idx, normalized,
+from .similarity import (EMB_DIM, UNIT_ORACLE, dot, dot_idx, normalized,
                          np_pairwise_dots, np_unit_rows)
 
 MINHASH_K = 32          # signature length
@@ -69,6 +69,25 @@ def _shingles(text_col: str = "text", n: int = SHINGLE_N) -> Column:
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.array_distinct(F.transform(
         idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))))
+
+
+def shingles_oracle(src: str = "documents", key: str = "doc_id") -> str:
+    """DuckDB CTE bodies of _shingles over a relation ``src`` with
+    (``key``, text): ``toks`` (key, t = its non-empty words) and ``sh``
+    (key, shingle), one row per distinct SHINGLE_N-word shingle of each
+    row. Plain SQL, written apart from the Spark code."""
+    return f"""
+    toks AS (
+      SELECT {key}, list_filter(string_split(text, ' '), x -> x <> '') AS t
+      FROM {src}
+    ), sh AS (
+      SELECT {key},
+             unnest(list_distinct(list_transform(
+               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
+               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
+                                    ' ')))) AS shingle
+      FROM toks
+    )"""
 
 
 def shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
@@ -358,18 +377,7 @@ def lsh_verified_oracle(src: str = "documents") -> str:
                  AS band_hash FROM sig"""
         for j in range(MD5_LSH_BANDS))
     inter = "len(list_intersect(wa.w, wb.w))"
-    return f"""
-    toks AS (
-      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-      FROM {src}
-    ), sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' ')))) AS shingle
-      FROM toks
-    ), dig AS (
+    return f"""{shingles_oracle(src)}, dig AS (
       SELECT doc_id,
              {digests}
       FROM sh
@@ -386,10 +394,7 @@ def lsh_verified_oracle(src: str = "documents") -> str:
         ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
        AND a.doc_id < b.doc_id
     ), words AS (
-      SELECT doc_id,
-             list_distinct(list_filter(string_split(text, ' '),
-                                       x -> x <> '')) AS w
-      FROM {src}
+      SELECT doc_id, list_distinct(t) AS w FROM toks
     ), scored AS (
       SELECT a_doc_id, b_doc_id,
              CAST({inter} AS BIGINT) AS n_common,
@@ -517,17 +522,7 @@ CONTAMINATION_FLAG = 0.5  # flag docs sharing >= half their shingles
 @query(
     "q_text_contamination",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-      FROM documents
-    ), sh AS (
-      SELECT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' ')))) AS shingle
-      FROM toks
-    ), bench AS (
+    WITH {shingles_oracle()}, bench AS (
       SELECT DISTINCT shingle FROM sh WHERE doc_id % {BENCH_MOD} = 0
     ), corpus AS (
       SELECT doc_id, shingle FROM sh WHERE doc_id % {BENCH_MOD} <> 0
@@ -689,7 +684,6 @@ SRP_BITS = 32    # library-default signature width (the executed dedup op
 SRP_BANDS = 8    # derives its own geometry from the corpus size — see
                  # srp_planned_geometry; 8x4 remains the documented
                  # fixed-width default for ad-hoc library callers)
-EMB_DIM = 64     # harness embedding width (FIXTURES.md; asserted in tests)
 
 # Planner operating point for the EXECUTED near-dup geometry: hold 0.9
 # recall at the production near-dup threshold (cos >= 0.9 — the regime
@@ -1227,6 +1221,31 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
     return labels
 
 
+def components_oracle(
+        pairs: str = "SELECT a_doc_id AS src, b_doc_id AS dst FROM verified",
+) -> str:
+    """DuckDB CTE bodies of connected_components over the documents:
+    ``pairs`` (a SELECT of undirected ``src``/``dst`` edges, by default
+    the ``verified`` pairs of lsh_verified_oracle), ``edges`` (both
+    directions), ``reach`` and ``cc`` (doc_id, cluster_id = the smallest
+    doc_id in its component). Needs ``WITH RECURSIVE``. Plain SQL,
+    written apart from the Spark code."""
+    return f"""
+    pairs AS ({pairs}),
+    edges AS (
+      SELECT src, dst FROM pairs
+      UNION ALL
+      SELECT dst, src FROM pairs
+    ), reach AS (
+      SELECT doc_id AS node, doc_id AS label FROM documents
+      UNION
+      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.node
+    ), cc AS (
+      SELECT node AS doc_id, MIN(label) AS cluster_id
+      FROM reach GROUP BY node
+    )"""
+
+
 _CLUSTER_PAIRS_SQL = f"""
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM documents a
@@ -1306,21 +1325,7 @@ def _cluster_pairs(words: DataFrame) -> DataFrame:
 @query(
     "q_dedup_clusters",
     oracle=f"""
-    WITH RECURSIVE pairs AS ({_CLUSTER_PAIRS_SQL}),
-    edges AS (
-      SELECT src, dst FROM pairs
-      UNION ALL
-      SELECT dst, src FROM pairs
-    ),
-    reach(node, label) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.node
-    ),
-    cc AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id
-      FROM reach GROUP BY node
-    )
+    WITH RECURSIVE {components_oracle(_CLUSTER_PAIRS_SQL)}
     SELECT doc_id, cluster_id,
            COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
     FROM cc
@@ -1366,18 +1371,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_clusters_oracle() -> str:
     return f"""
     WITH RECURSIVE {lsh_verified_oracle()},
-    edges AS (
-      SELECT a_doc_id AS src, b_doc_id AS dst FROM verified
-      UNION ALL
-      SELECT b_doc_id, a_doc_id FROM verified
-    ), reach AS (
-      SELECT doc_id AS node, doc_id AS label FROM documents
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.node
-    ), cc AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id
-      FROM reach GROUP BY node
-    )
+    {components_oracle()}
     SELECT doc_id, cluster_id,
            COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
     FROM cc
@@ -1429,17 +1423,7 @@ RARE_SHINGLE_DF = 10    # blocking key: shingles in 2..DF docs pair those docs
 @query(
     "q_dedup_containment",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS t
-      FROM documents
-    ), sh AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' ')))) AS shingle
-      FROM toks
-    ), rare AS (
+    WITH {shingles_oracle()}, rare AS (
       SELECT shingle FROM sh GROUP BY shingle
       HAVING COUNT(*) BETWEEN 2 AND {RARE_SHINGLE_DF}
     ), cand AS (
@@ -1448,12 +1432,8 @@ RARE_SHINGLE_DF = 10    # blocking key: shingles in 2..DF docs pair those docs
       JOIN rare r ON a.shingle = r.shingle
       JOIN sh b ON b.shingle = a.shingle AND a.doc_id < b.doc_id
     ), shsets AS (
-      SELECT doc_id,
-             list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' '))) AS w
-      FROM toks
+      SELECT doc_id, list_distinct(list(shingle)) AS w
+      FROM sh GROUP BY doc_id
     )
     SELECT a_doc_id, b_doc_id,
            CAST(len(list_intersect(wa.w, wb.w)) AS BIGINT) AS n_common,
@@ -1733,16 +1713,8 @@ def q_dedup_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_text_source_overlap",
     oracle=f"""
-    WITH toks AS (
-      SELECT source, list_filter(string_split(text, ' '), x -> x <> '') AS t
-      FROM documents
-    ), ss AS (
-      SELECT DISTINCT source,
-             md5(unnest(list_distinct(list_transform(
-               range(1, greatest(len(t) - {SHINGLE_N}, 0) + 2),
-               i -> array_to_string(list_slice(t, i, i + {SHINGLE_N - 1}),
-                                    ' '))))) AS dig
-      FROM toks
+    WITH {shingles_oracle(key="source")}, ss AS (
+      SELECT DISTINCT source, md5(shingle) AS dig FROM sh
     ), sizes AS (
       SELECT source, COUNT(*) AS n_shingles FROM ss GROUP BY source
     ), shared AS (

@@ -163,22 +163,11 @@ def q_pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_oracle() -> str:
-    from .dedup import lsh_verified_oracle
+    from .dedup import components_oracle, lsh_verified_oracle
 
     return f"""
     WITH RECURSIVE {lsh_verified_oracle()},
-    edges AS (
-      SELECT a_doc_id AS src, b_doc_id AS dst FROM verified
-      UNION ALL
-      SELECT b_doc_id, a_doc_id FROM verified
-    ), reach AS (
-      SELECT doc_id AS node, doc_id AS label FROM documents
-      UNION
-      SELECT e.src, r.label FROM reach r JOIN edges e ON e.dst = r.node
-    ), cc AS (
-      SELECT node AS doc_id, MIN(label) AS cluster_id
-      FROM reach GROUP BY node
-    ), ranked AS (
+    {components_oracle()}, ranked AS (
       SELECT cluster_id, cc.doc_id, d.n_chars,
              ROW_NUMBER() OVER (
                PARTITION BY cluster_id

@@ -21,8 +21,9 @@ from .. import staging
 from ..io import load, memo, read_staged
 from ..materialize import share
 from ..registry import query
-from .clustering import EMB_DIM, PQ_SUBS
 
+EMB_DIM = 64  # harness embedding dimensionality (asserted in tests)
+PQ_SUBS = 4  # PQ subspaces; sub-vector width = EMB_DIM / PQ_SUBS = 16
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 are the probe set in the harness queries
 NPROBE = 4

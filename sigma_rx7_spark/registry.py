@@ -90,23 +90,27 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 36 shared-relation + 14 shared-estimator/merge = 50.
-    # Composition: (a) the 36 queries whose oracle or Spark text now
+    # Window: 40 shared-relation + 10 shared-estimator/merge = 50.
+    # Composition: (a) the 40 queries whose oracle or Spark text now
     # calls a shared-relation builder instead of pasting its own copy:
     # the 9 LSH-verify oracles (dedup.lsh_verified_oracle; two of them
     # also pipeline.QUALITY_ORACLE, whose Spark twin
-    # pipeline.quality_filtered also serves q_pipeline_corpus_curation),
+    # pipeline.quality_filtered also serves q_pipeline_corpus_curation;
+    # q_dedup_clusters_lsh and q_pipeline_canonical also
+    # dedup.components_oracle), the 4 other word-shingle or
+    # connected-components oracles (dedup.shingles_oracle,
+    # dedup.components_oracle),
     # the 11 oracles over unit-normalized embeddings
     # (similarity.UNIT_ORACLE, including the q_dedup_recall_lsh
     # composite), the 5 drug-era oracles (rules.ERA_ORACLE, including
     # the q_domain_alert_inbox composite), the 8 daily-revenue queries
     # (timeseries.daily_revenue / DAILY_REVENUE_ORACLE; q_ts_acf and
     # q_ts_ljung_box also acf_rho / ACF_ORACLE) and the 2 CDC applies
-    # (incremental.CDC_ORACLE, CDC_DELETE_MOD); (b) 14 of the previous
-    # window's newest names (the fit_logistic / rank_select queries and
-    # both MERGE_ORACLE users). They replace the stream store-count,
-    # SQL-binding, no-data-batch and fold_stream names, proven at
-    # sf0.01 in earlier windows.
+    # (incremental.CDC_ORACLE, CDC_DELETE_MOD); (b) 10 of the previous
+    # window's newest names (the fit_logistic queries and both
+    # MERGE_ORACLE users). They replace the stream store-count,
+    # SQL-binding, no-data-batch and fold_stream names and the
+    # rank_select queries, proven at sf0.01 in earlier windows.
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
@@ -121,6 +125,12 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_split_leakage",
     "q_corpus_release_gate",
     "q_pipeline_corpus_curation",
+    # word shingles through shingles_oracle; components through
+    # components_oracle
+    "q_text_contamination",
+    "q_dedup_containment",
+    "q_text_source_overlap",
+    "q_dedup_clusters",
     # unit-normalized embeddings through UNIT_ORACLE
     "q_dedup_cosine",
     "q_dedup_cosine_lsh",
@@ -160,11 +170,6 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_ml_brier",
     "q_ml_logloss",
     "q_ml_operating_point",
-    # exact binned quantile through rank_select
-    "q_agg_exact_median",
-    "q_agg_exact_quantiles",
-    "q_agg_cvar",
-    "q_quality_iqr",
     # oracle incremental.MERGE_ORACLE
     "q_merge_upsert",
     "q_stream_merge",

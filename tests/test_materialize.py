@@ -45,7 +45,9 @@ relation that several queries derive, and it must occur exactly once
 under ``sigma_rx7_spark/``, in the builder's module. Every other query
 calls that builder instead of pasting its text:
 
-- ``llm/dedup.py``: the md5-LSH band join of ``lsh_verified_oracle``;
+- ``llm/dedup.py``: the md5-LSH band join of ``lsh_verified_oracle``,
+  the word shingles of ``shingles_oracle`` and the recursive
+  connected-components walk of ``components_oracle``;
 - ``llm/pipeline.py``: the token gate of ``QUALITY_ORACLE``;
 - ``llm/similarity.py``: the unit-normalized embeddings of
   ``UNIT_ORACLE``;
@@ -154,6 +156,9 @@ def test_pattern_only_in_owner_module(owner, pattern, allowed):
 # (builder, its module, a marker of the relation's text)
 SHARED = [
     ("lsh_verified_oracle", "llm/dedup.py", "a.band_hash = b.band_hash"),
+    ("shingles_oracle", "llm/dedup.py",
+     "list_slice(t, i, i + {SHINGLE_N - 1})"),
+    ("components_oracle", "llm/dedup.py", "reach AS ("),
     ("QUALITY_ORACLE", "llm/pipeline.py", ">= {MIN_TOKENS}"),
     ("UNIT_ORACLE", "llm/similarity.py", "1e-300)) AS nv"),
     ("ERA_ORACLE", "domain/rules.py", "AND 1 PRECEDING) + INTERVAL"),

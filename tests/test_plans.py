@@ -962,15 +962,6 @@ def test_decompose_day_grain_before_window(spark, sf_dir):
     assert "BroadcastHashJoin" in p
 
 
-def test_rp_recall_constants_match_similarity():
-    """q_sim_recall_rp reuses q_sim_topk as its exact-neighbor side, so
-    its duplicated probe/top-k constants (duplicated to avoid a circular
-    module import) must equal similarity.py's."""
-    from sigma_rx7_spark.llm import clustering, similarity
-    assert clustering.RP_QUERIES == similarity.N_QUERIES
-    assert clustering.RP_TOP_K == similarity.TOP_K
-
-
 def test_mwu_and_ks_shuffle_values_not_rows(spark, sf_dir):
     """Mann-Whitney / KS: after the per-value collapse, exchanges carry
     (value, counts) — the raw event columns (event_id, props) must never
