@@ -1246,6 +1246,27 @@ def components_oracle(
     )"""
 
 
+def cluster_sizes(labels: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) from connected_components'
+    (node, label) rows: each document with its component and the
+    component's document count."""
+    from pyspark.sql import Window
+    return labels.select(
+        F.col("node").alias("doc_id"),
+        F.col("label").alias("cluster_id"),
+    ).withColumn(
+        "cluster_size",
+        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")),
+    )
+
+
+# The DuckDB twin of cluster_sizes: the final SELECT over
+# components_oracle's ``cc``.
+CLUSTER_SIZES_ORACLE = """SELECT doc_id, cluster_id,
+           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
+    FROM cc"""
+
+
 _CLUSTER_PAIRS_SQL = f"""
       SELECT a.doc_id AS src, b.doc_id AS dst
       FROM documents a
@@ -1326,9 +1347,7 @@ def _cluster_pairs(words: DataFrame) -> DataFrame:
     "q_dedup_clusters",
     oracle=f"""
     WITH RECURSIVE {components_oracle(_CLUSTER_PAIRS_SQL)}
-    SELECT doc_id, cluster_id,
-           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-    FROM cc
+    {CLUSTER_SIZES_ORACLE}
     """,
     tags=("L1", "dedup", "clusters"),
 )
@@ -1358,23 +1377,14 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct(tokens(F.col("text"))).alias("words"))
     labels = connected_components(
         d.select(F.col("doc_id").alias("node")), _cluster_pairs(words))
-    from pyspark.sql import Window
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-    ).withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")),
-    )
+    return cluster_sizes(labels)
 
 
 def _lsh_clusters_oracle() -> str:
     return f"""
     WITH RECURSIVE {lsh_verified_oracle()},
     {components_oracle()}
-    SELECT doc_id, cluster_id,
-           COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-    FROM cc
+    {CLUSTER_SIZES_ORACLE}
     """
 
 
@@ -1404,14 +1414,7 @@ def q_dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a_doc_id").alias("src"), F.col("b_doc_id").alias("dst"))
     labels = connected_components(
         d.select(F.col("doc_id").alias("node")), edges)
-    from pyspark.sql import Window
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-    ).withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")),
-    )
+    return cluster_sizes(labels)
 
 
 # ---- Containment (sub/superset) duplication ------------------------------
@@ -1832,18 +1835,7 @@ PREFIX_T_NUM, PREFIX_T_DEN = 4, 5
 @query(
     "q_dedup_prefix",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split(text, ' '), x -> x <> '') AS w
-      FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             array_to_string(list_slice(w, i + 1, i + {SHINGLE_N}), ' ')
-               AS shingle
-      FROM toks,
-           UNNEST(range(0, greatest(len(w) - {SHINGLE_N}, 0) + 1)) AS u(i)
-    ),
+    WITH {shingles_oracle()},
     sz AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
     inter AS (
       SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS it

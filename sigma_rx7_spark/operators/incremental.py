@@ -4,23 +4,23 @@ The reference refreshes its DuckDB tables by re-running the bootstrap
 script (reference README.md:36,55-58,75) — a full rewrite. A 100 TB
 warehouse cannot rewrite; it applies *change batches* to a base snapshot:
 ``MERGE INTO base USING changes WHEN MATCHED THEN UPDATE WHEN NOT MATCHED
-THEN INSERT``. Spark-first that is a keyed full-outer join of
-latest-per-key relations with change-side precedence — one sort-merge
-shuffle per batch, and with both sides bucketed by the merge key (see
-``io.write_bucketed``) the shuffle disappears entirely.
+THEN INSERT``. When base and changes are two slices of one keyed
+relation, Spark-first that is one keyed aggregate (``merge_at_cutoff``):
+per key, ``max_by`` keeps the latest row of each slice in the partial
+aggregate, so one shuffle carries at most one row per key and slice per
+partition, and no window, sort-merge join or second scan runs.
 
-Scale notes:
-- The window-dedup ("latest wins") runs on the *change batch*, which is
-  small relative to base; the base side is already one-row-per-key.
-- At warehouse scale the same plan is what Delta/Iceberg MERGE compiles
-  to; expressing it as plain DataFrame ops keeps the engine portable.
-- The merge key (user_id, event_type) is the natural bucketing key; AQE
-  handles skewed hot keys.
+At warehouse scale, against a stored base snapshot, the same MERGE is a
+keyed full-outer join of two one-row-per-key relations, which is what
+Delta/Iceberg MERGE compiles to; bucketing both sides on the merge key
+(``io.write_bucketed``) removes its shuffle. The streaming twin
+(``streaming.jobs.merge_batch_into_state``) folds each micro-batch into
+its state that way.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import staging
@@ -46,30 +46,43 @@ def latest_per_key(df: DataFrame, keys: list[str], order_col: str,
     )
 
 
-def merge_upsert(base: DataFrame, changes: DataFrame,
-                 keys: list[str]) -> DataFrame:
-    """MERGE: change rows override matching base keys; unmatched change
-    keys insert; unmatched base keys carry over. Both inputs must be
-    one-row-per-key. Non-key columns are coalesced change-first."""
-    value_cols = [c for c in base.columns if c not in keys]
-    b = base.withColumn("_b_present", F.lit(True)).alias("b")
-    c = changes.withColumn("_c_present", F.lit(True)).alias("c")
-    cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"c.{k}")) for k in keys]
-    picked = [
-        F.when(F.col("c._c_present"), F.col(f"c.{v}"))
-        .otherwise(F.col(f"b.{v}")).alias(v)
-        for v in value_cols
-    ]
-    key_cols = [
-        F.coalesce(F.col(f"b.{k}"), F.col(f"c.{k}")).alias(k) for k in keys
-    ]
+def merge_at_cutoff(rows: DataFrame, keys: list[str], order_col: str,
+                    tiebreak: str, cutoff: Column) -> DataFrame:
+    """MERGE within one keyed relation split at ``cutoff``: rows whose
+    ``order_col`` is before it form the base snapshot, the others the
+    change batch, and each side contributes its latest row per key by
+    (order_col, tiebreak). A change row overrides its key's base row,
+    an unmatched change key inserts, an unmatched base key carries.
+
+    Returns the keys, every other column but ``order_col`` (the
+    payload) and ``src``: 'base', 'insert' or 'update'. One aggregate
+    over one scan: per key, ``max_by`` picks each side's payload
+    struct, ordered by (order_col, tiebreak) on its own side and null on
+    the other, and ``src`` follows from which pick is null. A matched
+    change with null payload values still wins, a null key is a group of
+    its own (as in a null-safe join), and a row with a null
+    ``order_col`` belongs to neither side and is dropped. The buffer
+    holds structs, so Spark plans a sort aggregate; a packed-decimal
+    ordering that gets a hash aggregate measured no faster."""
+    payload = [c for c in rows.columns if c not in keys and c != order_col]
+    latest = F.struct(order_col, tiebreak)
+    is_base = F.col(order_col) < cutoff
+    picks = (
+        rows.where(F.col(order_col).isNotNull())
+        .groupBy(*keys)
+        .agg(F.max_by(F.struct(*payload), F.when(is_base, latest))
+             .alias("_b"),
+             F.max_by(F.struct(*payload), F.when(~is_base, latest))
+             .alias("_c"))
+    )
+    picked = F.coalesce(F.col("_c"), F.col("_b"))
     src = (
-        F.when(F.col("c._c_present").isNull(), F.lit("base"))
-        .when(F.col("b._b_present").isNull(), F.lit("insert"))
+        F.when(F.col("_c").isNull(), F.lit("base"))
+        .when(F.col("_b").isNull(), F.lit("insert"))
         .otherwise(F.lit("update"))
         .alias("src")
     )
-    return b.join(c, cond, "full_outer").select(*key_cols, *picked, src)
+    return picks.select(*keys, *[picked[c].alias(c) for c in payload], src)
 
 
 # Latest change per key applied onto the latest pre-cutoff row per key:
@@ -97,10 +110,10 @@ MERGE_ORACLE = f"""
       SELECT user_id, event_type, event_id, value, TRUE AS c_present
       FROM chg_latest WHERE rn = 1
     )
-    -- Null-safe join + presence flags mirror merge_upsert exactly: a NULL
-    -- in a merge-key column matches across sides (IS NOT DISTINCT FROM ==
-    -- Spark eqNullSafe) instead of silently splitting into base+insert
-    -- rows, and match detection never keys off column nullness.
+    -- Null-safe join + presence flags: a NULL in a merge-key column
+    -- matches across sides (IS NOT DISTINCT FROM; merge_at_cutoff's
+    -- NULL group) instead of silently splitting into base+insert rows,
+    -- and match detection never keys off column nullness.
     SELECT
       COALESCE(b.user_id, c.user_id) AS user_id,
       COALESCE(b.event_type, c.event_type) AS event_type,
@@ -128,18 +141,14 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type) onto the pre-cutoff base snapshot — update matched keys,
     insert new keys, carry unmatched base keys, tagging each output row
     with its provenance. The incremental-refresh primitive the
-    reference's full-rewrite bootstrap becomes at warehouse scale."""
+    reference's full-rewrite bootstrap becomes at warehouse scale.
+
+    Plan: one scan and one keyed partial/final aggregate
+    (``merge_at_cutoff``), one shuffle."""
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "value", "ts")
-    cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")
-    keys = ["user_id", "event_type"]
-    base = latest_per_key(
-        ev.where(F.col("ts") < cutoff), keys, "ts", "event_id"
-    ).drop("ts")
-    changes = latest_per_key(
-        ev.where(F.col("ts") >= cutoff), keys, "ts", "event_id"
-    ).drop("ts")
-    return merge_upsert(base, changes, keys)
+    return merge_at_cutoff(ev, ["user_id", "event_type"], "ts", "event_id",
+                           F.lit(MERGE_CUTOFF).cast("timestamp"))
 
 
 @query(
@@ -412,44 +421,29 @@ def q_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched+D DELETES the key, unmatched+D is a no-op, untouched base
     keys carry. This is the full Debezium/Delta `MERGE ... WHEN MATCHED
     AND op='D' THEN DELETE` contract — the piece plain upsert cannot
-    express — applied as one keyed full-outer join + post-filter.
+    express — applied as q_merge_upsert's keyed aggregate + post-filter.
 
-    Scale shape identical to q_merge_upsert (the tombstone filter is a
-    row-local predicate on the join output, no extra shuffle); with both
-    sides bucketed by the key the join shuffle disappears too. Delete
-    semantics are latest-wins per key: a D followed by a later U in the
-    SAME batch resurrects the key, because only the latest change row
-    per key is applied — the same convergence rule streaming MERGE uses
+    Plan identical to q_merge_upsert's: one scan, one keyed
+    partial/final aggregate, one shuffle. The op is a row-local function
+    of the picked change row's event id and the tombstone filter a
+    row-local predicate, so neither adds a stage. Delete semantics are
+    latest-wins per key: a D followed by a later U in the SAME batch
+    resurrects the key, because only the latest change row per key is
+    applied — the same convergence rule streaming MERGE uses
     (streaming/jobs.py)."""
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_type", "event_id", "value", "ts")
-    cutoff = F.lit(MERGE_CUTOFF).cast("timestamp")
-    keys = ["user_id", "event_type"]
-    base = latest_per_key(
-        ev.where(F.col("ts") < cutoff), keys, "ts", "event_id"
-    ).drop("ts")
-    changes = latest_per_key(
-        ev.where(F.col("ts") >= cutoff), keys, "ts", "event_id"
-    ).drop("ts").withColumn(
-        "op",
-        F.when(F.col("event_id") % CDC_DELETE_MOD == 0, "D")
-        .otherwise("U"))
-
-    value_cols = ["event_id", "value"]
-    b = base.withColumn("_b_present", F.lit(True)).alias("b")
-    c = changes.withColumn("_c_present", F.lit(True)).alias("c")
-    cond = [F.col(f"b.{k}").eqNullSafe(F.col(f"c.{k}")) for k in keys]
-    merged = b.join(c, cond, "full_outer").select(
-        *[F.coalesce(F.col(f"b.{k}"), F.col(f"c.{k}")).alias(k)
-          for k in keys],
-        *[F.when(F.col("c._c_present"), F.col(f"c.{v}"))
-          .otherwise(F.col(f"b.{v}")).alias(v) for v in value_cols],
-        F.when(F.col("c._c_present").isNull(), F.lit("carry"))
-        .when(F.col("b._b_present").isNull(), F.lit("insert"))
-        .otherwise(F.lit("update")).alias("src"),
-        F.col("c.op").alias("op"),
-    )
-    return merged.where(F.col("op").isNull() | (F.col("op") != "D"))
+    merged = merge_at_cutoff(ev, ["user_id", "event_type"], "ts",
+                             "event_id", F.lit(MERGE_CUTOFF).cast("timestamp"))
+    op = F.when(
+        F.col("src") != "base",
+        F.when(F.col("event_id") % CDC_DELETE_MOD == 0, "D").otherwise("U"))
+    return merged.select(
+        "user_id", "event_type", "event_id", "value",
+        F.when(F.col("src") == "base", F.lit("carry"))
+        .otherwise(F.col("src")).alias("src"),
+        op.alias("op"),
+    ).where(F.col("op").isNull() | (F.col("op") != "D"))
 
 
 def snapshot_diff(base: DataFrame, post: DataFrame, keys: list[str],

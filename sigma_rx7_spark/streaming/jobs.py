@@ -24,6 +24,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 import threading
+import time
 import uuid
 from collections.abc import Callable
 
@@ -69,6 +70,17 @@ _START_LOCK = threading.Lock()
 # store's keys outgrow an executor.
 MAX_STATE_STORES = 8
 
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+# Writes each checkpoint file to a temp name and renames it with
+# FileSystem.rename: rename(2) on a local disk.
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
+
+# Status messages of a query whose sources are not yet built. A file
+# source opens its source log on the stream's own thread after start()
+# returns, with the caller's session conf of that moment.
+_SOURCES_PENDING = ("Initializing StreamExecution", "Initializing sources")
+
 
 def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
     """Run one stream to completion with availableNow. This is the only
@@ -82,13 +94,25 @@ def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
 
     Each run gets a fresh checkpoint directory, removed when the run
     ends, so no query resumes another's offsets and nothing is left on
-    disk. A query captures the session conf when ``start()`` builds it,
-    so the partition count and ``overrides`` hold only around
-    ``start()``, under one lock: no other query in the session sees
-    them."""
+    disk. Its files go through ``FS_CHECKPOINT_MANAGER``. Spark's
+    default manager renames through ``FileContext``, and on a local
+    disk without the native Hadoop library that rename forks
+    ``readlink`` 2-4 times per file (offsets, commits, metadata, source
+    log, state deltas, schemas and their ``.crc`` files), about 80
+    processes per run. The ``FileSystem`` manager's rename is one
+    ``rename(2)`` call. Its caveat, a rename that is not atomic on some
+    object stores, cannot arise in a fresh local ``mkdtemp`` directory
+    with one writer.
+
+    A query captures the session conf when ``start()`` builds it,
+    except for its file sources, which read it when the stream's thread
+    builds them just after. So the partition count, the checkpoint
+    manager and ``overrides`` hold from ``start()`` until the sources
+    exist, under one lock: no other query in the session sees them."""
     spark = writer._spark
     stores = min(spark.sparkContext.defaultParallelism, MAX_STATE_STORES)
-    overrides = {**overrides, "spark.sql.shuffle.partitions": str(stores)}
+    overrides = {**overrides, "spark.sql.shuffle.partitions": str(stores),
+                 CHECKPOINT_MANAGER_CONF: FS_CHECKPOINT_MANAGER}
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
     try:
         writer = (writer.trigger(availableNow=True)
@@ -99,6 +123,8 @@ def _drain(writer: DataStreamWriter, overrides: dict[str, str]) -> None:
                 spark.conf.set(k, v)
             try:
                 q = writer.start()
+                while q.isActive and q.status["message"] in _SOURCES_PENDING:
+                    time.sleep(0.001)
             finally:
                 for k, v in old.items():
                     if v is None:

@@ -1,22 +1,34 @@
 """Unit semantics: MERGE/upsert (operators/incremental.py) and
-connected components (llm/dedup.py) on tiny in-memory inputs."""
+connected components (llm/dedup.py) on tiny in-memory inputs.
+
+The MERGE tests drive ``merge_at_cutoff``, the keyed aggregate that
+q_merge_upsert and q_merge_cdc_apply run: rows with ``ts`` before the
+cutoff are the base snapshot, the others the change batch."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from sigma_rx7_spark.llm.dedup import connected_components
-from sigma_rx7_spark.operators.incremental import latest_per_key, merge_upsert
+from sigma_rx7_spark.operators.incremental import (latest_per_key,
+                                                   merge_at_cutoff)
+
+# Base rows carry ts < CUT, change rows ts >= CUT.
+CUT = 10
+
+
+def _merge(spark, rows, schema, keys):
+    return merge_at_cutoff(spark.createDataFrame(rows, schema), keys,
+                           "ts", "id", F.lit(CUT))
 
 
 def test_merge_update_insert_carry(spark):
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0)], "k int, t string, v double")
-    changes = spark.createDataFrame(
-        [(1, "a", 99.0), (3, "c", 30.0)], "k int, t string, v double")
+    rows = [(1, "a", 0, 1, 10.0), (2, "b", 0, 2, 20.0),
+            (1, "a", CUT, 3, 99.0), (3, "c", CUT, 4, 30.0)]
     got = {
         (r.k, r.t): (r.v, r.src)
-        for r in merge_upsert(base, changes, ["k", "t"]).collect()
+        for r in _merge(spark, rows, "k int, t string, ts int, id int, "
+                        "v double", ["k", "t"]).collect()
     }
     assert got == {
         (1, "a"): (99.0, "update"),
@@ -28,25 +40,35 @@ def test_merge_update_insert_carry(spark):
 def test_merge_null_change_value_wins(spark):
     # A matched change row with NULL value must overwrite (DELETE-marker
     # semantics), not fall back to the base value.
-    base = spark.createDataFrame([(1, 10.0)], "k int, v double")
-    changes = spark.createDataFrame([(1, None)], "k int, v double")
-    [row] = merge_upsert(base, changes, ["k"]).collect()
+    rows = [(1, 0, 1, 10.0), (1, CUT, 2, None)]
+    [row] = _merge(spark, rows, "k int, ts int, id int, v double",
+                   ["k"]).collect()
     assert row.v is None and row.src == "update"
 
 
 def test_merge_null_key_matches_nullsafely(spark):
-    base = spark.createDataFrame([(None, 1.0)], "k int, v double")
-    changes = spark.createDataFrame([(None, 2.0)], "k int, v double")
-    [row] = merge_upsert(base, changes, ["k"]).collect()
-    assert row.v == 2.0 and row.src == "update"
+    # A NULL key matches across the cutoff and stays apart from the
+    # other keys.
+    rows = [(None, 0, 1, 1.0), (None, CUT, 2, 2.0), (1, CUT, 3, 3.0)]
+    got = {r.k: (r.v, r.src) for r in _merge(
+        spark, rows, "k int, ts int, id int, v double", ["k"]).collect()}
+    assert got == {None: (2.0, "update"), 1: (3.0, "insert")}
 
 
 def test_latest_per_key_tiebreak(spark):
-    df = spark.createDataFrame(
-        [(1, 5, 100, 1.0), (1, 5, 101, 2.0), (1, 4, 999, 3.0)],
-        "k int, ts int, id int, v double")
-    [row] = latest_per_key(df, ["k"], "ts", "id").collect()
+    # A tie on ts goes to the greater id, on both sides of the cutoff,
+    # and a row without ts is neither base nor change: key 2 has no row.
+    rows = [(1, 5, 100, 1.0), (1, 5, 101, 2.0), (1, 4, 999, 3.0),
+            (1, 15, 100, 4.0), (1, 15, 101, 5.0), (1, 14, 999, 6.0),
+            (1, None, 1000, 7.0), (2, None, 1001, 8.0)]
+    schema = "k int, ts int, id int, v double"
+    [row] = latest_per_key(
+        spark.createDataFrame(rows[:3], schema), ["k"], "ts", "id").collect()
     assert (row.ts, row.id, row.v) == (5, 101, 2.0)
+    [row] = _merge(spark, rows, schema, ["k"]).collect()
+    assert (row.k, row.id, row.v, row.src) == (1, 101, 5.0, "update")
+    [row] = _merge(spark, rows[:3] + rows[6:], schema, ["k"]).collect()
+    assert (row.k, row.id, row.v, row.src) == (1, 101, 2.0, "base")
 
 
 def test_connected_components_chain_and_singleton(spark):
@@ -77,36 +99,44 @@ _SETTINGS = settings(
                            HealthCheck.function_scoped_fixture],
 )
 
+# (key, ts offset, value); a NULL key is a group of its own and a NULL
+# ts puts the row on neither side.
 _ROWS = st.lists(
-    st.tuples(st.integers(0, 3), st.floats(-5, 5, allow_nan=False)),
+    st.tuples(st.one_of(st.none(), st.integers(0, 3)),
+              st.one_of(st.none(), st.integers(0, 2)),
+              st.floats(-5, 5, allow_nan=False)),
     max_size=8,
 )
 
 
+def _rows(base, changes):
+    # list position is the tiebreak id, unique across both sides; base
+    # ts fall before CUT and change ts at or after it
+    return [(k, None if t is None else t + off, i, v)
+            for i, ((k, t, v), off) in enumerate(
+                [(r, 0) for r in base] + [(r, CUT) for r in changes])]
+
+
 def _latest(rows):
-    # model: one row per key, last occurrence wins (mirrors the unique-id
-    # precedence the dataframe build below encodes via index order)
+    # model: one (v, ts, id) per key, greatest (ts, id) wins
     out = {}
-    for k, v in rows:
-        out[k] = v
-    return out
+    for k, ts, i, v in rows:
+        if k not in out or (ts, i) > out[k][1:]:
+            out[k] = (v, ts, i)
+    return {k: v for k, (v, _, _) in out.items()}
 
 
-def _df(spark, rows):
-    # encode list position as the tiebreak id so "latest" is well-defined
-    data = [(k, i, v) for i, (k, v) in enumerate(rows)]
-    return spark.createDataFrame(data, "k int, id int, v double")
+_SCHEMA = "k int, ts int, id int, v double"
 
 
 @given(base=_ROWS, changes=_ROWS)
 @_SETTINGS
 def test_merge_upsert_matches_dict_semantics(spark, base, changes):
-    from sigma_rx7_spark.operators.incremental import (latest_per_key,
-                                                       merge_upsert)
-    b = latest_per_key(_df(spark, base), ["k"], "id", "id").drop("id")
-    c = latest_per_key(_df(spark, changes), ["k"], "id", "id").drop("id")
-    got = {r.k: (r.v, r.src) for r in merge_upsert(b, c, ["k"]).collect()}
-    mb, mc = _latest(base), _latest(changes)
+    rows = _rows(base, changes)
+    got = {r.k: (r.v, r.src)
+           for r in _merge(spark, rows, _SCHEMA, ["k"]).collect()}
+    mb = _latest([r for r in rows if r[1] is not None and r[1] < CUT])
+    mc = _latest([r for r in rows if r[1] is not None and r[1] >= CUT])
     want = {}
     for k in set(mb) | set(mc):
         if k in mc and k in mb:
@@ -121,15 +151,17 @@ def test_merge_upsert_matches_dict_semantics(spark, base, changes):
 @given(base=_ROWS, changes=_ROWS)
 @_SETTINGS
 def test_merge_upsert_idempotent(spark, base, changes):
-    # applying the same change batch twice must equal applying it once
-    from sigma_rx7_spark.operators.incremental import (latest_per_key,
-                                                       merge_upsert)
-    b = latest_per_key(_df(spark, base), ["k"], "id", "id").drop("id")
-    c = latest_per_key(_df(spark, changes), ["k"], "id", "id").drop("id")
-    once = merge_upsert(b, c, ["k"]).drop("src")
-    twice = merge_upsert(once, c, ["k"]).drop("src")
-    assert (sorted(map(tuple, once.collect()))
-            == sorted(map(tuple, twice.collect())))
+    # applying the same change batch twice must equal applying it once:
+    # the merged relation, as the next base snapshot, merged with the
+    # same changes again
+    rows = _rows(base, changes)
+    once = _merge(spark, rows, _SCHEMA, ["k"]).drop("src")
+    again = once.select("k", F.lit(0).alias("ts"), "id", "v").unionByName(
+        spark.createDataFrame(
+            [r for r in rows if r[1] is not None and r[1] >= CUT], _SCHEMA))
+    twice = merge_at_cutoff(again, ["k"], "ts", "id", F.lit(CUT)).drop("src")
+    assert (sorted(map(tuple, once.collect()), key=repr)
+            == sorted(map(tuple, twice.collect()), key=repr))
 
 
 def test_snapshot_diff_covers_all_four_statuses(spark):

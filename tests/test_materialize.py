@@ -46,8 +46,9 @@ under ``sigma_rx7_spark/``, in the builder's module. Every other query
 calls that builder instead of pasting its text:
 
 - ``llm/dedup.py``: the md5-LSH band join of ``lsh_verified_oracle``,
-  the word shingles of ``shingles_oracle`` and the recursive
-  connected-components walk of ``components_oracle``;
+  the word shingles of ``shingles_oracle``, the recursive
+  connected-components walk of ``components_oracle`` and the Spark
+  cluster-size window of ``cluster_sizes``;
 - ``llm/pipeline.py``: the token gate of ``QUALITY_ORACLE``;
 - ``llm/similarity.py``: the unit-normalized embeddings of
   ``UNIT_ORACLE``;
@@ -159,6 +160,8 @@ SHARED = [
     ("shingles_oracle", "llm/dedup.py",
      "list_slice(t, i, i + {SHINGLE_N - 1})"),
     ("components_oracle", "llm/dedup.py", "reach AS ("),
+    ("cluster_sizes", "llm/dedup.py",
+     'over(Window.partitionBy("cluster_id"))'),
     ("QUALITY_ORACLE", "llm/pipeline.py", ">= {MIN_TOKENS}"),
     ("UNIT_ORACLE", "llm/similarity.py", "1e-300)) AS nv"),
     ("ERA_ORACLE", "domain/rules.py", "AND 1 PRECEDING) + INTERVAL"),

@@ -176,9 +176,17 @@ def test_argmax_is_single_aggregation_no_sort(spark, sf_dir):
     assert "partial_max_by" in p or "partial_max" in p, p
 
 
-def test_merge_upsert_is_sort_merge_full_outer(spark, sf_dir):
-    p = plan(spark, sf_dir, "q_merge_upsert")
-    assert "SortMergeJoin" in p and "FullOuter" in p, p
+@pytest.mark.parametrize("name", ["q_merge_upsert", "q_merge_cdc_apply"])
+def test_merge_is_one_keyed_aggregate(spark, sf_dir, name):
+    # Both sides' latest row per key come out of one partial/final
+    # aggregate: one shuffle, no latest-per-key window, no full-outer
+    # join of the two sides.
+    import re
+
+    p = plan(spark, sf_dir, name)
+    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
+    assert "SortMergeJoin" not in p, p
+    assert "Window" not in p, p
 
 
 def test_cluster_assign_broadcasts_centroids(spark, sf_dir):

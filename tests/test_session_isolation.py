@@ -4,8 +4,10 @@ Every stream starts with one shuffle partition, and so one state store
 per stateful operator, per task slot (``defaultParallelism``), up to
 ``MAX_STATE_STORES``: a micro-batch commits every store, so each store
 adds a fixed cost. ``streaming.jobs._drain`` sets that count, and
-``run_to_memory``'s skip of the trailing no-data micro-batch
-(``spark.sql.streaming.noDataMicroBatches.enabled``), as session conf.
+its checkpoint file manager (``FS_CHECKPOINT_MANAGER``, whose rename
+forks no ``readlink``), and ``run_to_memory``'s skip of the trailing
+no-data micro-batch (``spark.sql.streaming.noDataMicroBatches.enabled``),
+as session conf.
 A streaming query captures the session conf when ``start()`` builds
 it, so the overrides are set only around ``start()``: while the query
 runs, every other query in the session sees the session's own values.
@@ -36,11 +38,14 @@ from pyspark.sql.streaming.query import StreamingQuery
 
 from sigma_rx7_spark import io
 from sigma_rx7_spark.registry import load_all
-from sigma_rx7_spark.streaming.jobs import MAX_STATE_STORES
+from sigma_rx7_spark.streaming.jobs import (CHECKPOINT_MANAGER_CONF,
+                                             FS_CHECKPOINT_MANAGER,
+                                             MAX_STATE_STORES)
 
 ALL = load_all()
 _KEYS = ("spark.sql.shuffle.partitions",
-         "spark.sql.streaming.noDataMicroBatches.enabled")
+         "spark.sql.streaming.noDataMicroBatches.enabled",
+         CHECKPOINT_MANAGER_CONF)
 
 
 # Stateful streams and the fewest state-operator reports each makes.
@@ -61,19 +66,22 @@ def test_stream_overrides_scoped_to_start(spark, sf_dir, monkeypatch,
                                           query):
     # While the stream runs and after it, the session shows its own
     # values; every state operator still has one store per task slot,
-    # up to the cap. The session's own partition count is set above the
-    # slot count for the run, so a leaked session value cannot pass for
-    # the rule.
+    # up to the cap, and the session the stream cloned at start() holds
+    # the FileSystem-based checkpoint manager. The session's own
+    # partition count is set above the slot count for the run, so a
+    # leaked session value cannot pass for the rule.
     slots = spark.sparkContext.defaultParallelism
     session_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(slots + 1))
     try:
         own = {k: spark.conf.get(k, None) for k in _KEYS}
-        seen, progress = [], []
+        seen, managers, progress = [], [], []
         await_termination = StreamingQuery.awaitTermination
 
         def spy(self, *args, **kwargs):
             seen.append({k: spark.conf.get(k, None) for k in _KEYS})
+            cloned = self._jsq.streamingQuery().sparkSessionForStream()
+            managers.append(cloned.conf().get(CHECKPOINT_MANAGER_CONF, None))
             out = await_termination(self, *args, **kwargs)
             progress.extend(self.recentProgress)
             return out
@@ -81,6 +89,7 @@ def test_stream_overrides_scoped_to_start(spark, sf_dir, monkeypatch,
         monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
         ALL[query].fn(spark, sf_dir).collect()
         assert seen == [own]
+        assert managers == [FS_CHECKPOINT_MANAGER]
         assert {k: spark.conf.get(k, None) for k in _KEYS} == own
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", session_parts)

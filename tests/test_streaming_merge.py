@@ -16,7 +16,7 @@ from sigma_rx7_spark.io import load
 from sigma_rx7_spark.operators.incremental import (
     MERGE_CUTOFF,
     latest_per_key,
-    merge_upsert,
+    merge_at_cutoff,
 )
 from sigma_rx7_spark.registry import load_all
 from sigma_rx7_spark.streaming.jobs import merge_batch_into_state
@@ -63,11 +63,7 @@ def _batch_convergence(spark, sf_dir, reverse):
             state, part, KEYS, "ts", "event_id", value_cols
         ).localCheckpoint(eager=True)
 
-    oneshot = merge_upsert(
-        base,
-        latest_per_key(changes, KEYS, "ts", "event_id").drop("ts"),
-        KEYS,
-    )
+    oneshot = merge_at_cutoff(ev, KEYS, "ts", "event_id", cutoff)
     cols = ["user_id", "event_type", "event_id", "value", "src"]
     assert _rows(state, cols) == _rows(oneshot, cols)
 
