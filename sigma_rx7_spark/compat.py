@@ -43,8 +43,6 @@ from pyspark.sql import functions as F
 # oracle SQL may quantize at DECIMAL(20,6) — both quantize identically
 # at 6 dp for in-range values, so parity is unaffected.
 QDEC = "decimal(18,6)"
-# Wider accumulator for sums-of-sums (never overflows at 100 TB row counts).
-QDEC_WIDE = "decimal(38,6)"
 
 
 def q(col: Column | str) -> Column:

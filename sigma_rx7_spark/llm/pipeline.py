@@ -163,17 +163,19 @@ def q_pipeline_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_oracle() -> str:
-    from .dedup import components_oracle, lsh_verified_oracle
+    from .dedup import (CLUSTER_SIZES_ORACLE, components_oracle,
+                        lsh_verified_oracle)
 
     return f"""
     WITH RECURSIVE {lsh_verified_oracle()},
-    {components_oracle()}, ranked AS (
-      SELECT cluster_id, cc.doc_id, d.n_chars,
+    {components_oracle()}, sized AS (
+      {CLUSTER_SIZES_ORACLE}
+    ), ranked AS (
+      SELECT cluster_id, s.doc_id, d.n_chars, cluster_size,
              ROW_NUMBER() OVER (
                PARTITION BY cluster_id
-               ORDER BY d.n_chars DESC, cc.doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
-      FROM cc JOIN documents d ON d.doc_id = cc.doc_id
+               ORDER BY d.n_chars DESC, s.doc_id) AS rn
+      FROM sized s JOIN documents d ON d.doc_id = s.doc_id
     )
     SELECT cluster_id,
            doc_id AS canonical_doc_id,
@@ -204,23 +206,23 @@ def q_pipeline_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     only) plus one window over components — partitioned by cluster_id,
     the same key the labels already carry. Canonical election ships
     (doc_id, n_chars, label); never text."""
-    from .dedup import connected_components, lsh_verified_pairs
+    from .dedup import cluster_sizes, connected_components, lsh_verified_pairs
 
     d = load(spark, sf_dir, "documents")
     edges = lsh_verified_pairs(d).select(
         F.col("a_doc_id").alias("src"), F.col("b_doc_id").alias("dst"))
     labels = connected_components(
         d.select(F.col("doc_id").alias("node")), edges)
-    sized = labels.join(
-        d.select(F.col("doc_id").alias("node"), "n_chars"), "node")
-    w = Window.partitionBy("label")
+    sized = cluster_sizes(labels).join(
+        d.select("doc_id", "n_chars"), "doc_id")
+    w = Window.partitionBy("cluster_id").orderBy(
+        F.col("n_chars").desc(), F.col("doc_id"))
     ranked = sized.select(
-        F.col("label").alias("cluster_id"),
-        F.col("node").alias("canonical_doc_id"),
+        "cluster_id",
+        F.col("doc_id").alias("canonical_doc_id"),
         F.col("n_chars").alias("canonical_n_chars"),
-        F.row_number().over(
-            w.orderBy(F.col("n_chars").desc(), F.col("node"))).alias("rn"),
-        F.count(F.lit(1)).over(w).alias("cluster_size"),
+        F.row_number().over(w).alias("rn"),
+        "cluster_size",
     )
     return ranked.where(F.col("rn") == 1).drop("rn")
 

@@ -16,7 +16,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import davg, dsum, o_davg, o_dsum
+from ..compat import QDEC, davg, dsum, o_davg, o_dsum
 from ..io import load, load_parallel
 from ..materialize import share
 from ..registry import query
@@ -594,8 +594,6 @@ def q_agg_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is one small hash agg. Two passes over events, no window, no
     sort. The z-score is decimal-quantized before the compare/max (the
     variance term can differ by 1 ulp across engines; compat.py)."""
-    from ..compat import QDEC
-
     ev = load(spark, sf_dir, "events").select("event_type", "value")
     qv = F.col("value").cast(QDEC)
     s = ev.groupBy("event_type").agg(
@@ -2425,17 +2423,58 @@ def cms_estimates(sketch: DataFrame, probes: DataFrame,
     )
 
 
-# ---- Two-proportion A/B z-test (A41) ---------------------------------------
+# ---- The A/B experiment's shared relations ---------------------------------
+#
+# Every A/B query (and the streaming q_stream_srm) splits users into arms
+# by the same rule and reads its outcome through the builders below. Each
+# builder has a DuckDB twin, plain SQL that derives nothing from the
+# Spark code.
 
 AB_CONVERT_EVENT = "purchase"
 AB_BASELINE_EVENT = "click"
+SRM_CHI2_95 = 3.841459  # chi-square 95th percentile, 1 df
+# Responder outcome: a HIGH-VALUE purchase. Plain purchase penetration is
+# 100% in the harness corpus (every arm converts -> zero variance, NULL
+# statistics at every sf); the value floor puts conversion ~45% so the
+# statistics are live at all scales.
+TREND_VALUE_FLOOR = 150
 
 
-@query(
-    "q_ab_proportions",
-    oracle=f"""
-    WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
+def ab_arm(key: str = "user_id", k: int = 2) -> Column:
+    """The experiment arm: ``key`` mod ``k`` (the house randomization)."""
+    return F.pmod(F.col(key), F.lit(k)).alias("arm")
+
+
+def ab_arm_sql(key: str = "user_id", k: int = 2) -> str:
+    """The DuckDB twin of ``ab_arm`` (keys are non-negative, so % is
+    pmod)."""
+    return f"{key} % {k} AS arm"
+
+
+def ab_conversions(events: DataFrame) -> DataFrame:
+    """One row (n_a, conv_a, n_b, conv_b): users and converted users per
+    arm. A user converts when their purchase events outnumber their
+    clicks. Two hash aggregates: events -> per-user flag -> one row."""
+    def n_events(kind: str) -> Column:
+        return F.sum(F.when(F.col("event_type") == kind, 1).otherwise(0))
+
+    per_user = events.groupBy("user_id").agg(
+        F.when(n_events(AB_CONVERT_EVENT) > n_events(AB_BASELINE_EVENT), 1)
+        .otherwise(0).alias("converted")).select(ab_arm(), "converted")
+
+    def in_arm(a: int, c: Column) -> Column:
+        return F.sum(F.when(F.col("arm") == a, c).otherwise(0))
+
+    return per_user.agg(
+        in_arm(0, F.lit(1)).alias("n_a"),
+        in_arm(0, F.col("converted")).alias("conv_a"),
+        in_arm(1, F.lit(1)).alias("n_b"),
+        in_arm(1, F.col("converted")).alias("conv_b"))
+
+
+# The DuckDB twin of ab_conversions: the CTEs ``per_user`` and ``arms``.
+AB_CONVERSIONS_ORACLE = f"""per_user AS (
+      SELECT user_id, {ab_arm_sql()},
              CASE WHEN SUM(CASE WHEN event_type = '{AB_CONVERT_EVENT}'
                            THEN 1 ELSE 0 END)
                      > SUM(CASE WHEN event_type = '{AB_BASELINE_EVENT}'
@@ -2450,7 +2489,139 @@ AB_BASELINE_EVENT = "click"
         SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
         SUM(CASE WHEN arm = 1 THEN converted ELSE 0 END) AS conv_b
       FROM per_user
+    )"""
+
+
+def ab_responders(events: DataFrame, k: int) -> DataFrame:
+    """(arm, n, r) for ``k`` arms: users, and users with a purchase of
+    value > TREND_VALUE_FLOOR. One user-grain aggregate (MAX, partial-
+    aggregatable), then one k-row arm aggregate."""
+    hit = ((F.col("event_type") == AB_CONVERT_EVENT)
+           & (F.col("value") > TREND_VALUE_FLOOR))
+    return (events.groupBy("user_id")
+            .agg(F.max(F.when(hit, 1).otherwise(0)).alias("conv"))
+            .select(ab_arm(k=k), "conv")
+            .groupBy("arm")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("r")))
+
+
+def ab_responders_oracle(k: int) -> str:
+    """The DuckDB twin of ``ab_responders``: CTEs ``per_user`` and
+    ``arms``."""
+    return f"""per_user AS (
+      SELECT user_id, {ab_arm_sql(k=k)},
+             MAX(CASE WHEN event_type = '{AB_CONVERT_EVENT}'
+                       AND value > {TREND_VALUE_FLOOR}
+                 THEN 1 ELSE 0 END) AS conv
+      FROM events GROUP BY user_id
+    ),
+    arms AS (
+      SELECT arm, COUNT(*) AS n, SUM(conv) AS r
+      FROM per_user GROUP BY arm
+    )"""
+
+
+def ab_moments(events: DataFrame, *keys: Column) -> DataFrame:
+    """(keys..., arm, n, s1, s2) over purchase events: the count, sum and
+    sum of squares of value per group and arm. The two-sum discipline of
+    q_agg_stats: both sums are decimal-exact, so partial/final order
+    never perturbs them."""
+    qv = F.col("value").cast("decimal(20,6)")
+    rel = events.where(F.col("event_type") == AB_CONVERT_EVENT).select(
+        *keys, ab_arm(), "value")
+    return rel.groupBy(*rel.columns[:-1]).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(qv).cast("double").alias("s1"),
+        F.sum((qv * qv).cast("decimal(38,12)")).cast("double").alias("s2"))
+
+
+def ab_moments_oracle(*keys: str) -> str:
+    """The DuckDB twin of ``ab_moments``; ``keys`` are ``expr AS name``
+    select items."""
+    by = ", ".join(str(i) for i in range(1, len(keys) + 2))
+    return f"""
+      SELECT {"".join(k + ", " for k in keys)}{ab_arm_sql()},
+             COUNT(*) AS n,
+             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s1,
+             CAST(SUM(CAST(CAST(value AS DECIMAL(20,6))
+                           * CAST(value AS DECIMAL(20,6))
+                           AS DECIMAL(38,12))) AS DOUBLE) AS s2
+      FROM events WHERE event_type = '{AB_CONVERT_EVENT}'
+      GROUP BY {by}"""
+
+
+def ab_pivot(*cols: str, fill: int | None = None) -> list[Column]:
+    """Aggregate columns ``c_a``, ``c_b`` per column ``c`` of an
+    (arm, c...) relation: MAX(CASE WHEN arm = a THEN c END), arm 0 first.
+    ``fill`` replaces the value of an absent arm."""
+    out = []
+    for a, tag in ((0, "a"), (1, "b")):
+        for c in cols:
+            v = F.max(F.when(F.col("arm") == a, F.col(c)))
+            if fill is not None:
+                v = F.coalesce(v, F.lit(fill))
+            out.append(v.alias(f"{c}_{tag}"))
+    return out
+
+
+def ab_pivot_sql(*cols: str, fill: int | None = None) -> str:
+    """The DuckDB twin of ``ab_pivot``: its select items."""
+    out = []
+    for a, tag in ((0, "a"), (1, "b")):
+        for c in cols:
+            v = f"MAX(CASE WHEN arm = {a} THEN {c} END)"
+            if fill is not None:
+                v = f"COALESCE({v}, {fill})"
+            out.append(f"{v} AS {c}_{tag}")
+    return ",\n             ".join(out)
+
+
+def srm_verdict(wide: DataFrame) -> DataFrame:
+    """(n_a, n_b, chi2, srm_detected) from a one-row (n_a, n_b) relation:
+    chi-square goodness of fit against the designed 50/50 split. For an
+    even split it is the exact integer form (n_a - n_b)^2 / (n_a + n_b),
+    one final division; no users -> NULL."""
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    chi2 = ((n_a - n_b) * (n_a - n_b)).cast("double") / (n_a + n_b)
+    empty = (n_a + n_b) == 0
+    return wide.select(
+        n_a.cast("bigint").alias("n_a"), n_b.cast("bigint").alias("n_b"),
+        F.when(empty, F.lit(None).cast("double"))
+        .otherwise(chi2.cast(QDEC).cast("double")).alias("chi2"),
+        F.when(empty, F.lit(None).cast("boolean"))
+        .otherwise(chi2 > SRM_CHI2_95).alias("srm_detected"))
+
+
+# The DuckDB twin of q_ab_srm and q_stream_srm: srm_verdict over the
+# distinct users' arm counts.
+SRM_ORACLE = f"""
+    WITH users AS (
+      SELECT DISTINCT user_id, {ab_arm_sql()} FROM events
+    ),
+    counts AS (
+      SELECT SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
+             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b
+      FROM users
     )
+    SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+           CASE WHEN n_a + n_b = 0 THEN NULL
+                ELSE CAST(CAST(
+                  CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b)
+                  AS DECIMAL(18,6)) AS DOUBLE) END AS chi2,
+           CASE WHEN n_a + n_b = 0 THEN NULL
+                ELSE CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
+                     / (n_a + n_b) > {SRM_CHI2_95} END AS srm_detected
+    FROM counts
+    """
+
+
+# ---- Two-proportion A/B z-test (A41) ---------------------------------------
+
+
+@query(
+    "q_ab_proportions",
+    oracle=f"""
+    WITH {AB_CONVERSIONS_ORACLE}
     SELECT CAST(n_a AS BIGINT) AS n_a, CAST(conv_a AS BIGINT) AS conv_a,
            CAST(n_b AS BIGINT) AS n_b, CAST(conv_b AS BIGINT) AS conv_b,
            CASE WHEN n_a = 0 THEN NULL
@@ -2488,27 +2659,7 @@ def q_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (add/sub/mul/div/sqrt are correctly rounded and engine-identical);
     the z-score is still 6-dp-quantized on both sides as a belt (the
     division chain is longer than most)."""
-    e = load(spark, sf_dir, "events")
-    per_user = (
-        e.groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("event_type") == AB_CONVERT_EVENT, 1)
-                  .otherwise(0)).alias("n_conv_events"),
-            F.sum(F.when(F.col("event_type") == AB_BASELINE_EVENT, 1)
-                  .otherwise(0)).alias("n_base_events"))
-        .select(
-            F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-            F.when(F.col("n_conv_events") > F.col("n_base_events"), 1)
-            .otherwise(0).alias("converted"))
-    )
-    arms = per_user.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 0, F.col("converted")).otherwise(0))
-        .alias("conv_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 1, F.col("converted")).otherwise(0))
-        .alias("conv_b"),
-    )
+    arms = ab_conversions(load(spark, sf_dir, "events"))
     n_a, conv_a = F.col("n_a"), F.col("conv_a")
     n_b, conv_b = F.col("n_b"), F.col("conv_b")
     # an EMPTY arm (every user on one parity — the single_key
@@ -2525,7 +2676,6 @@ def q_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = F.when(degenerate, F.lit(None).cast("double")).otherwise(
         (p_a - p_b) / F.sqrt(
             pooled * (1.0 - pooled) * (1.0 / n_a + 1.0 / n_b)))
-    from ..compat import QDEC
     return arms.select(
         n_a.cast("bigint").alias("n_a"),
         conv_a.cast("bigint").alias("conv_a"),
@@ -2648,31 +2798,14 @@ def q_agg_hbos(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Welch's unequal-variance t-test (A43) ----------------------------------
 
-WELCH_EVENT = "purchase"
-
 
 @query(
     "q_ab_welch",
     oracle=f"""
-    WITH arms AS (
-      SELECT user_id % 2 AS arm,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s1,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(20,6))
-                           * CAST(value AS DECIMAL(20,6))
-                           AS DECIMAL(38,12))) AS DOUBLE) AS s2
-      FROM events
-      WHERE event_type = '{WELCH_EVENT}'
-      GROUP BY 1
+    WITH arms AS ({ab_moments_oracle()}
     ),
     wide AS (
-      SELECT
-        MAX(CASE WHEN arm = 0 THEN n END) AS n_a,
-        MAX(CASE WHEN arm = 0 THEN s1 END) AS s1_a,
-        MAX(CASE WHEN arm = 0 THEN s2 END) AS s2_a,
-        MAX(CASE WHEN arm = 1 THEN n END) AS n_b,
-        MAX(CASE WHEN arm = 1 THEN s1 END) AS s1_b,
-        MAX(CASE WHEN arm = 1 THEN s2 END) AS s2_b
+      SELECT {ab_pivot_sql("n", "s1", "s2")}
       FROM arms
     ),
     mom AS (
@@ -2706,31 +2839,14 @@ def q_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial/final order never perturbs them); the statistic is assembled
     on ONE row and both outputs are 6-dp-quantized because each passes
     through a division chain and sqrt."""
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == WELCH_EVENT)
-    qv = F.col("value").cast("decimal(20,6)")
-    arms = (
-        e.select(F.pmod(F.col("user_id"), F.lit(2)).alias("arm"), "value")
-        .groupBy("arm")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(qv).cast("double").alias("s1"),
-             F.sum((qv * qv).cast("decimal(38,12)")).cast("double")
-             .alias("s2"))
-    )
-    wide = arms.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("s1"))).alias("s1_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("s2"))).alias("s2_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("s1"))).alias("s1_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("s2"))).alias("s2_b"))
+    wide = ab_moments(load(spark, sf_dir, "events")).agg(
+        *ab_pivot("n", "s1", "s2"))
     n_a, n_b = F.col("n_a"), F.col("n_b")
     mean_a, mean_b = F.col("s1_a") / n_a, F.col("s1_b") / n_b
     va = (F.col("s2_a") - F.col("s1_a") * F.col("s1_a") / n_a) \
         / (n_a - 1) / n_a
     vb = (F.col("s2_b") - F.col("s1_b") * F.col("s1_b") / n_b) \
         / (n_b - 1) / n_b
-    from ..compat import QDEC
     # Both arms constant (zero sample variance — the stuck-feed shape
     # the degenerate sweep forces) leaves t and the Welch-Satterthwaite
     # df undefined: NULL, not an ANSI 0/0 crash.
@@ -2748,15 +2864,13 @@ def q_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Mann-Whitney U test (A44) ----------------------------------------------
 
-MWU_EVENT = "purchase"
-
 
 @query(
     "q_ab_mannwhitney",
     oracle=f"""
     WITH vals AS (
-      SELECT value AS v, user_id % 2 AS arm
-      FROM events WHERE event_type = '{MWU_EVENT}'
+      SELECT value AS v, {ab_arm_sql()}
+      FROM events WHERE event_type = '{AB_CONVERT_EVENT}'
     ),
     per_value AS (
       SELECT v,
@@ -2816,9 +2930,8 @@ def q_ab_mannwhitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shuffle carries (value, c_a, c_b) — metric value cardinality —
     and the window runs on that bounded relation."""
     e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == MWU_EVENT)
-    vals = e.select(F.col("value").alias("v"),
-                    F.pmod(F.col("user_id"), F.lit(2)).alias("arm"))
+        F.col("event_type") == AB_CONVERT_EVENT)
+    vals = e.select(F.col("value").alias("v"), ab_arm())
     return mannwhitney_u(vals)
 
 
@@ -2853,7 +2966,6 @@ def mannwhitney_u(vals: DataFrame) -> DataFrame:
     z = F.when(degenerate, F.lit(None).cast("double")).otherwise(
         (u2a.cast("double") - n_a.cast("double") * n_b)
         / (2 * F.sqrt(var)))
-    from ..compat import QDEC
     return agg.select(
         n_a.cast("bigint").alias("n_a"),
         n_b.cast("bigint").alias("n_b"),
@@ -2871,7 +2983,7 @@ CUPED_EVENT = "purchase"
     "q_ab_cuped",
     oracle=f"""
     WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
+      SELECT user_id, {ab_arm_sql()},
              CAST(SUM(CASE WHEN CAST(ts AS TIMESTAMP)
                                 < TIMESTAMP '{CUPED_CUTOFF}'
                       THEN CAST(value AS DECIMAL(20,6)) ELSE 0 END)
@@ -2961,7 +3073,7 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
              .cast("double").alias("x"),
              F.sum(F.when(F.col("ts") >= cutoff, qv).otherwise(zero))
              .cast("double").alias("y"))
-        .select(F.pmod(F.col("user_id"), F.lit(2)).alias("arm"), "x", "y")
+        .select(ab_arm(), "x", "y")
     )
     mom = per_user.agg(
         F.count(F.lit(1)).alias("n"),
@@ -3033,7 +3145,7 @@ def _boot_weight_sql(u: str) -> str:
     "q_ab_bootstrap",
     oracle=f"""
     WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
+      SELECT user_id, {ab_arm_sql()},
              CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS y
       FROM events WHERE event_type = '{BOOT_EVENT}'
       GROUP BY user_id
@@ -3107,8 +3219,7 @@ def q_ab_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.groupBy("user_id")
         .agg(F.sum(F.col("value").cast("decimal(20,6)")).cast("double")
              .alias("y"))
-        .select("user_id", F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-                "y")
+        .select("user_id", ab_arm(), "y")
     )
     b_ids = spark.range(BOOT_REPS).select(F.col("id").alias("b"))
     u = uniform_unit(F.col("user_id") * BOOT_REPS + F.col("b"))
@@ -3146,7 +3257,6 @@ def q_ab_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Sequential A/B monitoring with an O'Brien-Fleming boundary (A47) -------
 
-SEQ_EVENT = "purchase"
 Z_ALPHA_2 = 1.959964  # two-sided alpha = 0.05
 Z_POWER_80 = 0.841621  # 80% power
 
@@ -3154,35 +3264,20 @@ Z_POWER_80 = 0.841621  # 80% power
 @query(
     "q_ab_sequential",
     oracle=f"""
-    WITH per_day AS (
-      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE)
-               AS day,
-             user_id % 2 AS arm,
-             COUNT(*) AS n,
-             CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS s1,
-             CAST(SUM(CAST(CAST(value AS DECIMAL(20,6))
-                           * CAST(value AS DECIMAL(20,6))
-                           AS DECIMAL(38,12))) AS DOUBLE) AS s2
-      FROM events WHERE event_type = '{SEQ_EVENT}'
-      GROUP BY 1, 2
+    WITH per_day AS ({ab_moments_oracle(
+        "CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day")}
     ),
     daily AS (
-      SELECT day,
-             COALESCE(MAX(CASE WHEN arm = 0 THEN n END), 0) AS dn_a,
-             COALESCE(MAX(CASE WHEN arm = 0 THEN s1 END), 0) AS ds1_a,
-             COALESCE(MAX(CASE WHEN arm = 0 THEN s2 END), 0) AS ds2_a,
-             COALESCE(MAX(CASE WHEN arm = 1 THEN n END), 0) AS dn_b,
-             COALESCE(MAX(CASE WHEN arm = 1 THEN s1 END), 0) AS ds1_b,
-             COALESCE(MAX(CASE WHEN arm = 1 THEN s2 END), 0) AS ds2_b
+      SELECT day, {ab_pivot_sql("n", "s1", "s2", fill=0)}
       FROM per_day GROUP BY day
     ),
     cum AS (
       SELECT day,
-             SUM(dn_a) OVER w AS n_a, SUM(ds1_a) OVER w AS s1_a,
-             SUM(ds2_a) OVER w AS s2_a,
-             SUM(dn_b) OVER w AS n_b, SUM(ds1_b) OVER w AS s1_b,
-             SUM(ds2_b) OVER w AS s2_b,
-             SUM(dn_a + dn_b) OVER () AS n_total
+             SUM(n_a) OVER w AS n_a, SUM(s1_a) OVER w AS s1_a,
+             SUM(s2_a) OVER w AS s2_a,
+             SUM(n_b) OVER w AS n_b, SUM(s1_b) OVER w AS s1_b,
+             SUM(s2_b) OVER w AS s2_b,
+             SUM(n_a + n_b) OVER () AS n_total
       FROM daily
       WINDOW w AS (ORDER BY day
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -3237,40 +3332,17 @@ def q_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     The boundary shape is the standard OBF approximation (Lan-DeMets
     alpha-spending family); the z_alpha/2 constant is pinned so both
     engines compare against identical bytes."""
-    from ..compat import QDEC
-
-    e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == SEQ_EVENT)
-    qv = F.col("value").cast("decimal(20,6)")
-    per_day = (
-        e.select(
-            F.to_date(F.date_trunc("day", F.col("ts"))).alias("day"),
-            F.pmod(F.col("user_id"), F.lit(2)).alias("arm"), "value")
-        .groupBy("day", "arm")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum(qv).cast("double").alias("s1"),
-             F.sum((qv * qv).cast("decimal(38,12)")).cast("double")
-             .alias("s2"))
-    )
-    def arm_col(a: int, c: str):
-        return F.coalesce(
-            F.max(F.when(F.col("arm") == a, F.col(c))), F.lit(0))
-    daily = per_day.groupBy("day").agg(
-        arm_col(0, "n").alias("dn_a"), arm_col(0, "s1").alias("ds1_a"),
-        arm_col(0, "s2").alias("ds2_a"),
-        arm_col(1, "n").alias("dn_b"), arm_col(1, "s1").alias("ds1_b"),
-        arm_col(1, "s2").alias("ds2_b"))
+    per_day = ab_moments(
+        load(spark, sf_dir, "events"),
+        F.to_date(F.date_trunc("day", F.col("ts"))).alias("day"))
+    daily = per_day.groupBy("day").agg(*ab_pivot("n", "s1", "s2", fill=0))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     wall = Window.partitionBy(F.lit(1))
     cum = daily.select(
         "day",
-        F.sum("dn_a").over(w).alias("n_a"),
-        F.sum("ds1_a").over(w).alias("s1_a"),
-        F.sum("ds2_a").over(w).alias("s2_a"),
-        F.sum("dn_b").over(w).alias("n_b"),
-        F.sum("ds1_b").over(w).alias("s1_b"),
-        F.sum("ds2_b").over(w).alias("s2_b"),
-        F.sum(F.col("dn_a") + F.col("dn_b")).over(wall).alias("n_total"))
+        *(F.sum(c).over(w).alias(c)
+          for c in ("n_a", "s1_a", "s2_a", "n_b", "s1_b", "s2_b")),
+        F.sum(F.col("n_a") + F.col("n_b")).over(wall).alias("n_total"))
     n_a, n_b = F.col("n_a"), F.col("n_b")
     info = (n_a + n_b).cast("double") / F.col("n_total")
     mean_a, mean_b = F.col("s1_a") / n_a, F.col("s1_b") / n_b
@@ -3295,30 +3367,10 @@ def q_ab_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Sample-ratio-mismatch guardrail (A48) ----------------------------------
 
-SRM_CHI2_95 = 3.841459  # chi-square 95th percentile, 1 df
-
 
 @query(
     "q_ab_srm",
-    oracle="""
-    WITH users AS (
-      SELECT DISTINCT user_id, user_id % 2 AS arm FROM events
-    ),
-    counts AS (
-      SELECT SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b
-      FROM users
-    )
-    SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-           CASE WHEN n_a + n_b = 0 THEN NULL
-                ELSE CAST(CAST(
-                  CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b)
-                  AS DECIMAL(18,6)) AS DOUBLE) END AS chi2,
-           CASE WHEN n_a + n_b = 0 THEN NULL
-                ELSE CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-                     / (n_a + n_b) > 3.841459 END AS srm_detected
-    FROM counts
-    """,
+    oracle=SRM_ORACLE,
     tags=("A48", "abtest", "guardrail"),
 )
 def q_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3332,23 +3384,11 @@ def q_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     division: engine-identical by construction, belt-quantized anyway.
     One distinct-users aggregate + one single-row assembly; the distinct
     is the same user_id shuffle every A/B query here already pays."""
-    from ..compat import QDEC
-
-    e = load(spark, sf_dir, "events")
-    users = e.select("user_id").distinct().select(
-        F.pmod(F.col("user_id"), F.lit(2)).alias("arm"))
-    counts = users.agg(
+    users = load(spark, sf_dir, "events").select("user_id").distinct() \
+        .select(ab_arm())
+    return srm_verdict(users.agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"))
-    n_a, n_b = F.col("n_a"), F.col("n_b")
-    chi2 = ((n_a - n_b) * (n_a - n_b)).cast("double") / (n_a + n_b)
-    empty = (n_a + n_b) == 0
-    return counts.select(
-        n_a.cast("bigint").alias("n_a"), n_b.cast("bigint").alias("n_b"),
-        F.when(empty, F.lit(None).cast("double"))
-        .otherwise(chi2.cast(QDEC).cast("double")).alias("chi2"),
-        F.when(empty, F.lit(None).cast("boolean"))
-        .otherwise(chi2 > SRM_CHI2_95).alias("srm_detected"))
+        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b")))
 
 
 # ---- Minimum detectable effect / sizing report (A49) -------------------------
@@ -3357,20 +3397,9 @@ def q_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ab_power",
     oracle=f"""
-    WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
-             CASE WHEN SUM(CASE WHEN event_type = 'purchase'
-                           THEN 1 ELSE 0 END)
-                     > SUM(CASE WHEN event_type = 'click'
-                           THEN 1 ELSE 0 END)
-                  THEN 1 ELSE 0 END AS converted
-      FROM events GROUP BY user_id
-    ),
-    arms AS (
-      SELECT SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-             SUM(converted) AS conv
-      FROM per_user
+    WITH {AB_CONVERSIONS_ORACLE},
+    pooled AS (
+      SELECT n_a, n_b, conv_a + conv_b AS conv FROM arms
     )
     SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
            CASE WHEN n_a + n_b = 0 THEN NULL
@@ -3392,7 +3421,7 @@ def q_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
                          * (1.0 / n_a + 1.0 / n_b))
                   / (CAST(conv AS DOUBLE) / (n_a + n_b))
                   AS DECIMAL(18,6)) AS DOUBLE) END AS mde_rel
-    FROM arms
+    FROM pooled
     """,
     tags=("A49", "abtest", "sizing"),
 )
@@ -3408,24 +3437,8 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     across engines, and the outputs are 6-dp-quantized (division + sqrt
     chain). Same per-user conversion reduction as q_ab_proportions (one
     user_id shuffle), one-row assembly after."""
-    from ..compat import QDEC
-
-    e = load(spark, sf_dir, "events")
-    per_user = (
-        e.groupBy("user_id")
-        .agg(
-            F.sum(F.when(F.col("event_type") == AB_CONVERT_EVENT, 1)
-                  .otherwise(0)).alias("nc"),
-            F.sum(F.when(F.col("event_type") == AB_BASELINE_EVENT, 1)
-                  .otherwise(0)).alias("nb"))
-        .select(
-            F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-            F.when(F.col("nc") > F.col("nb"), 1).otherwise(0)
-            .alias("converted")))
-    arms = per_user.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum("converted").alias("conv"))
+    arms = ab_conversions(load(spark, sf_dir, "events")).select(
+        "n_a", "n_b", (F.col("conv_a") + F.col("conv_b")).alias("conv"))
     n_a, n_b, conv = F.col("n_a"), F.col("n_b"), F.col("conv")
     p = conv.cast("double") / (n_a + n_b)
     mde = F.lit(Z_ALPHA_2 + Z_POWER_80) * F.sqrt(
@@ -3447,13 +3460,14 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ab_delta",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
-             CAST(SUM(CASE WHEN event_type = 'purchase'
+      SELECT user_id, {ab_arm_sql()},
+             CAST(SUM(CASE WHEN event_type = '{AB_CONVERT_EVENT}'
                       THEN CAST(value AS DECIMAL(20,6)) ELSE 0 END)
                   AS DOUBLE) AS y,
-             SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS d
+             SUM(CASE WHEN event_type = '{AB_BASELINE_EVENT}'
+                 THEN 1 ELSE 0 END) AS d
       FROM events GROUP BY user_id
     ),
     mom AS (
@@ -3483,12 +3497,7 @@ def q_ab_power(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM stats
     ),
     wide AS (
-      SELECT MAX(CASE WHEN arm = 0 THEN k END) AS k_a,
-             MAX(CASE WHEN arm = 0 THEN r END) AS r_a,
-             MAX(CASE WHEN arm = 0 THEN vr END) AS vr_a,
-             MAX(CASE WHEN arm = 1 THEN k END) AS k_b,
-             MAX(CASE WHEN arm = 1 THEN r END) AS r_b,
-             MAX(CASE WHEN arm = 1 THEN vr END) AS vr_b
+      SELECT {ab_pivot_sql("k", "r", "vr")}
       FROM var_r
     )
     SELECT CAST(k_a AS BIGINT) AS k_a, CAST(k_b AS BIGINT) AS k_b,
@@ -3519,8 +3528,6 @@ def q_ab_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     term for term). Ratios and z are 6-dp-quantized (division/sqrt
     chains); all sums are decimal-quantized so partial/final
     aggregation order never perturbs them."""
-    from ..compat import QDEC
-
     e = load(spark, sf_dir, "events")
     per_user = (
         e.groupBy("user_id")
@@ -3531,8 +3538,7 @@ def q_ab_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double").alias("y"),
             F.sum(F.when(F.col("event_type") == AB_BASELINE_EVENT, 1)
                   .otherwise(0)).alias("d"))
-        .select(F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-                "y", "d"))
+        .select(ab_arm(), "y", "d"))
     qy = F.col("y").cast("decimal(20,6)")
     mom = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).alias("k"),
@@ -3556,13 +3562,7 @@ def q_ab_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "arm", "k", "r",
         ((F.col("vyy") - 2 * r * F.col("vyd") + r * r * F.col("vdd"))
          / (F.col("k") * F.col("dbar") * F.col("dbar"))).alias("vr"))
-    wide = var_r.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("k"))).alias("k_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("r"))).alias("r_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("vr"))).alias("vr_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("k"))).alias("k_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("r"))).alias("r_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("vr"))).alias("vr_b"))
+    wide = var_r.agg(*ab_pivot("k", "r", "vr"))
     r_a, r_b = F.col("r_a"), F.col("r_b")
     vr_sum = F.col("vr_a") + F.col("vr_b")
     bad = (F.col("k_a").isNull() | F.col("k_b").isNull()
@@ -3700,7 +3700,6 @@ def q_agg_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("member").alias("member"),
              F.when(F.sum(F.coalesce(F.col("hit"), F.lit(0)))
                     == BLOOM_HASHES, 1).otherwise(0).alias("bloom_pos")))
-    from ..compat import QDEC
     n_nonmem = F.sum(1 - F.col("member"))
     n_fp = F.sum(F.when((F.col("bloom_pos") == 1)
                         & (F.col("member") == 0), 1).otherwise(0))
@@ -3785,8 +3784,6 @@ def q_ab_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user diffs quantize to the 6-dp grid before the moment
     aggregate so the paired relation is engine-exact; k<2 or
     zero-variance diffs report NULL on both engines."""
-    from ..compat import QDEC
-
     e = load(spark, sf_dir, "events").where(
         F.col("event_type") == AB_CONVERT_EVENT)
     cut = F.lit(PAIRED_CUTOFF).cast("timestamp")
@@ -3884,8 +3881,6 @@ def q_ab_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation-order-exact; SS terms and F quantize after their
     division chains. Degenerate inputs (k<2 groups, N≤k rows, zero
     within-variance) report NULL identically on both engines."""
-    from ..compat import QDEC
-
     e = load(spark, sf_dir, "events")
     qv = F.col("value").cast("decimal(20,6)")
     grp = e.groupBy("event_type").agg(
@@ -3988,8 +3983,6 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     6-dp decimal grid BEFORE summation, so partial/final order can
     never perturb the sums at any partition count. Degenerate groups
     (n<2 or zero variance) report NULL on both engines."""
-    from ..compat import QDEC
-
     e = load(spark, sf_dir, "events")
     x = F.col("value").cast("double")
     pow_ = e.select(
@@ -4118,7 +4111,6 @@ def q_ab_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     never drift from the tests it corrects. Degenerate members (NULL
     statistic) drop out and shrink m. Everything after the members is
     a <=5-row relation; the windows are metadata-scale."""
-    from ..compat import QDEC
     from ..registry import get as get_query
 
     parts = []
@@ -4684,23 +4676,7 @@ def _bayes_oracle() -> str:
                 f" * ({b4} + (1.0 / (1.0 + {_AS_T} * ({x})))"
                 f" * {b5}))))))")
     return f"""
-    WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
-             CASE WHEN SUM(CASE WHEN event_type = '{AB_CONVERT_EVENT}'
-                           THEN 1 ELSE 0 END)
-                     > SUM(CASE WHEN event_type = '{AB_BASELINE_EVENT}'
-                           THEN 1 ELSE 0 END)
-                  THEN 1 ELSE 0 END AS converted
-      FROM events GROUP BY user_id
-    ),
-    arms AS (
-      SELECT
-        SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-        SUM(CASE WHEN arm = 0 THEN converted ELSE 0 END) AS conv_a,
-        SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b,
-        SUM(CASE WHEN arm = 1 THEN converted ELSE 0 END) AS conv_b
-      FROM per_user
-    ),
+    WITH {AB_CONVERSIONS_ORACLE},
     stat AS (
       SELECT n_a, conv_a, n_b, conv_b,
              CAST(conv_a AS DOUBLE) / n_a AS p_a,
@@ -4749,23 +4725,7 @@ def q_ab_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     family, so it is 9-dp-quantized; a degenerate posterior (se = 0:
     both arms at 0% or 100%) reports NULL rather than a fake
     certainty."""
-    e = load(spark, sf_dir, "events")
-    per_user = (
-        e.groupBy("user_id")
-        .agg(F.when(
-            F.sum(F.when(F.col("event_type") == AB_CONVERT_EVENT, 1)
-                  .otherwise(0))
-            > F.sum(F.when(F.col("event_type") == AB_BASELINE_EVENT, 1)
-                    .otherwise(0)), 1).otherwise(0).alias("converted"))
-        .select(F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-                "converted"))
-    arms = per_user.agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 0, F.col("converted"))
-              .otherwise(0)).alias("conv_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == 1, F.col("converted"))
-              .otherwise(0)).alias("conv_b"))
+    arms = ab_conversions(load(spark, sf_dir, "events"))
     stat = arms.where((F.col("n_a") > 0) & (F.col("n_b") > 0)).select(
         "n_a", "conv_a", "n_b", "conv_b",
         (F.col("conv_a").cast("double") / F.col("n_a")).alias("p_a"),
@@ -5127,31 +5087,15 @@ def q_agg_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Cochran-Armitage trend test (A68) ----------------------------------------
 
-# Outcome: a HIGH-VALUE purchase. Plain purchase penetration is 100% in
-# the harness corpus (every arm converts -> zero trend variance, NULL z
-# at every sf); the value floor puts conversion ~45% so the statistic
-# is live at all scales.
-TREND_VALUE_FLOOR = 150
-
 
 @query(
     "q_ab_trend",
     oracle=f"""
-    WITH per_user AS (
-      SELECT user_id, user_id % 3 AS arm,
-             MAX(CASE WHEN event_type = '{MWU_EVENT}'
-                       AND value > {TREND_VALUE_FLOOR}
-                 THEN 1 ELSE 0 END) AS conv
-      FROM events GROUP BY user_id
-    ),
-    arms AS (
-      SELECT arm, COUNT(*) AS n_g, SUM(conv) AS r_g
-      FROM per_user GROUP BY arm
-    ),
+    WITH {ab_responders_oracle(3)},
     tot AS (
-      SELECT SUM(n_g) AS n, SUM(r_g) AS r,
-             SUM(arm * r_g) AS wr, SUM(arm * n_g) AS wn,
-             SUM(arm * arm * n_g) AS wwn
+      SELECT SUM(n) AS n, SUM(r) AS r,
+             SUM(arm * r) AS wr, SUM(arm * n) AS wn,
+             SUM(arm * arm * n) AS wwn
       FROM arms
     ),
     z AS (
@@ -5164,9 +5108,9 @@ TREND_VALUE_FLOOR = 150
       FROM tot
     )
     SELECT CAST(a.arm AS BIGINT) AS arm,
-           CAST(a.n_g AS BIGINT) AS n_users,
-           CAST(a.r_g AS BIGINT) AS responders,
-           CAST(CAST(CAST(a.r_g AS DOUBLE) / a.n_g AS DECIMAL(18,6))
+           CAST(a.n AS BIGINT) AS n_users,
+           CAST(a.r AS BIGINT) AS responders,
+           CAST(CAST(CAST(a.r AS DOUBLE) / a.n AS DECIMAL(18,6))
                 AS DOUBLE) AS resp_rate,
            CASE WHEN z.var_t <= 0 THEN NULL
                 ELSE CAST(CAST(z.t_stat / sqrt(z.var_t)
@@ -5190,22 +5134,12 @@ def q_ab_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     moment is an exact integer until the final quantized IEEE
     expression. Degenerate variance (all-converted, single arm)
     reports NULL."""
-    e = load(spark, sf_dir, "events")
-    per_user = (e.groupBy("user_id")
-                .agg(F.max(F.when((F.col("event_type") == MWU_EVENT)
-                                  & (F.col("value") > TREND_VALUE_FLOOR),
-                                  1)
-                           .otherwise(0)).alias("conv"))
-                .select(F.pmod(F.col("user_id"), F.lit(3)).alias("arm"),
-                        "conv"))
-    arms = per_user.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n_g"), F.sum("conv").alias("r_g"))
-    arms = share(arms)
+    arms = share(ab_responders(load(spark, sf_dir, "events"), 3))
     tot = arms.agg(
-        F.sum("n_g").alias("n"), F.sum("r_g").alias("r"),
-        F.sum(F.col("arm") * F.col("r_g")).alias("wr"),
-        F.sum(F.col("arm") * F.col("n_g")).alias("wn"),
-        F.sum(F.col("arm") * F.col("arm") * F.col("n_g")).alias("wwn"))
+        F.sum("n").alias("n"), F.sum("r").alias("r"),
+        F.sum(F.col("arm") * F.col("r")).alias("wr"),
+        F.sum(F.col("arm") * F.col("n")).alias("wn"),
+        F.sum(F.col("arm") * F.col("arm") * F.col("n")).alias("wwn"))
     p = F.col("r").cast("double") / F.col("n")
     z = tot.select(
         (F.col("wr").cast("double") - p * F.col("wn")).alias("t_stat"),
@@ -5216,9 +5150,9 @@ def q_ab_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = arms.crossJoin(F.broadcast(z))
     return out.select(
         F.col("arm").cast("bigint").alias("arm"),
-        F.col("n_g").cast("bigint").alias("n_users"),
-        F.col("r_g").cast("bigint").alias("responders"),
-        (F.col("r_g").cast("double") / F.col("n_g"))
+        F.col("n").cast("bigint").alias("n_users"),
+        F.col("r").cast("bigint").alias("responders"),
+        (F.col("r").cast("double") / F.col("n"))
         .cast("decimal(18,6)").cast("double").alias("resp_rate"),
         F.when(F.col("var_t") <= 0, F.lit(None).cast("double"))
         .otherwise((F.col("t_stat") / F.sqrt(F.col("var_t")))
@@ -5342,20 +5276,10 @@ WILSON_Z = "1.959963985"  # 97.5th normal quantile (95% two-sided CI)
 @query(
     "q_ab_wilson",
     oracle=f"""
-    WITH per_user AS (
-      SELECT user_id, user_id % 2 AS arm,
-             MAX(CASE WHEN event_type = '{MWU_EVENT}'
-                       AND value > {TREND_VALUE_FLOOR}
-                 THEN 1 ELSE 0 END) AS conv
-      FROM events GROUP BY user_id
-    ),
-    arms AS (
-      SELECT arm, COUNT(*) AS n, SUM(conv) AS x
-      FROM per_user GROUP BY arm
-    ),
+    WITH {ab_responders_oracle(2)},
     w AS (
-      SELECT arm, n, x,
-             CAST(x AS DOUBLE) / n AS ph,
+      SELECT arm, n, r AS x,
+             CAST(r AS DOUBLE) / n AS ph,
              CAST({WILSON_Z} AS DOUBLE) AS z
       FROM arms
     )
@@ -5389,17 +5313,8 @@ def q_ab_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 dp. z is the 97.5th normal quantile as a double literal (cast
     explicitly — a bare decimal literal arithmetic chain is the
     classic DuckDB drift)."""
-    e = load(spark, sf_dir, "events")
-    per_user = (e.groupBy("user_id")
-                .agg(F.max(F.when((F.col("event_type") == MWU_EVENT)
-                                  & (F.col("value") > TREND_VALUE_FLOOR),
-                                  1)
-                           .otherwise(0)).alias("conv"))
-                .select(F.pmod(F.col("user_id"), F.lit(2)).alias("arm"),
-                        "conv"))
-    arms = per_user.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("conv").alias("x"))
-    n, x = F.col("n"), F.col("x")
+    arms = ab_responders(load(spark, sf_dir, "events"), 2)
+    n, x = F.col("n"), F.col("r")
     ph = x.cast("double") / n
     z = F.lit(float(WILSON_Z))
     center = ph + z * z / (2 * n)
@@ -5426,12 +5341,12 @@ CMH_HI_VALUE = 250000  # high-value order cutoff (~median o_totalprice)
     oracle=f"""
     WITH cells AS (
       SELECT c.c_mktsegment AS stratum,
-             CAST(o.o_custkey % 2 AS BIGINT) AS arm,
+             {ab_arm_sql("o.o_custkey")},
              SUM(CASE WHEN o.o_totalprice > {CMH_HI_VALUE}
                  THEN 1 ELSE 0 END) AS hi,
              COUNT(*) AS n
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-      GROUP BY c.c_mktsegment, o.o_custkey % 2
+      GROUP BY 1, 2
     ),
     strata AS (
       SELECT stratum,
@@ -5462,7 +5377,7 @@ CMH_HI_VALUE = 250000  # high-value order cutoff (~median o_totalprice)
            CASE WHEN CAST(SUM(v) AS DOUBLE) = 0 THEN NULL
            ELSE CAST(CAST(SUM(dev) AS DOUBLE) * CAST(SUM(dev) AS DOUBLE)
                 / CAST(SUM(v) AS DOUBLE) AS DECIMAL(18,6))
-             > 3.841459 END AS reject_5pct,
+             > {SRM_CHI2_95} END AS reject_5pct,
            CASE WHEN SUM(bc) = 0 THEN NULL
                 ELSE CAST(CAST(CAST(SUM(ad) AS DOUBLE)
                      / CAST(SUM(bc) AS DOUBLE) AS DECIMAL(18,6))
@@ -5496,7 +5411,7 @@ def q_ab_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("stratum"),
-                 F.pmod(F.col("o_custkey"), F.lit(2)).alias("arm"))
+                 ab_arm("o_custkey"))
         .agg(F.sum(F.when(F.col("o_totalprice") > CMH_HI_VALUE, 1)
                    .otherwise(0)).alias("hi"),
              F.count(F.lit(1)).alias("n"))
@@ -5536,7 +5451,7 @@ def q_ab_cmh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(sv == 0, F.lit(None).cast("double"))
         .otherwise(chi2.cast("double")).alias("cmh_chi2"),
         F.when(sv == 0, F.lit(None).cast("boolean"))
-        .otherwise(chi2 > 3.841459).alias("reject_5pct"),
+        .otherwise(chi2 > SRM_CHI2_95).alias("reject_5pct"),
         F.when(F.sum("bc") == 0, F.lit(None).cast("double"))
         .otherwise((F.sum("ad").cast("double")
                     / F.sum("bc").cast("double"))

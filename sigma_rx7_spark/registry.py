@@ -90,24 +90,40 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Window: 30 changed + 20 carried = 50.
-    # Composition: (a) every q_stream_* query, since each starts through
-    # _drain, which now checkpoints through the FileSystem-based
-    # manager: first the two of the perfbench events workload and the
-    # dedup and hourly-count streams, then the other state-store ones,
-    # then the rest in registration order; (b) the two batch MERGEs,
-    # now one keyed aggregate (incremental.merge_at_cutoff); (c) the three
-    # dedup oracles whose text changed (q_dedup_prefix through
-    # shingles_oracle, the cluster queries through
-    # CLUSTER_SIZES_ORACLE / cluster_sizes); (d) the first 20 names of
-    # the previous window not named above (the LSH-verify,
-    # word-shingle and first eight unit-vector oracles). They replace
-    # the last three unit-vector, the drug-era, daily-revenue/ACF and
-    # fit_logistic names, proven at sf0.01 in earlier windows.
+    # Window: 16 changed + 34 carried = 50.
+    # Composition: (a) the A/B queries whose arm, outcome, pivot or SRM
+    # text now comes from the shared builders in operators/aggregates.py
+    # (ab_arm, ab_conversions, ab_responders, ab_moments, ab_pivot,
+    # srm_verdict and their DuckDB twins), q_ab_fdr (it splices five of
+    # those oracles), the streaming SRM twin and q_pipeline_canonical
+    # (cluster sizes through CLUSTER_SIZES_ORACLE / cluster_sizes);
+    # (b) carried from the previous window: every other q_stream_*
+    # query, the two batch MERGEs, the three dedup oracles and the
+    # first five LSH-verify names. They replace the remaining
+    # LSH-verify, word-shingle and unit-vector names, proven at sf0.01
+    # in earlier windows.
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
-    # streams through _drain
+    # A/B family through the shared builders
+    "q_ab_proportions",
+    "q_ab_power",
+    "q_ab_bayes",
+    "q_ab_welch",
+    "q_ab_sequential",
+    "q_ab_delta",
+    "q_ab_srm",
+    "q_stream_srm",
+    "q_ab_trend",
+    "q_ab_wilson",
+    "q_ab_cmh",
+    "q_ab_mannwhitney",
+    "q_ab_cuped",
+    "q_ab_bootstrap",
+    "q_ab_fdr",
+    # cluster sizes through CLUSTER_SIZES_ORACLE / cluster_sizes
+    "q_pipeline_canonical",
+    # carried: streams through _drain
     "q_stream_hourly_distinct",
     "q_stream_dedup",
     "q_stream_hourly_counts",
@@ -124,7 +140,6 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_mv_refresh",
     "q_stream_topk",
     "q_stream_scd2_enrich",
-    "q_stream_srm",
     "q_stream_psi",
     "q_stream_anomaly",
     "q_stream_ohlc",
@@ -133,10 +148,11 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_stream_transitions",
     "q_stream_sequence",
     "q_stream_funnel",
-    # batch MERGE through merge_at_cutoff
+    # carried: batch MERGE through merge_at_cutoff
     "q_merge_upsert",
     "q_merge_cdc_apply",
-    # dedup oracles through shingles_oracle / CLUSTER_SIZES_ORACLE
+    # carried: dedup oracles through shingles_oracle /
+    # CLUSTER_SIZES_ORACLE
     "q_dedup_prefix",
     "q_dedup_clusters",
     "q_dedup_clusters_lsh",
@@ -146,24 +162,7 @@ _CHECK_PRIORITY: tuple[str, ...] = (
     "q_dedup_burden_matrix",
     "q_dedup_minhash_error",
     "q_pipeline_near_dedup",
-    "q_pipeline_canonical",
     "q_pipeline_fates",
-    "q_split_leakage",
-    "q_corpus_release_gate",
-    "q_pipeline_corpus_curation",
-    # carried: word shingles through shingles_oracle
-    "q_text_contamination",
-    "q_dedup_containment",
-    "q_text_source_overlap",
-    # carried: unit-normalized embeddings through UNIT_ORACLE
-    "q_dedup_cosine",
-    "q_dedup_cosine_lsh",
-    "q_dedup_semantic",
-    "q_dedup_recall_lsh",
-    "q_sim_topk_ivf",
-    "q_sim_topk_ivf_staged",
-    "q_sim_index_incremental",
-    "q_sim_recall_ivf",
 )
 
 # The external checker verifies exactly the first 50 load_all() entries;

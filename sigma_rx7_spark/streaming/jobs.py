@@ -35,6 +35,7 @@ from pyspark.sql.streaming import DataStreamWriter
 from ..io import load, read_stream
 from ..materialize import share, snapshot
 from ..registry import query
+from ..operators.aggregates import SRM_ORACLE, ab_arm, ab_pivot, srm_verdict
 from ..operators.incremental import (CDC_DELETE_MOD, CDC_ORACLE,
                                      MERGE_CUTOFF, MERGE_ORACLE)
 
@@ -1054,25 +1055,7 @@ def q_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_stream_srm",
-    oracle="""
-    WITH users AS (
-      SELECT DISTINCT user_id, user_id % 2 AS arm FROM events
-    ),
-    counts AS (
-      SELECT SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS n_a,
-             SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS n_b
-      FROM users
-    )
-    SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-           CASE WHEN n_a + n_b = 0 THEN NULL
-                ELSE CAST(CAST(
-                  CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE) / (n_a + n_b)
-                  AS DECIMAL(18,6)) AS DOUBLE) END AS chi2,
-           CASE WHEN n_a + n_b = 0 THEN NULL
-                ELSE CAST((n_a - n_b) * (n_a - n_b) AS DOUBLE)
-                     / (n_a + n_b) > 3.841459 END AS srm_detected
-    FROM counts
-    """,
+    oracle=SRM_ORACLE,
     tags=("T13", "streaming", "abtest", "guardrail"),
 )
 def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1092,25 +1075,11 @@ def q_stream_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries."""
     ev = read_events_stream(spark, sf_dir)
     users = ev.select("user_id").dropDuplicates(["user_id"]).select(
-        F.pmod(F.col("user_id"), F.lit(2)).alias("arm"))
+        ab_arm())
     counts = users.groupBy("arm").agg(F.count(F.lit(1)).alias("n"))
     arms = run_to_memory(counts, "stream_srm", output_mode="complete",
                          final_no_data_batch=False)
-    wide = arms.agg(
-        F.coalesce(F.max(F.when(F.col("arm") == 0, F.col("n"))),
-                   F.lit(0)).alias("n_a"),
-        F.coalesce(F.max(F.when(F.col("arm") == 1, F.col("n"))),
-                   F.lit(0)).alias("n_b"))
-    n_a, n_b = F.col("n_a"), F.col("n_b")
-    chi2 = ((n_a - n_b) * (n_a - n_b)).cast("double") / (n_a + n_b)
-    empty = (n_a + n_b) == 0
-    from ..compat import QDEC
-    return wide.select(
-        n_a.cast("bigint").alias("n_a"), n_b.cast("bigint").alias("n_b"),
-        F.when(empty, F.lit(None).cast("double"))
-        .otherwise(chi2.cast(QDEC).cast("double")).alias("chi2"),
-        F.when(empty, F.lit(None).cast("boolean"))
-        .otherwise(chi2 > 3.841459).alias("srm_detected"))
+    return srm_verdict(arms.agg(*ab_pivot("n", fill=0)))
 
 
 # ---- Streaming distribution-drift monitor (T14) ------------------------------

@@ -43,12 +43,21 @@ each module's whole text, so a call chain may span lines.
 One text per shared relation: each ``SHARED`` row is a marker of a
 relation that several queries derive, and it must occur exactly once
 under ``sigma_rx7_spark/``, in the builder's module. Every other query
-calls that builder instead of pasting its text:
+calls that builder instead of pasting its text. A marker is a literal
+string or, where the home is parameterized and a paste would not repeat
+its text, a regex that matches both the home and a pasted copy; either
+is matched line by line:
 
 - ``llm/dedup.py``: the md5-LSH band join of ``lsh_verified_oracle``,
   the word shingles of ``shingles_oracle``, the recursive
-  connected-components walk of ``components_oracle`` and the Spark
-  cluster-size window of ``cluster_sizes``;
+  connected-components walk of ``components_oracle`` and the
+  cluster-size window of ``cluster_sizes`` / ``CLUSTER_SIZES_ORACLE``,
+  one marker per engine;
+- ``operators/aggregates.py``: the A/B arm rule of ``ab_arm`` /
+  ``ab_arm_sql`` (one regex per engine: any ``pmod`` of a column
+  aliased ``arm``, any ``% k AS arm``), the purchase-beats-click
+  conversion of ``AB_CONVERSIONS_ORACLE`` and the SRM verdict of
+  ``SRM_ORACLE``;
 - ``llm/pipeline.py``: the token gate of ``QUALITY_ORACLE``;
 - ``llm/similarity.py``: the unit-normalized embeddings of
   ``UNIT_ORACLE``;
@@ -171,6 +180,15 @@ SHARED = [
     ("acf_rho", "operators/timeseries.py", 'F.col("va") * F.col("vb")'),
     ("ACF_ORACLE", "operators/timeseries.py", "JOIN daily a ON TRUE"),
     ("CDC_ORACLE", "operators/incremental.py", "THEN 'D' ELSE 'U'"),
+    ("CLUSTER_SIZES_ORACLE", "llm/dedup.py",
+     "COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size"),
+    ("ab_arm", "operators/aggregates.py", re.compile(
+        r'F\.pmod\(F\.col\([^()]*\), F\.lit\([^()]*\)\)\.alias\("arm"\)')),
+    ("ab_arm_sql", "operators/aggregates.py",
+     re.compile(r"% [\w{}]+ AS arm\b")),
+    ("AB_CONVERSIONS_ORACLE", "operators/aggregates.py",
+     "THEN 1 ELSE 0 END AS converted"),
+    ("SRM_ORACLE", "operators/aggregates.py", "END AS srm_detected"),
 ]
 
 
@@ -181,5 +199,7 @@ def test_shared_relation_has_one_text(home, marker):
     for path in sorted(PKG.rglob("*.py")):
         rel = str(path.relative_to(PKG))
         for n, line in enumerate(path.read_text().splitlines(), 1):
-            hits += [f"{rel}:{n}"] * line.count(marker)
+            k = (len(marker.findall(line)) if isinstance(marker, re.Pattern)
+                 else line.count(marker))
+            hits += [f"{rel}:{n}"] * k
     assert len(hits) == 1 and hits[0].startswith(home + ":"), hits

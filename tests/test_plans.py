@@ -1043,7 +1043,8 @@ def test_sequential_windows_run_on_day_grain(spark, sf_dir):
 def test_srm_and_power_shuffle_user_grain_only(spark, sf_dir):
     """SRM / MDE sizing: the only shuffles carry user-level columns —
     the raw event payload never moves."""
-    for name in ("q_ab_srm", "q_ab_power", "q_ab_delta"):
+    for name in ("q_ab_srm", "q_ab_power", "q_ab_delta", "q_ab_proportions",
+                 "q_ab_bayes", "q_ab_wilson", "q_ab_trend"):
         p = plan(spark, sf_dir, name)
         assert "SortMergeJoin" not in p, name
         exchanges = [ln for ln in p.splitlines() if "Exchange" in ln]
