@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..compat import QDEC, davg, dsum, o_davg, o_dsum
+from ..compat import q as qd
 from ..io import load, load_parallel
 from ..materialize import share
 from ..registry import query
@@ -1873,7 +1874,6 @@ def q_agg_state_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity",
         F.pmod(F.col("l_orderkey"), F.lit(STATE_BATCHES)).alias("batch"))
-    from ..compat import q as qd
     states = li.groupBy("l_returnflag", "batch").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(qd(x)).alias("s1"),
@@ -2056,8 +2056,6 @@ def q_agg_hierarchy_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the (region×nation) relation — at 100 TB the windows touch
     ~200 rows regardless of fact volume. Shares are single IEEE
     divisions from exact-decimal sums."""
-    from ..compat import q as qd
-
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select(
@@ -2283,7 +2281,6 @@ def q_agg_discount_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = (F.when(F.col("l_discount") == 0, "none")
             .when(F.col("l_discount") <= 0.05, "low")
             .otherwise("high"))
-    from ..compat import q as qd
     return (
         li.groupBy(band.alias("discount_band"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_items"),
@@ -2940,8 +2937,6 @@ def mannwhitney_u(vals: DataFrame) -> DataFrame:
     rank-free value-level computation documented in q_ab_mannwhitney.
     Library form, property-tested against naive pair counting on
     tie-heavy random inputs (tests/test_properties_r8.py)."""
-    from pyspark.sql import Window
-
     per_value = (
         vals.groupBy("v")
         .agg(F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("c_a"),
@@ -2976,7 +2971,6 @@ def mannwhitney_u(vals: DataFrame) -> DataFrame:
 # ---- CUPED variance reduction (A45) -----------------------------------------
 
 CUPED_CUTOFF = "2024-01-16 00:00:00"  # pre/post split (= incremental cutoff)
-CUPED_EVENT = "purchase"
 
 
 @query(
@@ -2993,7 +2987,7 @@ CUPED_EVENT = "purchase"
                       THEN CAST(value AS DECIMAL(20,6)) ELSE 0 END)
                   AS DOUBLE) AS y
       FROM events
-      WHERE event_type = '{CUPED_EVENT}'
+      WHERE event_type = '{AB_CONVERT_EVENT}'
       GROUP BY user_id
     ),
     mom AS (
@@ -3063,7 +3057,7 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     division chains). Degenerate var(x)=0 (no pre-period signal) pins
     theta to 0 — CUPED degrades gracefully to the unadjusted metric."""
     e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == CUPED_EVENT)
+        F.col("event_type") == AB_CONVERT_EVENT)
     cutoff = F.lit(CUPED_CUTOFF).cast("timestamp")
     qv = F.col("value").cast("decimal(20,6)")
     zero = F.lit(0).cast("decimal(20,6)")
@@ -3125,7 +3119,6 @@ def q_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- Poisson-bootstrap confidence interval (A46) ----------------------------
 
 BOOT_REPS = 40
-BOOT_EVENT = "purchase"
 # Poisson(1) inverse-CDF thresholds (cumulative e^-1 * sum 1/k!): the
 # per-(user, replicate) resample weight is how many times the user's
 # metric enters that replicate — the only bootstrap that works without
@@ -3147,7 +3140,7 @@ def _boot_weight_sql(u: str) -> str:
     WITH per_user AS (
       SELECT user_id, {ab_arm_sql()},
              CAST(SUM(CAST(value AS DECIMAL(20,6))) AS DOUBLE) AS y
-      FROM events WHERE event_type = '{BOOT_EVENT}'
+      FROM events WHERE event_type = '{AB_CONVERT_EVENT}'
       GROUP BY user_id
     ),
     reps AS (
@@ -3214,7 +3207,7 @@ def q_ab_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.sampling import uniform_unit
 
     e = load(spark, sf_dir, "events").where(
-        F.col("event_type") == BOOT_EVENT)
+        F.col("event_type") == AB_CONVERT_EVENT)
     per_user = (
         e.groupBy("user_id")
         .agg(F.sum(F.col("value").cast("decimal(20,6)")).cast("double")
@@ -3740,7 +3733,7 @@ PAIRED_CUTOFF = "2024-01-16 00:00:00"  # the drift family's midpoint split
                                 >= TIMESTAMP '{PAIRED_CUTOFF}'
                       THEN CAST(value AS DECIMAL(20,6)) ELSE 0 END)
                   AS DOUBLE) AS s_after
-      FROM events WHERE event_type = 'purchase'
+      FROM events WHERE event_type = '{AB_CONVERT_EVENT}'
       GROUP BY user_id
     ),
     diffs AS (
@@ -3804,11 +3797,11 @@ def q_ab_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s_after") / F.col("n_after")
          - F.col("s_before") / F.col("n_before"))
         .cast(QDEC).cast("double").alias("d"))
-    qd = F.col("d").cast("decimal(20,6)")
+    qdiff = F.col("d").cast("decimal(20,6)")
     mom = diffs.agg(
         F.count(F.lit(1)).alias("k"),
-        F.sum(qd).cast("double").alias("s1"),
-        F.sum((qd * qd).cast("decimal(38,12)")).cast("double")
+        F.sum(qdiff).cast("double").alias("s1"),
+        F.sum((qdiff * qdiff).cast("decimal(38,12)")).cast("double")
         .alias("s2"))
     k, s1, s2 = F.col("k"), F.col("s1"), F.col("s2")
     var_num = s2 - s1 * s1 / k

@@ -9,6 +9,13 @@ runtime — this is what makes the same code valid on local[32] and on a
 Every session it builds forks its Python workers from ``daemon.py``: on
 CPython < 3.12 each worker task otherwise re-reads ``pyspark.zip`` 16
 times (~80 ms) before it runs any UDF code.
+
+A long-lived session serves an interleaved mix of queries, so two costs
+that Spark's defaults charge per call are paid once here instead:
+Janino recompiling generated classes that a 100-entry codegen cache
+evicted, and PySpark capturing the Python call site of every DataFrame
+and ``pyspark.sql.functions`` call (see the codegen and call-site
+entries of ``_PERF_CONF``; ``driver_cost.py`` counts both).
 """
 
 from __future__ import annotations
@@ -43,6 +50,38 @@ _PERF_CONF = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Catalyst compiles each plan's generated Java with Janino; Spark
+    # keeps the classes in one JVM-wide LRU of this many entries (default
+    # 100, in 4 segments), keyed by source text. Interleaved queries need
+    # more: a warm perfbench `events` pass uses ~92 classes, the 9-query
+    # perfbench mix ~170. At 100 each query evicted the next one's: a
+    # warm `events` pass recompiled 6-19 classes, a mix pass 96-138, at a
+    # median 9 ms each; at 2048 a warm pass recompiles none. Cost: classes
+    # stay loaded instead of being evicted and unloaded. After a full
+    # bench.py line (83 queries, sf0.1, local[4]) Metaspace held 198 MiB
+    # at 100 and 208 MiB here (with the next entry), and the line
+    # compiled 1380 classes instead of 4101. Static conf: read once per
+    # JVM when CodeGenerator builds its cache, so only a builder conf
+    # reaches it.
+    "spark.sql.codegen.cache.maxEntries": "2048",
+    # A whole-stage class's name carries its codegen stage id, and that
+    # id is not stable across calls of one plan: q_stream_merge's merge
+    # batch numbers the same two stages 4 and 6 in either order, so at
+    # 2048 entries a warm call still recompiled 4 classes now and then.
+    # Without the id the source text, and so the cache key, is the same;
+    # stages with equal code also share one class (a cold q_stream_merge
+    # compiles 27 classes, not 33). Cost: JVM stack traces and profiles
+    # name GeneratedIterator without the stage number; explain keeps it.
+    "spark.sql.codegen.useIdInClassName": "false",
+    # PySpark labels every DataFrame and pyspark.sql.functions call with
+    # its Python call site, only for error messages: a stack walk, an
+    # `import IPython` attempt and ~10 py4j round trips per call.
+    # `F.col("a")` costs 13 py4j commands with it and 3 without; building
+    # q_pipeline_quality_model ~2700 and ~750. Cost: an AnalysisException
+    # keeps its error condition and message, but its query context names
+    # a JVM frame instead of the Python file:line. PySpark reads this
+    # once per process, from the first active session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 
